@@ -126,17 +126,10 @@ def _membw_control(spark, tasks: int, mb: int = 192,
 def _partial_phase_file(f: str) -> int:
     """One file through the engine's REAL partial phase, single-core
     (module-level so multiprocessing can pickle it)."""
-    import pyarrow.parquet as pq
+    from qsketch.spark.agg import DEFAULT_SPECS, _consume_file, _PartitionAcc
 
-    from qsketch.spark.agg import (DEFAULT_SPECS, _bounded_cols,
-                                   _PartitionAcc)
-    cols = sorted({s.input for s in DEFAULT_SPECS})
     pacc = _PartitionAcc(tuple(DEFAULT_SPECS))
-    pf = pq.ParquetFile(f)
-    pacc.bounded = _bounded_cols(pf, pacc.hash_inputs)
-    for b in pf.iter_batches(batch_size=16384, columns=cols,
-                             use_threads=False):
-        pacc.consume(b)
+    _consume_file(pacc, f, pacc.inputs)
     pacc.to_record_batch(0)
     return pacc.n_tokens
 

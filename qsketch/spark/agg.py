@@ -19,24 +19,42 @@ Grouped builds (sketch per ``source``) use the same map-side-combine
 shape: partials are emitted per (partition, group) with NO shuffle of
 row data, then only states shuffle on the group key — immune to the
 skewed source distribution by construction (the heavy group's rows
-never co-locate).  ``io.salted`` remains available for the
-applyInPandas variant when per-group state must see all rows together.
+never co-locate).  Rows with a NULL group key form one group whose
+``group`` is NULL, as SQL ``GROUP BY`` does; null tokens, null lists
+and null scalar values are dropped in every build.  ``io.salted``
+remains available for the applyInPandas variant when per-group state
+must see all rows together.
+
+One skeleton (``_partials``) runs phase 1 for all six build entry
+points (``build``/``build_files``, ``build_partials``/
+``build_partials_files``, ``build_grouped``/``build_grouped_files``).
+It takes a source — a DataFrame projection, or a sorted parquet file
+list sliced into N tasks that read their files with pyarrow — and an
+accumulator (``_PartitionAcc``, or ``_GroupedAcc`` per group), and owns
+the one task body: partition id, checkpoint skip, consume, commit or
+yield.
 
 Resumability: with a checkpoint dir, each task atomically writes its
 partial state file and a re-run skips completed partitions WITHOUT
 consuming their input (lazy Arrow iterator is never pulled), then the
-merge reads states from the checkpoint table. Final states are a pure
-function of the input multiset, so interrupted and uninterrupted runs
-produce byte-identical quotient-filter results.
+merge reads states from the checkpoint table.  Before any task runs,
+the run pins what its states were built from: task count, input
+identity (the file list, or the DataFrame's plan fingerprint), every
+spec's kind, input and params, and the group column; a resume that
+differs in any of them fails loudly.  Final states are a pure function
+of the input multiset, so interrupted and uninterrupted runs produce
+byte-identical quotient-filter results.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
 import warnings
 from dataclasses import dataclass, field
+from functools import cached_property, partial
 from typing import Iterator
 
 import numpy as np
@@ -168,16 +186,25 @@ class _Acc:
         return self.sk.to_bytes()
 
 
-def _flatten_column(batch: pa.RecordBatch, name: str) -> np.ndarray:
-    col = batch.column(name)
+def _flat_values(col: pa.Array) -> tuple[np.ndarray, np.ndarray | None]:
+    """``col``'s values with list columns flattened and nulls dropped
+    (null lists, null elements and null scalars all contribute nothing;
+    null tokens would otherwise decay to NaN floats), plus per-row
+    offsets into them: row i owns ``values[off[i]:off[i + 1]]``.
+    ``off is None`` means row i is simply value i."""
+    off = None
     if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
-        col = col.flatten()
+        lens = pc.fill_null(pc.list_value_length(col), 0)
+        off = np.concatenate(([0], np.cumsum(
+            lens.to_numpy(zero_copy_only=False), dtype=np.int64)))
+        col = col.flatten()  # skips the slots of null lists
     if col.null_count:
-        col = col.drop_null()  # null tokens would decay to NaN floats
-    try:
-        return col.to_numpy(zero_copy_only=True)  # no copy for non-null prims
-    except pa.ArrowInvalid:
-        return col.to_numpy(zero_copy_only=False)
+        kept = np.concatenate(([0], np.cumsum(
+            col.is_valid().to_numpy(zero_copy_only=False), dtype=np.int64)))
+        off = kept if off is None else kept[off]
+        col = col.drop_null()
+    # no copy for non-null primitives
+    return col.to_numpy(zero_copy_only=False), off
 
 
 _DEDUP_SCRATCH = np.empty(0, dtype=np.int64)
@@ -244,13 +271,14 @@ def _pin_ckpt_slicing(ckpt_dir: str, run_id: str, meta: dict) -> None:
     DIFFERENT input slices — silently dropping data.  The slicing is
     pinned in ``_slicing.json`` (leading underscore: Spark's parquet
     reader ignores it) on first run; a mismatched resume fails loudly.
+    The pin also records what the states were built FROM (input
+    identity, spec params, group column — see _partials): a resume
+    against other input or other specs would merge foreign states.
     """
     meta_path = os.path.join(ckpt_dir, run_id, "_slicing.json")
-    import json as _json
-
     if os.path.exists(meta_path):
         with open(meta_path) as fh:
-            prev = _json.load(fh)
+            prev = json.load(fh)
         # The core key must ALWAYS be present: an empty or corrupt pin
         # ({}) would otherwise "validate" any resume via the
         # grandfathering path below — a silently unprotected resume.
@@ -271,32 +299,34 @@ def _pin_ckpt_slicing(ckpt_dir: str, run_id: str, meta: dict) -> None:
                 f"{skipped}; accepting resume on the pin's recorded "
                 "keys only", stacklevel=2)
         meta_cmp = {k: v for k, v in meta.items() if k in prev}
-        if prev != meta_cmp:
+        differ = sorted(k for k in prev if prev[k] != meta_cmp.get(k))
+        if differ:
             raise ValueError(
-                f"checkpoint {run_id!r} was written with slicing "
+                f"checkpoint {run_id!r} was written with different "
+                f"{differ} (slicing "
                 f"{ {k: (len(v) if isinstance(v, list) else v) for k, v in prev.items()} }; "
                 f"this run has "
-                f"{ {k: (len(v) if isinstance(v, list) else v) for k, v in meta.items()} } "
+                f"{ {k: (len(v) if isinstance(v, list) else v) for k, v in meta.items()} }) "
                 "— resuming would mis-map partition states to input "
                 "slices. Use a new run_id.")
         return
     os.makedirs(os.path.dirname(meta_path), exist_ok=True)
     tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
-        _json.dump(meta, fh)
+        json.dump(meta, fh)
     os.replace(tmp, meta_path)
 
 
 def _materialize_ckpt(partials: DataFrame, spark: SparkSession,
                       ckpt_dir: str, run_id: str) -> DataFrame:
     """Force the tasks' side-effect state commits (noop sink), then read
-    the committed state table back — shared by every ckpt-enabled build."""
+    the committed state table back."""
     partials.write.format("noop").mode("overwrite").save()
     return spark.read.parquet(os.path.join(ckpt_dir, run_id))
 
 
 class _PartitionAcc:
-    """Shared per-partition accumulation loop for both scan variants."""
+    """Per-partition accumulation of every spec: one state row per spec."""
 
     def __init__(self, specs: tuple[SketchSpec, ...]):
         self.specs = specs
@@ -311,7 +341,8 @@ class _PartitionAcc:
         self.t0 = time.perf_counter()
 
     def consume(self, batch: pa.RecordBatch) -> None:
-        vals = {name: _flatten_column(batch, name) for name in self.inputs}
+        vals = {name: _flat_values(batch.column(name))[0]
+                for name in self.inputs}
         self.consume_arrays(vals, batch.num_rows)
 
     def consume_arrays(self, vals: dict[str, np.ndarray],
@@ -357,11 +388,123 @@ def _commit_state(out: pa.RecordBatch, done: str) -> None:
     os.replace(tmp, done)
 
 
-def _partial_builder(specs: tuple[SketchSpec, ...], ckpt_dir: str | None,
-                     run_id: str | None):
-    """Returns the mapInArrow function building all specs in one pass."""
+def _consume_file(acc, path: str, cols: list[str]) -> None:
+    """Feed one parquet file's ``cols`` into an accumulator — the
+    file-direct read loop.  use_threads=False: each task owns ONE core
+    (cluster task-slot semantics); Arrow's default pool would
+    oversubscribe the executor and corrupt N-vs-4N scaling evidence."""
+    pf = pq.ParquetFile(path)
+    acc.bounded = _bounded_cols(pf, acc.hash_inputs)
+    for batch in pf.iter_batches(batch_size=16384, columns=cols,
+                                 use_threads=False):
+        acc.consume(batch)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+
+class _Source:
+    """Phase-1 input.  ``frame`` is what mapInArrow runs over: either
+    the DataFrame projection onto ``cols`` (``files is None``), or one
+    ``path`` row per parquet file, sliced into ``n_tasks`` contiguous
+    file slices that each task reads itself with pyarrow."""
+
+    def __init__(self, frame: DataFrame, cols: list[str],
+                 files: list[str] | None = None):
+        self.frame = frame
+        self.cols = cols
+        self.files = files
+
+    @cached_property
+    def n_tasks(self) -> int:
+        return self.frame.rdd.getNumPartitions()
+
+    @classmethod
+    def of_frame(cls, df: DataFrame, cols: list[str]) -> _Source:
+        return cls(df.select(*cols), cols)
+
+    @classmethod
+    def of_files(cls, spark: SparkSession, path: str, cols: list[str],
+                 parallelism: int | None = None) -> _Source:
+        """Exactly one file per task by default (repartition's
+        round-robin can leave tasks empty while others carry two
+        files).  An explicit ``parallelism`` caps the task count
+        instead — contiguous file slices per task — which is the
+        single-box analog of running the same job on fewer executors
+        (each executor-core simply owns more files), used by the
+        bench's N-vs-4N scaling evidence."""
+        import glob as _glob
+
+        files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
+        if not files:
+            raise FileNotFoundError(f"no parquet files under {path}")
+        n_tasks = len(files) if parallelism is None else min(parallelism,
+                                                             len(files))
+        frame = spark.sparkContext.parallelize(
+            [(f,) for f in files], n_tasks).toDF(["path"])
+        src = cls(frame, cols, files)
+        src.n_tasks = n_tasks
+        return src
+
+    def identity(self, specs: tuple[SketchSpec, ...]) -> dict:
+        """The input identity a checkpoint pin records: the file list,
+        or the DataFrame's plan fingerprint."""
+        if self.files is not None:
+            return {"files": self.files}
+        import hashlib
+        import re
+
+        # Catches a resume against a DIFFERENT input (path/schema/plan)
+        # that happens to have the same task count.  exprIds
+        # ("tokens#45") differ per session — strip them or a legitimate
+        # resume in a fresh session would spuriously mismatch.  The
+        # analyzed plan alone does NOT name the scanned path ("Relation
+        # [cols] parquet" is path-free), so the fingerprint also folds
+        # in the scan's file listing — bounded to the ends of the sorted
+        # list so a million-file table stays cheap while a different
+        # input directory still changes the pin.
+        proj = self.frame
+        plan = re.sub(r"#\d+", "#", proj._jdf.queryExecution()
+                      .analyzed().toString())
+        files = sorted(proj.inputFiles())
+        file_sig = f"{len(files)}|{files[:8]}|{files[-8:]}"
+        fp = hashlib.md5(
+            (plan + "|" + file_sig + "|" + proj.schema.simpleString() + "|"
+             + ",".join(sorted(s.name for s in specs))).encode()
+        ).hexdigest()
+        return {"plan_fingerprint": fp}
+
+
+def _partials(src: _Source, specs: tuple[SketchSpec, ...],
+              group_col: str | None = None, ckpt_dir: str | None = None,
+              run_id: str | None = None) -> DataFrame:
+    """Phase 1 for every build: ONE mapInArrow task body over ``src``
+    feeding a _PartitionAcc (or a _GroupedAcc when ``group_col`` is
+    set), emitting one state row per (partition[, group], spec).
+
+    With ``ckpt_dir``, the run's identity is pinned before any task
+    runs (see _pin_ckpt_slicing): task count, input identity, every
+    spec's (kind, input, params), and the group column.  Each task then
+    atomically commits its states — a zero-row batch for an empty
+    partition, so the skip applies to it too — and a re-run skips
+    completed partitions WITHOUT pulling their input iterator."""
+    if ckpt_dir is not None:
+        if run_id is None:
+            # a shared implicit id would silently resume a DIFFERENT
+            # build's states from the same dir — demand an identity
+            raise ValueError("ckpt_dir requires an explicit run_id")
+        meta = {"n_tasks": src.n_tasks, **src.identity(specs),
+                "specs": sorted(
+                    f"{s.name}:{json.dumps(s.params, sort_keys=True, default=repr)}"
+                    for s in specs)}
+        if group_col is not None:
+            meta["group_col"] = group_col
+        _pin_ckpt_slicing(ckpt_dir, run_id, meta)
+    if group_col is None:
+        new_acc, schema = partial(_PartitionAcc, specs), STATE_SCHEMA
+    else:
+        new_acc = partial(_GroupedAcc, specs, group_col)
+        schema = GROUP_STATE_SCHEMA
+    cols, from_files = src.cols, src.files is not None
+
+    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
@@ -369,16 +512,31 @@ def _partial_builder(specs: tuple[SketchSpec, ...], ckpt_dir: str | None,
             done = _ckpt_file(ckpt_dir, run_id, pid)
             if os.path.exists(done):
                 return  # resume: input iterator never consumed
-        pacc = _PartitionAcc(specs)
+        acc = new_acc()
         for batch in batches:
-            pacc.consume(batch)
-        out = pacc.to_record_batch(pid)
+            if from_files:
+                for f in batch.column("path").to_pylist():
+                    _consume_file(acc, f, cols)
+            else:
+                acc.consume(batch)
+        out = acc.to_record_batch(pid)
         if ckpt_dir is not None:
             _commit_state(out, done)
             return
         yield out
 
-    return fn
+    partials = src.frame.mapInArrow(task, schema)
+    if ckpt_dir is not None:
+        return _materialize_ckpt(partials, src.frame.sparkSession,
+                                 ckpt_dir, run_id)
+    return partials
+
+
+def _input_cols(specs, group_col: str | None = None) -> list[str]:
+    cols = {s.input for s in specs}
+    if group_col is not None:
+        cols.add(group_col)
+    return sorted(cols)
 
 
 def build_partials(df: DataFrame, specs=DEFAULT_SPECS,
@@ -388,44 +546,9 @@ def build_partials(df: DataFrame, specs=DEFAULT_SPECS,
 
     plan keeps the parquet scan's partitioning; only needed columns are
     selected so scan pruning pushes down (ReadSchema shrinks)."""
-    cols = sorted({s.input for s in specs})
-    proj = df.select(*cols)
-    if ckpt_dir is not None and run_id is None:
-        # a shared implicit id would silently resume a DIFFERENT build's
-        # states from the same dir — demand an explicit identity
-        raise ValueError("ckpt_dir requires an explicit run_id")
-    fn = _partial_builder(tuple(specs), ckpt_dir, run_id)
-    if ckpt_dir is not None:
-        # weaker than the file-direct pin (a DataFrame's content is not
-        # enumerable here) but catches the common repartition footgun;
-        # the analyzed-plan fingerprint additionally catches a resume
-        # against a DIFFERENT input (path/schema/plan) that happens to
-        # have the same task count
-        import hashlib
-        import re
-
-        # exprIds ("tokens#45") differ per session — strip them or a
-        # legitimate resume in a fresh session would spuriously mismatch.
-        # The analyzed plan alone does NOT name the scanned path
-        # ("Relation [cols] parquet" is path-free), so the fingerprint
-        # also folds in the scan's file listing — bounded to the ends of
-        # the sorted list so a million-file table stays cheap while a
-        # different input directory still changes the pin.
-        plan = re.sub(r"#\d+", "#", proj._jdf.queryExecution()
-                      .analyzed().toString())
-        files = sorted(proj.inputFiles())
-        file_sig = f"{len(files)}|{files[:8]}|{files[-8:]}"
-        fp = hashlib.md5(
-            (plan + "|" + file_sig + "|" + proj.schema.simpleString() + "|"
-             + ",".join(sorted(s.name for s in specs))).encode()
-        ).hexdigest()
-        _pin_ckpt_slicing(ckpt_dir, run_id,
-                          {"n_tasks": proj.rdd.getNumPartitions(),
-                           "plan_fingerprint": fp})
-    partials = proj.mapInArrow(fn, STATE_SCHEMA)
-    if ckpt_dir is not None:
-        return _materialize_ckpt(partials, df.sparkSession, ckpt_dir, run_id)
-    return partials
+    specs = tuple(specs)
+    return _partials(_Source.of_frame(df, _input_cols(specs)), specs,
+                     ckpt_dir=ckpt_dir, run_id=run_id)
 
 
 def _bounded_cols(pf, cols: set[str]) -> frozenset[str]:
@@ -476,63 +599,10 @@ def build_partials_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
     operator that consumes whole files anyway.  Returns (states_df,
     num_leaves).
     """
-    import glob as _glob
-
-    files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {path}")
     specs = tuple(specs)
-    cols = sorted({s.input for s in specs})
-    if ckpt_dir is not None and run_id is None:
-        raise ValueError("ckpt_dir requires an explicit run_id")
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pqr
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        if ckpt_dir is not None:
-            done = _ckpt_file(ckpt_dir, run_id, pid)
-            if os.path.exists(done):
-                return
-        pacc = _PartitionAcc(specs)
-        for pathbatch in batches:
-            for f in pathbatch.column("path").to_pylist():
-                pf = pqr.ParquetFile(f)
-                pacc.bounded = _bounded_cols(pf, pacc.hash_inputs)
-                # use_threads=False: each task owns ONE core (cluster task-slot
-                # semantics); Arrow's default pool would oversubscribe
-                # the executor and corrupt N-vs-4N scaling evidence
-                for batch in pf.iter_batches(batch_size=16384,
-                                             columns=cols,
-                                             use_threads=False):
-                    pacc.consume(batch)
-        out = pacc.to_record_batch(pid)
-        if ckpt_dir is not None:
-            _commit_state(out, done)
-            return
-        yield out
-
-    # parallelize slices evenly: exactly one file per task by default
-    # (repartition's round-robin can leave tasks empty while others
-    # carry two files).  An explicit ``parallelism`` caps the task count
-    # instead — contiguous file slices per task — which is the
-    # single-box analog of running the same job on fewer executors
-    # (each executor-core simply owns more files), used by the bench's
-    # N-vs-4N scaling evidence.
-    n_tasks = len(files) if parallelism is None else min(parallelism,
-                                                         len(files))
-    if ckpt_dir is not None:
-        _pin_ckpt_slicing(ckpt_dir, run_id,
-                          {"n_tasks": n_tasks, "files": files})
-    paths_df = spark.sparkContext.parallelize(
-        [(f,) for f in files], n_tasks).toDF(["path"])
-    partials = paths_df.mapInArrow(fn, STATE_SCHEMA)
-    if ckpt_dir is not None:
-        return (_materialize_ckpt(partials, spark, ckpt_dir, run_id),
-                n_tasks)
-    return partials, n_tasks
+    src = _Source.of_files(spark, path, _input_cols(specs), parallelism)
+    return (_partials(src, specs, ckpt_dir=ckpt_dir, run_id=run_id),
+            src.n_tasks)
 
 
 def build_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
@@ -542,15 +612,7 @@ def build_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
     """End-to-end file-direct build (see build_partials_files)."""
     partials, leaves = build_partials_files(spark, path, specs, ckpt_dir,
                                             run_id, parallelism)
-    final = _finalize(partials, leaves, fanin)
-    sketches = {row["kind"]: base.from_bytes(row["state"]) for row in final}
-    return BuildResult(
-        sketches=sketches,
-        n_rows=max((r["n_rows"] for r in final), default=0),
-        n_tokens=max((r["n_tokens"] for r in final), default=0),
-        build_ms_total=max((r["build_ms"] for r in final), default=0.0),
-        num_partitions=leaves,
-    )
+    return _build_result(partials, leaves, fanin)
 
 
 def tree_merge(states: DataFrame, num_leaves: int, fanin: int = 16,
@@ -609,14 +671,11 @@ def _finalize(partials: DataFrame, num_leaves: int, fanin: int,
     df = partials
     if num_leaves > driver_threshold:
         df = tree_merge(df, num_leaves, fanin, target_leaves=driver_threshold)
-    if hasattr(df, "toArrow"):
-        # Arrow collect: the states come back as one arrow stream
-        # instead of pickled Rows — measured 0.2 s vs 1.6 s for the
-        # same 64 x ~3 MB state rows (driver-side pickle of big binary
-        # cells dominates plain collect())
-        rows = df.toArrow().to_pylist()
-    else:  # pragma: no cover - pyspark < 4.0 fallback
-        rows = df.collect()
+    # Arrow collect: the states come back as one arrow stream instead of
+    # pickled Rows — measured 0.2 s vs 1.6 s for the same 64 x ~3 MB
+    # state rows (driver-side pickle of big binary cells dominates
+    # plain collect())
+    rows = df.toArrow().to_pylist()
     by_kind: dict[str, list] = {}
     for r in rows:
         by_kind.setdefault(r["kind"], []).append(r)
@@ -635,61 +694,60 @@ def _finalize(partials: DataFrame, num_leaves: int, fanin: int,
     return out
 
 
-def build(df: DataFrame, specs=DEFAULT_SPECS, fanin: int = 16,
-          ckpt_dir: str | None = None, run_id: str | None = None) -> BuildResult:
-    """End-to-end two-phase build -> final sketches on the driver."""
-    num_parts = df.rdd.getNumPartitions()
-    partials = build_partials(df, specs, ckpt_dir, run_id)
-    final = _finalize(partials, num_parts, fanin)
-    sketches = {row["kind"]: base.from_bytes(row["state"]) for row in final}
+def _build_result(partials: DataFrame, leaves: int,
+                  fanin: int) -> BuildResult:
+    final = _finalize(partials, leaves, fanin)
     return BuildResult(
-        sketches=sketches,
+        sketches={row["kind"]: base.from_bytes(row["state"]) for row in final},
         n_rows=max((r["n_rows"] for r in final), default=0),
         n_tokens=max((r["n_tokens"] for r in final), default=0),
         build_ms_total=max((r["build_ms"] for r in final), default=0.0),
-        num_partitions=num_parts,
+        num_partitions=leaves,
     )
 
 
+def build(df: DataFrame, specs=DEFAULT_SPECS, fanin: int = 16,
+          ckpt_dir: str | None = None, run_id: str | None = None) -> BuildResult:
+    """End-to-end two-phase build -> final sketches on the driver."""
+    specs = tuple(specs)
+    src = _Source.of_frame(df, _input_cols(specs))
+    partials = _partials(src, specs, ckpt_dir=ckpt_dir, run_id=run_id)
+    return _build_result(partials, src.n_tasks, fanin)
+
+
 class _GroupedAcc:
-    """Per-(partition, group) accumulation shared by both scan variants."""
+    """Per-(partition, group) accumulation: one _PartitionAcc per group.
+
+    Rows whose group is null form ONE group with a null key, as SQL
+    ``GROUP BY`` does; null list elements and null values are dropped
+    exactly as the ungrouped build drops them (``_flat_values``)."""
 
     def __init__(self, specs: tuple[SketchSpec, ...], group_col: str):
         self.specs = specs
         self.group_col = group_col
-        self.accs: dict[str, _PartitionAcc] = {}
-        self.ms: dict[str, float] = {}
+        self.inputs = sorted({s.input for s in specs})
+        self.hash_inputs = {s.input for s in specs if s.kind in _HASH_KINDS}
+        self.accs: dict[str | None, _PartitionAcc] = {}
+        self.ms: dict[str | None, float] = {}
         self.bounded: frozenset[str] = frozenset()  # see _bounded_cols
 
     def consume(self, batch: pa.RecordBatch) -> None:
         """Regroup ONCE per batch, then feed each group zero-copy value
         slices.
 
-        The previous shape gathered each group's rows with its own
-        Table.take and re-ran the full consume machinery per (group,
-        batch) — measured 4x the ungrouped consume on 5-source token
-        batches (the takes about half of it, the per-group flatten /
-        dedup passes the rest).  Now the group column dictionary-
-        encodes, ONE stable row sort + ONE take makes every group's
-        rows contiguous, each value column flattens once, and
-        per-group value SLICES (zero-copy views into the flat array)
-        go straight into consume_arrays — per-batch passes over
-        token-level data drop from O(groups) to O(1), the single-group
-        batch (input files already laid out by group) skips the sort
-        and take entirely, and the dedup scratch is the same warm
-        buffer the ungrouped build uses.  Nullable group/value columns
-        take the old per-group gather path (nulls need the
-        _flatten_column drop-null semantics)."""
-        gcol = batch.column(self.group_col)
-        inputs = sorted({s.input for s in self.specs})
-        if gcol.null_count or any(
-                batch.column(n).null_count for n in inputs):
-            self._consume_gathered(batch)
-            return
+        The group column dictionary-encodes, ONE stable row sort + ONE
+        take makes every group's rows contiguous, each value column
+        flattens once, and per-group value SLICES (views into the flat
+        array, located through per-row offsets) go straight into
+        consume_arrays — per-batch passes over token-level data are
+        O(1), not O(groups), and the single-group batch (input files
+        already laid out by group) skips the sort and take entirely."""
         t_start = time.perf_counter()
-        enc = gcol.dictionary_encode()
+        enc = batch.column(self.group_col).dictionary_encode(
+            null_encoding="encode")
         codes = enc.indices.to_numpy(zero_copy_only=False)
-        keys = [str(k) for k in enc.dictionary.to_pylist()]
+        keys = [None if k is None else str(k)
+                for k in enc.dictionary.to_pylist()]
         G = len(keys)
         if G == 0:
             return
@@ -703,32 +761,13 @@ class _GroupedAcc:
             bounds = np.concatenate(([0], starts, [len(order)]))
             sub = (pa.Table.from_batches([batch]).take(pa.array(order))
                    .combine_chunks().to_batches()[0])
-        flats: dict[str, np.ndarray] = {}
-        cum: dict[str, np.ndarray] = {}
-        bad_nulls = False
-        for name in inputs:
-            col = sub.column(name)
-            if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
-                vcol = col.flatten()
-                if vcol.null_count:
-                    bad_nulls = True  # null ELEMENTS inside lists
-                    break
-                lens = pc.list_value_length(col).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                cum[name] = np.concatenate(([0], np.cumsum(lens)))
-                flats[name] = vcol.to_numpy(zero_copy_only=False)
-            else:
-                flats[name] = col.to_numpy(zero_copy_only=False)
-        if bad_nulls:
-            self._consume_gathered(batch)
-            return
+        flat = {name: _flat_values(sub.column(name)) for name in self.inputs}
         regroup_ms = (time.perf_counter() - t_start) * 1000.0
         n = batch.num_rows
         for g in range(G):
             s, e = int(bounds[g]), int(bounds[g + 1])
-            vals = {name: (flats[name][cum[name][s]:cum[name][e]]
-                           if name in cum else flats[name][s:e])
-                    for name in inputs}
+            vals = {name: (v[off[s]:off[e]] if off is not None else v[s:e])
+                    for name, (v, off) in flat.items()}
             key = keys[g]
             if key not in self.accs:
                 self.accs[key] = _PartitionAcc(self.specs)
@@ -742,31 +781,7 @@ class _GroupedAcc:
             self.ms[key] += ((time.perf_counter() - t0) * 1000.0
                              + regroup_ms * ((e - s) / max(n, 1)))
 
-    def _consume_gathered(self, batch: pa.RecordBatch) -> None:
-        """Per-group Arrow row gathers — the null-tolerant fallback
-        (original path): each group's rows are taken out of the batch
-        and run through the full consume() machinery."""
-        groups = batch.column(self.group_col).to_numpy(zero_copy_only=False)
-        order = np.argsort(groups, kind="stable")
-        uniq, starts = np.unique(groups[order], return_index=True)
-        bounds = np.append(starts, len(order))
-        tb = pa.Table.from_batches([batch])
-        for gi, g in enumerate(uniq):
-            rows = order[bounds[gi]:bounds[gi + 1]]
-            sub = tb.take(pa.array(rows)).combine_chunks().to_batches()[0]
-            key = str(g)
-            if key not in self.accs:
-                self.accs[key] = _PartitionAcc(self.specs)
-                self.ms[key] = 0.0
-            acc = self.accs[key]
-            acc.bounded = self.bounded
-            t0 = time.perf_counter()
-            acc.consume(sub)
-            self.ms[key] += (time.perf_counter() - t0) * 1000.0
-
-    def to_record_batch(self, pid: int) -> pa.RecordBatch | None:
-        if not self.accs:
-            return None
+    def to_record_batch(self, pid: int) -> pa.RecordBatch:
         names, pids, kinds, blobs, nr, nt, ms = [], [], [], [], [], [], []
         for g, pacc in self.accs.items():
             build_ms = self.ms[g]  # per-group consume time, non-overlapping
@@ -779,7 +794,8 @@ class _GroupedAcc:
                 nt.append(pacc.n_tokens)
                 ms.append(build_ms)
         return pa.RecordBatch.from_arrays(
-            [pa.array(names), pa.array(pids, type=pa.int32()), pa.array(kinds),
+            [pa.array(names, type=pa.string()),
+             pa.array(pids, type=pa.int32()), pa.array(kinds, type=pa.string()),
              pa.array(blobs, type=pa.binary()), pa.array(nr, type=pa.int64()),
              pa.array(nt, type=pa.int64()), pa.array(ms, type=pa.float64())],
             schema=_GROUP_STATE_PA_SCHEMA,
@@ -792,50 +808,13 @@ def build_grouped(df: DataFrame, specs=DEFAULT_SPECS, group_col: str = "source",
     """Sketch per group with map-side combine: partials per (partition,
 
     group) — NO row-data shuffle, so source skew cannot create a hot
-    task — then a state-only merge keyed by group.
-
-    With ``ckpt_dir``/``run_id``, the same resumability contract as the
-    ungrouped build: each task atomically commits its per-(partition,
-    group) states and a re-run skips completed partitions without
-    consuming their input (an empty partition commits a zero-row file
-    so the skip applies to it too)."""
-    cols = sorted({s.input for s in specs} | {group_col})
-    proj = df.select(*cols)
+    task — then a state-only merge keyed by group.  Null group keys
+    form one group whose ``group`` is NULL.  ``ckpt_dir``/``run_id``
+    give the same resumability contract as the ungrouped build."""
     specs = tuple(specs)
-    if ckpt_dir is not None and run_id is None:
-        raise ValueError("ckpt_dir requires an explicit run_id")
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        if ckpt_dir is not None:
-            done = _ckpt_file(ckpt_dir, run_id, pid)
-            if os.path.exists(done):
-                return  # resume: input iterator never consumed
-        gacc = _GroupedAcc(specs, group_col)
-        for batch in batches:
-            gacc.consume(batch)
-        out = gacc.to_record_batch(pid)
-        if ckpt_dir is not None:
-            if out is None:
-                out = pa.RecordBatch.from_arrays(
-                    [pa.array([], type=f.type)
-                     for f in _GROUP_STATE_PA_SCHEMA],
-                    schema=_GROUP_STATE_PA_SCHEMA)
-            _commit_state(out, done)
-            return
-        if out is not None:
-            yield out
-
-    num_parts = proj.rdd.getNumPartitions()
-    if ckpt_dir is not None:
-        _pin_ckpt_slicing(ckpt_dir, run_id, {"n_tasks": num_parts})
-    partials = proj.mapInArrow(fn, GROUP_STATE_SCHEMA)
-    if ckpt_dir is not None:
-        partials = _materialize_ckpt(partials, df.sparkSession,
-                                     ckpt_dir, run_id)
-    return tree_merge(partials, num_parts, fanin,
+    src = _Source.of_frame(df, _input_cols(specs, group_col))
+    partials = _partials(src, specs, group_col, ckpt_dir, run_id)
+    return tree_merge(partials, src.n_tasks, fanin,
                       key_cols=("group", "kind"))
 
 
@@ -845,41 +824,10 @@ def build_grouped_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
 
     inside the workers (no JVM row->Arrow conversion — see
     build_partials_files)."""
-    import glob as _glob
-
-    files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {path}")
     specs = tuple(specs)
-    cols = sorted({s.input for s in specs} | {group_col})
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pqr
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        gacc = _GroupedAcc(specs, group_col)
-        for pathbatch in batches:
-            for f in pathbatch.column("path").to_pylist():
-                pf = pqr.ParquetFile(f)
-                gacc.bounded = _bounded_cols(pf, {s.input for s in specs
-                                                  if s.kind in _HASH_KINDS})
-                # use_threads=False: each task owns ONE core (cluster task-slot
-                # semantics); Arrow's default pool would oversubscribe
-                # the executor and corrupt N-vs-4N scaling evidence
-                for batch in pf.iter_batches(batch_size=16384,
-                                             columns=cols,
-                                             use_threads=False):
-                    gacc.consume(batch)
-        out = gacc.to_record_batch(pid)
-        if out is not None:
-            yield out
-
-    paths_df = spark.sparkContext.parallelize(
-        [(f,) for f in files], len(files)).toDF(["path"])
-    partials = paths_df.mapInArrow(fn, GROUP_STATE_SCHEMA)
-    return tree_merge(partials, len(files), fanin, key_cols=("group", "kind"))
+    src = _Source.of_files(spark, path, _input_cols(specs, group_col))
+    return tree_merge(_partials(src, specs, group_col), src.n_tasks, fanin,
+                      key_cols=("group", "kind"))
 
 
 # ---------------- probe side ----------------------------------------------

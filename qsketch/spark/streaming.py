@@ -48,35 +48,12 @@ class SketchStateStore:
         with open(p) as fh:
             return json.load(fh)
 
-    def _current(self) -> dict | None:
-        cur = self._read_current()
-        if cur is None:
-            legacy = os.path.join(self.state_dir, "_epoch.json")
-            if os.path.exists(legacy):
-                self._migrate_legacy(legacy)
-                cur = self._read_current()
-        return cur
-
-    def _migrate_legacy(self, legacy_marker: str) -> None:
-        """One-time upgrade from the flat pre-epoch-dir layout (blobs +
-        _epoch.json side by side): re-commit the flat blobs under the
-        recorded epoch so accumulated state is never silently dropped."""
-        with open(legacy_marker) as fh:
-            epoch = json.load(fh)["epoch"]
-        blobs = {}
-        for f in os.listdir(self.state_dir):
-            if f.endswith(".bin"):
-                with open(os.path.join(self.state_dir, f), "rb") as fh:
-                    blobs[f[:-4].replace("__", ":")] = base.from_bytes(fh.read())
-        self.commit(blobs, epoch)
-        os.remove(legacy_marker)
-
     def last_epoch(self) -> int:
-        cur = self._current()
+        cur = self._read_current()
         return cur["epoch"] if cur else -1
 
     def load(self) -> dict[str, object]:
-        cur = self._current()
+        cur = self._read_current()
         if cur is None:
             return {}
         d = os.path.join(self.state_dir, cur["dir"])
@@ -96,8 +73,7 @@ class SketchStateStore:
             with open(tmp, "wb") as fh:
                 fh.write(sk.to_bytes())
             os.replace(tmp, os.path.join(d, kind.replace(":", "__") + ".bin"))
-        prev = self._read_current()  # raw read: commit is also the
-        # migration target, so it must not re-trigger migration
+        prev = self._read_current()
         tmp = os.path.join(self.state_dir, "CURRENT.tmp")
         with open(tmp, "w") as fh:
             json.dump({"epoch": epoch, "dir": dirname}, fh)

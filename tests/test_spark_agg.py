@@ -565,27 +565,119 @@ def test_ckpt_pin_corrupt_and_grandfathered(tmp_path):
 
 
 def test_grouped_consume_fast_path_matches_gathered(spark, tiny_df):
-    """The r6 sorted-slice regroup must produce byte-identical states
-    and identical n_rows/n_tokens to the per-group gather fallback."""
+    """The sorted-slice regroup must give every group byte-identical
+    states and identical n_rows/n_tokens to a _PartitionAcc run on that
+    group's rows alone — with a NULL group (one group, key None, as SQL
+    GROUP BY), null list elements, null lists and null scalars mixed
+    in (dropped, as the ungrouped build drops them)."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    from qsketch.spark.agg import SketchSpec, _GroupedAcc
+    from qsketch.spark.agg import SketchSpec, _GroupedAcc, _PartitionAcc
 
-    pdf = tiny_df.limit(400).toPandas()
-    batch = pa.RecordBatch.from_pandas(pdf)
+    tb = pa.Table.from_pandas(tiny_df.limit(400).toPandas(),
+                              preserve_index=False)
+    odd = pa.Table.from_pylist([
+        {"doc_id": "n0", "tokens": [1, 2, 3], "n_tok": 3, "source": None},
+        {"doc_id": "n1", "tokens": [5, None, 7], "n_tok": 3,
+         "source": "web"},
+        {"doc_id": "n2", "tokens": None, "n_tok": None, "source": "books"},
+        {"doc_id": "n3", "tokens": [9, None], "n_tok": None, "source": None},
+        {"doc_id": "n4", "tokens": None, "n_tok": 4, "source": None},
+    ], schema=tb.schema)
+    batch = (pa.concat_tables([odd.slice(0, 2), tb.slice(0, 200),
+                               odd.slice(2), tb.slice(200)])
+             .combine_chunks().to_batches()[0])
     specs = (SketchSpec("quotient", "tokens"), SketchSpec("hll", "tokens"),
              SketchSpec("kll", "n_tok"))
 
-    def run(via_gathered):
-        acc = _GroupedAcc(specs, "source")
-        if via_gathered:
-            acc._consume_gathered(batch)
-        else:
-            acc.consume(batch)
-        rb = acc.to_record_batch(0)
-        return {(g, k): (st, nr, nt) for g, k, st, nr, nt in zip(
-            rb.column(0).to_pylist(), rb.column(2).to_pylist(),
-            rb.column(3).to_pylist(), rb.column(4).to_pylist(),
-            rb.column(5).to_pylist())}
+    def rows(rb, group):
+        d = rb.to_pydict()
+        return {(group(d, i), k): (st, nr, nt) for i, (k, st, nr, nt) in
+                enumerate(zip(d["kind"], d["state"], d["n_rows"],
+                              d["n_tokens"]))}
 
-    assert run(False) == run(True)
+    acc = _GroupedAcc(specs, "source")
+    acc.consume(batch)
+    got = rows(acc.to_record_batch(0), lambda d, i: d["group"][i])
+
+    want = {}
+    src = batch.column("source")
+    for g in set(src.to_pylist()):
+        ref = _PartitionAcc(specs)
+        ref.consume(batch.filter(pc.is_null(src) if g is None
+                                 else pc.equal(src, g)))
+        want.update(rows(ref.to_record_batch(0), lambda d, i, g=g: g))
+    assert None in {g for g, _ in want} and "None" not in {g for g, _ in got}
+    assert got == want
+
+
+def test_grouped_build_null_group_is_one_null_group(spark):
+    """Rows with a NULL group key form ONE group whose ``group`` is
+    NULL (SQL GROUP BY semantics) instead of crashing the build; null
+    tokens are dropped as in the ungrouped build."""
+    rows = [(1, [1, 2, 3], "a"), (2, [3, 4], None), (3, [4, None, 5], None),
+            (4, None, "a"), (5, [7], None)]
+    df = spark.createDataFrame(
+        rows, "doc_id long, tokens array<int>, source string").repartition(2)
+    got = {r["group"]: (base.from_bytes(r["state"]).cardinality(),
+                        r["n_rows"], r["n_tokens"])
+           for r in build_grouped(df, (SketchSpec("quotient", "tokens"),),
+                                  "source").collect()}
+    assert got == {"a": (3, 2, 3), None: (4, 3, 5)}
+
+
+def test_grouped_ckpt_resume_rejects_different_input(spark, tmp_path):
+    """A grouped checkpoint pins its input identity and group column:
+    resuming the same run_id against a DIFFERENT input with the same
+    task count must fail loudly instead of returning the first input's
+    states."""
+    specs = (SketchSpec("quotient", "tokens"),)
+    paths = []
+    for seed in (5, 6):
+        p = str(tmp_path / f"in{seed}")
+        generate_tokenized(spark, 400, seed=seed,
+                           num_partitions=4).write.parquet(p)
+        paths.append(p)
+    a, b = (spark.read.parquet(p) for p in paths)
+    assert a.rdd.getNumPartitions() == b.rdd.getNumPartitions()
+    ck = str(tmp_path / "ck")
+    build_grouped(a, specs, "source", ckpt_dir=ck, run_id="g").collect()
+    with pytest.raises(ValueError, match="mis-map"):
+        build_grouped(b, specs, "source", ckpt_dir=ck, run_id="g")
+    with pytest.raises(ValueError, match="mis-map"):
+        build_grouped(a.withColumnRenamed("source", "src"), specs, "src",
+                      ckpt_dir=ck, run_id="g")
+
+
+def test_ckpt_resume_rejects_changed_spec_params(spark, tiny_df, tmp_path):
+    """The checkpoint pin records every spec's params: resuming a run
+    with a different CMS width must raise before any task runs, not
+    re-run the lost partitions into the same checkpoint at the new
+    width (a mixed-width checkpoint that can no longer merge)."""
+    import os
+
+    from qsketch.spark.agg import build_files
+
+    p = str(tmp_path / "tok")
+    tiny_df.repartition(4).write.parquet(p)
+    ck = str(tmp_path / "ck")
+    narrow = (SketchSpec("cms", "tokens", {"width": 1024}),)
+    wide = (SketchSpec("cms", "tokens", {"width": 2048}),)
+    build_files(spark, p, narrow, ckpt_dir=ck, run_id="w")
+    d = os.path.join(ck, "w")
+    lost = sorted(f for f in os.listdir(d) if f.startswith("state-"))[0]
+    os.remove(os.path.join(d, lost))  # a crash lost one partition
+    with pytest.raises(ValueError, match="mis-map"):
+        build_files(spark, p, wide, ckpt_dir=ck, run_id="w")
+    assert not os.path.exists(os.path.join(d, lost)), "a task ran"
+    # the DataFrame source pins params too
+    ck2 = str(tmp_path / "ck2")
+    build_partials(tiny_df, narrow, ckpt_dir=ck2, run_id="w").collect()
+    with pytest.raises(ValueError, match="mis-map"):
+        build_partials(tiny_df, wide, ckpt_dir=ck2, run_id="w")
+    # the unchanged specs still resume to the uninterrupted result
+    a = build_files(spark, p, narrow, ckpt_dir=ck, run_id="w")
+    b = build_files(spark, p, narrow)
+    assert (a.sketches["cms:tokens"].to_bytes()
+            == b.sketches["cms:tokens"].to_bytes())

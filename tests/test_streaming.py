@@ -112,30 +112,6 @@ def test_windowed_token_rate(spark, tmp_path):
     assert got == {0: (150, 2), 1: (30, 1)}
 
 
-def test_state_store_migrates_legacy_flat_layout(spark, tmp_path):
-    """A store written by the pre-epoch-dir format must be read, not
-    silently treated as empty."""
-    import json
-    import os
-
-    from qsketch.spark.agg import SketchSpec, build
-    from qsketch.spark.io import generate_tokenized
-    from qsketch.spark.streaming import SketchStateStore
-
-    d = str(tmp_path / "legacy")
-    os.makedirs(d)
-    df = generate_tokenized(spark, 100, seed=8, num_partitions=2)
-    res = build(df, (SketchSpec("cms", "tokens"),))
-    with open(os.path.join(d, "cms__tokens.bin"), "wb") as fh:
-        fh.write(res.sketches["cms:tokens"].to_bytes())
-    with open(os.path.join(d, "_epoch.json"), "w") as fh:
-        json.dump({"epoch": 5}, fh)
-
-    store = SketchStateStore(d)
-    assert store.last_epoch() == 5
-    assert store.load()["cms:tokens"].total == res.sketches["cms:tokens"].total
-
-
 def test_rolling_sketch_by_key_stateful(spark, tmp_path):
     """Custom stateful operator (applyInPandasWithState): per-source
     rolling HLL state persists across micro-batches."""
