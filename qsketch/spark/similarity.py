@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..hash import splitmix64
+from .pairs import group_pair_scores
 
 
 def _norm_expr(col: str):
@@ -155,8 +156,8 @@ def srp_bucket_keys(df: DataFrame, dim: int, n_bits: int = 16,
 
     ``include_vec=True`` additionally carries the embedding on every
     key row (one copy per table) — the input to the bucket-local
-    verify (:func:`_lsh_pairs_bucketed`), which needs each bucket's
-    vectors co-located."""
+    verify (:func:`_cosine_pairs`), which needs each bucket's vectors
+    co-located."""
     def planes(table: int) -> np.ndarray:
         raw = splitmix64(
             np.arange(dim * n_bits, dtype=np.uint64)
@@ -200,161 +201,54 @@ def srp_bucket_keys(df: DataFrame, dim: int, n_bits: int = 16,
     return df.select(id_col, vec_col).mapInArrow(fn, schema)
 
 
-def _grouped_pair_scores(keyed: DataFrame, key_cols: tuple[str, str],
-                         threshold: float, id_col: str, vec_col: str,
-                         block_col: str | None = None,
-                         dedup: bool = True) -> DataFrame:
-    """(a, b, cosine) with a < b and cosine >= threshold, scored PER
-
-    ``key_cols`` group without ever materializing a pair-level frame:
-
-      * no candidate-pair exchange: the only wide op is ONE hash
-        exchange of the (id, keys, vector) rows — linear in the input;
-      * no pair-level Python boundary: each group's vectors cross once
-        and all i<j pairs score in-batch with a float64 einsum;
-      * only above-threshold pairs leave Python.
+def _cosine_pairs(keyed: DataFrame, key_cols: tuple[str, str],
+                  threshold: float, id_col: str, vec_col: str,
+                  block_col: str | None = None) -> DataFrame:
+    """(a, b, cosine) with a < b and cosine >= threshold, scored per
+    ``key_cols`` group by :func:`~qsketch.spark.pairs.group_pair_scores`
+    with a blocked-GEMM kernel (row block x full group matrix, ~32 MB
+    of float64 scores per block; norms once per group).  A pair met in
+    several groups keeps its max — values differ by at most ~1 ulp
+    between groups from summation order, and callers round to 6 dp
+    before comparison.
 
     ``block_col`` is the blocked all-pairs mode (each row carries its
     block id; group key = an (i, j) block pair with i <= j): an
     off-diagonal group scores only cross-block pairs, the diagonal
-    group scores everything — so every pair is emitted EXACTLY once
-    and ``dedup=False`` skips the final collapse.  Without it (the LSH
-    mode) a pair can appear once per shared bucket and ``dedup=True``
-    collapses the repeats with a deterministic max (values differ by
-    at most ~1 ulp between groups from einsum summation order —
-    callers round to 6 dp before comparison, where a flip would need
-    a cosine within 1e-10 of a rounding boundary).
+    group scores everything, so every pair is scored in exactly one
+    group.  Zero-norm sides reproduce the _safe_cosine_expr semantics
+    (denominator underflow -> pair dropped, never a NaN passing the
+    threshold)."""
+    def load(batch):
+        cols = [_batch_matrix(batch.column(vec_col))]
+        if block_col:
+            cols.append(batch.column(block_col).to_numpy(zero_copy_only=False))
+        return cols
 
-    Groups are streamed from sortWithinPartitions(*key_cols) order
-    with a carry across Arrow batch boundaries, so a group split over
-    two batches still scores its cross-batch pairs.  Zero-norm sides
-    reproduce the _safe_cosine_expr semantics (denominator underflow
-    -> pair dropped, never a NaN passing the threshold)."""
-    k0, k1 = key_cols
-    part = (keyed.repartition(*key_cols)
-                 .sortWithinPartitions(*key_cols))
-    id_t = keyed.schema[id_col].dataType.simpleString()
-
-    def pairs_of(ids: np.ndarray, X: np.ndarray,
-                 blocks: np.ndarray | None, diagonal: bool):
-        """All qualifying i<j pairs of one group via BLOCKED GEMM:
-        row-block x full-matrix products keep peak scratch at
-        ~RB x g x 8 B regardless of group size (a triu_indices
-        materialization would be O(g^2) index memory — 800 MB for a
-        10k-row group), and the dense product is what BLAS is fastest
-        at anyway.  Only pairs passing the threshold are gathered."""
-        g = len(ids)
-        if g < 2:
-            return None
+    def kernel(key, payload):
+        X = payload[0]
         norms = np.maximum(np.sqrt(np.einsum("ij,ij->i", X, X)), 1e-300)
-        out_a, out_b, out_c = [], [], []
-        RB = max(1, (1 << 22) // g)  # ~32 MB of float64 scores per block
-        for r0 in range(0, g - 1, RB):
-            r1 = min(r0 + RB, g)
+        blk = payload[1] if block_col and key[0] != key[1] else None
+
+        def block(r0, r1):
             scores = X[r0:r1] @ X.T                    # (b, g)
             denom = norms[r0:r1, None] * norms[None, :]
             ok = denom != 0.0
             cos = np.divide(scores, denom,
                             out=np.full_like(scores, -np.inf), where=ok)
             ri, j = np.nonzero(cos >= threshold)
-            if not len(ri):
-                continue
-            i = ri + r0
-            m = j > i                                  # upper triangle
-            if blocks is not None and not diagonal:
-                m &= blocks[i] != blocks[j]
-            if not m.any():
-                continue
-            i, j = i[m], j[m]
-            ia, jb = ids[i], ids[j]
-            out_a.append(np.minimum(ia, jb))
-            out_b.append(np.maximum(ia, jb))
-            out_c.append(cos[ri[m], j])
-        if not out_a:
-            return None
-        return (np.concatenate(out_a), np.concatenate(out_b),
-                np.concatenate(out_c))
+            if blk is not None:
+                k = blk[ri + r0] != blk[j]
+                ri, j = ri[k], j[k]
+            return ri, j, cos[ri, j]
+        return block
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pend = None  # (key, ids, X, blocks) of the trailing group
-
-        def emit(res):
-            a, b, c = res
-            return pa.RecordBatch.from_arrays(
-                [pa.array(a), pa.array(b),
-                 pa.array(c, type=pa.float64())],
-                names=["a", "b", "cosine"])
-
-        def score(key, gids, gX, gblk):
-            return pairs_of(gids, gX, gblk, diagonal=key[0] == key[1])
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            c0 = batch.column(k0).to_numpy(zero_copy_only=False)
-            c1 = batch.column(k1).to_numpy(zero_copy_only=False)
-            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
-            blk = (batch.column(block_col).to_numpy(zero_copy_only=False)
-                   if block_col else None)
-            X = _batch_matrix(batch.column(vec_col))
-            change = np.flatnonzero((c0[1:] != c0[:-1])
-                                    | (c1[1:] != c1[:-1])) + 1
-            bounds = np.concatenate(([0], change, [len(c0)]))
-            outs = []
-            # a deferred group that ended EXACTLY at the previous batch
-            # boundary must flush now, or the next deferral would
-            # silently drop it
-            if pend is not None and pend[0] != (int(c0[0]), int(c1[0])):
-                res = score(pend[0], pend[1], pend[2], pend[3])
-                if res is not None:
-                    outs.append(res)
-                pend = None
-            for k in range(len(bounds) - 1):
-                s, e = int(bounds[k]), int(bounds[k + 1])
-                gids, gX = ids[s:e], X[s:e]
-                gblk = blk[s:e] if blk is not None else None
-                key = (int(c0[s]), int(c1[s]))
-                if pend is not None and pend[0] == key:
-                    gids = np.concatenate([pend[1], gids])
-                    gX = np.vstack([pend[2], gX])
-                    if gblk is not None:
-                        gblk = np.concatenate([pend[3], gblk])
-                    pend = None
-                if e == len(c0):
-                    # the batch's last group may continue in the next
-                    # batch of this partition — defer it
-                    pend = (key, gids, gX, gblk)
-                    break
-                res = score(key, gids, gX, gblk)
-                if res is not None:
-                    outs.append(res)
-            if outs:
-                yield emit(tuple(np.concatenate(x)
-                                 for x in zip(*outs)))
-        if pend is not None:
-            res = score(pend[0], pend[1], pend[2], pend[3])
-            if res is not None:
-                yield emit(res)
-
-    scored = part.mapInArrow(fn, f"a {id_t}, b {id_t}, cosine double")
-    if not dedup:
-        return scored
-    return scored.groupBy("a", "b").agg(F.max("cosine").alias("cosine"))
-
-
-def _lsh_pairs_bucketed(keyed: DataFrame, threshold: float,
-                        id_col: str, vec_col: str) -> DataFrame:
-    """LSH mode of :func:`_grouped_pair_scores`: same candidate set as
-    the bucket self-join + distinct + vector-attach joins + pair-level
-    verify it replaced (a pair is emitted iff it shares >= 1
-    (table, bucket) and passes the threshold), with the quadratic
-    intermediates never materializing."""
-    return _grouped_pair_scores(keyed, ("table", "bucket"), threshold,
-                                id_col, vec_col)
+    return group_pair_scores(keyed, key_cols, id_col, load, kernel,
+                             1 << 22, "cosine double", F.max)
 
 
 def _allpairs_blocked(corpus: DataFrame, threshold: float, id_col: str,
-                      vec_col: str, n_blocks: int | None = None) -> DataFrame:
+                      vec_col: str) -> DataFrame:
     """Exact all-pairs cosine >= threshold via deterministic block
     pairs — the distributed replacement for a crossJoin + per-element
     Catalyst dot product (measured ~11 s at sf0.1: one interpreted
@@ -365,14 +259,12 @@ def _allpairs_blocked(corpus: DataFrame, threshold: float, id_col: str,
     group scores only cross-block pairs and the diagonal scores
     within-block pairs, so every pair is scored exactly once — no
     cartesian join node, no corpus broadcast/collect, and the shuffle
-    is B x corpus bytes (B ~ sqrt(2 x shuffle partitions), so group
-    count ~ partition count).  Still O(n^2) COMPUTE by definition —
-    that is what "exact" means — but vectorized einsum instead of
-    interpreted expression evaluation."""
-    spark = corpus.sparkSession
-    if n_blocks is None:
-        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n_blocks = max(2, int(np.ceil(np.sqrt(2.0 * parts))))
+    is B x corpus bytes (B = max(2, ceil(sqrt(2 x shuffle partitions))),
+    so group count ~ partition count).  Still O(n^2) COMPUTE by
+    definition — that is what "exact" means — but blocked GEMM instead
+    of interpreted expression evaluation."""
+    parts = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_blocks = max(2, int(np.ceil(np.sqrt(2.0 * parts))))
     blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
     groups = F.array(*[
         F.struct(F.least(F.col("__blk"), F.lit(x)).alias("gi"),
@@ -384,9 +276,8 @@ def _allpairs_blocked(corpus: DataFrame, threshold: float, id_col: str,
              .select(id_col, vec_col, "__blk",
                      F.col("__g.gi").alias("__gi"),
                      F.col("__g.gj").alias("__gj")))
-    return _grouped_pair_scores(keyed, ("__gi", "__gj"), threshold,
-                                id_col, vec_col, block_col="__blk",
-                                dedup=False)
+    return _cosine_pairs(keyed, ("__gi", "__gj"), threshold, id_col, vec_col,
+                         block_col="__blk")
 
 
 def train_ivf_centroids(corpus: DataFrame, dim: int, n_cells: int = 64,
@@ -499,15 +390,15 @@ def embedding_near_duplicates(corpus: DataFrame, threshold: float = 0.95,
         if dim is None:
             first = corpus.select(vec_col).first()
             dim = len(first[0]) if first is not None else 1  # empty corpus
-        # bucket-LOCAL verify (see _lsh_pairs_bucketed): same candidate
-        # semantics as the bucket self-join it replaces, but the only
-        # wide op is one linear key-row exchange — no quadratic
-        # candidate distinct, no per-pair vector shipping (at a LOW
-        # threshold the candidate set approaches all-pairs, which made
-        # both of those the dominant cost of this query)
+        # bucket-LOCAL verify: a pair is emitted iff it shares >= 1
+        # (table, bucket) and passes the threshold, and the only wide op
+        # is one linear key-row exchange — no quadratic candidate
+        # distinct, no per-pair vector shipping (at a LOW threshold the
+        # candidate set approaches all-pairs)
         keys = srp_bucket_keys(corpus, dim, n_bits, id_col, vec_col,
                                n_tables=n_tables, include_vec=True)
-        return _lsh_pairs_bucketed(keys, threshold, id_col, vec_col)
+        return _cosine_pairs(keys, ("table", "bucket"), threshold,
+                             id_col, vec_col)
     else:
         raise ValueError(f"unknown method {method!r}")
 

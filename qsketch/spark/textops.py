@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..hash import fnv1a64, fnv1a64_buf, fnv1a64_str_array, splitmix64
+from .pairs import group_pair_scores
 
 U64 = np.uint64
 _FNV_PRIME = U64(0x100000001B3)
@@ -1289,8 +1290,9 @@ def simhash(df: DataFrame, text_col: str = "text",
 
     toks_expr = F.filter(F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
                          lambda t: t != "")
+    id_t = df.schema[id_col].dataType.simpleString()
     return df.select(id_col, toks_expr.alias("__toks")).mapInArrow(
-        fn, f"{id_col} long, simhash long")
+        fn, f"{id_col} {id_t}, simhash long")
 
 
 def simhash_pairs(sh_df: DataFrame, id_col: str = "doc_id",
@@ -1301,20 +1303,17 @@ def simhash_pairs(sh_df: DataFrame, id_col: str = "doc_id",
     Pigeonhole: two hashes within Hamming distance d differ in <= d of
     n_slices disjoint slices, so they AGREE on at least one slice when
     n_slices >= d + 1 — candidates are pairs sharing any (slice_idx,
-    slice_value) bucket.  The verify is bucket-LOCAL (the same shape
-    as similarity's pair scorer): one hash exchange co-locates each
-    (slice, value) bucket's (id, simhash) rows — 20-ish bytes per row,
-    n_slices x corpus, LINEAR — and a mapInArrow pass scores all i<j
-    pairs per bucket with a vectorized SWAR popcount; only pairs
-    within ``max_hamming`` leave Python, and a groupBy(a, b) collapses
-    the per-slice repeats (hamming is the same integer in every
-    bucket, so the dedup is exact).  The previous bucket self-join +
-    distinct materialized every slice-collision pair
-    (~n^2 x n_slices / 2^16 rows — mildly quadratic) and recomputed
-    the upstream simhash scan on both join sides.  ``max_bucket``
-    drops degenerate buckets exactly like lsh_candidate_pairs (run
-    exact dedup first); it defaults to None = unbounded recall
-    (changed from a lossy default of 500 in round 3).
+    slice_value) bucket.  The verify is bucket-LOCAL
+    (:func:`~qsketch.spark.pairs.group_pair_scores`): one hash exchange
+    co-locates each (slice, value) bucket's (id, simhash) rows — 20-ish
+    bytes per row, n_slices x corpus, LINEAR — and a vectorized SWAR
+    popcount scores all i<j pairs per bucket; only pairs within
+    ``max_hamming`` leave Python, and a groupBy(a, b) collapses the
+    per-slice repeats with min (hamming is the same integer in every
+    bucket, so the collapse is exact).  Rows sharing an id never pair.
+    ``max_bucket`` drops degenerate buckets exactly like
+    lsh_candidate_pairs (run exact dedup first); it defaults to None =
+    unbounded recall (changed from a lossy default of 500 in round 3).
     """
     if n_slices < max_hamming + 1:
         raise ValueError("need n_slices >= max_hamming + 1 for full recall")
@@ -1334,10 +1333,7 @@ def simhash_pairs(sh_df: DataFrame, id_col: str = "doc_id",
                            F.col("s.slice").alias("slice"),
                            F.col("s.slice_val").alias("slice_val")))
     sliced = _cap_buckets(sliced, ("slice", "slice_val"), max_bucket)
-    part = (sliced.repartition("slice", "slice_val")
-                  .sortWithinPartitions("slice", "slice_val"))
-    id_t = sh_df.schema[id_col].dataType.simpleString()
-    maxh = int(max_hamming)
+    maxh = U64(max_hamming)
 
     def popcount64(x: np.ndarray) -> np.ndarray:
         x = x - ((x >> U64(1)) & U64(0x5555555555555555))
@@ -1347,82 +1343,22 @@ def simhash_pairs(sh_df: DataFrame, id_col: str = "doc_id",
         with np.errstate(over="ignore"):
             return (x * U64(0x0101010101010101)) >> U64(56)
 
-    def pairs_of(ids: np.ndarray, hs: np.ndarray):
-        g = len(ids)
-        if g < 2:
-            return None
-        out = []
-        RB = max(1, (1 << 21) // g)  # ~16 MB of uint64 xor per block
-        for r0 in range(0, g - 1, RB):
-            r1 = min(r0 + RB, g)
+    def load(batch):
+        return [batch.column("simhash").to_numpy(zero_copy_only=False)
+                .astype(np.int64, copy=False).view(np.uint64)]
+
+    def kernel(key, payload):
+        hs = payload[0]
+
+        def block(r0, r1):
             hd = popcount64(hs[r0:r1, None] ^ hs[None, :])
-            ri, j = np.nonzero(hd <= U64(maxh))
-            if not len(ri):
-                continue
-            i = ri + r0
-            m = j > i
-            if not m.any():
-                continue
-            i, j = i[m], j[m]
-            out.append((np.minimum(ids[i], ids[j]),
-                        np.maximum(ids[i], ids[j]),
-                        hd[ri[m], j].astype(np.int32)))
-        if not out:
-            return None
-        return tuple(np.concatenate(x) for x in zip(*out))
+            ri, j = np.nonzero(hd <= maxh)
+            return ri, j, hd[ri, j].astype(np.int32)
+        return block
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pend = None  # (key, ids, hashes) of the trailing bucket
-
-        def emit(res):
-            a, b, h = res
-            return pa.RecordBatch.from_arrays(
-                [pa.array(a), pa.array(b), pa.array(h)],
-                names=["a", "b", "hamming"])
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            sl = batch.column("slice").to_numpy(zero_copy_only=False)
-            sv = batch.column("slice_val").to_numpy(zero_copy_only=False)
-            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
-            hs = (batch.column("simhash").to_numpy(zero_copy_only=False)
-                  .astype(np.int64, copy=False).view(np.uint64))
-            change = np.flatnonzero((sl[1:] != sl[:-1])
-                                    | (sv[1:] != sv[:-1])) + 1
-            bounds = np.concatenate(([0], change, [len(sl)]))
-            outs = []
-            # flush a bucket that ended exactly at the previous batch
-            # boundary (same carry contract as _grouped_pair_scores)
-            if pend is not None and pend[0] != (int(sl[0]), int(sv[0])):
-                res = pairs_of(pend[1], pend[2])
-                if res is not None:
-                    outs.append(res)
-                pend = None
-            for k in range(len(bounds) - 1):
-                s, e = int(bounds[k]), int(bounds[k + 1])
-                gids, ghs = ids[s:e], hs[s:e]
-                key = (int(sl[s]), int(sv[s]))
-                if pend is not None and pend[0] == key:
-                    gids = np.concatenate([pend[1], gids])
-                    ghs = np.concatenate([pend[2], ghs])
-                    pend = None
-                if e == len(sl):
-                    pend = (key, gids, ghs)
-                    break
-                res = pairs_of(gids, ghs)
-                if res is not None:
-                    outs.append(res)
-            if outs:
-                yield emit(tuple(np.concatenate(x) for x in zip(*outs)))
-        if pend is not None:
-            res = pairs_of(pend[1], pend[2])
-            if res is not None:
-                yield emit(res)
-
-    scored = part.mapInArrow(fn, f"a {id_t}, b {id_t}, hamming int")
-    return (scored.groupBy("a", "b")
-            .agg(F.min("hamming").cast("int").alias("hamming")))
+    # ~16 MB of uint64 xor per row block
+    return group_pair_scores(sliced, ("slice", "slice_val"), id_col, load,
+                             kernel, 1 << 21, "hamming int", F.min)
 
 
 def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
@@ -1437,7 +1373,8 @@ def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
 
     ``max_bucket`` defaults to None = unbounded recall (changed from a
     lossy default of 500 in round 3 — existing callers now get full
-    recall and, on skewed buckets, a larger self-join).  At web scale
+    recall and, on skewed buckets, quadratic per-bucket scoring).  At
+    web scale
     set a cap and audit drops with :func:`oversized_buckets`.
 
     ``idf_weighted=True`` computes a bounded common-token idf table

@@ -141,6 +141,8 @@ def test_lsh_paths_have_no_cartesian_product(spark):
     at 100 TB.  (Since r6 the exact embedding path is included too: it
     is O(n^2) COMPUTE by definition, but distributes it over block-pair
     groups instead of a cartesian join node.)"""
+    import re
+
     import numpy as np
 
     from qsketch.spark.similarity import embedding_near_duplicates
@@ -169,6 +171,16 @@ def test_lsh_paths_have_no_cartesian_product(spark):
     for name, plan in plans.items():
         assert "CartesianProduct" not in plan, f"{name}: cartesian!"
         assert "BroadcastNestedLoopJoin" not in plan, f"{name}: NL join!"
+    # the streamed-group pair scorer: one REPARTITION_BY_COL exchange on
+    # the group keys below its MapInArrow (the first one printed), one
+    # hashpartitioning(a, b) exchange above it for the pair collapse
+    for name in ("simhash", "embedding_lsh", "embedding_exact"):
+        above, below = plans[name].split("MapInArrow", 1)
+        assert below.count("REPARTITION_BY_COL") == 1, (name, plans[name])
+        assert below.count("Exchange") == 1, (name, plans[name])
+        assert above.count("Exchange") == 1, (name, plans[name])
+        assert re.search(r"Exchange hashpartitioning\(a#\d+L?, b#\d+L?, ",
+                         above), (name, plans[name])
     # (the rescue path's one-window-pass property is structural — the
     # cap split and star pairs both read the same PERSISTED counted
     # frame — and is not visible in the textual plan, which inlines the

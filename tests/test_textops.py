@@ -1460,3 +1460,45 @@ def test_simhash_pair_scorer_carry_across_arrow_batches(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert small == big
     assert len(big) > 0
+
+
+def test_pair_scorers_skip_duplicate_id_rows(spark):
+    """Two rows sharing an id are not a pair, and a pair reached through
+    duplicate-id rows is reported once — in the simhash, exact cosine
+    and LSH cosine scorers alike (regression: (1, 1) self-pairs, and
+    the exact path emitted (1, 2) twice)."""
+    from qsketch.spark.similarity import embedding_near_duplicates
+    from qsketch.spark.textops import simhash_near_duplicates
+
+    text = "shared tokens of one duplicated document body"
+    docs = spark.createDataFrame([(1, text), (1, text), (2, text)],
+                                 "doc_id long, text string")
+    got = [tuple(r) for r in simhash_near_duplicates(docs).collect()]
+    assert got == [(1, 2, 0)]
+    vec = [0.5, -1.0, 2.0, 0.25]
+    emb = spark.createDataFrame([(1, vec), (1, vec), (2, vec)],
+                                "vec_id long, embedding array<double>")
+    for method in ("exact", "lsh"):
+        got = [(r["a"], r["b"], round(r["cosine"], 6))
+               for r in embedding_near_duplicates(
+                   emb, threshold=0.9, method=method).collect()]
+        assert got == [(1, 2, 1.0)], method
+
+
+def test_simhash_near_duplicates_string_ids(spark):
+    """simhash passes the id column through with its own type
+    (regression: its Arrow schema hard-coded `doc_id long`, so string
+    ids failed in the JVM with getLong)."""
+    from qsketch.spark.textops import simhash_near_duplicates
+
+    vocab = [f"w{i}" for i in range(300)]
+    rng = np.random.default_rng(17)
+    texts = [" ".join(vocab[j] for j in rng.choice(300, 50, replace=False))
+             for _ in range(3)]
+    docs = spark.createDataFrame(
+        [("doc-a", texts[0]), ("doc-b", texts[0]), ("doc-c", texts[1]),
+         ("doc-d", texts[2])], "doc_id string, text string")
+    for idf in (False, True):
+        got = {(r["a"], r["b"]) for r in simhash_near_duplicates(
+            docs, idf_weighted=idf).collect()}
+        assert got == {("doc-a", "doc-b")}, idf
