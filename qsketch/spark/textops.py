@@ -5,6 +5,13 @@ SimHash paths REUSE the library's vectorized FNV-1a fingerprints and
 the same map-side-partial philosophy: signatures are computed per
 partition with zero pre-shuffle, and only compact signatures shuffle).
 
+Every text fingerprint pass — window grams, distinct gram strings,
+shingle sets, winnowing, MinHash and SimHash — is one reduction over
+the same gram-stream kernel (:func:`_gram_pass`): one ``mapInArrow``
+per partition tokenizes JVM-side, hashes each batch's flat token
+stream once, and hands the reduction (doc, start, rolling key)
+windows; ids pass through with their own Spark type.
+
 Scale notes (100 TB):
   * exact dedup: one hash-aggregate shuffle on a 16-byte digest — the
     minimum possible; AQE handles the (rare) giant duplicate-group skew.
@@ -55,10 +62,6 @@ def _hash_str_arrow(arr: pa.Array) -> np.ndarray:
     return fnv1a64_buf(data, offs)
 
 
-def _list_lens(col: pa.Array) -> np.ndarray:
-    return pc.list_value_length(col).to_numpy(zero_copy_only=False).astype(np.int64)
-
-
 _FNV_OFFSET = U64(0xCBF29CE484222325)
 
 
@@ -105,20 +108,29 @@ def oversized_buckets(df: DataFrame, keys: tuple[str, ...],
               .where(F.col("n_rows") > max_bucket))
 
 
-def _pack_per_doc_distinct(vals: np.ndarray, doc_of: np.ndarray,
-                           n_docs: int) -> tuple[np.ndarray, np.ndarray]:
-    """(sorted distinct int64 values packed doc-contiguously, per-doc
+def _first_per_doc(vals: np.ndarray, doc_of: np.ndarray) -> np.ndarray:
+    """Indices of the first occurrence of each distinct (doc, value),
 
-    counts) — the shared per-doc set-packing step of shingle_hash_sets
-    and winnow_fingerprints."""
+    ordered by (doc, value)."""
     order = np.lexsort((vals, doc_of))
     v, d = vals[order], doc_of[order]
-    if len(v):
-        keep = np.ones(len(v), dtype=bool)
-        keep[1:] = (v[1:] != v[:-1]) | (d[1:] != d[:-1])
-        v, d = v[keep], d[keep]
-    counts = np.bincount(d, minlength=n_docs)
-    return v.view(np.int64), counts
+    keep = np.ones(len(v), dtype=bool)
+    keep[1:] = (v[1:] != v[:-1]) | (d[1:] != d[:-1])
+    return order[keep]
+
+
+def _doc_sets(vals: np.ndarray, doc_of: np.ndarray,
+              n_docs: int) -> list[pa.Array]:
+    """[list<long> of each doc's sorted distinct values, its int32
+    sizes] — the per-doc set-packing step of shingle_hash_sets and
+    winnow_fingerprints."""
+    idx = _first_per_doc(vals, doc_of)
+    counts = np.bincount(doc_of[idx], minlength=n_docs)
+    offsets = pa.array(
+        np.concatenate(([0], np.cumsum(counts))).astype(np.int32))
+    return [pa.ListArray.from_arrays(offsets,
+                                     pa.array(vals[idx].view(np.int64))),
+            pa.array(counts.astype(np.int32))]
 
 
 def _rolling_shingle_hash(wh: np.ndarray, n: int) -> np.ndarray:
@@ -135,6 +147,95 @@ def _rolling_shingle_hash(wh: np.ndarray, n: int) -> np.ndarray:
         for r in range(n):
             key = (key ^ wh[r:r + n_flat]) * _FNV_PRIME
     return key
+
+
+# ---------------- the gram-stream kernel -----------------------------------
+
+
+class _GramBatch:
+    """One Arrow batch of docs as every text fingerprint pass sees it.
+
+    ``lens`` are the per-doc token counts, ``flat`` the flat token
+    array, ``wh`` its FNV-1a64 word hashes (hashed ONCE per batch from
+    the packed buffers, see :func:`_hash_str_arrow`) and ``doc_of`` the
+    doc index of every flat token."""
+
+    def __init__(self, toks: pa.Array):
+        n_docs = self.n_docs = len(toks)
+        self.lens = (pc.list_value_length(toks)
+                     .to_numpy(zero_copy_only=False).astype(np.int64))
+        self.flat = toks.flatten()
+        self.wh = _hash_str_arrow(self.flat)
+        self.doc_of = np.repeat(np.arange(n_docs, dtype=np.int64), self.lens)
+        self.doc_start = np.concatenate(([0], np.cumsum(self.lens)[:-1]))
+
+    def grams(self, n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(doc index, 1-based start, uint64 rolling key) of every
+        n-token window that stays inside one doc, in stream order.  The
+        key chains the word hashes (:func:`_rolling_shingle_hash`) over
+        the flat stream; a window is kept iff its first and last token
+        belong to the same doc."""
+        m = len(self.wh) - n + 1
+        if m <= 0:
+            none = np.empty(0, dtype=np.int64)
+            return none, none, np.empty(0, dtype=np.uint64)
+        key = _rolling_shingle_hash(self.wh, n)
+        widx = np.flatnonzero(self.doc_of[:m] == self.doc_of[n - 1:])
+        docs = self.doc_of[widx]
+        return docs, widx - self.doc_start[docs] + 1, key[widx]
+
+    def words(self) -> tuple[np.ndarray, np.ndarray]:
+        """(doc index, word hash) of the non-empty tokens: the gram
+        passes keep the empty tokens of double spaces (their positions
+        match SQL ``string_split``), bag-of-words passes drop them."""
+        keep = pc.binary_length(self.flat).to_numpy(zero_copy_only=False) > 0
+        return self.doc_of[keep], self.wh[keep]
+
+
+def _gram_pass(df: DataFrame, text_col: str, id_col: str | None,
+               out_fields: list[tuple[str, str]], reduce) -> DataFrame:
+    """The one ``mapInArrow`` behind every text fingerprint pass.
+
+    Projects (id, :func:`_shingle_toks_expr` tokens), so tokenization is
+    JVM-side and each doc's tokens cross the Arrow boundary once; per
+    non-empty batch ``reduce(_GramBatch)`` returns ``(docs, columns)``
+    for ``out_fields`` — ``docs`` the doc index of every output row, or
+    None for one row per doc in batch order.  The id column leads the
+    output with its own Spark type from ``df.schema``; with
+    ``id_col=None`` no id is projected or emitted.  Only the reduced
+    fingerprints leave Python."""
+    names = [name for name, _ in out_fields]
+    schema = ", ".join(f"{name} {t}" for name, t in out_fields)
+    cols = [_shingle_toks_expr(text_col).alias("__toks")]
+    if id_col is not None:
+        names.insert(0, id_col)
+        schema = (f"{id_col} {df.schema[id_col].dataType.simpleString()}, "
+                  + schema)
+        cols.insert(0, F.col(id_col))
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            docs, out = reduce(_GramBatch(batch.column("__toks")))
+            if id_col is not None:
+                ids = batch.column(id_col)
+                out = [ids if docs is None else ids.take(pa.array(docs))] + out
+            yield pa.RecordBatch.from_arrays(out, names=names)
+
+    return df.select(*cols).mapInArrow(fn, schema)
+
+
+_SET_FIELDS = [("shs", "array<long>"), ("n", "int")]
+
+
+def _distinct_grams(n: int):
+    """Reduction: each doc's sorted distinct n-gram keys (the
+    :func:`shingle_hash_sets` rows)."""
+    def reduce(b: _GramBatch):
+        docs, _, key = b.grams(n)
+        return None, _doc_sets(key, docs, b.n_docs)
+    return reduce
 
 
 # ---------------- exact dedup ----------------------------------------------
@@ -166,19 +267,17 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text",
 # ---------------- decontamination & boilerplate -----------------------------
 
 
-def _window_gram_hashes(df: DataFrame, text_col: str, id_col: str,
+def _window_gram_hashes(df: DataFrame, text_col: str, id_col: str | None,
                         n: int) -> DataFrame:
     """(id_col, __nwin, __start, __gh): one row per word n-gram window,
 
     where ``__gh`` is the window's 64-bit rolling-FNV fingerprint,
     ``__start`` its 1-based token position and ``__nwin`` the doc's
-    window count (n_tokens = __nwin + n - 1).  One vectorized Arrow
-    pass per partition: the flat token stream hashes once
-    (packed-buffer FNV, :func:`_hash_str_arrow`), windows combine via
-    :func:`_rolling_shingle_hash`, doc boundaries are masked exactly
-    like minhash_signatures — the gram STRING is never built, so
-    every downstream exchange / aggregation / join carries an 8-byte
-    key instead of an ~n-token string.
+    window count (n_tokens = __nwin + n - 1); no id column when
+    ``id_col`` is None.  The rows are :meth:`_GramBatch.grams` emitted
+    as they come out of the :func:`_gram_pass` kernel — the gram
+    STRING is never built, so every downstream exchange / aggregation
+    / join carries an 8-byte key instead of an ~n-token string.
 
     Why not a Catalyst ``transform(sequence, i -> hash(slice(w,i,n)))``
     expression: higher-order-function lambdas are interpreted and
@@ -194,37 +293,16 @@ def _window_gram_hashes(df: DataFrame, text_col: str, id_col: str,
     distinct grams — negligible at any oracle-checked scale; at 100 TB
     (D ~ 1e13) swap in a 128-bit fingerprint (two seeded passes) at
     the cost of a 16-byte key."""
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(id_col)
-            toks = batch.column("__toks")
-            n_docs = len(toks)
-            lens = _list_lens(toks)
-            wh = _hash_str_arrow(toks.flatten())
-            n_flat = max(len(wh) - n + 1, 0)
-            counts = np.maximum(lens - n + 1, 0)
-            if n_flat <= 0 or counts.sum() <= 0:
-                continue
-            key = _rolling_shingle_hash(wh, n)
-            doc_of = np.repeat(np.arange(n_docs, dtype=np.int64), lens)
-            valid = doc_of[:n_flat] == doc_of[n - 1:]
-            gh = key[valid].view(np.int64)
-            docs = doc_of[:n_flat][valid]
-            doc_starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            starts = np.flatnonzero(valid) - doc_starts[docs] + 1
-            yield pa.RecordBatch.from_arrays(
-                [ids.take(pa.array(docs)),
-                 pa.array(counts[docs], type=pa.int32()),
-                 pa.array(starts, type=pa.int64()),
-                 pa.array(gh)],
-                names=[id_col, "__nwin", "__start", "__gh"])
+    def reduce(b: _GramBatch):
+        docs, starts, key = b.grams(n)
+        nwin = np.maximum(b.lens - n + 1, 0)
+        return docs, [pa.array(nwin[docs], type=pa.int32()),
+                      pa.array(starts, type=pa.int64()),
+                      pa.array(key.view(np.int64))]
 
-    toks_expr = _shingle_toks_expr(text_col)
-    id_t = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, toks_expr.alias("__toks")).mapInArrow(
-        fn, f"{id_col} {id_t}, __nwin int, __start long, __gh long")
+    return _gram_pass(df, text_col, id_col,
+                      [("__nwin", "int"), ("__start", "long"),
+                       ("__gh", "long")], reduce)
 
 
 def contamination_check(corpus: DataFrame, benchmark: DataFrame,
@@ -244,17 +322,20 @@ def contamination_check(corpus: DataFrame, benchmark: DataFrame,
     eval suite) and the corpus side is ONE scan whose exploded
     shingles meet the broadcast in a hash join — the only corpus
     shuffle is the per-doc count aggregation, which is map-side
-    combinable and carries matched docs only.  Both sides run through
-    :func:`shingle_hash_sets` (one vectorized rolling-FNV pass per
-    partition; per-doc dedup happens in-batch, never a shuffle), so
-    shingle STRINGS are never built and every join/broadcast key is an
-    8-byte fingerprint — overlap equality matches string equality up
-    to 64-bit collisions (P <= D^2/2^65, negligible; the driver
-    oracle checks the output exactly)."""
+    combinable and carries matched docs only.  Both sides are the
+    :func:`shingle_hash_sets` reduction of the :func:`_gram_pass`
+    kernel (per-doc dedup happens in-batch, never a shuffle); the
+    benchmark side carries no id, so it needs only ``text_col``, and
+    corpus ids keep their own type.  Shingle STRINGS are never built
+    and every join/broadcast key is an 8-byte fingerprint — overlap
+    equality matches string equality up to 64-bit collisions
+    (P <= D^2/2^65, negligible; the driver oracle checks the output
+    exactly)."""
     cor = (shingle_hash_sets(corpus, text_col, id_col, shingle_n)
            .select(id_col, F.col("n").alias("n_shingles"),
                    F.explode("shs").alias("__sh")))
-    bench = (shingle_hash_sets(benchmark, text_col, id_col, shingle_n)
+    bench = (_gram_pass(benchmark, text_col, None, _SET_FIELDS,
+                        _distinct_grams(shingle_n))
              .select(F.explode("shs").alias("__sh")).distinct())
     return (cor.join(F.broadcast(bench), "__sh")
                .groupBy(id_col, "n_shingles")
@@ -262,6 +343,55 @@ def contamination_check(corpus: DataFrame, benchmark: DataFrame,
                .withColumn("contamination",
                            F.round(F.col("n_matched")
                                    / F.col("n_shingles"), 6)))
+
+
+def _range_prefix_scan(df: DataFrame, keys: list[str], weight: str | None,
+                       n_partitions: int | None, emit,
+                       schema) -> tuple[DataFrame, int]:
+    """The two-pass distributed prefix sum behind :func:`pack_sequences`
+    and :func:`epoch_shuffle`: (frame, grand total).
+
+    ``df`` is range-partitioned by ``keys`` (RangePartitioner gives
+    ascending key ranges on ascending partition ids, asserted loudly),
+    sorted within partitions and persisted, so the totals pass and the
+    emit pass see the SAME sampled boundaries.  Per-partition sums of
+    the ``weight`` column (one per row when None) are one P-row driver
+    collect and become prefix offsets; one cached-read ``mapInArrow``
+    then calls ``emit(batch, starts)`` with every row's global start =
+    partition offset + running local sum.  Spark's ContextCleaner
+    unpersists the ranged frame when the plan is collected."""
+    from pyspark import StorageLevel, TaskContext
+
+    P = n_partitions or int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    ranged = (df.repartitionByRange(P, *[F.col(k) for k in keys])
+                .sortWithinPartitions(*keys)
+                .persist(StorageLevel.MEMORY_AND_DISK))
+    total = F.sum(weight) if weight else F.count("*")
+    stats = (ranged.groupBy(F.spark_partition_id().alias("__pid"))
+                   .agg(total.alias("total"), F.min(keys[0]).alias("min_key"))
+                   .collect())  # bounded: one row per partition
+    by_pid = {r["__pid"]: r for r in stats}
+    mins = [by_pid[p]["min_key"] for p in sorted(by_pid)]
+    if mins != sorted(mins):
+        raise AssertionError(
+            f"range partitions not in ascending {keys[0]} order — prefix "
+            f"offsets would be wrong (per-partition minima: {mins})")
+    offsets, acc = {}, 0
+    for p in range(P):
+        offsets[p] = acc
+        acc += int(by_pid[p]["total"]) if p in by_pid else 0
+
+    def local_prefix(it):
+        running = offsets.get(TaskContext.get().partitionId(), 0)
+        for batch in it:
+            w = (batch.column(weight).to_numpy(zero_copy_only=False)
+                 if weight else np.ones(batch.num_rows, dtype=np.int64))
+            ends = running + np.cumsum(w, dtype=np.int64)
+            yield emit(batch, ends - w)
+            running = int(ends[-1]) if len(ends) else running
+
+    return ranged.mapInArrow(local_prefix, schema), acc
 
 
 def pack_sequences(df: DataFrame, chunk_tokens: int,
@@ -279,66 +409,30 @@ def pack_sequences(df: DataFrame, chunk_tokens: int,
 
     Chunk assignment needs a global prefix sum BY DEFINITION, but a
     single-partition window would serialize the corpus through one
-    task; this is the classic two-pass distributed scan instead:
-      1. project the narrow (id, n_tok) frame — token counts come from
-         one scan of the text, nothing else ever shuffles — and range-
-         partition it by id (RangePartitioner gives ascending id
-         ranges on ascending partition ids, asserted loudly);
-      2. per-partition token totals (one P-row driver finish, like the
-         bounded merge fan-in) become per-partition prefix OFFSETS;
-      3. one cached-read mapInArrow pass emits each doc's global start
-         = partition offset + running local sum (order preserved by
-         the in-partition sort).
-    The ranged frame is persisted so pass 2 and 3 see the SAME sampled
-    range boundaries (the result is boundary-independent, but the
-    offsets of pass 3 must match the totals of pass 2); Spark's
-    ContextCleaner unpersists it when the plan is collected.  Span
-    explosion is pure Catalyst (sequence over the straddled chunk ids).
-    At 100 TB the only wide op is the 16-byte/row range exchange."""
+    task; this is the classic two-pass distributed scan instead
+    (:func:`_range_prefix_scan`) over the narrow (id, n_tok) frame
+    ranged by id — token counts come from one scan of the text,
+    nothing else ever shuffles — so each doc's global start is its
+    partition's token offset + the running local sum.  Span explosion
+    is pure Catalyst (sequence over the straddled chunk ids).  At
+    100 TB the only wide op is the 16-byte/row range exchange."""
     if chunk_tokens < 1:
         # without this, `start div 0` is NULL under non-ANSI SQL and
         # explode(sequence(NULL, NULL)) silently drops every row
         raise ValueError(f"chunk_tokens must be >= 1, got {chunk_tokens}")
-    from pyspark import StorageLevel, TaskContext
-
-    spark = df.sparkSession
-    P = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     narrow = df.select(F.col(id_col),
                        F.size(_shingle_toks_expr(text_col)).alias("n_tok"))
-    ranged = (narrow.repartitionByRange(P, F.col(id_col))
-                    .sortWithinPartitions(id_col)
-                    .persist(StorageLevel.MEMORY_AND_DISK))
-    stats = (ranged.groupBy(F.spark_partition_id().alias("__pid"))
-                   .agg(F.sum("n_tok").alias("total"),
-                        F.min(id_col).alias("min_id"))
-                   .collect())  # bounded: one row per partition
-    by_pid = {r["__pid"]: r for r in stats}
-    mins = [by_pid[p]["min_id"] for p in sorted(by_pid)]
-    if mins != sorted(mins):
-        raise AssertionError(
-            "range partitions not in ascending id order — prefix offsets "
-            f"would be wrong (per-partition min ids: {mins})")
-    offsets, acc = {}, 0
-    for p in range(P):
-        offsets[p] = acc
-        acc += int(by_pid[p]["total"]) if p in by_pid else 0
 
-    def local_cumsum(it):
-        pid = TaskContext.get().partitionId()
-        running = offsets.get(pid, 0)
-        for batch in it:
-            n = batch.column("n_tok").to_numpy(zero_copy_only=False)
-            ends = running + np.cumsum(n, dtype=np.int64)
-            starts = ends - n
-            running = int(ends[-1]) if len(ends) else running
-            yield pa.record_batch(
-                [batch.column(id_col), batch.column("n_tok"),
-                 pa.array(starts, type=pa.int64())],
-                names=[id_col, "n_tok", "start"])
+    def emit(batch, starts):
+        return pa.record_batch(
+            [batch.column(id_col), batch.column("n_tok"),
+             pa.array(starts, type=pa.int64())],
+            names=[id_col, "n_tok", "start"])
 
     id_type = dict(narrow.dtypes)[id_col]
-    placed = ranged.mapInArrow(
-        local_cumsum, f"{id_col} {id_type}, n_tok int, start long")
+    placed, _ = _range_prefix_scan(
+        narrow, [id_col], "n_tok", n_partitions, emit,
+        f"{id_col} {id_type}, n_tok int, start long")
     en = F.col("start") + F.col("n_tok")
     first = F.expr(f"start div {chunk_tokens}")
     last = F.expr(f"(start + n_tok - 1) div {chunk_tokens}")
@@ -369,102 +463,59 @@ def epoch_shuffle(df: DataFrame, epoch: int = 0,
 
     A global rank needs a global sort BY DEFINITION, but a
     single-partition row_number window would serialize the corpus
-    through one task; this is the same two-pass distributed scan as
-    :func:`pack_sequences`: range-partition by the md5 key (uniform ⇒
-    zero-skew ranges), per-partition counts become prefix offsets (one
-    P-row driver finish), then a cached-read mapInArrow pass emits
-    offset + local index.  At 100 TB the only wide op is the one range
+    through one task; this is the same two-pass distributed scan
+    (:func:`_range_prefix_scan`) as :func:`pack_sequences`, ranged by
+    the md5 key (uniform ⇒ zero-skew ranges) with one unit of weight
+    per row, so each row's position is its partition's row offset +
+    its local index.  At 100 TB the only wide op is the one range
     exchange a shuffle intrinsically requires."""
-    from pyspark import StorageLevel, TaskContext
     from pyspark.sql.types import LongType, StructField, StructType
 
-    spark = df.sparkSession
-    P = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     key = F.md5(F.concat_ws("#", F.col(id_col).cast("string"),
                             F.lit(str(int(epoch))), F.lit(seed)))
-    ranged = (df.withColumn("__key", key)
-                .repartitionByRange(P, F.col("__key"), F.col(id_col))
-                .sortWithinPartitions("__key", id_col)
-                .persist(StorageLevel.MEMORY_AND_DISK))
-    stats = (ranged.groupBy(F.spark_partition_id().alias("__pid"))
-                   .agg(F.count("*").alias("total"),
-                        F.min("__key").alias("min_key"))
-                   .collect())  # bounded: one row per partition
-    by_pid = {r["__pid"]: r for r in stats}
-    mins = [by_pid[p]["min_key"] for p in sorted(by_pid)]
-    if mins != sorted(mins):
-        raise AssertionError(
-            "range partitions not in ascending key order — prefix offsets "
-            f"would be wrong (per-partition min keys: {mins})")
-    offsets, acc = {}, 0
-    for p in range(P):
-        offsets[p] = acc
-        acc += int(by_pid[p]["total"]) if p in by_pid else 0
+    keyed = df.withColumn("__key", key)
 
-    def local_index(it):
-        pid = TaskContext.get().partitionId()
-        running = offsets.get(pid, 0)
-        for batch in it:
-            pos = pa.array(
-                np.arange(running, running + batch.num_rows, dtype=np.int64))
-            running += batch.num_rows
-            yield batch.append_column(pa.field(pos_col, pa.int64()), pos)
+    def emit(batch, starts):
+        return batch.append_column(pa.field(pos_col, pa.int64()),
+                                   pa.array(starts))
 
-    out_schema = StructType(list(ranged.schema.fields)
+    out_schema = StructType(list(keyed.schema.fields)
                             + [StructField(pos_col, LongType(), False)])
-    out = ranged.mapInArrow(local_index, out_schema).drop("__key")
+    out, total = _range_prefix_scan(keyed, ["__key", id_col], None,
+                                    n_partitions, emit, out_schema)
+    out = out.drop("__key")
     # the prefix-sum pass already counted every partition; expose the
     # total so composing callers (vocabulary_growth) need no extra
     # corpus scan just for n_rows
-    out._qsketch_total_rows = acc  # type: ignore[attr-defined]
+    out._qsketch_total_rows = total  # type: ignore[attr-defined]
     return out
 
 
 def _doc_distinct_gram_strings(df: DataFrame, text_col: str,
                                n: int) -> DataFrame:
     """("shingle") — one row per (doc, distinct word n-gram), the gram
-    as its STRING (for ops whose output carries the gram text).  One
-    vectorized Arrow pass: the gram strings are built in C by
-    pc.binary_join_element_wise over n shifted slices of the flat
-    token array (zero byte copying in Python), and the per-doc dedup
-    keeps the first occurrence of each rolling-FNV fingerprint — no
-    interpreted Catalyst lambda re-evaluating split() per window (see
-    :func:`_window_gram_hashes`), no array_distinct over built-up gram
-    arrays.  Dedup-by-fingerprint equals dedup-by-string up to 64-bit
-    collisions WITHIN one doc — P ~ (doc windows)^2/2^65, negligible."""
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            toks = batch.column("__toks")
-            n_docs = len(toks)
-            lens = _list_lens(toks)
-            flat = toks.flatten()
-            total = len(flat)
-            m = total - n + 1
-            if m <= 0 or (lens >= n).sum() == 0:
-                continue
-            wh = _hash_str_arrow(flat)
-            key = _rolling_shingle_hash(wh, n)
-            doc_of = np.repeat(np.arange(n_docs, dtype=np.int64), lens)
-            valid = doc_of[:m] == doc_of[n - 1:]
-            widx = np.flatnonzero(valid)          # global window starts
-            gh = key[valid]
-            docs = doc_of[:m][valid]
-            # first occurrence of each (doc, fingerprint)
-            order = np.lexsort((gh, docs))
-            gs, ds = gh[order], docs[order]
-            keep = np.ones(len(gs), dtype=bool)
-            keep[1:] = (gs[1:] != gs[:-1]) | (ds[1:] != ds[:-1])
-            kept = widx[order[keep]]
-            grams = pc.binary_join_element_wise(
-                *[flat.slice(r, m) for r in range(n)], " ")
-            yield pa.RecordBatch.from_arrays(
-                [grams.take(pa.array(kept))], names=["shingle"])
+    as its STRING (for ops whose output carries the gram text).  A
+    :func:`_gram_pass` reduction: the per-doc dedup keeps the first
+    occurrence of each rolling-FNV fingerprint, and only those grams'
+    strings are taken from ``pc.binary_join_element_wise`` over n
+    shifted slices of the flat token array (built in C, zero byte
+    copying in Python) — no interpreted Catalyst lambda re-evaluating
+    split() per window (see :func:`_window_gram_hashes`), no
+    array_distinct over built-up gram arrays.  Dedup-by-fingerprint
+    equals dedup-by-string up to 64-bit collisions WITHIN one doc —
+    P ~ (doc windows)^2/2^65, negligible."""
+    def reduce(b: _GramBatch):
+        docs, starts, key = b.grams(n)
+        if not len(docs):
+            return None, [pa.array([], type=pa.string())]
+        first = _first_per_doc(key, docs)
+        m = len(b.flat) - n + 1
+        grams = pc.binary_join_element_wise(
+            *[b.flat.slice(r, m) for r in range(n)], " ")
+        return None, [grams.take(pa.array(
+            b.doc_start[docs[first]] + starts[first] - 1))]
 
-    toks_expr = _shingle_toks_expr(text_col)
-    return df.select(toks_expr.alias("__toks")).mapInArrow(
-        fn, "shingle string")
+    return _gram_pass(df, text_col, None, [("shingle", "string")], reduce)
 
 
 def repeated_ngrams(df: DataFrame, text_col: str = "text",
@@ -488,6 +539,14 @@ def repeated_ngrams(df: DataFrame, text_col: str = "text",
               .where(F.col("n_docs") >= min_docs)
               .orderBy(F.desc("n_docs"), F.asc("shingle"))
               .limit(top))
+
+
+def _dup_grams(wins: DataFrame, min_count: int, *aggs) -> DataFrame:
+    """(__gh, aggs...) for every gram fingerprint occurring >=
+    ``min_count`` times among the window rows — the duplicate filter of
+    the span operators (``aggs`` ride the same groupBy shuffle)."""
+    return (wins.groupBy("__gh").agg(F.count("*").alias("__n"), *aggs)
+                .where(F.col("__n") >= min_count).drop("__n"))
 
 
 def duplicated_span_stats(df: DataFrame, text_col: str = "text",
@@ -533,9 +592,7 @@ def duplicated_span_stats(df: DataFrame, text_col: str = "text",
     def windows():
         return _window_gram_hashes(df, text_col, id_col, window)
 
-    dup = (windows().groupBy("__gh").agg(F.count("*").alias("__n"))
-           .where(F.col("__n") >= min_count).select("__gh"))
-    hits = (windows().join(dup, "__gh")
+    hits = (windows().join(_dup_grams(windows(), min_count), "__gh")
             .select(id_col,
                     # n_tokens = n_windows + window - 1 (re-derived from
                     # the window count so the rows carry one int, not
@@ -609,20 +666,15 @@ def scrub_duplicated_spans(df: DataFrame, text_col: str = "text",
     if keep_first:
         # one shuffle yields BOTH the >= min_count filter and the
         # canonical (min id, min pos) occurrence per surviving gram
-        canon = (wins.groupBy("__gh")
-                 .agg(F.count("*").alias("__n"),
-                      F.min(F.struct(F.col(id_col).alias("i"),
-                                     F.col("__start").alias("s")))
-                       .alias("__c"))
-                 .where(F.col("__n") >= min_count)
-                 .select("__gh", "__c"))
+        canon = _dup_grams(wins, min_count,
+                           F.min(F.struct(F.col(id_col).alias("i"),
+                                          F.col("__start").alias("s")))
+                            .alias("__c"))
         hits = (wins.join(canon, "__gh")
                 .where(~((F.col(id_col) == F.col("__c.i"))
                          & (F.col("__start") == F.col("__c.s")))))
     else:
-        dup = (wins.groupBy("__gh").agg(F.count("*").alias("__n"))
-               .where(F.col("__n") >= min_count).select("__gh"))
-        hits = wins.join(dup, "__gh")
+        hits = wins.join(_dup_grams(wins, min_count), "__gh")
     empty_spans = F.expr(
         "CAST(array() AS array<struct<s: bigint, e: bigint>>)")
     acc0 = F.struct(F.lit(-1).cast("long").alias("end"),
@@ -676,58 +728,36 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
                        num_perm: int = 128) -> DataFrame:
     """(id, sig array<long>) — per-partition vectorized, zero shuffle.
 
-    Tokenization is JVM-side (split); per Arrow batch the whole flat
-    token stream hashes in one packed-buffer FNV pass, shingle hashes
-    are a rolling FNV combine over the flat word-hash array (window =
-    shingle_n), and the k-permutation minima reduce per document with
-    np.minimum.reduceat over contiguous doc segments.  Python-level
-    loops run over permutation BLOCKS and byte positions, never rows —
-    MinHash over a multiset equals MinHash over the set, so no per-doc
-    unique() is needed either."""
+    A :func:`_gram_pass` reduction: the k-permutation minima of each
+    doc's shingle keys reduce with np.minimum.reduceat over the
+    contiguous doc segments of :meth:`_GramBatch.grams`.  Python-level
+    loops run over permutation BLOCKS, never rows — MinHash over a
+    multiset equals MinHash over the set, so no per-doc unique() is
+    needed either.  Shingle-less docs keep the all-max sentinel."""
     mults, adds = _perms(num_perm)
     maxu = np.iinfo(np.uint64).max
     PERM_BLOCK = 8  # bounds the (block x shingles) scratch matrix
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(id_col)
-            toks = batch.column("__toks")
-            n_docs = len(toks)
-            lens = _list_lens(toks)
-            wh = _hash_str_arrow(toks.flatten())
-            total = len(wh)
-            n_flat = max(total - shingle_n + 1, 0)
-            sh_counts = np.maximum(lens - shingle_n + 1, 0)
-            sig = np.full((n_docs, num_perm), maxu, dtype=np.uint64)
-            if n_flat > 0 and sh_counts.sum() > 0:
-                key = _rolling_shingle_hash(wh, shingle_n)
-                # a shingle is valid iff its whole window stays in one doc
-                doc_of = np.repeat(np.arange(n_docs, dtype=np.int64), lens)
-                valid = doc_of[:n_flat] == doc_of[shingle_n - 1:]
-                sh = key[valid]
-                seg_starts = np.concatenate(
-                    ([0], np.cumsum(sh_counts)[:-1]))
-                ne = sh_counts > 0
-                starts_ne = seg_starts[ne]
-                with np.errstate(over="ignore"):
-                    for b0 in range(0, num_perm, PERM_BLOCK):
-                        b1 = min(b0 + PERM_BLOCK, num_perm)
-                        vals = (mults[b0:b1, None] * sh[None, :]
-                                + adds[b0:b1, None])
-                        sig[ne, b0:b1] = np.minimum.reduceat(
-                            vals, starts_ne, axis=1).T
-            values = pa.array(sig.reshape(-1).view(np.int64))
-            offsets = pa.array(
-                np.arange(0, (n_docs + 1) * num_perm, num_perm,
-                          dtype=np.int32))
-            arr = pa.ListArray.from_arrays(offsets, values)
-            yield pa.RecordBatch.from_arrays([ids, arr], names=[id_col, "sig"])
+    def reduce(b: _GramBatch):
+        docs, _, sh = b.grams(shingle_n)
+        sig = np.full((b.n_docs, num_perm), maxu, dtype=np.uint64)
+        counts = np.bincount(docs, minlength=b.n_docs)
+        ne = counts > 0
+        if ne.any():
+            starts_ne = (np.cumsum(counts) - counts)[ne]
+            with np.errstate(over="ignore"):
+                for b0 in range(0, num_perm, PERM_BLOCK):
+                    b1 = min(b0 + PERM_BLOCK, num_perm)
+                    vals = (mults[b0:b1, None] * sh[None, :]
+                            + adds[b0:b1, None])
+                    sig[ne, b0:b1] = np.minimum.reduceat(
+                        vals, starts_ne, axis=1).T
+        offsets = pa.array(np.arange(0, (b.n_docs + 1) * num_perm, num_perm,
+                                     dtype=np.int32))
+        return None, [pa.ListArray.from_arrays(
+            offsets, pa.array(sig.reshape(-1).view(np.int64)))]
 
-    toks_expr = _shingle_toks_expr(text_col)
-    return df.select(id_col, toks_expr.alias("__toks")).mapInArrow(
-        fn, f"{id_col} long, sig array<long>")
+    return _gram_pass(df, text_col, id_col, [("sig", "array<long>")], reduce)
 
 
 def banded_signatures(sig_df: DataFrame, id_col: str = "doc_id",
@@ -742,7 +772,7 @@ def banded_signatures(sig_df: DataFrame, id_col: str = "doc_id",
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ids = batch.column(id_col).to_numpy()
+            ids = batch.column(id_col)
             scol = batch.column("sig")
             sig = (scol.flatten().to_numpy(zero_copy_only=False)
                    .astype(np.int64, copy=False).view(np.uint64)
@@ -753,27 +783,27 @@ def banded_signatures(sig_df: DataFrame, id_col: str = "doc_id",
             # and drive the self-join quadratic with no max_bucket set
             real = ~(sig == maxu).all(axis=1)
             if not real.all():
-                ids, sig = ids[real], sig[real]
+                ids, sig = ids.filter(pa.array(real)), sig[real]
             if not len(ids):
                 continue
-            out_ids, out_band, out_key = [], [], []
+            out_band, out_key = [], []
             for b in range(bands):
                 chunk = sig[:, b * rows:(b + 1) * rows]
                 key = fnv1a64(chunk[:, 0])
                 with np.errstate(over="ignore"):
                     for r in range(1, rows):
                         key = (key ^ fnv1a64(chunk[:, r])) * _FNV_PRIME
-                out_ids.append(ids)
                 out_band.append(np.full(len(ids), b, dtype=np.int32))
                 out_key.append(key.view(np.int64))
             yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_ids)),
+                [pa.concat_arrays([ids] * bands),
                  pa.array(np.concatenate(out_band)),
                  pa.array(np.concatenate(out_key))],
                 names=[id_col, "band", "band_key"])
 
+    id_t = sig_df.schema[id_col].dataType.simpleString()
     return sig_df.mapInArrow(band_fn,
-                             f"{id_col} long, band int, band_key long")
+                             f"{id_col} {id_t}, band int, band_key long")
 
 
 def lsh_candidate_pairs(sig_df: DataFrame, id_col: str = "doc_id",
@@ -823,38 +853,12 @@ def shingle_hash_sets(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", shingle_n: int = 3) -> DataFrame:
     """(id, shs: sorted distinct shingle hashes array<long>, n int).
 
-    Same rolling-FNV shingle hashes as minhash_signatures, one compact
-    row per doc — the per-pair verify can then intersect two int64
-    arrays JVM-side instead of re-exploding string shingles."""
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(id_col)
-            toks = batch.column("__toks")
-            n_docs = len(toks)
-            lens = _list_lens(toks)
-            wh = _hash_str_arrow(toks.flatten())
-            total = len(wh)
-            n_flat = max(total - shingle_n + 1, 0)
-            counts = np.zeros(n_docs, dtype=np.int64)
-            vals = np.empty(0, dtype=np.int64)
-            if n_flat > 0:
-                key = _rolling_shingle_hash(wh, shingle_n)
-                doc_of = np.repeat(np.arange(n_docs, dtype=np.int64), lens)
-                valid = doc_of[:n_flat] == doc_of[shingle_n - 1:]
-                vals, counts = _pack_per_doc_distinct(
-                    key[valid], doc_of[:n_flat][valid], n_docs)
-            offsets = pa.array(
-                np.concatenate(([0], np.cumsum(counts))).astype(np.int32))
-            arr = pa.ListArray.from_arrays(offsets, pa.array(vals))
-            yield pa.RecordBatch.from_arrays(
-                [ids, arr, pa.array(counts.astype(np.int32))],
-                names=[id_col, "shs", "n"])
-
-    toks_expr = _shingle_toks_expr(text_col)
-    return df.select(id_col, toks_expr.alias("__toks")).mapInArrow(
-        fn, f"{id_col} long, shs array<long>, n int")
+    The :func:`_gram_pass` kernel's shingle keys (the ones
+    minhash_signatures permutes), deduplicated per doc into one compact
+    row — the per-pair verify can then intersect two int64 arrays
+    JVM-side instead of re-exploding string shingles."""
+    return _gram_pass(df, text_col, id_col, _SET_FIELDS,
+                      _distinct_grams(shingle_n))
 
 
 def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "text",
@@ -992,46 +996,25 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     per doc, the distinct set of per-window minima over the rolling
     shingle-hash sequence — any shared substring of length >=
     shingle_n + window - 1 words guarantees a shared fingerprint, at
-    ~1/window the storage of the full shingle set.  Vectorized: one
-    packed-buffer FNV pass, one rolling combine, then a window-min via
-    stride tricks over the flat hash array (doc boundaries respected by
-    the same validity masking as minhash_signatures)."""
+    ~1/window the storage of the full shingle set.  A :func:`_gram_pass`
+    reduction: a sliding minimum via stride tricks over the kernel's
+    per-doc shingle keys, keeping the windows whose first and last
+    shingle belong to the same doc."""
     from numpy.lib.stride_tricks import sliding_window_view
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(id_col)
-            toks = batch.column("__toks")
-            n_docs = len(toks)
-            lens = _list_lens(toks)
-            wh = _hash_str_arrow(toks.flatten())
-            total = len(wh)
-            n_sh_flat = max(total - shingle_n + 1, 0)
-            # windows of `window` consecutive shingles, fully inside a doc
-            span = shingle_n + window - 1  # words covered by one window
-            counts = np.maximum(lens - span + 1, 0)
-            vals = np.empty(0, dtype=np.int64)
-            out_counts = np.zeros(n_docs, dtype=np.int64)
-            if n_sh_flat >= window and counts.sum() > 0:
-                sh = _rolling_shingle_hash(wh, shingle_n)
-                wmin = sliding_window_view(sh, window).min(axis=1)
-                doc_of = np.repeat(np.arange(n_docs, dtype=np.int64), lens)
-                n_w = len(wmin)
-                valid = doc_of[:n_w] == doc_of[span - 1:span - 1 + n_w]
-                vals, out_counts = _pack_per_doc_distinct(
-                    wmin[valid], doc_of[:n_w][valid], n_docs)
-            offsets = pa.array(
-                np.concatenate(([0], np.cumsum(out_counts))).astype(np.int32))
-            arr = pa.ListArray.from_arrays(offsets, pa.array(vals))
-            yield pa.RecordBatch.from_arrays(
-                [ids, arr, pa.array(out_counts.astype(np.int32))],
-                names=[id_col, "fingerprints", "n_fp"])
+    def reduce(b: _GramBatch):
+        docs, _, sh = b.grams(shingle_n)
+        if len(sh) >= window:
+            wmin = sliding_window_view(sh, window).min(axis=1)
+            inside = docs[:len(wmin)] == docs[window - 1:]
+            sh, docs = wmin[inside], docs[:len(wmin)][inside]
+        else:
+            sh, docs = sh[:0], docs[:0]
+        return None, _doc_sets(sh, docs, b.n_docs)
 
-    toks_expr = _shingle_toks_expr(text_col)
-    return df.select(id_col, toks_expr.alias("__toks")).mapInArrow(
-        fn, f"{id_col} long, fingerprints array<long>, n_fp int")
+    return _gram_pass(df, text_col, id_col,
+                      [("fingerprints", "array<long>"), ("n_fp", "int")],
+                      reduce)
 
 
 def connected_components(pairs: DataFrame, max_iter: int = 25,
@@ -1234,12 +1217,12 @@ def simhash(df: DataFrame, text_col: str = "text",
             ) -> DataFrame:
     """64-bit SimHash over word unigrams (charikar): sign-sum of
 
-    fingerprint bits weighted by term frequency.  Tokenization and
-    empty-word filtering are JVM-side; per batch the flat word stream
-    hashes once (packed-buffer FNV) and each bit's per-doc sign-sum is
-    one np.bincount over the flat stream — summing per occurrence IS
-    the term-frequency weighting, so no per-doc unique() is needed.
-    The Python-level loop is over the 64 bits, never rows.
+    fingerprint bits weighted by term frequency.  A :func:`_gram_pass`
+    reduction over the kernel's non-empty word hashes
+    (:meth:`_GramBatch.words`): each bit's per-doc sign-sum is one
+    np.bincount over the flat stream — summing per occurrence IS the
+    term-frequency weighting, so no per-doc unique() is needed.  The
+    Python-level loop is over the 64 bits, never rows.
 
     ``idf_weights`` (from :func:`token_idf_weights`) switches the vote
     weight from raw tf to tf·idf — the standard fix for SimHash's
@@ -1251,48 +1234,34 @@ def simhash(df: DataFrame, text_col: str = "text",
     if idf_weights is not None:
         w_hashes, w_vals, w_default = idf_weights
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(id_col)
-            toks = batch.column("__toks")
-            n_docs = len(toks)
-            lens = _list_lens(toks)
-            wh = _hash_str_arrow(toks.flatten())
-            doc_of = np.repeat(np.arange(n_docs, dtype=np.int64), lens)
-            if idf_weights is not None and len(w_hashes):
-                idx = np.searchsorted(w_hashes, wh)
-                idx[idx == len(w_hashes)] = 0
-                hit = w_hashes[idx] == wh
-                tok_w = np.where(hit, w_vals[idx], w_default)
-                tot = np.bincount(doc_of, weights=tok_w,
-                                  minlength=n_docs)
-            else:
-                tok_w = None
-                tot = lens.astype(np.float64)
-            out = np.zeros(n_docs, dtype=np.uint64)
-            for b in range(64):
-                bit = ((wh >> U64(b)) & U64(1)).astype(np.float64)
-                if tok_w is not None:
-                    bit *= tok_w
-                s = np.bincount(doc_of, weights=bit, minlength=n_docs)
-                # acc = (+1)*s + (-1)*(tot-s) = 2s - tot ; bit set if > 0
-                out |= ((2.0 * s - tot) > 0).astype(np.uint64) << U64(b)
-            # signal-less docs have no hash: emit NULL, not 0 — a
-            # shared fake hash would bucket them into one Hamming-0
-            # cluster in simhash_pairs (quadratic at scale).  tot==0
-            # covers both empty docs and, under idf weights, docs made
-            # entirely of weight-0 universal tokens (df == n_docs).
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(out.view(np.int64), mask=tot == 0.0)],
-                names=[id_col, "simhash"])
+    def reduce(b: _GramBatch):
+        doc_of, wh = b.words()
+        n_docs = b.n_docs
+        if idf_weights is not None and len(w_hashes):
+            idx = np.searchsorted(w_hashes, wh)
+            idx[idx == len(w_hashes)] = 0
+            hit = w_hashes[idx] == wh
+            tok_w = np.where(hit, w_vals[idx], w_default)
+            tot = np.bincount(doc_of, weights=tok_w, minlength=n_docs)
+        else:
+            tok_w = None
+            tot = np.bincount(doc_of, minlength=n_docs).astype(np.float64)
+        out = np.zeros(n_docs, dtype=np.uint64)
+        for bit_i in range(64):
+            bit = ((wh >> U64(bit_i)) & U64(1)).astype(np.float64)
+            if tok_w is not None:
+                bit *= tok_w
+            s = np.bincount(doc_of, weights=bit, minlength=n_docs)
+            # acc = (+1)*s + (-1)*(tot-s) = 2s - tot ; bit set if > 0
+            out |= ((2.0 * s - tot) > 0).astype(np.uint64) << U64(bit_i)
+        # signal-less docs have no hash: emit NULL, not 0 — a shared
+        # fake hash would bucket them into one Hamming-0 cluster in
+        # simhash_pairs (quadratic at scale).  tot==0 covers both empty
+        # docs and, under idf weights, docs made entirely of weight-0
+        # universal tokens (df == n_docs).
+        return None, [pa.array(out.view(np.int64), mask=tot == 0.0)]
 
-    toks_expr = F.filter(F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
-                         lambda t: t != "")
-    id_t = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, toks_expr.alias("__toks")).mapInArrow(
-        fn, f"{id_col} {id_t}, simhash long")
+    return _gram_pass(df, text_col, id_col, [("simhash", "long")], reduce)
 
 
 def simhash_pairs(sh_df: DataFrame, id_col: str = "doc_id",
@@ -1705,9 +1674,7 @@ def token_frequency_histogram(df: DataFrame, text_col: str = "text",
         # (one vectorized Arrow pass — see _window_gram_hashes; an
         # n>1 gram contains a separator so the != '' filter is a
         # no-op there)
-        wins = _window_gram_hashes(
-            df.select(F.monotonically_increasing_id().alias("__rid"),
-                      text_col), text_col, "__rid", shingle_n)
+        wins = _window_gram_hashes(df, text_col, None, shingle_n)
         counts = wins.groupBy("__gh").agg(F.count("*").alias("c"))
     return (counts.groupBy(F.floor(F.log2("c")).cast("long").alias("bucket"))
                   .agg(F.count("*").alias("n_tokens"),

@@ -1,28 +1,40 @@
 """Every queries() entry must RUN on every shipped scale factor — the
 smallest (sf0.001) has different doc shapes than the oracle-gated
 sf0.01, which is exactly where degenerate-input crashes (empty docs,
-one-word docs, tiny candidate sets) hide."""
+one-word docs, tiny candidate sets) hide — and every entry with an
+oracle_sql() must return the oracle's rows there."""
 
 import os
 
 import pytest
 
 import __spark_entry__ as entrymod
+from tools import check_oracle
 
 SF_DIR = "/root/testdata/sf0.001"
+ORACLES = entrymod.oracle_sql()
 
 pytestmark = pytest.mark.skipif(
     not os.path.exists(f"{SF_DIR}/documents.parquet"),
     reason="sf0.001 testdata not present")
 
 
+@pytest.fixture(scope="module")
+def oracle_db():
+    con = check_oracle.connect(SF_DIR)
+    yield con
+    con.close()
+
+
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))
-def test_query_runs_on_smallest_sf(spark, name):
+def test_query_runs_on_smallest_sf(spark, oracle_db, name):
     fn = entrymod.queries()[name]
     df = fn(spark, SF_DIR)
-    rows = df.collect()
+    got = df.toPandas()  # >= 0 rows with a stable schema
     assert df.columns, name
-    assert rows is not None  # >= 0 rows with a stable schema
+    sql = ORACLES.get(name)
+    if sql is not None:
+        assert check_oracle.mismatches(got, oracle_db.sql(sql).df()) == []
 
 
 def test_entry_smoke(spark):

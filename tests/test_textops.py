@@ -1358,6 +1358,17 @@ def test_vocabulary_growth_matches_python_replay(spark):
     assert again == got
 
 
+GRAM_TEXTS = {
+    0: "a b c d e",
+    1: "x a b c y",          # shares gram "a b c" with doc 0
+    2: "a  b c",             # double space: empty token in gram
+    3: "a b",                # shorter than window: no windows
+    4: "",                   # empty: no windows
+    5: None,                 # null: no windows
+    6: "a b c d e",          # exact duplicate of doc 0
+}
+
+
 def test_window_gram_hashes_match_string_gram_equality(spark):
     """The r6 fingerprint pass must reproduce the string-gram windows
     exactly: same (doc, start) window set, same window counts, and
@@ -1366,15 +1377,7 @@ def test_window_gram_hashes_match_string_gram_equality(spark):
     empty/null docs, and cross-doc shared grams."""
     from qsketch.spark.textops import _window_gram_hashes
 
-    texts = {
-        0: "a b c d e",
-        1: "x a b c y",          # shares gram "a b c" with doc 0
-        2: "a  b c",             # double space: empty token in gram
-        3: "a b",                # shorter than window: no windows
-        4: "",                   # empty: no windows
-        5: None,                 # null: no windows
-        6: "a b c d e",          # exact duplicate of doc 0
-    }
+    texts = GRAM_TEXTS
     df = spark.createDataFrame(list(texts.items()),
                                "doc_id long, text string")
     rows = _window_gram_hashes(df, "text", "doc_id", 3).collect()
@@ -1502,3 +1505,107 @@ def test_simhash_near_duplicates_string_ids(spark):
         got = {(r["a"], r["b"]) for r in simhash_near_duplicates(
             docs, idf_weighted=idf).collect()}
         assert got == {("doc-a", "doc-b")}, idf
+
+
+def test_gram_passes_invariant_to_arrow_batch_size(spark):
+    """All six gram-kernel passes give identical rows whether a
+    partition's docs arrive in one Arrow batch or in batches of 3 —
+    every reduction is doc-local, so a batch boundary between docs
+    changes nothing."""
+    from qsketch.spark import textops as T
+
+    df = spark.createDataFrame(list(GRAM_TEXTS.items()),
+                               "doc_id long, text string").coalesce(1)
+    passes = {
+        "windows": lambda: T._window_gram_hashes(df, "text", "doc_id", 3),
+        "gram_strings": lambda: T._doc_distinct_gram_strings(df, "text", 3),
+        "minhash": lambda: T.minhash_signatures(df, num_perm=16),
+        "shingle_sets": lambda: T.shingle_hash_sets(df),
+        "winnow": lambda: T.winnow_fingerprints(df, shingle_n=2, window=2),
+        "simhash": lambda: T.simhash(df),
+    }
+
+    def run():
+        return {k: [tuple(r) for r in f().collect()]
+                for k, f in passes.items()}
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "10000")
+        big = run()
+        spark.conf.set(key, "3")
+        small = run()
+    finally:
+        spark.conf.set(key, old)
+    assert small == big
+    assert all(big.values())
+    assert len(big["windows"]) == 3 + 3 + 2 + 3
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_gram_operators_pass_ids_of_any_type(spark, id_type):
+    """Every operator built on the gram kernel carries the id column
+    with its own type: on a string-id frame each operator's rows are
+    its long-id rows with the ids mapped to strings (regression: the
+    Arrow schemas hard-coded `doc_id long`, so string ids failed in the
+    JVM with getLong)."""
+    from qsketch.spark import textops as T
+
+    rng = np.random.default_rng(5)
+    vocab = [f"w{i}" for i in range(400)]
+    # every doc shares the lead trigram, so train docs leak into eval
+    texts = ["leak x y " + " ".join(vocab[j] for j in rng.choice(
+        400, 30, replace=False)) for _ in range(10)]
+    edit = texts[0].split(" ")
+    edit[15] = "EDITED"
+    texts += [texts[0], " ".join(edit)]  # a clone and a near-edit of 0
+    # same-width ids: str() keeps their order and their md5 split keys
+    ids = list(range(100, 112))
+    idmap = {i: (str(i) if id_type == "string" else i) for i in ids}
+    ref = spark.createDataFrame(list(zip(ids, texts)),
+                                "doc_id long, text string")
+    got = spark.createDataFrame([(idmap[i], t) for i, t in zip(ids, texts)],
+                                f"doc_id {id_type}, text string")
+    bench = spark.createDataFrame([(texts[5],)], "text string")
+    fr = {"train": 0.5, "test": 0.5}
+    ops = {
+        "minhash": (lambda d: T.minhash_signatures(d), ["doc_id"]),
+        "shingle_sets": (lambda d: T.shingle_hash_sets(d), ["doc_id"]),
+        "winnow": (lambda d: T.winnow_fingerprints(d), ["doc_id"]),
+        "near_duplicates": (lambda d: T.near_duplicates(d), ["a", "b"]),
+        "groups": (lambda d: T.near_duplicate_groups(d),
+                   ["doc_id", "group_id"]),
+        "contamination": (lambda d: T.contamination_check(d, bench),
+                          ["doc_id"]),
+        "leakage": (lambda d: T.split_leakage(d, fr), ["doc_id"]),
+    }
+
+    def rows(df, id_cols, f):
+        return sorted(tuple(f(v) if c in id_cols else v
+                            for c, v in r.asDict().items())
+                      for r in df.collect())
+
+    for name, (op, id_cols) in ops.items():
+        out = op(got)
+        assert all(out.schema[c].dataType == got.schema["doc_id"].dataType
+                   for c in id_cols), name
+        expect = rows(op(ref), id_cols, idmap.get)
+        assert rows(out, id_cols, lambda v: v) == expect, name
+        assert expect, name
+
+
+def test_contamination_check_benchmark_needs_no_id(spark):
+    """The benchmark side of contamination_check is only a distinct
+    shingle set, so a benchmark frame with just the text column works
+    and flags the same docs (regression: UNRESOLVED_COLUMN doc_id)."""
+    from qsketch.spark.textops import contamination_check
+
+    bench = spark.createDataFrame(
+        [(1000, "alpha beta gamma delta")], "doc_id long, text string")
+    corpus = spark.createDataFrame(
+        [(1, "x alpha beta gamma y"), (2, "alpha beta gamma delta"),
+         (3, "p q r s t")], "doc_id long, text string")
+    got = sorted(tuple(r) for r in contamination_check(
+        corpus, bench.select("text")).collect())
+    assert got == [(1, 3, 1, round(1 / 3, 6)), (2, 2, 2, 1.0)]

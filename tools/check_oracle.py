@@ -26,6 +26,40 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), ignore_index=True)
 
 
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per parquet table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def mismatches(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    """Why a Spark result differs from its oracle result ([] if it
+    matches): column names, row count, order-insensitive values, and
+    per-column dtype KIND."""
+    a, b = normalize(sdf), normalize(odf)
+    if list(a.columns) != list(b.columns):
+        return [f"cols: spark={list(a.columns)} oracle={list(b.columns)}"]
+    if len(a) != len(b):
+        return [f"rows: spark={len(a)} oracle={len(b)}"]
+    out = []
+    try:
+        pd.testing.assert_frame_equal(a, b, check_dtype=False)
+    except AssertionError as e:
+        out.append(f"vals: {str(e)[:500]}")
+    # the driver's hash is typed by KIND: a value-equal float64 vs
+    # int64 column (e.g. DuckDB HUGEINT sums) hash-mismatches, while
+    # int32 vs int64 does not (r02 evidence: rank columns)
+    dt = [(c, str(a[c].dtype), str(b[c].dtype))
+          for c in a.columns if a[c].dtype.kind != b[c].dtype.kind]
+    if dt:
+        out.append(f"dtype: {dt} (driver typed-hash will mismatch)")
+    return out
+
+
 def main(sf_dir: str = "/root/testdata/sf0.01", *only: str) -> int:
     from pyspark.sql import SparkSession
 
@@ -36,11 +70,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", *only: str) -> int:
              .config("spark.sql.session.timeZone", "UTC")
              .config("spark.ui.enabled", "false")
              .getOrCreate())
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    con = connect(sf_dir)
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = 0
@@ -55,34 +85,12 @@ def main(sf_dir: str = "/root/testdata/sf0.01", *only: str) -> int:
             print(f"[rows-only] {name}: {len(sdf)} rows, "
                   f"cols={list(sdf.columns)}  ({timings[name]:.2f}s)")
             continue
-        odf = con.sql(oracles[name]).df()
-        a, b = normalize(sdf), normalize(odf)
-        ok = True
-        if list(a.columns) != list(b.columns):
-            print(f"[FAIL cols] {name}: spark={list(a.columns)} oracle={list(b.columns)}")
-            ok = False
-        elif len(a) != len(b):
-            print(f"[FAIL rows] {name}: spark={len(a)} oracle={len(b)}")
-            ok = False
-        else:
-            try:
-                pd.testing.assert_frame_equal(a, b, check_dtype=False)
-            except AssertionError as e:
-                print(f"[FAIL vals] {name}: {str(e)[:500]}")
-                ok = False
-            # the driver's hash is typed by KIND: a value-equal float64 vs
-            # int64 column (e.g. DuckDB HUGEINT sums) hash-mismatches,
-            # while int32 vs int64 does not (r02 evidence: rank columns)
-            dt = [(c, str(a[c].dtype), str(b[c].dtype))
-                  for c in a.columns if a[c].dtype.kind != b[c].dtype.kind]
-            if dt:
-                print(f"[WARN dtype] {name}: {dt} "
-                      "(driver typed-hash will mismatch)")
-                ok = False
-        if ok:
-            print(f"[OK]        {name}: {len(a)} rows match oracle"
+        errs = mismatches(sdf, con.sql(oracles[name]).df())
+        if not errs:
+            print(f"[OK]        {name}: {len(sdf)} rows match oracle"
                   f"  ({timings[name]:.2f}s)")
         else:
+            print(f"[FAIL]      {name}: " + "; ".join(errs))
             failures += 1
     if timings:
         total = sum(timings.values())
