@@ -97,6 +97,11 @@ class HyperLogLog:
                 return m * math.log(m / zeros)
         return float(e)
 
+    def cardinality(self) -> float:
+        """Alias of ``estimate()``: the headline decode every distinct
+        sketch exposes (grouped_cardinality, SQL qsketch_estimate)."""
+        return self.estimate()
+
     def rel_std_error(self) -> float:
         return 1.04 / math.sqrt(self.m)
 

@@ -835,8 +835,6 @@ def build_grouped_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
 _SKETCH_CACHE: dict[str, object] = {}
 _SKETCH_CACHE_MAX = 16  # per-worker; evict oldest beyond this
 
-_NULL_SENTINEL = -(2**63)  # stands in for NULL so pandas never sees NaN
-
 
 def _cached_sketch(token: str, blob: bytes):
     sk = _SKETCH_CACHE.get(token)
@@ -848,27 +846,82 @@ def _cached_sketch(token: str, blob: bytes):
     return sk
 
 
-def _null_safe_probe(df: DataFrame, values_col: str, udf_fn, out_col: str,
-                     out_type: str) -> DataFrame:
-    """Apply a probe UDF null-safely WITHOUT losing int64 precision.
+def _int64_ids(ids: pa.Array) -> np.ndarray:
+    """An integer Arrow array as int64 ndarray, NULL slots filled with 0.
 
-    A nullable long column reaches pandas as float64 (NaN for nulls),
-    silently rounding |id| > 2**53 — which turns exact membership into
-    mass false negatives.  Coalescing to a sentinel keeps the Arrow
-    column non-nullable (pandas stays int64); null inputs then yield
-    NULL output (SQL semantics)."""
+    Arrow keeps nulls in a validity bitmap, so an int64 column never
+    widens to float64 here and ids above 2**53 stay exact."""
+    if not pa.types.is_integer(ids.type):
+        raise TypeError(
+            f"expected integer ids, got Arrow type {ids.type}; sketches are "
+            "built over integer fingerprints — map strings to ids JVM-side "
+            "first (e.g. F.xxhash64)")
+    return ids.cast(pa.int64()).fill_null(0).to_numpy(zero_copy_only=False)
+
+
+def _keep_nulls(ids: pa.Array, out) -> pa.Array:
+    """``out`` (one value per row of ``ids``) as an Arrow array that is
+
+    NULL wherever ``ids`` is NULL (SQL semantics)."""
+    if not isinstance(out, pa.Array):
+        out = pa.array(out)
+    if ids.null_count:
+        out = pc.if_else(ids.is_valid(), out, pa.scalar(None, out.type))
+    return out
+
+
+def _state_udf(spark: SparkSession, blob: bytes, out_type: str, kernel):
+    """The one broadcast-state UDF behind every probe surface.
+
+    Broadcasts ``blob`` once; the returned Arrow UDF deserializes it once
+    per worker (``_cached_sketch``) and runs ``kernel(sketch, int64
+    ndarray)`` once per Arrow batch.  NULL ids reach the kernel as 0 and
+    come back NULL."""
+    bc = spark.sparkContext.broadcast(blob)
+    token = uuid.uuid4().hex
+
+    def probe(ids: pa.Array) -> pa.Array:
+        return _keep_nulls(ids, kernel(_cached_sketch(token, bc.value),
+                                       _int64_ids(ids)))
+
+    return F.arrow_udf(probe, out_type)
+
+
+def _contains(sk, ids: np.ndarray) -> np.ndarray:
+    return sk.contains(ids)
+
+
+def _contains_timed(sk, ids: np.ndarray) -> pa.StructArray:
+    t0 = time.perf_counter_ns()
+    hit = sk.contains(ids)
+    per = (time.perf_counter_ns() - t0) // max(len(ids), 1)
+    return pa.StructArray.from_arrays(
+        [pa.array(hit), pa.array(np.full(len(ids), per, dtype=np.int64))],
+        names=["is_member", "elapsed_ns"])
+
+
+def _frequency(sk, ids: np.ndarray) -> np.ndarray:
+    return sk.estimate(ids)
+
+
+def _state_cardinality(blob: bytes):
+    """The one headline decode of a serialized state: ``cardinality()``."""
+    sk = base.from_bytes(blob)
+    if not hasattr(sk, "cardinality"):
+        raise TypeError(f"{type(sk).__name__} state has no cardinality()")
+    return sk.cardinality()
+
+
+def _probe_column(df: DataFrame, values_col: str, blob: bytes, out_col: str,
+                  out_type: str, kernel) -> DataFrame:
     dtype = df.schema[values_col].dataType.simpleString()
     if dtype not in ("tinyint", "smallint", "int", "bigint"):
         raise TypeError(
             f"probe column '{values_col}' has type {dtype}; sketches are "
             "built over integer fingerprints — map strings to ids first "
             "(e.g. queries.token_ids / F.xxhash64)")
-    guarded = F.coalesce(F.col(values_col).cast("long"),
-                         F.lit(_NULL_SENTINEL))
-    return df.withColumn(
-        out_col,
-        F.when(F.col(values_col).isNull(),
-               F.lit(None).cast(out_type)).otherwise(udf_fn(guarded)))
+    probe = _state_udf(df.sparkSession, blob, out_type, kernel)
+    return df.withColumn(out_col, probe(F.col(values_col)))
 
 
 def with_membership(df: DataFrame, values_col: str, sketch_bytes: bytes,
@@ -877,18 +930,8 @@ def with_membership(df: DataFrame, values_col: str, sketch_bytes: bytes,
 
     The Spark-native analog of Bloom-join pruning: follow with
     ``.where(out_col)`` for a sketch-accelerated semi-join."""
-    from pyspark.sql.functions import pandas_udf
-
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(sketch_bytes)
-    token = uuid.uuid4().hex
-
-    @pandas_udf("boolean")
-    def is_member(s: pd.Series) -> pd.Series:
-        sk = _cached_sketch(token, bc.value)
-        return pd.Series(sk.contains(s.to_numpy()))
-
-    return _null_safe_probe(df, values_col, is_member, out_col, "boolean")
+    return _probe_column(df, values_col, sketch_bytes, out_col, "boolean",
+                         _contains)
 
 
 def with_membership_timed(df: DataFrame, values_col: str, sketch_bytes: bytes,
@@ -899,39 +942,13 @@ def with_membership_timed(df: DataFrame, values_col: str, sketch_bytes: bytes,
     (/root/reference/filter.go:57-58, server.go:27): returns a struct
     column ``(is_member boolean, elapsed_ns long)`` where elapsed_ns is
     the amortized per-probe cost of the vectorized batch."""
-    import time as _time
-
-    from pyspark.sql.functions import pandas_udf
-
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(sketch_bytes)
-    token = uuid.uuid4().hex
-
-    @pandas_udf("is_member boolean, elapsed_ns long")
-    def probe(s: pd.Series) -> pd.DataFrame:
-        sk = _cached_sketch(token, bc.value)
-        t0 = _time.perf_counter_ns()
-        hit = sk.contains(s.to_numpy())
-        per = (_time.perf_counter_ns() - t0) // max(len(s), 1)
-        return pd.DataFrame({"is_member": hit,
-                             "elapsed_ns": np.full(len(s), per, dtype=np.int64)})
-
-    return _null_safe_probe(df, values_col, probe, out_col,
-                            "struct<is_member:boolean,elapsed_ns:bigint>")
+    return _probe_column(df, values_col, sketch_bytes, out_col,
+                         "is_member boolean, elapsed_ns long",
+                         _contains_timed)
 
 
 def with_frequency(df: DataFrame, values_col: str, cms_bytes: bytes,
                    out_col: str = "est_count") -> DataFrame:
     """Broadcast a count-min sketch; vectorized point-frequency column."""
-    from pyspark.sql.functions import pandas_udf
-
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(cms_bytes)
-    token = uuid.uuid4().hex
-
-    @pandas_udf("long")
-    def freq(s: pd.Series) -> pd.Series:
-        sk = _cached_sketch(token, bc.value)
-        return pd.Series(sk.estimate(s.to_numpy()))
-
-    return _null_safe_probe(df, values_col, freq, out_col, "long")
+    return _probe_column(df, values_col, cms_bytes, out_col, "long",
+                         _frequency)

@@ -10,19 +10,24 @@ plus the north-rule extensions as DataFrame-level queries:
     +        heavy_hitters(), quantiles(), fpr() (north-rule additions)
 
 Every function takes and returns DataFrames so Catalyst sees the whole
-plan; sketch state moves via broadcast, never via collect-loops.
+plan; sketch state moves via broadcast, never via collect-loops.  The
+probes are ``agg._state_udf`` columns and the grouped decoders
+(``grouped_cardinality``/``_quantiles``/``_set_relations``) are Arrow
+UDFs over state rows; a cardinality decode calls ``cardinality()``.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import base
-from .agg import SketchSpec, build, build_grouped, with_frequency, with_membership
+from .agg import (SketchSpec, _state_cardinality, build, build_grouped,
+                  with_frequency, with_membership)
 
 
 def tokenize_text(df: DataFrame, text_col: str = "text",
@@ -277,16 +282,12 @@ def grouped_cardinality(merged_states: DataFrame, group_col: str = "group",
     driver collect: the decode runs as a vectorized probe over the
     state rows (one row per group — already tiny — so this stays
     distributed at millions of groups)."""
-    from pyspark.sql.functions import pandas_udf
+    def card(states: pa.Array) -> pa.Array:
+        return pa.array([int(_state_cardinality(b))
+                         for b in states.to_pylist()], pa.int64())
 
-    @pandas_udf("long")
-    def card(states: pd.Series) -> pd.Series:
-        return pd.Series(
-            [int(base.from_bytes(b).cardinality()) for b in states],
-            dtype="int64")
-
-    return merged_states.select(F.col(group_col),
-                                card(F.col("state")).alias(out_col))
+    return merged_states.select(
+        F.col(group_col), F.arrow_udf(card, "long")("state").alias(out_col))
 
 
 def grouped_quantiles(merged_states: DataFrame, qs: list[float],
@@ -296,24 +297,21 @@ def grouped_quantiles(merged_states: DataFrame, qs: list[float],
     (group, q) WITHOUT a driver collect (distributed decode, same shape
     as grouped_cardinality).  Works for any state kind exposing
     ``quantiles`` (KLL / t-digest / dyadic)."""
-    from pyspark.sql.functions import explode, pandas_udf
-
     qs = [float(q) for q in qs]
 
-    @pandas_udf("array<double>")
-    def vals(states: pd.Series) -> pd.Series:
-        return pd.Series([
+    def vals(states: pa.Array) -> pa.Array:
+        return pa.array([
             np.asarray(base.from_bytes(b).quantiles(
-                np.asarray(qs, dtype=np.float64)),
-                dtype=np.float64).tolist()
-            for b in states])
+                np.asarray(qs, dtype=np.float64)), dtype=np.float64)
+            for b in states.to_pylist()], pa.list_(pa.float64()))
 
     qcol = F.array(*[F.lit(q) for q in qs])
     return (merged_states
-            .select(F.col(group_col), vals(F.col("state")).alias("__v"))
+            .select(F.col(group_col),
+                    F.arrow_udf(vals, "array<double>")("state").alias("__v"))
             .select(group_col,
-                    explode(F.arrays_zip(qcol.alias("q"),
-                                         F.col("__v").alias("value")))
+                    F.explode(F.arrays_zip(qcol.alias("q"),
+                                           F.col("__v").alias("value")))
                     .alias("z"))
             .select(group_col, F.col("z.q").alias("q"),
                     F.col("z.value").alias("value")))
@@ -335,30 +333,26 @@ def grouped_set_relations(merged_states: DataFrame,
     relative error.  All-pairs output is quadratic in groups: filter
     the state frame to the groups of interest first (it stays
     distributed either way)."""
-    from pyspark.sql.functions import pandas_udf
-
     a = merged_states.select(F.col(group_col).alias("a"),
                              F.col("state").alias("__sa"))
     b = merged_states.select(F.col(group_col).alias("b"),
                              F.col("state").alias("__sb"))
     pairs = a.join(F.broadcast(b), F.col("a") < F.col("b"))
+    names = ["n_intersection", "n_union", "jaccard"]
 
-    @pandas_udf("n_intersection double, n_union double, jaccard double")
-    def rel(sa: pd.Series, sb: pd.Series) -> pd.DataFrame:
-        rows = []
-        for ba, bb in zip(sa, sb):
+    def rel(sa: pa.Array, sb: pa.Array) -> pa.Array:
+        cols = [[], [], []]
+        for ba, bb in zip(sa.to_pylist(), sb.to_pylist()):
             ka, kb = base.from_bytes(ba), base.from_bytes(bb)
-            rows.append((ka.intersection_estimate(kb),
-                         ka.union_estimate(kb),
-                         ka.jaccard_estimate(kb)))
-        return pd.DataFrame(rows, columns=["n_intersection", "n_union",
-                                           "jaccard"])
+            cols[0].append(ka.intersection_estimate(kb))
+            cols[1].append(ka.union_estimate(kb))
+            cols[2].append(ka.jaccard_estimate(kb))
+        return pa.StructArray.from_arrays(
+            [pa.array(c, pa.float64()) for c in cols], names=names)
 
-    return (pairs.select("a", "b", rel("__sa", "__sb").alias("__r"))
-            .select("a", "b",
-                    F.col("__r.n_intersection").alias("n_intersection"),
-                    F.col("__r.n_union").alias("n_union"),
-                    F.col("__r.jaccard").alias("jaccard")))
+    rel_udf = F.arrow_udf(rel, ", ".join(f"{n} double" for n in names))
+    return (pairs.select("a", "b", rel_udf("__sa", "__sb").alias("__r"))
+            .select("a", "b", *[F.col(f"__r.{n}").alias(n) for n in names]))
 
 
 def build_excluding(build_df: DataFrame, exclude_df: DataFrame,

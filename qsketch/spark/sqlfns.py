@@ -6,95 +6,43 @@ Python API:
     register_membership(spark, "qf_contains", state_bytes)
     spark.sql("SELECT token, qf_contains(token_id) AS hit FROM toks")
 
-Each registration broadcasts one state and binds a vectorized
-pandas_udf under the given name (Arrow-batched, deserialized once per
-executor).
+Every function here is an Arrow UDF: integer ids arrive as Arrow arrays
+whose validity bitmap carries the NULLs, so no id is widened to float64
+and NULL in gives NULL out.  The probes are the same broadcast-state UDF
+as ``agg.with_membership``/``with_frequency`` (``agg._state_udf``): one
+broadcast per registration, the state deserialized once per worker.
 """
 
 from __future__ import annotations
 
-import uuid
-
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import functions as F
 
-from .agg import _cached_sketch
-
-
-def _int_probe_values(s: pd.Series):
-    """(int64 values for non-null rows, notna mask) — recovers a
-    nullable long column that pandas widened to float64 when exact
-    (|x| <= 2^53), fails loudly otherwise."""
-    import numpy as np
-
-    arr = s.to_numpy()
-    if arr.dtype.kind in "iu":  # non-null integer column: zero-copy path
-        return arr, None
-    mask = pd.notna(s).to_numpy()
-    if arr.dtype.kind == "f":
-        vals = arr[mask]
-        if np.any(np.abs(vals) > 2.0**53):
-            raise TypeError(
-                "nullable column widened to float64 with |values| > 2^53 "
-                "— precision lost; coalesce NULLs JVM-side before probing")
-        if np.any(vals != np.floor(vals)):
-            raise TypeError("sketch probes take integer ids, got "
-                            "fractional doubles")
-        return vals.astype(np.int64), mask
-    raise TypeError("sketch probes take integer ids; map strings "
-                    "JVM-side (xxhash64) first")
+from ..hash import fnv1a64
+from .agg import (_HASH_KINDS, SketchSpec, _Acc, _contains, _frequency,
+                  _int64_ids, _keep_nulls, _state_cardinality, _state_udf)
+from .textops import _hash_str_arrow
 
 
 def register_membership(spark: SparkSession, name: str,
                         sketch_bytes: bytes) -> None:
-    bc = spark.sparkContext.broadcast(sketch_bytes)
-    token = uuid.uuid4().hex
-
-    @pandas_udf("boolean")
-    def fn(s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        sk = _cached_sketch(token, bc.value)
-        vals, mask = _int_probe_values(s)
-        if mask is None:
-            return pd.Series(sk.contains(vals))
-        out = pd.array([None] * len(s), dtype="boolean")
-        if mask.any():
-            out[mask] = sk.contains(vals)
-        return pd.Series(out)
-
-    spark.udf.register(name, fn)
+    spark.udf.register(name, _state_udf(spark, sketch_bytes, "boolean",
+                                        _contains))
 
 
 def register_frequency(spark: SparkSession, name: str,
                        cms_bytes: bytes) -> None:
-    bc = spark.sparkContext.broadcast(cms_bytes)
-    token = uuid.uuid4().hex
-
-    @pandas_udf("long")
-    def fn(s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        sk = _cached_sketch(token, bc.value)
-        vals, mask = _int_probe_values(s)
-        if mask is None:
-            return pd.Series(sk.estimate(vals))
-        # nullable Int64 avoids the float64 round-trip .where() would
-        # introduce (int64 -> NaN upcast rounds estimates > 2^53)
-        out = pd.array([None] * len(s), dtype="Int64")
-        if mask.any():
-            out[mask] = sk.estimate(vals)
-        return pd.Series(out)
-
-    spark.udf.register(name, fn)
+    spark.udf.register(name, _state_udf(spark, cms_bytes, "long",
+                                        _frequency))
 
 
 def register_sketch_build(spark: SparkSession, kind: str,
                           name: str | None = None,
                           params: dict | None = None) -> str:
-    """SQL-visible sketch BUILD: registers a grouped-agg pandas UDF so
+    """SQL-visible sketch BUILD: registers a grouped-agg Arrow UDF so
 
     SQL users can build sketch states with plain GROUP BY::
 
@@ -107,81 +55,35 @@ def register_sketch_build(spark: SparkSession, kind: str,
     agg.build / agg.build_grouped (map-side partials, state-only
     shuffle); this is the SQL interop/convenience surface.  Returns the
     registered function name."""
-    import numpy as np
-    from pyspark.sql.functions import PandasUDFType
-
-    from ..hash import fnv1a64
-    from .agg import _HASH_KINDS, SketchSpec, _Acc
-
     params = params or {}
     name = name or f"qsketch_{kind}_build"
     spec = SketchSpec(kind, "v", params)
 
-    @pandas_udf("binary", PandasUDFType.GROUPED_AGG)
-    def build_state(s: pd.Series) -> bytes:
+    def build_state(v: pa.Array) -> bytes:
         acc = _Acc(spec)
-        s = s.dropna()
+        v = v.drop_null()
         if kind in _HASH_KINDS:
-            # int-id recovery fails loudly on precision-lossy floats
-            vals, _ = _int_probe_values(s)
-            u, c = np.unique(vals, return_counts=True)
+            u, c = np.unique(_int64_ids(v), return_counts=True)
             acc.add(u, fnv1a64(u), c)
         else:  # quantile sketches take raw numerics, floats included
-            acc.add(s.to_numpy(), None)
+            acc.add(v.to_numpy(zero_copy_only=False), None)
         return acc.finish()
 
-    spark.udf.register(name, build_state)
+    spark.udf.register(name, F.arrow_udf(build_state, "binary"))
     return name
 
 
 def register_estimate(spark: SparkSession, name: str = "qsketch_estimate") -> None:
     """Scalar decode of a serialized state -> its headline estimate
 
-    (HLL estimate / QF-Bloom-CMS cardinality-style summary), so a full
-    build+read round trip is expressible in SQL."""
-    import inspect
+    (``cardinality()``: QF exact count, HLL/KMV estimate), so a full
+    build+read round trip is expressible in SQL.  A state without
+    ``cardinality()`` (CMS, Bloom, quantile sketches) raises TypeError."""
+    def est(states: pa.Array) -> pa.Array:
+        return pa.array([float(_state_cardinality(b))
+                         for b in states.to_pylist()], pa.float64())
 
-    from .. import base
-
-    _zero_arg_cache: dict[type, bool] = {}
-
-    def _zero_arg_estimate(sk):
-        """sk.estimate only if it is callable with no arguments — decided
-        by signature, NOT by catching TypeError, which would also swallow
-        a genuine TypeError raised INSIDE an estimate() body and silently
-        misroute to cardinality().  The signature reflection is cached
-        per sketch TYPE: reflecting per state row would add tens of µs
-        to every row of a grouped-states table."""
-        fn = getattr(sk, "estimate", None)
-        if fn is None:
-            return None
-        ok = _zero_arg_cache.get(type(sk))
-        if ok is None:
-            required = [
-                p for p in inspect.signature(fn).parameters.values()
-                if p.default is inspect.Parameter.empty
-                and p.kind not in (inspect.Parameter.VAR_POSITIONAL,
-                                   inspect.Parameter.VAR_KEYWORD)]
-            ok = not required  # CMS point-estimate: args required
-            _zero_arg_cache[type(sk)] = ok
-        return fn if ok else None
-
-    @pandas_udf("double")
-    def est(states: pd.Series) -> pd.Series:
-        out = []
-        for b in states:
-            sk = base.from_bytes(bytes(b))
-            fn = _zero_arg_estimate(sk)
-            if fn is not None:
-                out.append(float(fn()))
-            elif hasattr(sk, "cardinality"):
-                out.append(float(sk.cardinality()))
-            else:
-                raise TypeError(
-                    f"{type(sk).__name__} has no argument-free estimate")
-        return pd.Series(out, dtype="float64")
-
-    spark.udf.register(name, est)
+    spark.udf.register(name, F.arrow_udf(est, "double"))
 
 
 def register_fingerprint(spark: SparkSession, name: str = "fnv1a64") -> None:
@@ -189,39 +91,15 @@ def register_fingerprint(spark: SparkSession, name: str = "fnv1a64") -> None:
 
     integer columns hash their 8-byte LE encoding; string columns hash
     their UTF-8 bytes (exactly /root/reference/server.go:100)."""
-    from ..hash import fnv1a64, fnv1a64_str_array
+    def fn(col: pa.Array) -> pa.Array:
+        if pa.types.is_binary(col.type):  # raw bytes hash like UTF-8 ones
+            col = col.view(pa.string())
+        elif pa.types.is_large_binary(col.type):
+            col = col.view(pa.large_string())
+        if pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
+            h = _hash_str_arrow(col.fill_null(""))
+        else:
+            h = fnv1a64(_int64_ids(col))
+        return _keep_nulls(col, h.view(np.int64))
 
-    @pandas_udf("long")
-    def fn(s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        arr = s.to_numpy()
-        if arr.dtype == object:  # string column
-            mask = pd.notna(s)
-            out = np.zeros(len(s), dtype=np.uint64)
-            if mask.any():
-                out[mask.to_numpy()] = fnv1a64_str_array(
-                    [x for x in arr[mask.to_numpy()]])
-            return pd.Series(out.view(np.int64)).where(mask, other=pd.NA)
-        if arr.dtype.kind == "f":
-            # a nullable int column widened to float64: recover exactly
-            # when values are within float64's integer-exact range,
-            # otherwise fail loudly rather than hash rounded ids
-            mask = pd.notna(s)
-            vals = arr[mask.to_numpy()]
-            if np.any(np.abs(vals) > 2.0**53):
-                raise TypeError(
-                    "fnv1a64: nullable column widened to float64 with "
-                    "|values| > 2^53 — precision lost; coalesce NULLs "
-                    "JVM-side (e.g. coalesce(col, 0)) before hashing")
-            if np.any(vals != np.floor(vals)):
-                raise TypeError(
-                    "fnv1a64 takes integer ids, got fractional doubles — "
-                    "an astype(int64) here would silently hash a wrong id")
-            out = np.zeros(len(s), dtype=np.uint64)
-            if mask.any():
-                out[mask.to_numpy()] = fnv1a64(vals.astype(np.int64))
-            return pd.Series(out.view(np.int64)).where(mask, other=pd.NA)
-        return pd.Series(fnv1a64(arr).view("int64"))
-
-    spark.udf.register(name, fn)
+    spark.udf.register(name, F.arrow_udf(fn, "long"))

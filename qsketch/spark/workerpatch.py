@@ -1,6 +1,6 @@
 """Worker-side protocol cost fixes (measured on pyspark 4.1.2).
 
-Every Python-runner task (mapInArrow / applyInPandas / pandas_udf)
+Every Python-runner task (mapInArrow / applyInPandas / arrow_udf)
 pays a fixed per-task protocol cost in ``pyspark.worker.main``.  On
 this stack the dominant term is ``worker_util.setup_spark_files`` →
 ``importlib.invalidate_caches()``: CPython's ``zipimporter.

@@ -3,11 +3,16 @@ __spark_entry__.queries() entry on Spark and its oracle_sql() on DuckDB
 over the same sf dir; compare row count, column names, and
 order-insensitive values.
 
-Usage: python tools/check_oracle.py [sf_dir]
+Usage: python tools/check_oracle.py [--conf KEY=VALUE ...] [sf_dir] [query ...]
+
+Each ``--conf`` (repeatable) is set on the Spark session, after the
+defaults below, e.g. ``--conf spark.sql.shuffle.partitions=1`` to check
+the queries under one shuffle partition.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -61,15 +66,27 @@ def mismatches(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01", *only: str) -> int:
+    return check(sf_dir, only)
+
+
+def check(sf_dir: str, only=(), conf=()) -> int:
+    """Run the queries named in ``only`` (all when empty) against their
+    oracles; each ``KEY=VALUE`` of ``conf`` is set on the session after
+    the defaults.  Returns the number of failing queries."""
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
 
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    builder = (SparkSession.builder.master("local[8]")
+               .config("spark.sql.shuffle.partitions", "8")
+               .config("spark.sql.session.timeZone", "UTC")
+               .config("spark.ui.enabled", "false"))
+    for kv in conf:
+        key, sep, value = kv.partition("=")
+        if not sep:
+            raise SystemExit(f"--conf takes KEY=VALUE, got {kv!r}")
+        builder = builder.config(key, value)
+    spark = builder.getOrCreate()
     con = connect(sf_dir)
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
@@ -110,4 +127,10 @@ def main(sf_dir: str = "/root/testdata/sf0.01", *only: str) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main(*sys.argv[1:]))
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--conf", action="append", default=[],
+                    metavar="KEY=VALUE", help="Spark setting (repeatable)")
+    ap.add_argument("sf_dir", nargs="?", default=main.__defaults__[0])
+    ap.add_argument("only", nargs="*", help="run only these queries")
+    args = ap.parse_args()
+    sys.exit(check(args.sf_dir, args.only, args.conf))
