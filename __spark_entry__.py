@@ -17,13 +17,18 @@ generously-sized Bloom filter (expected FP over the probe set ~1e-11).
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from qsketch.spark.agg import SketchSpec, build, build_grouped, with_membership
+from qsketch.spark.agg import (
+    SketchSpec,
+    build,
+    build_grouped,
+    with_frequency_by,
+    with_membership,
+)
 from qsketch.spark.queries import (
     cardinality,
     fpr,
@@ -594,7 +599,7 @@ def q_cms_heavy_hitters_sketch(spark, sf_dir):
 
 def q_hll_vs_builtin(spark, sf_dir):
     """Interop cross-check (SURVEY §4.2): our HLL estimate side-by-side
-    with Spark's hll_sketch_agg / approx_count_distinct builtins and the
+    with Spark's built-in hll_sketch_agg / approx_count_distinct and the
     exact count, plus the realized relative error (rows-only; the error
     bound itself is asserted in pytest)."""
     from qsketch.spark.agg import SketchSpec, build
@@ -1037,10 +1042,9 @@ def q_cms_heavy_hitters_by_source(spark, sf_dir):
     vocabulary, so est == exact count and the oracle checks both
     columns exactly (the grouped extension of the cms_heavy_hitters
     contract).  The per-group states are collected (bounded: one
-    1.5 MB blob per group) and broadcast to the probe — at millions of
-    groups, switch the probe to a state join instead."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    1.5 MB blob per group) and each candidate is probed in its own
+    source's state (``with_frequency_by``) — at millions of groups,
+    switch the probe to a state join instead."""
     from pyspark.sql.window import Window
 
     d = _docs(spark, sf_dir)
@@ -1050,46 +1054,9 @@ def q_cms_heavy_hitters_by_source(spark, sf_dir):
     merged = build_grouped(toks.select("source", "token_id"),
                            (SketchSpec("cms", "token_id"),), "source")
     states = {r["group"]: bytes(r["state"]) for r in merged.collect()}
-    bc = spark.sparkContext.broadcast(states)
-    # Unique cache token baked into the UDF closure at query-build time.
-    # Worker-side Broadcast objects carry no stable id attribute, and
-    # id(bc.value) is unsafe (CPython reuses freed addresses, so a reused
-    # worker could serve a previous query's stale states from the cache).
-    cache_token = uuid.uuid4().hex
-
-    @pandas_udf("long")
-    def est(src, tid):
-        import builtins
-
-        import numpy as np
-
-        from qsketch import base
-        from qsketch.hash import fnv1a64
-
-        # per-executor-process deserialization cache: without it every
-        # (group, batch) pair re-parses the same ~1.5 MB CMS table.
-        # Keyed on a per-query uuid from the driver closure, NOT
-        # id(bc.value) — CPython reuses freed addresses, so in a
-        # long-lived reused worker a later query's broadcast dict can
-        # land at the same address as an earlier, garbage-collected
-        # one, and an address-keyed cache would silently serve the
-        # previous query's states.
-        cache = getattr(builtins, "_QSKETCH_GROUP_SK_CACHE", None)
-        if cache is None or cache.get("__id") != cache_token:
-            cache = {"__id": cache_token}
-            builtins._QSKETCH_GROUP_SK_CACHE = cache
-        out = np.zeros(len(src), dtype=np.int64)
-        for s_, idx in src.groupby(src).groups.items():
-            sk = cache.get(s_)
-            if sk is None:
-                sk = cache[s_] = base.from_bytes(bc.value[s_])
-            ids = tid.iloc[idx].to_numpy(dtype=np.int64)
-            out[idx] = sk.estimate(fnv1a64(ids), pre_hashed=True)
-        return pd.Series(out)
-
     cand = (toks.groupBy("source", "token", "token_id")
             .agg(F.count("*").alias("lower_bound")))
-    probed = cand.withColumn("est_count", est("source", "token_id"))
+    probed = with_frequency_by(cand, "source", "token_id", states)
     w = Window.partitionBy("source").orderBy(F.desc("est_count"),
                                              F.asc("token"))
     return (probed.withColumn("rank", F.row_number().over(w))

@@ -43,7 +43,12 @@ identity (the file list, or the DataFrame's plan fingerprint), every
 spec's kind, input and params, and the group column; a resume that
 differs in any of them fails loudly.  Final states are a pure function
 of the input multiset, so interrupted and uninterrupted runs produce
-byte-identical quotient-filter results.
+byte-identical quotient-filter results.  Every merge is one fold over
+states in partition order (``_merge_states``).
+
+Probe side: one broadcast and one per-worker decode cache serve the
+state UDF behind ``with_membership``/``with_frequency`` and the SQL
+probes, and its keyed form ``with_frequency_by`` (``{key: blob}``).
 """
 
 from __future__ import annotations
@@ -615,6 +620,18 @@ def build_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
     return _build_result(partials, leaves, fanin)
 
 
+def _merge_states(blobs):
+    """The one state fold: decode the first state and merge the rest into
+    it, in the given order.  Callers pass states in partition order, so
+    the non-canonical quantile sketches merge deterministically too
+    (canonical kinds are order-independent anyway)."""
+    blobs = iter(blobs)
+    sk = base.from_bytes(next(blobs))
+    for blob in blobs:
+        sk = sk.merge(base.from_bytes(blob))
+    return sk
+
+
 def tree_merge(states: DataFrame, num_leaves: int, fanin: int = 16,
                key_cols: tuple[str, ...] = ("kind",),
                target_leaves: int = 1) -> DataFrame:
@@ -624,15 +641,10 @@ def tree_merge(states: DataFrame, num_leaves: int, fanin: int = 16,
     out_cols = [f.name for f in states.schema.fields]
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # deterministic merge order (matters only for the non-canonical
-        # quantile sketches; canonical kinds are order-independent anyway)
         pdf = pdf.sort_values("partition_id")
-        sk = base.from_bytes(pdf["state"].iloc[0])
-        for blob in pdf["state"].iloc[1:]:
-            sk = sk.merge(base.from_bytes(blob))
         out = pdf.iloc[:1].copy()
         out["partition_id"] = int(pdf["partition_id"].iloc[0]) // fanin
-        out["state"] = [sk.to_bytes()]
+        out["state"] = [_merge_states(pdf["state"]).to_bytes()]
         out["n_rows"] = pdf["n_rows"].sum()
         out["n_tokens"] = pdf["n_tokens"].sum()
         out["build_ms"] = pdf["build_ms"].sum()
@@ -682,11 +694,9 @@ def _finalize(partials: DataFrame, num_leaves: int, fanin: int,
     out = []
     for kind, rs in by_kind.items():
         rs.sort(key=lambda r: r["partition_id"])
-        sk = base.from_bytes(rs[0]["state"])
-        for r in rs[1:]:
-            sk = sk.merge(base.from_bytes(r["state"]))
         out.append({
-            "kind": kind, "state": sk.to_bytes(),
+            "kind": kind,
+            "state": _merge_states(r["state"] for r in rs).to_bytes(),
             "n_rows": sum(r["n_rows"] for r in rs),
             "n_tokens": sum(r["n_tokens"] for r in rs),
             "build_ms": sum(r["build_ms"] for r in rs),
@@ -841,7 +851,9 @@ def _cached_sketch(token: str, blob: bytes):
     if sk is None:
         if len(_SKETCH_CACHE) >= _SKETCH_CACHE_MAX:
             _SKETCH_CACHE.pop(next(iter(_SKETCH_CACHE)))
-        sk = base.from_bytes(blob)
+        # a keyed {key: blob} broadcast gets ONE entry, which
+        # with_frequency_by fills with each key's state on first use
+        sk = {} if isinstance(blob, dict) else base.from_bytes(blob)
         _SKETCH_CACHE[token] = sk
     return sk
 
@@ -870,15 +882,21 @@ def _keep_nulls(ids: pa.Array, out) -> pa.Array:
     return out
 
 
+def _broadcast(spark: SparkSession, state):
+    """The one probe-state broadcast, plus its ``_cached_sketch`` token (a
+    uuid: CPython reuses freed addresses, so an address could hit an
+    earlier query's cache entry in a reused worker)."""
+    return spark.sparkContext.broadcast(state), uuid.uuid4().hex
+
+
 def _state_udf(spark: SparkSession, blob: bytes, out_type: str, kernel):
-    """The one broadcast-state UDF behind every probe surface.
+    """The one broadcast-state UDF behind every unkeyed probe surface.
 
     Broadcasts ``blob`` once; the returned Arrow UDF deserializes it once
     per worker (``_cached_sketch``) and runs ``kernel(sketch, int64
     ndarray)`` once per Arrow batch.  NULL ids reach the kernel as 0 and
     come back NULL."""
-    bc = spark.sparkContext.broadcast(blob)
-    token = uuid.uuid4().hex
+    bc, token = _broadcast(spark, blob)
 
     def probe(ids: pa.Array) -> pa.Array:
         return _keep_nulls(ids, kernel(_cached_sketch(token, bc.value),
@@ -912,14 +930,18 @@ def _state_cardinality(blob: bytes):
     return sk.cardinality()
 
 
-def _probe_column(df: DataFrame, values_col: str, blob: bytes, out_col: str,
-                  out_type: str, kernel) -> DataFrame:
+def _require_int_ids(df: DataFrame, values_col: str) -> None:
     dtype = df.schema[values_col].dataType.simpleString()
     if dtype not in ("tinyint", "smallint", "int", "bigint"):
         raise TypeError(
             f"probe column '{values_col}' has type {dtype}; sketches are "
             "built over integer fingerprints — map strings to ids first "
             "(e.g. queries.token_ids / F.xxhash64)")
+
+
+def _probe_column(df: DataFrame, values_col: str, blob: bytes, out_col: str,
+                  out_type: str, kernel) -> DataFrame:
+    _require_int_ids(df, values_col)
     probe = _state_udf(df.sparkSession, blob, out_type, kernel)
     return df.withColumn(out_col, probe(F.col(values_col)))
 
@@ -952,3 +974,35 @@ def with_frequency(df: DataFrame, values_col: str, cms_bytes: bytes,
     """Broadcast a count-min sketch; vectorized point-frequency column."""
     return _probe_column(df, values_col, cms_bytes, out_col, "long",
                          _frequency)
+
+
+def with_frequency_by(df: DataFrame, key_col: str, values_col: str,
+                      states: dict, out_col: str = "est_count") -> DataFrame:
+    """Keyed ``with_frequency``: each row's id is probed in the count-min
+    state of its key, ``states[key]`` (e.g. ``build_grouped``'s states).
+
+    The dict is broadcast once (driver-sized: at millions of keys, join
+    the states instead); a worker decodes a key's state on first use.
+    NULL key or id gives NULL; a key missing from ``states`` raises."""
+    _require_int_ids(df, values_col)
+    bc, token = _broadcast(df.sparkSession, states)
+
+    def probe(keys: pa.Array, ids: pa.Array) -> pa.Array:
+        sks = _cached_sketch(token, bc.value)
+        enc = keys.dictionary_encode()
+        codes = enc.indices.fill_null(-1).to_numpy(zero_copy_only=False)
+        order = np.argsort(codes)
+        bounds = np.searchsorted(codes[order], np.arange(len(enc.dictionary) + 1))
+        vals = _int64_ids(ids)
+        out = np.zeros(len(vals), dtype=np.int64)
+        for i, key in enumerate(enc.dictionary.to_pylist()):
+            if key not in sks:
+                if key not in bc.value:
+                    raise KeyError(f"with_frequency_by: no state for {key!r}")
+                sks[key] = base.from_bytes(bc.value[key])
+            rows = order[bounds[i]:bounds[i + 1]]
+            out[rows] = _frequency(sks[key], vals[rows])
+        return _keep_nulls(keys, _keep_nulls(ids, out))
+
+    probe = F.arrow_udf(probe, "long")
+    return df.withColumn(out_col, probe(F.col(key_col), F.col(values_col)))

@@ -21,6 +21,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -74,12 +75,9 @@ def cardinality(df: DataFrame, col: str, exact: bool = True,
         specs.append(SketchSpec("quotient", col, params or {}))
     res = build(df, tuple(specs))
     spark = df.sparkSession
-    rows = [{
-        "kind": s.kind,
-        "estimate": float(res.sketches[s.name].estimate()
-                          if s.kind == "hll"
-                          else res.sketches[s.name].cardinality()),
-    } for s in specs]
+    rows = [{"kind": s.kind,
+             "estimate": float(res.sketches[s.name].cardinality())}
+            for s in specs]
     return spark.createDataFrame(pd.DataFrame(rows))
 
 
@@ -117,12 +115,10 @@ def heavy_hitters_sketch(df: DataFrame, col: str, k: int = 20,
     in tests).  The <= k result rows materialize on the driver so the
     scan's cached partials can be dropped eagerly (no persist leak).
     """
-    import pyarrow as pa
     from pyspark import StorageLevel
 
-    from ..cms import CountMinSketch
     from ..hash import fnv1a64
-    from .agg import _finalize
+    from .agg import _Acc, _dedup, _finalize, _flat_values, _merge_states
 
     # the candidate/value path is packed as int64 end-to-end; fail at
     # entry with a clear message instead of an opaque Arrow schema error
@@ -135,8 +131,7 @@ def heavy_hitters_sketch(df: DataFrame, col: str, k: int = 20,
             "heavy_hitters() for string/other key types")
 
     m = candidates_per_partition or 8 * k
-    p = params or {}
-    kind = SketchSpec("cms", col, p).name
+    spec = SketchSpec("cms", col, params or {})
     unified = ("partition_id int, kind string, state binary, n_rows long, "
                "n_tokens long, build_ms double, value long, part_cnt long")
 
@@ -147,40 +142,29 @@ def heavy_hitters_sketch(df: DataFrame, col: str, k: int = 20,
 
         t0 = _time.perf_counter()
         pid = TaskContext.get().partitionId()
-        sk = CountMinSketch(p.get("width", 27183), p.get("depth", 7),
-                            p.get("seed", 0xC0FFEE))
+        acc = _Acc(spec)
         uniqs, cnts = [], []
         n_rows = 0
         for batch in batches:
-            arr = batch.column(col)
-            if arr.null_count:
-                arr = arr.drop_null()
-            v = arr.to_numpy(zero_copy_only=False)
-            if v.size == 0:
-                continue
+            v = _flat_values(batch.column(col))[0]
             n_rows += v.size
-            u, c = np.unique(v, return_counts=True)
-            sk.update(fnv1a64(u), counts=c, pre_hashed=True)
+            u, c = _dedup(v)
+            acc.add(u, fnv1a64(u), c)
             uniqs.append(u)
             cnts.append(c)
-        if uniqs:
-            u = np.concatenate(uniqs)
-            c = np.concatenate(cnts)
-            uu, inv = np.unique(u, return_inverse=True)
-            tot = np.zeros(len(uu), dtype=np.int64)
-            np.add.at(tot, inv, c)
-            order = np.lexsort((uu, -tot))[:m]  # ties -> smaller value
-            vals = uu[order].astype(np.int64)
-            pcnt = tot[order]
-        else:
-            vals = np.empty(0, dtype=np.int64)
-            pcnt = np.empty(0, dtype=np.int64)
+        none = [np.empty(0, dtype=np.int64)]
+        uu, inv = np.unique(np.concatenate(uniqs or none), return_inverse=True)
+        tot = np.zeros(len(uu), dtype=np.int64)
+        np.add.at(tot, inv, np.concatenate(cnts or none))
+        order = np.lexsort((uu, -tot))[:m]  # ties -> smaller value
+        vals = uu[order].astype(np.int64)
+        pcnt = tot[order]
         n = 1 + len(vals)
         ms = (_time.perf_counter() - t0) * 1000.0
         yield pa.RecordBatch.from_arrays(
             [pa.array([pid] * n, type=pa.int32()),
-             pa.array([kind] * n),
-             pa.array([sk.to_bytes()] + [None] * len(vals), type=pa.binary()),
+             pa.array([spec.name] * n),
+             pa.array([acc.finish()] + [None] * len(vals), type=pa.binary()),
              pa.array([n_rows] * n, type=pa.int64()),
              pa.array([n_rows] * n, type=pa.int64()),
              pa.array([ms] * n, type=pa.float64()),
@@ -199,24 +183,17 @@ def heavy_hitters_sketch(df: DataFrame, col: str, k: int = 20,
         # the same collect; the <= n_leaves x m candidate aggregation and
         # the CMS probe are a vectorized driver-side epilogue (same
         # size-bounded driver finish as _finalize's treeAggregate tail)
-        from .. import base
-
-        rows = (proj.mapInArrow(fn, unified)).collect()
-        st = sorted((r for r in rows if r["state"] is not None),
-                    key=lambda r: r["partition_id"])
-        if not st:  # zero-partition / empty input: no states were emitted
+        rows = proj.mapInArrow(fn, unified).toArrow()
+        is_state = rows["state"].is_valid()
+        st = rows.filter(is_state).sort_by("partition_id")
+        if not st.num_rows:  # zero-partition / empty input: no states
             return df.sparkSession.createDataFrame(
                 [], f"{col} long, est_count long, lower_bound long")
-        sk = base.from_bytes(st[0]["state"])
-        for r in st[1:]:
-            sk = sk.merge(base.from_bytes(r["state"]))
-        cvals = np.array([r["value"] for r in rows if r["state"] is None],
-                         dtype=np.int64)
-        ccnts = np.array([r["part_cnt"] for r in rows if r["state"] is None],
-                         dtype=np.int64)
-        uniq, inv = np.unique(cvals, return_inverse=True)
+        sk = _merge_states(st["state"].to_pylist())
+        cand = rows.filter(pc.invert(is_state))
+        uniq, inv = np.unique(cand["value"].to_numpy(), return_inverse=True)
         lower = np.zeros(len(uniq), dtype=np.int64)
-        np.add.at(lower, inv, ccnts)
+        np.add.at(lower, inv, cand["part_cnt"].to_numpy())
         est = sk.estimate(fnv1a64(uniq), pre_hashed=True).astype(np.int64)
         order = np.lexsort((uniq, -est))[:k]
         top = [{col: int(uniq[i]), "est_count": int(est[i]),

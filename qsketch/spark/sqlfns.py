@@ -22,8 +22,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..hash import fnv1a64
-from .agg import (_HASH_KINDS, SketchSpec, _Acc, _contains, _frequency,
-                  _int64_ids, _keep_nulls, _state_cardinality, _state_udf)
+from .agg import (SketchSpec, _contains, _frequency, _int64_ids, _keep_nulls,
+                  _PartitionAcc, _state_cardinality, _state_udf)
 from .textops import _hash_str_arrow
 
 
@@ -53,21 +53,21 @@ def register_sketch_build(spark: SparkSession, kind: str,
     NOTE: Spark grouped-agg UDFs have no partial-aggregation path — raw
     values shuffle to their group.  The 100-TB build path remains
     agg.build / agg.build_grouped (map-side partials, state-only
-    shuffle); this is the SQL interop/convenience surface.  Returns the
-    registered function name."""
+    shuffle); this is the SQL interop/convenience surface.  Each group
+    feeds agg.build's accumulator, so a canonical kind's state equals
+    agg.build's over the same rows.  Returns the registered function name."""
     params = params or {}
     name = name or f"qsketch_{kind}_build"
     spec = SketchSpec(kind, "v", params)
 
     def build_state(v: pa.Array) -> bytes:
-        acc = _Acc(spec)
+        acc = _PartitionAcc((spec,))
         v = v.drop_null()
-        if kind in _HASH_KINDS:
-            u, c = np.unique(_int64_ids(v), return_counts=True)
-            acc.add(u, fnv1a64(u), c)
-        else:  # quantile sketches take raw numerics, floats included
-            acc.add(v.to_numpy(zero_copy_only=False), None)
-        return acc.finish()
+        # hash kinds take integer ids, quantile kinds any numerics
+        vals = (_int64_ids(v) if acc.hash_inputs
+                else v.to_numpy(zero_copy_only=False))
+        acc.consume_arrays({"v": vals}, len(v))
+        return acc.accs[0].finish()
 
     spark.udf.register(name, F.arrow_udf(build_state, "binary"))
     return name

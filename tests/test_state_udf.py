@@ -4,10 +4,14 @@ SQL build/estimate/fingerprint functions and the grouped state decoders.
 Ids travel as Arrow arrays whose validity bitmap carries the NULLs, so
 a NULL next to an id above 2**53 neither rounds the id nor fails."""
 
+import functools
+import pathlib
+
 import numpy as np
 import pytest
 
 from pyspark.errors import PythonException
+from pyspark.sql import DataFrame
 
 from qsketch import base
 from qsketch.cms import CountMinSketch
@@ -16,7 +20,8 @@ from qsketch.hll import HyperLogLog
 from qsketch.kll import KLLSketch
 from qsketch.kmv import KMVSketch
 from qsketch.quotient import QuotientFilter
-from qsketch.spark.agg import (_state_cardinality, with_frequency,
+from qsketch.spark.agg import (SketchSpec, _state_cardinality, build,
+                               with_frequency, with_frequency_by,
                                with_membership, with_membership_timed)
 from qsketch.spark.queries import (grouped_cardinality, grouped_quantiles,
                                    grouped_set_relations)
@@ -30,6 +35,7 @@ IDS = [None, -5, 0, 7, BIG, 2**62 + 12345, None, -(2**62) - 3, 42,
        2**63 - 1, 1, BIG + 2, -(2**63), 1000, None, 3]
 WORDS = ["a", None, "foobar", "", "naïve", "a", None, "x y"]
 BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
+REPO = pathlib.Path(__file__).resolve().parent.parent
 
 
 def _fp(v: int) -> int:
@@ -233,3 +239,86 @@ def test_state_udfs_invariant_to_batch_size_and_nulls(spark):
             for f in ("intersection_estimate", "union_estimate",
                       "jaccard_estimate")))
          for a in sk for b in sk if a < b), key=repr)
+
+
+def _keyed_frame(spark, n_keys=20):
+    """IDS three times over, keyed round-robin by ``s0``..``s{n-1}``,
+    with a NULL key every 7th row; one CMS per key over its ids."""
+    rows = [(i, v, None if i % 7 == 3 else f"s{i % n_keys}")
+            for i, v in enumerate(IDS * 3)]
+    states = {}
+    for k in range(n_keys):
+        cms = CountMinSketch(width=64, depth=3, seed=k)
+        vals = [v for _, v, key in rows if key == f"s{k}" and v is not None]
+        cms.update(np.array(vals + vals[:1], dtype=np.int64))
+        states[f"s{k}"] = cms.to_bytes()
+    df = spark.createDataFrame(rows, "rid long, t bigint, k string")
+    return df.coalesce(1), rows, states
+
+
+def test_with_frequency_by_equals_per_key_probes(spark):
+    """The keyed probe gives, per row, what with_frequency gives with
+    that row's own key's state, at Arrow batch sizes 3 and 10000 (the
+    unkeyed probe's own batch invariance is tested above); a NULL key
+    or a NULL id gives NULL."""
+    df, rows, states = _keyed_frame(spark)
+
+    def keyed():
+        return sorted(tuple(r) for r in with_frequency_by(
+            df, "k", "t", states).select("rid", "est_count").collect())
+
+    def per_key():  # one job over the union of the 20 probes
+        return sorted(tuple(r) for r in functools.reduce(
+            DataFrame.union,
+            (with_frequency(df.where(df.k == key), "t", blob)
+             .select("rid", "est_count") for key, blob in states.items())
+        ).collect())
+
+    keys = {rid: key for rid, _, key in rows}
+    want = dict(per_key())
+    assert min(e for e in want.values() if e is not None) >= 1
+    for size in (3, 10000):
+        got = dict(_at_batch_size(spark, size, keyed))
+        assert len(got) == len(rows)
+        assert {r: e for r, e in got.items() if keys[r] is not None} == want
+        assert all(got[rid] is None for rid, v, key in rows
+                   if key is None or v is None)
+
+
+def test_with_frequency_by_rejects_missing_key_and_float_ids(spark):
+    """A key with no state fails the query naming the key; a non-integer
+    id column fails at call time, as with_frequency does."""
+    df, _, states = _keyed_frame(spark)
+    del states["s13"]
+    with pytest.raises(PythonException, match="'s13'"):
+        with_frequency_by(df, "k", "t", states).collect()
+    with pytest.raises(TypeError, match="probe column 't'"):
+        with_frequency_by(df.withColumn("t", df.t.cast("double")), "k", "t",
+                          states)
+
+
+@pytest.mark.parametrize("kind", ["quotient", "bloom", "hll", "cms", "kmv",
+                                  "dyadic"])
+def test_sql_build_state_equals_agg_build(spark, kind):
+    """A state built by the SQL build function is byte-equal to the same
+    kind built by agg.build, on one partition."""
+    df = spark.createDataFrame(
+        [(v, None if v is None else abs(v) % 1000) for v in IDS * 2],
+        "t bigint, q int").coalesce(1)
+    col = "q" if kind == "dyadic" else "t"
+    df.createOrReplaceTempView("sql_vs_agg")
+    fn = register_sketch_build(spark, kind, name=f"sql_vs_agg_{kind}")
+    got = bytes(spark.sql(f"SELECT {fn}({col}) FROM sql_vs_agg").first()[0])
+    spec = SketchSpec(kind, col)
+    assert got == build(df, (spec,)).sketches[spec.name].to_bytes()
+
+
+def test_one_broadcast_and_no_pandas_udf_in_sources():
+    """Every probe goes through agg's one state broadcast, and every UDF
+    is an Arrow UDF: the engine and driver sources hold exactly one
+    ``sparkContext.broadcast(`` and no ``pandas_udf``."""
+    srcs = sorted((REPO / "qsketch").rglob("*.py")) + [
+        REPO / "__spark_entry__.py"]
+    text = {p: p.read_text() for p in srcs}
+    assert [p for p, t in text.items() if "pandas_udf" in t] == []
+    assert sum(t.count("sparkContext.broadcast(") for t in text.values()) == 1
