@@ -34,6 +34,15 @@ accumulator (``_PartitionAcc``, or ``_GroupedAcc`` per group), and owns
 the one task body: partition id, checkpoint skip, consume, commit or
 yield.
 
+One kind table (``_KINDS``: constructor, accepted params with their
+defaults, input mode) defines every sketch kind; ``_Acc``,
+``_HASH_KINDS`` and ``SketchSpec``'s checks derive from it.  One writer
+(``_state_rows``) emits every state row from one Arrow field list, with
+``group`` only in grouped builds.  One row fold (``_fold_rows``:
+partition order, ``_merge_states``, summed counters) is ``tree_merge``'s
+group function and the driver finish of ``_finalize`` and of
+``queries.heavy_hitters_sketch``.
+
 Resumability: with a checkpoint dir, each task atomically writes its
 partial state file and a re-run skips completed partitions WITHOUT
 consuming their input (lazy Arrow iterator is never pulled), then the
@@ -43,8 +52,7 @@ identity (the file list, or the DataFrame's plan fingerprint), every
 spec's kind, input and params, and the group column; a resume that
 differs in any of them fails loudly.  Final states are a pure function
 of the input multiset, so interrupted and uninterrupted runs produce
-byte-identical quotient-filter results.  Every merge is one fold over
-states in partition order (``_merge_states``).
+byte-identical quotient-filter results.
 
 Probe side: one broadcast and one per-worker decode cache serve the
 state UDF behind ``with_membership``/``with_frequency`` and the SQL
@@ -60,7 +68,7 @@ import uuid
 import warnings
 from dataclasses import dataclass, field
 from functools import cached_property, partial
-from typing import Iterator
+from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -70,6 +78,7 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
 
 from .. import base
 from ..bloom import BloomFilter
@@ -82,32 +91,100 @@ from ..kmv import KMVSketch
 from ..quotient import QuotientFilter
 from ..tdigest import TDigest
 
-STATE_SCHEMA = ("partition_id int, kind string, state binary, "
-                "n_rows long, n_tokens long, build_ms double")
-GROUP_STATE_SCHEMA = ("group string, partition_id int, kind string, state binary, "
-                      "n_rows long, n_tokens long, build_ms double")
 
+class _DeferredQuotient:
+    """The quotient filter's partial: fingerprints collect per batch and
+    the filter is bulk-built once, in ``to_bytes`` (a sorted bulk layout
+    beats repeated unions)."""
+
+    def __init__(self, max_load: float = 0.9, q_bits: int | None = None):
+        self.max_load, self.q_bits = max_load, q_bits
+        self._hashes: list[np.ndarray] = []
+
+    def update(self, hashes: np.ndarray, pre_hashed: bool = True) -> None:
+        self._hashes.append(hashes)
+
+    def to_bytes(self) -> bytes:
+        h = np.unique(np.concatenate(self._hashes or [np.empty(0, np.uint64)]))
+        return QuotientFilter.build(h, q_bits=self.q_bits, max_load=self.max_load,
+                                    pre_hashed=True).to_bytes()
+
+
+# Input modes.  Hash inputs are each batch's DEDUPLICATED fingerprints
+# and multiplicities (see _dedup); quantile sketches take raw values.
+def _hashed(sk, values, hashes, counts) -> None:
+    sk.update(hashes, pre_hashed=True)
+
+
+def _hashed_counts(sk, values, hashes, counts) -> None:
+    sk.update(hashes, pre_hashed=True, counts=counts)
+
+
+def _raw(sk, values, hashes, counts) -> None:
+    sk.update(values)
+
+
+class _Kind(NamedTuple):
+    new: Callable  # constructor, called with the defaults updated by params
+    defaults: dict  # every param the kind accepts, with its default
+    feed: Callable  # input mode: _hashed, _hashed_counts or _raw
+
+
+# The one kind table.  Serialization ids stay in base.py (KIND_*).
+_KINDS = {
+    "quotient": _Kind(_DeferredQuotient, {"max_load": 0.9, "q_bits": None},
+                      _hashed),
+    "bloom": _Kind(BloomFilter, {"m_bits": 1 << 23, "k": 7}, _hashed_counts),
+    "hll": _Kind(HyperLogLog, {"p": 14}, _hashed),
+    "cms": _Kind(CountMinSketch,
+                 {"width": 27183, "depth": 7, "seed": 0xC0FFEE}, _hashed_counts),
+    "kmv": _Kind(KMVSketch, {"k": 4096}, _hashed),
+    "kll": _Kind(KLLSketch, {"k": 200}, _raw),
+    "tdigest": _Kind(TDigest, {"delta": 200}, _raw),
+    "dyadic": _Kind(DyadicCMQuantiles,
+                    {"domain_bits": 20, "width": 8192, "depth": 3,
+                     "seed": 0xD1AD1C, "signed": False}, _raw),
+}
+
+_HASH_KINDS = frozenset(k for k, v in _KINDS.items() if v.feed is not _raw)
+
+# State rows: one Arrow field list; the Spark schemas derive from it.
 _STATE_PA_SCHEMA = pa.schema([
     ("partition_id", pa.int32()), ("kind", pa.string()), ("state", pa.binary()),
     ("n_rows", pa.int64()), ("n_tokens", pa.int64()), ("build_ms", pa.float64()),
 ])
+_GROUP_STATE_PA_SCHEMA = _STATE_PA_SCHEMA.insert(0, pa.field("group", pa.string()))
 
-_GROUP_STATE_PA_SCHEMA = pa.schema([
-    ("group", pa.string()), ("partition_id", pa.int32()),
-    ("kind", pa.string()), ("state", pa.binary()),
-    ("n_rows", pa.int64()), ("n_tokens", pa.int64()),
-    ("build_ms", pa.float64()),
-])
+
+def _ddl(schema: pa.Schema) -> str:
+    """An Arrow schema as a Spark DDL string."""
+    return ", ".join(f"{f.name} {from_arrow_type(f.type).simpleString()}"
+                     for f in schema)
+
+
+STATE_SCHEMA = _ddl(_STATE_PA_SCHEMA)
+GROUP_STATE_SCHEMA = _ddl(_GROUP_STATE_PA_SCHEMA)
 
 
 @dataclass(frozen=True)
 class SketchSpec:
     """What to sketch: ``kind`` over column ``input`` (array<int> columns
 
-    are flattened; scalar numeric columns feed quantile sketches)."""
-    kind: str  # quotient | bloom | hll | cms | kll | tdigest
+    are flattened; scalar numeric columns feed quantile sketches).  An
+    unknown kind or param raises ValueError here, not on a worker."""
+    kind: str  # a key of _KINDS
     input: str = "tokens"
     params: dict = field(default_factory=dict)
+
+    def __post_init__(self):
+        if self.kind not in _KINDS:
+            raise ValueError(f"unknown sketch kind {self.kind!r}; "
+                             f"allowed: {sorted(_KINDS)}")
+        stray = sorted(set(self.params) - set(_KINDS[self.kind].defaults))
+        if stray:
+            raise ValueError(
+                f"unknown {self.kind} param(s) {stray}; allowed: "
+                f"{sorted(_KINDS[self.kind].defaults)}")
 
     @property
     def name(self) -> str:
@@ -123,71 +200,23 @@ DEFAULT_SPECS = (
     SketchSpec("tdigest", "n_tok"),
 )
 
-_HASH_KINDS = {"quotient", "bloom", "hll", "cms", "kmv"}
-
 
 class _Acc:
-    """Per-partition accumulator for one spec: incremental for sketches
+    """Per-partition accumulator for one spec: the kind table's sketch,
 
-    with cheap vector updates; deferred single bulk build for the
-    quotient filter (sorted bulk layout beats repeated unions)."""
+    fed each batch in the kind's input mode."""
 
     def __init__(self, spec: SketchSpec):
         self.spec = spec
-        p = spec.params
-        k = spec.kind
-        if k == "quotient":
-            self.sk = None
-            self._hashes: list[np.ndarray] = []
-            self._max_load = p.get("max_load", 0.9)
-            self._q_bits = p.get("q_bits")
-        elif k == "bloom":
-            self.sk = BloomFilter(p.get("m_bits", 1 << 23), p.get("k", 7))
-        elif k == "hll":
-            self.sk = HyperLogLog(p.get("p", 14))
-        elif k == "cms":
-            self.sk = CountMinSketch(p.get("width", 27183), p.get("depth", 7),
-                                     p.get("seed", 0xC0FFEE))
-        elif k == "kmv":
-            self.sk = KMVSketch(p.get("k", 4096))
-        elif k == "kll":
-            self.sk = KLLSketch(p.get("k", 200))
-        elif k == "tdigest":
-            self.sk = TDigest(p.get("delta", 200))
-        elif k == "dyadic":
-            self.sk = DyadicCMQuantiles(
-                p.get("domain_bits", 20), p.get("width", 8192),
-                p.get("depth", 3), p.get("seed", 0xD1AD1C),
-                p.get("signed", False))
-        else:
-            raise ValueError(f"unknown sketch kind {k}")
+        kind = _KINDS[spec.kind]
+        self.sk = kind.new(**{**kind.defaults, **spec.params})
+        self._feed = kind.feed
 
     def add(self, values: np.ndarray, hashes: np.ndarray | None,
             counts: np.ndarray | None = None) -> None:
-        """``hashes``/``counts`` are per-batch DEDUPLICATED fingerprints +
-
-        multiplicities (see _dedup): set-semantics sketches consume the
-        unique fingerprints, the linear CMS takes them weighted, and the
-        quantile sketches take the raw (non-deduped) values."""
-        k = self.spec.kind
-        if k == "quotient":
-            self._hashes.append(hashes)
-        elif k == "cms":
-            self.sk.update(hashes, counts=counts, pre_hashed=True)
-        elif k == "bloom":
-            self.sk.update(hashes, pre_hashed=True, counts=counts)
-        elif k in _HASH_KINDS:
-            self.sk.update(hashes, pre_hashed=True)
-        else:
-            self.sk.update(values)
+        self._feed(self.sk, values, hashes, counts)
 
     def finish(self) -> bytes:
-        if self.spec.kind == "quotient":
-            h = (np.unique(np.concatenate(self._hashes))
-                 if self._hashes else np.empty(0, dtype=np.uint64))
-            self.sk = QuotientFilter.build(h, q_bits=self._q_bits,
-                                           max_load=self._max_load,
-                                           pre_hashed=True)
         return self.sk.to_bytes()
 
 
@@ -345,15 +374,16 @@ class _PartitionAcc:
         self.n_tokens = 0
         self.t0 = time.perf_counter()
 
-    def consume(self, batch: pa.RecordBatch) -> None:
+    def consume(self, batch: pa.RecordBatch) -> dict:
         vals = {name: _flat_values(batch.column(name))[0]
                 for name in self.inputs}
-        self.consume_arrays(vals, batch.num_rows)
+        return self.consume_arrays(vals, batch.num_rows)
 
     def consume_arrays(self, vals: dict[str, np.ndarray],
-                       n_rows: int) -> None:
+                       n_rows: int) -> dict:
         """Flattened-array form of consume — lets the grouped build feed
-        per-group value SLICES without re-gathering Arrow rows."""
+        per-group value SLICES without re-gathering Arrow rows.  Returns
+        the batch's ``{hash input: (uniques, counts)}``."""
         self.n_rows += n_rows
         dedup = {name: _dedup(vals[name], name in self.bounded)
                  for name in self.hash_inputs}
@@ -364,21 +394,24 @@ class _PartitionAcc:
             name = acc.spec.input
             acc.add(vals[name], hashes.get(name),
                     dedup[name][1] if name in dedup else None)
+        return dedup
 
-    def to_record_batch(self, pid: int) -> pa.RecordBatch:
+    def to_record_batch(self, pid: int,
+                        schema: pa.Schema = _STATE_PA_SCHEMA) -> pa.RecordBatch:
         build_ms = (time.perf_counter() - self.t0) * 1000.0
-        n = len(self.accs)
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array([pid] * n, type=pa.int32()),
-                pa.array([a.spec.name for a in self.accs]),
-                pa.array([a.finish() for a in self.accs], type=pa.binary()),
-                pa.array([self.n_rows] * n, type=pa.int64()),
-                pa.array([self.n_tokens] * n, type=pa.int64()),
-                pa.array([build_ms] * n, type=pa.float64()),
-            ],
-            schema=_STATE_PA_SCHEMA,
-        )
+        return _state_rows(pid, [(None, self, build_ms)], schema)
+
+
+def _state_rows(pid: int, parts, schema: pa.Schema) -> pa.RecordBatch:
+    """The one state-row writer: one row per spec of each ``(group,
+    _PartitionAcc, build_ms)`` in ``parts``.  The group is written only
+    when ``schema`` has a ``group`` field (grouped builds); a field the
+    writer does not fill is NULL."""
+    return pa.RecordBatch.from_pylist(
+        [{"group": group, "partition_id": pid, "kind": a.spec.name,
+          "state": a.finish(), "n_rows": p.n_rows, "n_tokens": p.n_tokens,
+          "build_ms": ms}
+         for group, p, ms in parts for a in p.accs], schema=schema)
 
 
 def _commit_state(out: pa.RecordBatch, done: str) -> None:
@@ -621,15 +654,27 @@ def build_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
 
 
 def _merge_states(blobs):
-    """The one state fold: decode the first state and merge the rest into
-    it, in the given order.  Callers pass states in partition order, so
-    the non-canonical quantile sketches merge deterministically too
-    (canonical kinds are order-independent anyway)."""
+    """Decode the first state and merge the rest into it, in the given
+    order (see _fold_rows)."""
     blobs = iter(blobs)
     sk = base.from_bytes(next(blobs))
     for blob in blobs:
         sk = sk.merge(base.from_bytes(blob))
     return sk
+
+
+def _fold_rows(rows: list[dict]) -> dict:
+    """The one row fold: state rows of one (group, kind) put in partition
+    order — so the non-canonical quantile sketches merge
+    deterministically too — merged by _merge_states, with ``n_rows``,
+    ``n_tokens`` and ``build_ms`` summed.  Other columns come from the
+    first row in that order."""
+    rows = sorted(rows, key=lambda r: r["partition_id"])
+    out = {**rows[0],
+           "state": _merge_states(r["state"] for r in rows).to_bytes()}
+    for c in ("n_rows", "n_tokens", "build_ms"):
+        out[c] = sum(r[c] for r in rows)
+    return out
 
 
 def tree_merge(states: DataFrame, num_leaves: int, fanin: int = 16,
@@ -641,14 +686,9 @@ def tree_merge(states: DataFrame, num_leaves: int, fanin: int = 16,
     out_cols = [f.name for f in states.schema.fields]
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("partition_id")
-        out = pdf.iloc[:1].copy()
-        out["partition_id"] = int(pdf["partition_id"].iloc[0]) // fanin
-        out["state"] = [_merge_states(pdf["state"]).to_bytes()]
-        out["n_rows"] = pdf["n_rows"].sum()
-        out["n_tokens"] = pdf["n_tokens"].sum()
-        out["build_ms"] = pdf["build_ms"].sum()
-        return out[out_cols]
+        row = _fold_rows(pdf.to_dict("records"))
+        row["partition_id"] //= fanin
+        return pd.DataFrame([row], columns=out_cols)
 
     df = states
     leaves = num_leaves
@@ -687,21 +727,10 @@ def _finalize(partials: DataFrame, num_leaves: int, fanin: int,
     # pickled Rows — measured 0.2 s vs 1.6 s for the same 64 x ~3 MB
     # state rows (driver-side pickle of big binary cells dominates
     # plain collect())
-    rows = df.toArrow().to_pylist()
     by_kind: dict[str, list] = {}
-    for r in rows:
+    for r in df.toArrow().to_pylist():
         by_kind.setdefault(r["kind"], []).append(r)
-    out = []
-    for kind, rs in by_kind.items():
-        rs.sort(key=lambda r: r["partition_id"])
-        out.append({
-            "kind": kind,
-            "state": _merge_states(r["state"] for r in rs).to_bytes(),
-            "n_rows": sum(r["n_rows"] for r in rs),
-            "n_tokens": sum(r["n_tokens"] for r in rs),
-            "build_ms": sum(r["build_ms"] for r in rs),
-        })
-    return out
+    return [_fold_rows(rs) for rs in by_kind.values()]
 
 
 def _build_result(partials: DataFrame, leaves: int,
@@ -792,24 +821,9 @@ class _GroupedAcc:
                              + regroup_ms * ((e - s) / max(n, 1)))
 
     def to_record_batch(self, pid: int) -> pa.RecordBatch:
-        names, pids, kinds, blobs, nr, nt, ms = [], [], [], [], [], [], []
-        for g, pacc in self.accs.items():
-            build_ms = self.ms[g]  # per-group consume time, non-overlapping
-            for a in pacc.accs:
-                names.append(g)
-                pids.append(pid)
-                kinds.append(a.spec.name)
-                blobs.append(a.finish())
-                nr.append(pacc.n_rows)
-                nt.append(pacc.n_tokens)
-                ms.append(build_ms)
-        return pa.RecordBatch.from_arrays(
-            [pa.array(names, type=pa.string()),
-             pa.array(pids, type=pa.int32()), pa.array(kinds, type=pa.string()),
-             pa.array(blobs, type=pa.binary()), pa.array(nr, type=pa.int64()),
-             pa.array(nt, type=pa.int64()), pa.array(ms, type=pa.float64())],
-            schema=_GROUP_STATE_PA_SCHEMA,
-        )
+        # build_ms: per-group consume time, non-overlapping
+        parts = [(g, p, self.ms[g]) for g, p in self.accs.items()]
+        return _state_rows(pid, parts, _GROUP_STATE_PA_SCHEMA)
 
 
 def build_grouped(df: DataFrame, specs=DEFAULT_SPECS, group_col: str = "source",

@@ -27,8 +27,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import base
-from .agg import (SketchSpec, _state_cardinality, build, build_grouped,
-                  with_frequency, with_membership)
+from .agg import (_KINDS, _STATE_PA_SCHEMA, SketchSpec, _ddl, _finalize,
+                  _fold_rows, _PartitionAcc, _state_cardinality, build,
+                  build_grouped, with_frequency, with_membership)
 
 
 def tokenize_text(df: DataFrame, text_col: str = "text",
@@ -69,10 +70,17 @@ def cardinality(df: DataFrame, col: str, exact: bool = True,
                 params: dict | None = None) -> DataFrame:
     """count() as a 1-row DataFrame: QF full-remainder cardinality
 
-    (collision-exact) and/or HLL estimate."""
-    specs = [SketchSpec("hll", col, params or {})]
-    if exact:
-        specs.append(SketchSpec("quotient", col, params or {}))
+    (collision-exact) and/or HLL estimate.  Each kind gets the
+    ``params`` it accepts; a param neither accepts raises ValueError."""
+    params = params or {}
+    kinds = ("hll", "quotient") if exact else ("hll",)
+    allowed = {k: _KINDS[k].defaults for k in kinds}
+    stray = sorted(set(params).difference(*allowed.values()))
+    if stray:
+        raise ValueError(f"cardinality: unknown param(s) {stray}; allowed: "
+                         f"{sorted(set().union(*allowed.values()))}")
+    specs = [SketchSpec(k, col, {p: v for p, v in params.items() if p in a})
+             for k, a in allowed.items()]
     res = build(df, tuple(specs))
     spark = df.sparkSession
     rows = [{"kind": s.kind,
@@ -117,9 +125,6 @@ def heavy_hitters_sketch(df: DataFrame, col: str, k: int = 20,
     """
     from pyspark import StorageLevel
 
-    from ..hash import fnv1a64
-    from .agg import _Acc, _dedup, _finalize, _flat_values, _merge_states
-
     # the candidate/value path is packed as int64 end-to-end; fail at
     # entry with a clear message instead of an opaque Arrow schema error
     # mid-job (heavy_hitters handles arbitrary key types)
@@ -132,46 +137,28 @@ def heavy_hitters_sketch(df: DataFrame, col: str, k: int = 20,
 
     m = candidates_per_partition or 8 * k
     spec = SketchSpec("cms", col, params or {})
-    unified = ("partition_id int, kind string, state binary, n_rows long, "
-               "n_tokens long, build_ms double, value long, part_cnt long")
+    out = f"{col} long, est_count long, lower_bound long"
+    # a state row (NULL value) or a candidate row (NULL state)
+    schema = (_STATE_PA_SCHEMA.append(pa.field("value", pa.int64()))
+              .append(pa.field("part_cnt", pa.int64())))
 
     def fn(batches):
-        import time as _time
-
         from pyspark import TaskContext
 
-        t0 = _time.perf_counter()
-        pid = TaskContext.get().partitionId()
-        acc = _Acc(spec)
-        uniqs, cnts = [], []
-        n_rows = 0
-        for batch in batches:
-            v = _flat_values(batch.column(col))[0]
-            n_rows += v.size
-            u, c = _dedup(v)
-            acc.add(u, fnv1a64(u), c)
-            uniqs.append(u)
-            cnts.append(c)
+        acc = _PartitionAcc((spec,))
+        # each batch's (uniques, counts), as the CMS update deduped them
+        seen = [acc.consume(batch)[col] for batch in batches]
         none = [np.empty(0, dtype=np.int64)]
-        uu, inv = np.unique(np.concatenate(uniqs or none), return_inverse=True)
+        uu, inv = np.unique(np.concatenate([u for u, _ in seen] or none),
+                            return_inverse=True)
         tot = np.zeros(len(uu), dtype=np.int64)
-        np.add.at(tot, inv, np.concatenate(cnts or none))
+        np.add.at(tot, inv, np.concatenate([c for _, c in seen] or none))
         order = np.lexsort((uu, -tot))[:m]  # ties -> smaller value
-        vals = uu[order].astype(np.int64)
-        pcnt = tot[order]
-        n = 1 + len(vals)
-        ms = (_time.perf_counter() - t0) * 1000.0
+        yield acc.to_record_batch(TaskContext.get().partitionId(), schema)
         yield pa.RecordBatch.from_arrays(
-            [pa.array([pid] * n, type=pa.int32()),
-             pa.array([spec.name] * n),
-             pa.array([acc.finish()] + [None] * len(vals), type=pa.binary()),
-             pa.array([n_rows] * n, type=pa.int64()),
-             pa.array([n_rows] * n, type=pa.int64()),
-             pa.array([ms] * n, type=pa.float64()),
-             pa.array(np.concatenate(([0], vals))),
-             pa.array(np.concatenate(([0], pcnt)))],
-            names=["partition_id", "kind", "state", "n_rows", "n_tokens",
-                   "build_ms", "value", "part_cnt"])
+            [pa.nulls(len(order), f.type) for f in _STATE_PA_SCHEMA]
+            + [pa.array(uu[order]), pa.array(tot[order])],
+            schema=schema)
 
     n_leaves = df.rdd.getNumPartitions()
     proj = df.select(F.col(col).cast("long").alias(col))
@@ -183,26 +170,24 @@ def heavy_hitters_sketch(df: DataFrame, col: str, k: int = 20,
         # the same collect; the <= n_leaves x m candidate aggregation and
         # the CMS probe are a vectorized driver-side epilogue (same
         # size-bounded driver finish as _finalize's treeAggregate tail)
-        rows = proj.mapInArrow(fn, unified).toArrow()
+        rows = proj.mapInArrow(fn, _ddl(schema)).toArrow()
         is_state = rows["state"].is_valid()
-        st = rows.filter(is_state).sort_by("partition_id")
+        st = rows.filter(is_state)
         if not st.num_rows:  # zero-partition / empty input: no states
-            return df.sparkSession.createDataFrame(
-                [], f"{col} long, est_count long, lower_bound long")
-        sk = _merge_states(st["state"].to_pylist())
+            return df.sparkSession.createDataFrame([], out)
+        sk = base.from_bytes(_fold_rows(st.to_pylist())["state"])
         cand = rows.filter(pc.invert(is_state))
         uniq, inv = np.unique(cand["value"].to_numpy(), return_inverse=True)
         lower = np.zeros(len(uniq), dtype=np.int64)
         np.add.at(lower, inv, cand["part_cnt"].to_numpy())
-        est = sk.estimate(fnv1a64(uniq), pre_hashed=True).astype(np.int64)
+        est = sk.estimate(uniq).astype(np.int64)
         order = np.lexsort((uniq, -est))[:k]
         top = [{col: int(uniq[i]), "est_count": int(est[i]),
                 "lower_bound": int(lower[i])} for i in order]
-        return df.sparkSession.createDataFrame(
-            top, f"{col} long, est_count long, lower_bound long")
+        return df.sparkSession.createDataFrame(top, out)
     # many-leaf path (cluster scale): tree-merge the states, aggregate
     # candidates distributed, probe with the broadcast CMS
-    parts = (proj.mapInArrow(fn, unified)
+    parts = (proj.mapInArrow(fn, _ddl(schema))
              .persist(StorageLevel.MEMORY_AND_DISK))
     try:
         states = parts.where(F.col("state").isNotNull()).drop(
@@ -216,9 +201,7 @@ def heavy_hitters_sketch(df: DataFrame, col: str, k: int = 20,
                   .select(col, "est_count", "lower_bound").collect())
     finally:
         parts.unpersist()
-    return df.sparkSession.createDataFrame(
-        [r.asDict() for r in top],
-        f"{col} long, est_count long, lower_bound long")
+    return df.sparkSession.createDataFrame([r.asDict() for r in top], out)
 
 
 def quantiles(df: DataFrame, col: str, qs: list[float],

@@ -80,35 +80,34 @@ def test_tdigest_merge_commutative_bytes(xs, ys):
 
 
 def test_quantile_states_canonical_fold_is_arrival_order_independent():
-    """The engine folds states sorted by partition_id (_finalize /
-    tree_merge.merge_group); any arrival order of the same partials must
-    therefore produce byte-identical KLL and t-digest finals."""
+    """The engine's one row fold (agg._fold_rows: tree_merge's group
+    function, _finalize's driver finish, heavy_hitters_sketch's fused
+    finish) puts state rows in partition order; any arrival order of the
+    same partials must therefore produce byte-identical KLL and t-digest
+    finals and the same summed counters."""
     import random
 
     from qsketch.kll import KLLSketch
+    from qsketch.spark.agg import _fold_rows
     from qsketch.tdigest import TDigest
-    from qsketch import base
 
     rng = np.random.default_rng(3)
-    partials = []
+    partials = {"kll:x": [], "tdigest:x": []}
     for pid in range(16):
         k = KLLSketch(64); k.update(rng.normal(size=2000))
         t = TDigest(100); t.update(rng.exponential(size=2000))
-        partials.append((pid, k.to_bytes(), t.to_bytes()))
+        for kind, sk in (("kll:x", k), ("tdigest:x", t)):
+            partials[kind].append({
+                "partition_id": pid, "kind": kind, "state": sk.to_bytes(),
+                "n_rows": 2000, "n_tokens": 0, "build_ms": 0.5})
 
-    def fold(rows):
-        rows = sorted(rows, key=lambda r: r[0])  # what the engine does
-        k = base.from_bytes(rows[0][1]); t = base.from_bytes(rows[0][2])
-        for _, kb, tb in rows[1:]:
-            k = k.merge(base.from_bytes(kb))
-            t = t.merge(base.from_bytes(tb))
-        return k.to_bytes(), t.to_bytes()
-
-    ref = fold(partials)
-    for seed in range(5):
-        shuffled = list(partials)
-        random.Random(seed).shuffle(shuffled)
-        assert fold(shuffled) == ref
+    for rows in partials.values():
+        ref = _fold_rows(rows)
+        assert ref["partition_id"] == 0 and ref["n_rows"] == 16 * 2000
+        for seed in range(5):
+            shuffled = list(rows)
+            random.Random(seed).shuffle(shuffled)
+            assert _fold_rows(shuffled) == ref
 
 
 @given(a=st.lists(st.integers(min_value=-2**63, max_value=2**63 - 1),

@@ -681,3 +681,70 @@ def test_ckpt_resume_rejects_changed_spec_params(spark, tiny_df, tmp_path):
     b = build_files(spark, p, narrow)
     assert (a.sketches["cms:tokens"].to_bytes()
             == b.sketches["cms:tokens"].to_bytes())
+
+
+def test_sketch_spec_rejects_unknown_kind_and_params():
+    """A misspelt param used to build a default-sized sketch silently
+    (``widht`` gave a 27,183-wide CMS); both errors now name the
+    allowed keys at construction."""
+    with pytest.raises(ValueError, match=r"widht.*'depth', 'seed', 'width'"):
+        SketchSpec("cms", "tokens", {"widht": 1024})
+    with pytest.raises(ValueError, match=r"'nope'.*'quotient'"):
+        SketchSpec("nope")
+    assert SketchSpec("cms", "tokens", {"width": 1024}).params == {"width": 1024}
+
+
+def test_unknown_kind_fails_before_checkpoint_pin(tiny_df, tmp_path):
+    """An unknown kind used to fail only inside a worker's accumulator,
+    after the run had pinned its checkpoint; it must fail first."""
+    import os
+
+    ck = str(tmp_path / "ck")
+    with pytest.raises(ValueError, match="unknown sketch kind"):
+        build(tiny_df, (SketchSpec("nope"),), ckpt_dir=ck, run_id="r")
+    assert not os.path.exists(os.path.join(ck, "r"))
+
+
+def test_cardinality_gives_each_kind_its_own_params(spark):
+    """``queries.cardinality`` passes hll only hll params and quotient
+    only quotient params; a param neither accepts raises."""
+    from qsketch.hll import HyperLogLog
+    from qsketch.spark.queries import cardinality
+
+    vals = np.arange(5000, dtype=np.int64) * 7
+    df = spark.createDataFrame([(int(v),) for v in vals], "t long")
+    got = {r["kind"]: r["estimate"] for r in
+           cardinality(df, "t", params={"p": 10, "q_bits": 16}).collect()}
+    hll = HyperLogLog(10)
+    hll.update(vals)
+    assert got == {"hll": float(hll.estimate()), "quotient": 5000.0}
+    with pytest.raises(ValueError, match=r"\['max_load', 'p', 'q_bits'\]"):
+        cardinality(df, "t", params={"widht": 16})
+    with pytest.raises(ValueError, match=r"\['q_bits'\]; allowed: \['p'\]"):
+        cardinality(df, "t", exact=False, params={"q_bits": 16})
+
+
+def test_heavy_hitters_sketch_many_leaf_branch_matches_fused(spark):
+    """``candidates_per_partition=1 << 21`` on 4 partitions is above the
+    fused branch's driver cap (n_leaves * m > 1 << 22), so the states
+    tree-merge and the candidates aggregate in Spark.  With m at least
+    the number of distinct values both branches see every value, so
+    their rows are equal and lower_bound is the exact count."""
+    import collections
+
+    from qsketch.spark.queries import heavy_hitters_sketch
+
+    rng = np.random.default_rng(5)
+    vals = (rng.zipf(1.3, 50_000) % 500).astype(np.int64)
+    df = spark.createDataFrame([(int(v),) for v in vals],
+                               "t long").repartition(4)
+    assert df.rdd.getNumPartitions() * (1 << 21) > 1 << 22
+    fused = heavy_hitters_sketch(df, "t", k=50,
+                                 candidates_per_partition=500).collect()
+    many = heavy_hitters_sketch(df, "t", k=50,
+                                candidates_per_partition=1 << 21).collect()
+    assert len(many) == 50
+    assert many == fused
+    truth = collections.Counter(vals.tolist())
+    for r in many:
+        assert r["lower_bound"] == truth[r["t"]] <= r["est_count"]

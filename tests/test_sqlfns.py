@@ -163,3 +163,16 @@ def test_sql_kmv_build_estimate_exact(spark):
     assert len(rows) == 3
     for r in rows:
         assert r["est"] == exact[r["g"]]
+
+
+def test_sql_build_rejects_bad_spec_at_registration(spark):
+    """An unknown kind or param used to register without error and fail
+    only when a query ran the UDF."""
+    import pytest
+
+    from qsketch.spark.sqlfns import register_sketch_build
+
+    with pytest.raises(ValueError, match="unknown sketch kind 'nope'"):
+        register_sketch_build(spark, "nope")
+    with pytest.raises(ValueError, match=r"unknown hll param\(s\) \['k'\]"):
+        register_sketch_build(spark, "hll", params={"k": 12})
