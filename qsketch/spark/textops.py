@@ -80,20 +80,37 @@ def _shingle_toks_expr(text_col: str):
 
 
 def _cap_buckets(df: DataFrame, keys: tuple[str, ...],
-                 max_bucket: int | None) -> DataFrame:
-    """Drop rows in over-sized buckets before a bucket self-join.
+                 max_bucket: int | None, rep_col: str | None = None
+                 ) -> tuple[DataFrame, DataFrame | None]:
+    """The one rule for buckets over ``max_bucket`` rows: (kept, stars).
 
-    Window count over the SAME hash-partitioning the self-join needs:
-    one shuffle total, and the two join sides stay identical subplans so
-    the exchange is reused, not recomputed.  No-op when max_bucket is
-    None."""
+    One window count over ``keys`` — the SAME hash-partitioning the
+    bucket self-join or group scorer needs, so one shuffle total and
+    both join sides reuse the exchange.  ``kept`` is the rows whose
+    bucket has at most ``max_bucket`` rows.  With ``rep_col`` set,
+    ``stars`` is the linear-cost rescue of each over-cap bucket:
+    (a, b) = (the bucket's min ``rep_col``, every other member), so a
+    flooded cluster stays connected through its representative (star
+    pairs carry no similarity guarantee; verify them).  The counted
+    frame is then persisted, since kept and stars both read it.
+    Without ``rep_col`` stars is None; ``max_bucket=None`` is a no-op.
+    :func:`oversized_buckets` audits the same buckets."""
     if max_bucket is None:
-        return df
+        return df, None
+    from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(*keys)
-    return (df.withColumn("__n", F.count("*").over(w))
-              .where(F.col("__n") <= max_bucket).drop("__n"))
+    counted = df.withColumn("__n", F.count("*").over(w))
+    if rep_col is None:
+        return counted.where(F.col("__n") <= max_bucket).drop("__n"), None
+    counted = (counted.withColumn("__rep", F.min(rep_col).over(w))
+               .persist(StorageLevel.MEMORY_AND_DISK))
+    stars = (counted.where((F.col("__n") > max_bucket)
+                           & (F.col(rep_col) != F.col("__rep")))
+             .select(F.col("__rep").alias("a"), F.col(rep_col).alias("b")))
+    return (counted.where(F.col("__n") <= max_bucket).drop("__n", "__rep"),
+            stars)
 
 
 def oversized_buckets(df: DataFrame, keys: tuple[str, ...],
@@ -816,37 +833,30 @@ def lsh_candidate_pairs(sig_df: DataFrame, id_col: str = "doc_id",
 
     ``max_bucket`` guards the self-join against quadratic hot buckets
     (boilerplate-heavy corpora put thousands of near-identical docs in
-    one (band, key) bucket): buckets larger than the cap are dropped
-    via a broadcast anti-join on the (few) oversized keys.  Pairs inside
-    a dropped bucket are still found through any of the other bands
-    unless they are near-identical across ALL bands — run exact dedup
-    first (dedupe_exact) to remove those, which is the standard pipeline
+    one (band, key) bucket): buckets larger than the cap are dropped by
+    :func:`_cap_buckets`, the one over-cap rule.  Pairs inside a dropped
+    bucket are still found through any of the other bands unless they
+    are near-identical across ALL bands — run exact dedup first
+    (dedupe_exact) to remove those, which is the standard pipeline
     order.  Capping is lossy, so it is OPT-IN (default None = unbounded
     recall); at web scale SET a cap (e.g. 500) and audit what it drops
     with :func:`oversized_buckets` over :func:`banded_signatures`.
     """
-    return _pairs_from_banded(banded_signatures(sig_df, id_col, bands, rows),
-                              id_col, max_bucket)
+    return _lsh_pairs(banded_signatures(sig_df, id_col, bands, rows),
+                      id_col, max_bucket, False)
 
 
-def _bucket_self_join(banded: DataFrame, id_col: str) -> DataFrame:
-    """Raw (a < b) pairs from a bucket self-join; callers dedupe."""
-    left = banded.alias("l")
-    right = banded.alias("r")
-    return (left.join(right, ["band", "band_key"])
-            .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-            .select(F.col(f"l.{id_col}").alias("a"),
-                    F.col(f"r.{id_col}").alias("b")))
-
-
-def _pairs_from_banded(banded: DataFrame, id_col: str,
-                       max_bucket: int | None) -> DataFrame:
-    """Capped bucket self-join over an already-banded frame (shared by
-    lsh_candidate_pairs and the rescue path, which must not band the
-    signatures twice)."""
-    return _bucket_self_join(
-        _cap_buckets(banded, ("band", "band_key"), max_bucket),
-        id_col).distinct()
+def _lsh_pairs(banded: DataFrame, id_col: str, max_bucket: int | None,
+               rescue: bool) -> DataFrame:
+    """Distinct (a < b) pairs of the (band, band_key) self-join over the
+    rows :func:`_cap_buckets` keeps, plus its star pairs if ``rescue``."""
+    kept, stars = _cap_buckets(banded, ("band", "band_key"), max_bucket,
+                               id_col if rescue else None)
+    pairs = (kept.alias("l").join(kept.alias("r"), ["band", "band_key"])
+             .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+             .select(F.col(f"l.{id_col}").alias("a"),
+                     F.col(f"r.{id_col}").alias("b")))
+    return (pairs if stars is None else pairs.union(stars)).distinct()
 
 
 def shingle_hash_sets(df: DataFrame, text_col: str = "text",
@@ -871,6 +881,8 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "text",
     corpus; the intersection is a JVM-side array_intersect of two
     sorted int64 hash arrays.  "Exact" modulo 64-bit shingle-hash
     collisions (P < n_shingles^2 / 2^64 per pair — negligible).
+    One row per (a, b): a pair met through duplicate-id rows keeps its
+    max jaccard, the rule the pair scorer applies to cosine.
     """
     ids = (pairs.select(F.explode(F.array("a", "b")).alias(id_col))
                 .distinct())
@@ -890,49 +902,7 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "text",
             .withColumn("jaccard", F.col("__ni")
                         / (F.col("__na") + F.col("__nb") - F.col("__ni")))
             .where(F.col("jaccard") >= threshold)
-            .select("a", "b", "jaccard"))
-
-
-def oversized_bucket_star_pairs(banded: DataFrame, id_col: str = "doc_id",
-                                max_bucket: int = 500) -> DataFrame:
-    """STAR candidate pairs (bucket-min id, member id) for every bucket
-    a ``max_bucket`` cap drops — the linear-cost rescue path for
-    flooded clusters.
-
-    A cluster of near-identical docs shares its band minima, so it
-    floods one (band, key) bucket per band and a capped run drops ALL
-    its pairs (measured in tools/drill_skew.py: the 10%-cluster's
-    49.6 M candidate pairs all sit in 32 oversized buckets).  Pairing
-    every member with its bucket's minimum id instead costs
-    O(sum of oversized bucket sizes) — linear, not quadratic — and
-    connects the cluster THROUGH the representative.  Feed the output
-    through the same exact verify as the capped candidates: co-bucketed
-    docs are only minhash-collision-similar, so the star pairs carry no
-    similarity guarantee until verified; members whose similarity to
-    the representative is below threshold stay out (still
-    capped-recall, but the cluster core is recovered)."""
-    counted = _count_buckets(banded, id_col)
-    return _star_pairs(counted, id_col, max_bucket).distinct()
-
-
-def _count_buckets(banded: DataFrame, id_col: str) -> DataFrame:
-    """banded + (__n, __rep) per (band, band_key) bucket in ONE window
-    pass — the single shuffle shared by the cap split and the star
-    rescue (the two semantics must never drift: both near_duplicates'
-    rescue branch and oversized_bucket_star_pairs route through here)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("band", "band_key")
-    return (banded.withColumn("__n", F.count("*").over(w))
-                  .withColumn("__rep", F.min(id_col).over(w)))
-
-
-def _star_pairs(counted: DataFrame, id_col: str,
-                max_bucket: int) -> DataFrame:
-    """(bucket-min rep, member) pairs for every bucket over the cap."""
-    return (counted.where((F.col("__n") > max_bucket)
-                          & (F.col(id_col) != F.col("__rep")))
-            .select(F.col("__rep").alias("a"), F.col(id_col).alias("b")))
+            .groupBy("a", "b").agg(F.max("jaccard").alias("jaccard")))
 
 
 def near_duplicates(df: DataFrame, text_col: str = "text",
@@ -951,40 +921,29 @@ def near_duplicates(df: DataFrame, text_col: str = "text",
     SIMILAR-but-not-identical docs floods every band (exact dedup does
     not remove those) — that would break this function's exact-match
     contract.  At web scale, SET max_bucket (e.g. 500) and accept
-    capped-recall semantics, or the degenerate cluster goes quadratic.
+    capped-recall semantics, or the degenerate cluster goes quadratic;
+    :func:`_cap_buckets` is the one rule that applies the cap.
 
-    ``rescue_oversized`` (needs ``max_bucket``) additionally pairs each
-    dropped bucket's members with the bucket's min-id representative
-    (:func:`oversized_bucket_star_pairs`) before the exact verify —
-    O(bucket size) extra verifies instead of the O(bucket^2) the cap
-    avoided, and every emitted pair still satisfies the Jaccard
-    threshold.  With a downstream connected-components grouping this
-    recovers a flooded near-identical cluster through its
-    representative."""
+    ``rescue_oversized`` (needs ``max_bucket``) additionally verifies
+    the star pairs :func:`_cap_buckets` draws through each dropped
+    bucket's min-id representative — O(bucket size) extra verifies
+    instead of the O(bucket^2) the cap avoided, and every emitted pair
+    still satisfies the Jaccard threshold.  With a downstream
+    connected-components grouping this recovers a flooded near-identical
+    cluster through its representative.  A pair met through duplicate
+    id rows is emitted once (see :func:`jaccard_verify`)."""
     from pyspark import StorageLevel
 
+    if rescue_oversized and max_bucket is None:
+        raise ValueError("rescue_oversized requires max_bucket")
     sigs = minhash_signatures(df, text_col, id_col, shingle_n, num_perm)
-    if rescue_oversized:
-        if max_bucket is None:
-            raise ValueError("rescue_oversized requires max_bucket")
-        # ONE window pass (_count_buckets) computes both the bucket
-        # size (for the cap split) and the representative (for the
-        # star pairs); persisted because the capped and rescued halves
-        # each consume it
-        counted = (_count_buckets(banded_signatures(sigs, id_col, bands,
-                                                    rows), id_col)
-                   .persist(StorageLevel.MEMORY_AND_DISK))
-        under = counted.where(F.col("__n") <= max_bucket) \
-                       .drop("__n", "__rep")
-        stars = _star_pairs(counted, id_col, max_bucket)
-        cands = _bucket_self_join(under, id_col).union(stars).distinct()
-    else:
-        cands = lsh_candidate_pairs(sigs, id_col, bands, rows, max_bucket)
     # the verify consumes candidates twice (id pruning + pair join);
     # persist the small pair set so LSH generation runs once.  Spark's
     # ContextCleaner unpersists it once the plan is garbage-collected,
     # so repeated calls don't accumulate cache.
-    cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
+    cands = _lsh_pairs(banded_signatures(sigs, id_col, bands, rows), id_col,
+                       max_bucket, rescue_oversized
+                       ).persist(StorageLevel.MEMORY_AND_DISK)
     return jaccard_verify(df, cands, text_col, id_col, shingle_n, threshold)
 
 
@@ -1280,9 +1239,10 @@ def simhash_pairs(sh_df: DataFrame, id_col: str = "doc_id",
     ``max_hamming`` leave Python, and a groupBy(a, b) collapses the
     per-slice repeats with min (hamming is the same integer in every
     bucket, so the collapse is exact).  Rows sharing an id never pair.
-    ``max_bucket`` drops degenerate buckets exactly like
-    lsh_candidate_pairs (run exact dedup first); it defaults to None =
-    unbounded recall (changed from a lossy default of 500 in round 3).
+    ``max_bucket`` drops degenerate buckets by :func:`_cap_buckets`,
+    the one over-cap rule lsh_candidate_pairs also uses (run exact dedup
+    first); it defaults to None = unbounded recall (changed from a lossy
+    default of 500 in round 3).
     """
     if n_slices < max_hamming + 1:
         raise ValueError("need n_slices >= max_hamming + 1 for full recall")
@@ -1301,7 +1261,7 @@ def simhash_pairs(sh_df: DataFrame, id_col: str = "doc_id",
                    .select(id_col, "simhash",
                            F.col("s.slice").alias("slice"),
                            F.col("s.slice_val").alias("slice_val")))
-    sliced = _cap_buckets(sliced, ("slice", "slice_val"), max_bucket)
+    sliced, _ = _cap_buckets(sliced, ("slice", "slice_val"), max_bucket)
     maxh = U64(max_hamming)
 
     def popcount64(x: np.ndarray) -> np.ndarray:
@@ -1343,8 +1303,8 @@ def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
     ``max_bucket`` defaults to None = unbounded recall (changed from a
     lossy default of 500 in round 3 — existing callers now get full
     recall and, on skewed buckets, quadratic per-bucket scoring).  At
-    web scale
-    set a cap and audit drops with :func:`oversized_buckets`.
+    web scale set a cap (applied by :func:`_cap_buckets`, the one
+    over-cap rule) and audit drops with :func:`oversized_buckets`.
 
     ``idf_weighted=True`` computes a bounded common-token idf table
     first (one word-count-shaped groupBy + <1 MB broadcast) and weights

@@ -665,6 +665,16 @@ def test_weighted_sample_respects_weights_and_determinism(spark):
     assert got2 == [3]
 
 
+def _flooded_cluster_docs(spark):
+    """Docs 0-99: one tight near-dup cluster (58 shared + 2 unique
+    tokens); docs 100-299: doc-namespaced tokens, no overlap."""
+    base = " ".join(f"base{i:03d}" for i in range(58))
+    rows = [(i, f"{base} uniq{i}a uniq{i}b") for i in range(100)]
+    rows += [(i, " ".join(f"w{i}_{j}" for j in range(40)))
+             for i in range(100, 300)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
 def test_rescue_oversized_recovers_flooded_cluster(spark):
     """A tight near-dup cluster floods every band's bucket; a capped run
     drops ALL its pairs (capped-recall semantics).  rescue_oversized
@@ -673,11 +683,7 @@ def test_rescue_oversized_recovers_flooded_cluster(spark):
     to one group again."""
     from qsketch.spark.textops import near_duplicate_groups, near_duplicates
 
-    base = " ".join(f"base{i:03d}" for i in range(58))
-    rows = [(i, f"{base} uniq{i}a uniq{i}b") for i in range(100)]
-    rows += [(i, " ".join(f"w{i}_{j}" for j in range(40)))
-             for i in range(100, 300)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = _flooded_cluster_docs(spark)
 
     capped = near_duplicate_groups(docs, max_bucket=16)
     n_capped = capped.select("group_id").distinct().count()
@@ -697,6 +703,30 @@ def test_rescue_oversized_recovers_flooded_cluster(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="requires max_bucket"):
         near_duplicates(docs, rescue_oversized=True)
+
+
+def test_cap_rescue_and_audit_agree(spark):
+    """The cap, the star rescue and the oversized_buckets audit read the
+    same buckets: one star pair per non-representative member of each
+    audited bucket, and the cap keeps exactly the rows outside them."""
+    from qsketch.spark.textops import (_cap_buckets, banded_signatures,
+                                       minhash_signatures, oversized_buckets)
+
+    keys = ("band", "band_key")
+    banded = banded_signatures(minhash_signatures(
+        _flooded_cluster_docs(spark)))
+    kept, stars = _cap_buckets(banded, keys, 16, "doc_id")
+    over = oversized_buckets(banded, keys, 16).collect()
+    assert over  # the cluster floods some buckets
+    assert stars.count() == sum(r["n_rows"] - 1 for r in over)
+    dropped = {(r["band"], r["band_key"]) for r in over}
+    outside = {tuple(r) for r in banded.collect()
+               if (r["band"], r["band_key"]) not in dropped}
+    kept_rows = [tuple(r) for r in kept.collect()]
+    assert len(kept_rows) == len(outside) and set(kept_rows) == outside
+    assert _cap_buckets(banded, keys, 16)[1] is None
+    same, none = _cap_buckets(banded, keys, None)
+    assert same is banded and none is None
 
 
 def test_connected_components_work_dir_cleanup(spark, tmp_path):
@@ -1486,6 +1516,39 @@ def test_pair_scorers_skip_duplicate_id_rows(spark):
                for r in embedding_near_duplicates(
                    emb, threshold=0.9, method=method).collect()]
         assert got == [(1, 2, 1.0)], method
+
+
+def test_near_duplicates_duplicate_ids_emit_pair_once(spark):
+    """A pair verified through duplicate-id rows is emitted once, capped
+    with the rescue or not (regression: jaccard_verify joined both id-2
+    shingle sets and emitted (1, 2, 1.0) twice)."""
+    from qsketch.spark.textops import near_duplicates
+
+    text = "shared tokens of one duplicated document body"
+    docs = spark.createDataFrame(
+        [(1, text), (2, text), (2, text),
+         (3, "wholly different words in a third unrelated doc")],
+        "doc_id long, text string").coalesce(1)
+    for kw in ({}, {"max_bucket": 1, "rescue_oversized": True}):
+        got = [tuple(r) for r in near_duplicates(docs, **kw).collect()]
+        assert got == [(1, 2, 1.0)], kw
+
+
+def test_simhash_pairs_bucket_cap(spark):
+    """max_bucket drops the (slice, value) buckets of a block sharing
+    one simhash, so the block yields no pairs, while a pair in buckets
+    under the cap survives; uncapped, the block yields every pair."""
+    from qsketch.spark.textops import simhash_pairs
+
+    block, h = 0x1111222233334444, 0x5555666677778888
+    sh = spark.createDataFrame(
+        [(i, block) for i in range(10)] + [(100, h), (101, h ^ 1)],
+        "doc_id long, simhash long")
+    capped = {tuple(r) for r in simhash_pairs(sh, max_bucket=5).collect()}
+    assert capped == {(100, 101, 1)}
+    uncapped = {tuple(r) for r in simhash_pairs(sh).collect()}
+    assert uncapped == {(i, j, 0) for i in range(10)
+                        for j in range(i + 1, 10)} | {(100, 101, 1)}
 
 
 def test_simhash_near_duplicates_string_ids(spark):
