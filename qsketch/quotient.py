@@ -34,6 +34,7 @@ no per-slot Python loop.
 from __future__ import annotations
 
 import struct
+import sys
 
 import numpy as np
 
@@ -46,6 +47,7 @@ SHIFT = np.uint64(4)  # is_shifted: slot's remainder is not at its home slot
 META = np.uint64(7)
 U64 = np.uint64
 _ONE = U64(1)
+_LOW_BYTE = 0 if sys.byteorder == "little" else 7  # of a native uint64
 
 
 class QuotientFilterFullError(RuntimeError):
@@ -139,25 +141,36 @@ def unpack_slots(slots: np.ndarray, q_bits: int, r_bits: int) -> np.ndarray:
     of :func:`pack_slots`).  Uses the canonical QF invariant that the
     k-th run start in circular cluster order corresponds to the k-th
     occupied home slot in circular order.
+
+    No sort and no cap-sized gather: the scan starts after an empty
+    anchor slot ``e``, which no cluster crosses, so the keys come out
+    ordered by quotient from ``e + 1`` round to ``e``; one block swap at
+    the first run whose quotient is ``<= e`` sorts them.  A layout that
+    :func:`pack_slots` cannot produce falls back to a sort.
     """
     cap = 1 << q_bits
-    in_use = (slots & META) != 0
-    n = int(in_use.sum())
+    meta = slots.view(np.uint8)[_LOW_BYTE::8] & np.uint8(META)
+    n = int(np.count_nonzero(meta))
     if n == 0:
         return np.empty(0, dtype=np.uint64)
     if n >= cap:
         raise ValueError("corrupt filter: no empty slot")
-    e = int(np.argmax(~in_use))
-    perm = (np.arange(cap, dtype=np.int64) + e + 1) & (cap - 1)
-    sl = slots[perm]
-    iu = in_use[perm]
-    run_start = iu & ((sl & CONT) == 0)
-    occ_quots = perm[(slots[perm] & OCC) != 0]  # home quotients, circular order
-    rid = np.cumsum(run_start) - 1
-    quots = occ_quots[rid[iu]].astype(np.uint64)
-    rems = sl[iu] >> U64(3)
-    keys = (quots << U64(r_bits)) | rems
-    keys.sort()
+    e = int(np.argmin(meta))  # the first empty slot
+    # rotate so the scan starts after e: two contiguous slices
+    sl = np.concatenate((slots[e + 1:], slots[:e + 1]))
+    m = np.concatenate((meta[e + 1:], meta[:e + 1]))
+    at = np.flatnonzero(m)  # in-use slots, rotated
+    mu = m.take(at)
+    occ = at[(mu & np.uint8(OCC)) != 0]  # home slots, rotated
+    run_id = np.cumsum((mu & np.uint8(CONT)) == 0) - 1
+    rot = occ[run_id]  # each key's home slot, rotated
+    quots = (rot + (e + 1)) & (cap - 1)
+    keys = (quots.astype(np.uint64) << U64(r_bits)) | (sl.take(at) >> U64(3))
+    # undo pack_slots' block swap: quotients <= e sort first
+    split = int(np.searchsorted(rot, cap - 1 - e))
+    keys = np.concatenate((keys[split:], keys[:split]))
+    if n > 1 and not bool(np.all(keys[1:] > keys[:-1])):
+        keys.sort()
     return keys
 
 
@@ -358,7 +371,7 @@ class QuotientFilter:
         q_bits, r_bits, auto, load_ppm = struct.unpack_from("<BBBxI", payload, 0)
         (n,) = struct.unpack_from("<Q", payload, 8)
         slots = np.frombuffer(payload, dtype=np.uint64, offset=16,
-                              count=1 << q_bits).copy()
+                              count=1 << q_bits)
         qf = cls(q_bits, r_bits, load_ppm / 1_000_000, bool(auto))
         qf._keys = unpack_slots(slots, q_bits, r_bits)
         if len(qf._keys) != n:

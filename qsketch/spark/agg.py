@@ -57,12 +57,19 @@ byte-identical quotient-filter results.
 Probe side: one broadcast and one per-worker decode cache serve the
 state UDF behind ``with_membership``/``with_frequency`` and the SQL
 probes, and its keyed form ``with_frequency_by`` (``{key: blob}``).
+Both are keyed by the state's content digest, not by the call: the
+driver reuses the live broadcast of an equal state in the same
+SparkContext, and a worker that already decoded that state neither
+reads the broadcast again nor decodes it again.  Each holds at most
+``_SKETCH_CACHE_MAX`` states, least recently used evicted first.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import threading
 import time
 import uuid
 import warnings
@@ -856,20 +863,38 @@ def build_grouped_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
 
 # ---------------- probe side ----------------------------------------------
 
-_SKETCH_CACHE: dict[str, object] = {}
-_SKETCH_CACHE_MAX = 16  # per-worker; evict oldest beyond this
+_SKETCH_CACHE: dict[str, object] = {}  # per worker: token -> decoded state
+_SKETCH_CACHE_MAX = 16  # entries per worker, and broadcasts per driver
+_BROADCASTS: dict[tuple, object] = {}  # driver: (SparkContext, token) -> Broadcast
+_BROADCASTS_LOCK = threading.Lock()  # driver threads may probe concurrently
 
 
-def _cached_sketch(token: str, blob: bytes):
-    sk = _SKETCH_CACHE.get(token)
-    if sk is None:
-        if len(_SKETCH_CACHE) >= _SKETCH_CACHE_MAX:
-            _SKETCH_CACHE.pop(next(iter(_SKETCH_CACHE)))
-        # a keyed {key: blob} broadcast gets ONE entry, which
-        # with_frequency_by fills with each key's state on first use
-        sk = {} if isinstance(blob, dict) else base.from_bytes(blob)
-        _SKETCH_CACHE[token] = sk
-    return sk
+def _lru(cache: dict, key, make):
+    """``cache[key]``, made by ``make()`` on a miss.  A hit moves the entry
+
+    to the end; a miss first evicts the least recently used entry once
+    the cache holds ``_SKETCH_CACHE_MAX``."""
+    val = cache.pop(key, None)
+    if val is None:
+        if len(cache) >= _SKETCH_CACHE_MAX:
+            cache.pop(next(iter(cache)))
+        val = make()
+    cache[key] = val
+    return val
+
+
+def _cached_sketch(token: str, bc):
+    """The decoded state of broadcast ``bc``, once per worker per token.
+
+    ``bc.value`` is read only on a miss: pyspark loads a worker-side
+    broadcast lazily, so a hit skips both the read and the decode.  A
+    keyed ``{key: blob}`` broadcast gets ONE entry, which
+    ``with_frequency_by`` fills with each key's state on first use."""
+    def decode():
+        state = bc.value
+        return {} if isinstance(state, dict) else base.from_bytes(state)
+
+    return _lru(_SKETCH_CACHE, token, decode)
 
 
 def _int64_ids(ids: pa.Array) -> np.ndarray:
@@ -896,24 +921,51 @@ def _keep_nulls(ids: pa.Array, out) -> pa.Array:
     return out
 
 
+def _digest(state) -> str:
+    """The content token of a probe state: the SHA-1 of its bytes, or for
+
+    a ``{key: blob}`` dict (prefixed ``k``) the SHA-1 of its sorted
+    per-key digests, so key order does not matter."""
+    if not isinstance(state, dict):
+        return hashlib.sha1(state).hexdigest()
+    items = []
+    for key, blob in state.items():
+        h = hashlib.sha1(repr(key).encode())  # repr() never holds a NUL
+        h.update(b"\0")
+        h.update(blob)
+        items.append(h.digest())
+    return "k" + hashlib.sha1(b"".join(sorted(items))).hexdigest()
+
+
 def _broadcast(spark: SparkSession, state):
-    """The one probe-state broadcast, plus its ``_cached_sketch`` token (a
-    uuid: CPython reuses freed addresses, so an address could hit an
-    earlier query's cache entry in a reused worker)."""
-    return spark.sparkContext.broadcast(state), uuid.uuid4().hex
+    """The one probe-state broadcast, plus its ``_cached_sketch`` token.
+
+    The token is the state's content digest, so equal states share one
+    broadcast per live SparkContext (at most ``_SKETCH_CACHE_MAX``
+    pinned on the driver) and one decode per worker.  Entries of a
+    stopped or replaced context are dropped before the lookup."""
+    sc = spark.sparkContext
+    token = _digest(state)
+    with _BROADCASTS_LOCK:
+        for key in [k for k in _BROADCASTS
+                    if k[0] is not sc or k[0]._jsc is None]:
+            del _BROADCASTS[key]
+        bc = _lru(_BROADCASTS, (sc, token),
+                  lambda: spark.sparkContext.broadcast(state))
+    return bc, token
 
 
 def _state_udf(spark: SparkSession, blob: bytes, out_type: str, kernel):
     """The one broadcast-state UDF behind every unkeyed probe surface.
 
-    Broadcasts ``blob`` once; the returned Arrow UDF deserializes it once
-    per worker (``_cached_sketch``) and runs ``kernel(sketch, int64
-    ndarray)`` once per Arrow batch.  NULL ids reach the kernel as 0 and
-    come back NULL."""
+    Broadcasts ``blob`` once per context and content (``_broadcast``);
+    the returned Arrow UDF deserializes it once per worker
+    (``_cached_sketch``) and runs ``kernel(sketch, int64 ndarray)`` once
+    per Arrow batch.  NULL ids reach the kernel as 0 and come back NULL."""
     bc, token = _broadcast(spark, blob)
 
     def probe(ids: pa.Array) -> pa.Array:
-        return _keep_nulls(ids, kernel(_cached_sketch(token, bc.value),
+        return _keep_nulls(ids, kernel(_cached_sketch(token, bc),
                                        _int64_ids(ids)))
 
     return F.arrow_udf(probe, out_type)
@@ -995,14 +1047,15 @@ def with_frequency_by(df: DataFrame, key_col: str, values_col: str,
     """Keyed ``with_frequency``: each row's id is probed in the count-min
     state of its key, ``states[key]`` (e.g. ``build_grouped``'s states).
 
-    The dict is broadcast once (driver-sized: at millions of keys, join
-    the states instead); a worker decodes a key's state on first use.
+    The dict is broadcast once per context and content (driver-sized: at
+    millions of keys, join the states instead); a worker decodes a key's
+    state on first use.
     NULL key or id gives NULL; a key missing from ``states`` raises."""
     _require_int_ids(df, values_col)
     bc, token = _broadcast(df.sparkSession, states)
 
     def probe(keys: pa.Array, ids: pa.Array) -> pa.Array:
-        sks = _cached_sketch(token, bc.value)
+        sks = _cached_sketch(token, bc)
         enc = keys.dictionary_encode()
         codes = enc.indices.fill_null(-1).to_numpy(zero_copy_only=False)
         order = np.argsort(codes)

@@ -10,7 +10,8 @@ Every function here is an Arrow UDF: integer ids arrive as Arrow arrays
 whose validity bitmap carries the NULLs, so no id is widened to float64
 and NULL in gives NULL out.  The probes are the same broadcast-state UDF
 as ``agg.with_membership``/``with_frequency`` (``agg._state_udf``): one
-broadcast per registration, the state deserialized once per worker.
+broadcast per SparkContext and state content, shared with every other
+probe of equal bytes, the state deserialized once per worker.
 """
 
 from __future__ import annotations

@@ -141,6 +141,68 @@ def test_pack_unpack_roundtrip(q, n, seed):
     assert np.array_equal(back, keys)
 
 
+def _sorting_unpack(slots, q_bits, r_bits):
+    """The sort-based decode ``unpack_slots`` replaced: full-array
+    gathers in circular order from the first empty slot, then a sort."""
+    cap = 1 << q_bits
+    in_use = (slots & META) != 0
+    n = int(in_use.sum())
+    if n == 0:
+        return np.empty(0, dtype=np.uint64)
+    if n >= cap:
+        raise ValueError("corrupt filter: no empty slot")
+    e = int(np.argmax(~in_use))
+    perm = (np.arange(cap, dtype=np.int64) + e + 1) & (cap - 1)
+    sl, iu = slots[perm], in_use[perm]
+    run_start = iu & ((sl & CONT) == 0)
+    occ_quots = perm[(sl & OCC) != 0]
+    rid = np.cumsum(run_start) - 1
+    keys = ((occ_quots[rid[iu]].astype(np.uint64) << np.uint64(r_bits))
+            | (sl[iu] >> np.uint64(3)))
+    keys.sort()
+    return keys
+
+
+def _decode_outcome(fn, slots, q, r):
+    try:
+        return fn(slots, q, r).tolist()
+    except Exception as exc:  # the same error type either way
+        return type(exc).__name__
+
+
+def test_unpack_matches_sorting_decode_on_random_layouts():
+    """600 random layouts (q 3..16, every other one with a cluster forced
+    across the wrap) decode to their keys, and each with 1-3 flipped
+    metadata bits decodes exactly as the sort-based decode does: the
+    same keys, or the same error."""
+    rng = np.random.default_rng(20261017)
+    for i in range(600):
+        q = int(rng.integers(3, 17))
+        r, cap = min(61, 64 - q), 1 << q
+        h = rng.integers(0, 2**64, int(rng.integers(0, cap)), dtype=np.uint64)
+        if i % 2:  # quotients cap-3 .. cap+4: a cluster across slot 0
+            low = (np.uint64(cap - 3) + (h & np.uint64(7))) & np.uint64(cap - 1)
+            h = (h & ~np.uint64(cap - 1)) | low
+        keys = np.unique(_keys_from_hashes(h, q, r))[: cap - 1]
+        slots = pack_slots(keys, q, r)
+        assert np.array_equal(unpack_slots(slots, q, r), keys)
+        bad = slots.copy()
+        at = rng.integers(0, cap, int(rng.integers(1, 4)))
+        bad[at] ^= np.uint64(1) << rng.integers(0, 3, len(at)).astype(np.uint64)
+        assert (_decode_outcome(unpack_slots, bad, q, r)
+                == _decode_outcome(_sorting_unpack, bad, q, r))
+
+
+def test_from_bytes_still_checks_header_count():
+    """A state whose slots decode to a different key count than its
+    header records is rejected."""
+    qf = QuotientFilter.build(np.arange(100), q_bits=8)
+    blob = bytearray(qf.to_bytes())
+    blob[24:32] = (99).to_bytes(8, "little")  # header key count
+    with pytest.raises(ValueError, match="corrupt"):
+        QuotientFilter.from_bytes(bytes(blob))
+
+
 def test_pack_handles_wraparound_cluster():
     """Keys whose quotients cluster at the top of the array must wrap
     cleanly past slot 0 (the circular-anchor path)."""

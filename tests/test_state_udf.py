@@ -6,6 +6,9 @@ a NULL next to an id above 2**53 neither rounds the id nor fails."""
 
 import functools
 import pathlib
+import sys
+import threading
+import types
 
 import numpy as np
 import pytest
@@ -20,6 +23,7 @@ from qsketch.hll import HyperLogLog
 from qsketch.kll import KLLSketch
 from qsketch.kmv import KMVSketch
 from qsketch.quotient import QuotientFilter
+from qsketch.spark import agg
 from qsketch.spark.agg import (SketchSpec, _state_cardinality, build,
                                with_frequency, with_frequency_by,
                                with_membership, with_membership_timed)
@@ -295,6 +299,166 @@ def test_with_frequency_by_rejects_missing_key_and_float_ids(spark):
     with pytest.raises(TypeError, match="probe column 't'"):
         with_frequency_by(df.withColumn("t", df.t.cast("double")), "k", "t",
                           states)
+
+
+class _CountingBroadcast:
+    """A stand-in broadcast whose ``.value`` counts its reads."""
+
+    def __init__(self, value):
+        self._value, self.reads = value, 0
+
+    @property
+    def value(self):
+        self.reads += 1
+        return self._value
+
+
+class _StubContext:
+    """A stand-in SparkContext: ``_jsc`` is None once stopped."""
+
+    def __init__(self):
+        self._jsc, self.made = object(), []
+
+    def broadcast(self, value):
+        self.made.append(_CountingBroadcast(value))
+        return self.made[-1]
+
+
+def _stub_session(sc):
+    return types.SimpleNamespace(sparkContext=sc)
+
+
+def _qf_blob(seed, q_bits=10, n=300):
+    vals = np.random.default_rng(seed).integers(0, 2**62, n)
+    return QuotientFilter.build(vals, q_bits=q_bits).to_bytes()
+
+
+def test_cached_sketch_reads_broadcast_once(monkeypatch):
+    """Repeated probes with one token read ``bc.value`` and decode once."""
+    monkeypatch.setattr(agg, "_SKETCH_CACHE", {})
+    bc = _CountingBroadcast(_qf_blob(1))
+    sks = [agg._cached_sketch("t", bc) for _ in range(5)]
+    assert bc.reads == 1 and all(sk is sks[0] for sk in sks)
+
+
+def test_state_tokens_follow_content():
+    """Equal bytes give equal tokens, one changed byte a new one; a keyed
+    token ignores key order, follows every blob and takes a None key."""
+    blob = _qf_blob(2)
+    assert agg._digest(blob) == agg._digest(bytes(bytearray(blob)))
+    flipped = blob[:-1] + bytes([blob[-1] ^ 1])
+    assert agg._digest(flipped) != agg._digest(blob)
+
+    states = {"a": _qf_blob(3), None: _qf_blob(4), 7: _qf_blob(5)}
+    token = agg._digest(states)
+    assert token == agg._digest(dict(reversed(list(states.items()))))
+    assert token != agg._digest(blob)
+    for key in states:
+        assert token != agg._digest({**states, key: flipped})
+    assert token != agg._digest({"a": states["a"], None: states[None],
+                                 "7": states[7]})
+
+
+def test_caches_keep_recently_used_state(monkeypatch):
+    """A state probed between 16 other states stays cached, on the
+    worker and on the driver: both evict the least recently used."""
+    monkeypatch.setattr(agg, "_SKETCH_CACHE", {})
+    monkeypatch.setattr(agg, "_BROADCASTS", {})
+    hot = _CountingBroadcast(_qf_blob(6))
+    agg._cached_sketch("hot", hot)
+    for i in range(agg._SKETCH_CACHE_MAX):
+        agg._cached_sketch(f"t{i}", _CountingBroadcast({}))
+        agg._cached_sketch("hot", hot)
+    assert "hot" in agg._SKETCH_CACHE and hot.reads == 1
+
+    sc = _StubContext()
+    session = _stub_session(sc)
+    first, _ = agg._broadcast(session, b"hot")
+    for i in range(agg._SKETCH_CACHE_MAX):
+        agg._broadcast(session, b"other %d" % i)
+        assert agg._broadcast(session, b"hot")[0] is first
+    assert len(agg._BROADCASTS) == agg._SKETCH_CACHE_MAX
+
+
+def test_broadcast_never_crosses_or_outlives_its_context(monkeypatch):
+    """A cached broadcast is served only to its own live context."""
+    monkeypatch.setattr(agg, "_BROADCASTS", {})
+    blob = _qf_blob(7)
+    a, b = _StubContext(), _StubContext()
+    bc, token = agg._broadcast(_stub_session(a), blob)
+    assert agg._broadcast(_stub_session(a), bytes(blob)) == (bc, token)
+    assert agg._broadcast(_stub_session(b), blob)[0] is b.made[0]
+    assert agg._broadcast(_stub_session(a), blob)[0] is a.made[1]
+    a._jsc = None  # stopped
+    assert agg._broadcast(_stub_session(a), blob)[0] is a.made[2]
+    assert len(a.made) == 3 and len(b.made) == 1
+
+
+def test_broadcast_table_under_concurrent_driver_threads(monkeypatch):
+    """Eight threads broadcasting 24 states through one context never
+    fail, always get a broadcast of their own state, and leave at most
+    ``_SKETCH_CACHE_MAX`` entries."""
+    monkeypatch.setattr(agg, "_BROADCASTS", {})
+    session = _stub_session(_StubContext())
+    blobs = [b"state %d" % i for i in range(24)]
+    errors = []
+
+    def work(seed):
+        rng = np.random.default_rng(seed)
+        try:
+            for i in rng.integers(0, len(blobs), 400):
+                bc, _ = agg._broadcast(session, blobs[i])
+                assert bc._value == blobs[i]
+        except Exception as exc:  # reported by the main thread below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(s,)) for s in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(agg._BROADCASTS) <= agg._SKETCH_CACHE_MAX
+
+
+def test_equal_states_share_one_broadcast(spark, monkeypatch):
+    """Two ``with_membership`` calls on equal bytes make one Broadcast;
+    two states of one size, probed back to back, each answer for
+    themselves (a token must never alias two states)."""
+    monkeypatch.setattr(agg, "_BROADCASTS", {})
+    sc = spark.sparkContext
+    made = []
+
+    def broadcast(value, _orig=sc.broadcast):
+        made.append(_orig(value))
+        return made[-1]
+
+    monkeypatch.setattr(sc, "broadcast", broadcast)
+    xs, ys = (np.random.default_rng(s).integers(0, 2**62, 300)
+              for s in (8, 9))
+    qa, qb = (QuotientFilter.build(v, q_bits=10) for v in (xs, ys))
+    blob_a, blob_b = qa.to_bytes(), qb.to_bytes()
+    assert len(blob_a) == len(blob_b) and blob_a != blob_b
+    vals = np.concatenate((xs[:50], ys[:50], np.arange(50)))
+    df = spark.createDataFrame([(int(v),) for v in vals], "t bigint")
+
+    def hits(blob):
+        return [r["is_member"] for r in with_membership(
+            df, "t", blob).orderBy("t").collect()]
+
+    order = np.sort(vals)
+    want_a, want_b = list(qa.contains(order)), list(qb.contains(order))
+    assert hits(blob_a) == want_a
+    assert hits(bytes(bytearray(blob_a))) == want_a
+    assert hits(blob_b) == want_b
+    assert hits(blob_a) == want_a
+    assert len(made) == 2
 
 
 @pytest.mark.parametrize("kind", ["quotient", "bloom", "hll", "cms", "kmv",
