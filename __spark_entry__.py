@@ -38,6 +38,7 @@ from qsketch.spark.queries import (
     token_ids,
     tokenize_text,
 )
+from qsketch.spark.textops import _word_rows, _words
 
 N_ABSENT_PROBES = 200
 
@@ -116,19 +117,23 @@ def q_token_counts_top50(spark, sf_dir):
             .orderBy(F.desc("cnt"), F.asc("token")).limit(50))
 
 
-def q_token_bigram_counts_top50(spark, sf_dir):
-    """Top-50 token bigrams — n-gram counting entirely JVM-side
-    (transform over an index sequence; no Python, no UDF)."""
-    d = _docs(spark, sf_dir)
-    w = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
+def _bigram_rows(d: DataFrame, *keep: str) -> DataFrame:
+    """(keep..., bigram): one row per adjacent word pair of d.text,
+    built JVM-side (transform over an index sequence; no Python, no
+    UDF)."""
     bigrams = F.expr(
         "transform(sequence(1, size(__w) - 1), "
         "i -> concat(element_at(__w, i), ' ', element_at(__w, i + 1)))")
-    return (d.select(w.alias("__w"))
+    return (d.select(*keep, _words(F.col("text")).alias("__w"))
             # docs with < 2 words have no bigrams; without this guard
             # sequence(1, 0) descends and element_at(_, 0) errors
             .where(F.size(F.col("__w")) >= 2)
-            .select(F.explode(bigrams).alias("bigram"))
+            .select(*keep, F.explode(bigrams).alias("bigram")))
+
+
+def q_token_bigram_counts_top50(spark, sf_dir):
+    """Top-50 token bigrams — n-gram counting entirely JVM-side."""
+    return (_bigram_rows(_docs(spark, sf_dir))
             .groupBy("bigram").agg(F.count("*").alias("cnt"))
             .orderBy(F.desc("cnt"), F.asc("bigram")).limit(50))
 
@@ -138,9 +143,7 @@ def q_top_tokens_per_source(spark, sf_dir):
     desc, token asc tie-break) — grouped aggregate + rank window."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
-    toks = (d.select("source", F.explode(F.split("text", " ")).alias("token"))
-             .where(F.col("token") != ""))
+    toks = _word_rows(_docs(spark, sf_dir), "text", "source")
     cnt = toks.groupBy("source", "token").agg(F.count("*").alias("cnt"))
     w = Window.partitionBy("source").orderBy(F.desc("cnt"), F.asc("token"))
     return (cnt.withColumn("rank", F.row_number().over(w))
@@ -157,9 +160,7 @@ def q_tfidf_top_terms(spark, sf_dir):
     last-ulp ambiguity)."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
-    toks = (d.select("source", F.explode(F.split("text", " ")).alias("token"))
-             .where(F.col("token") != ""))
+    toks = _word_rows(_docs(spark, sf_dir), "text", "source")
     tf = toks.groupBy("source", "token").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("token").agg(F.countDistinct("source").alias("df"))
     n_sources = toks.select("source").distinct().count()
@@ -180,9 +181,7 @@ def q_distinct_tokens_exact(spark, sf_dir):
 
 
 def q_source_token_stats(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    toks = (d.select("source", F.explode(F.split("text", " ")).alias("token"))
-             .where(F.col("token") != ""))
+    toks = _word_rows(_docs(spark, sf_dir), "text", "source")
     return toks.groupBy("source").agg(
         F.count("*").alias("n_tokens"),
         F.countDistinct("token").alias("n_distinct_tokens"))
@@ -217,9 +216,7 @@ def q_qf_cardinality_by_source(spark, sf_dir):
     distributed (grouped_cardinality), no collect in the query body."""
     from qsketch.spark.queries import grouped_cardinality
 
-    d = _docs(spark, sf_dir)
-    toks = (d.select("source", F.explode(F.split("text", " ")).alias("token"))
-             .where(F.col("token") != ""))
+    toks = _word_rows(_docs(spark, sf_dir), "text", "source")
     toks = token_ids(toks).select("source", "token_id")
     merged = build_grouped(toks, (SketchSpec("quotient", "token_id"),), "source")
     return (grouped_cardinality(merged, "group", "n_distinct_tokens")
@@ -239,9 +236,7 @@ def q_source_token_overlap(spark, sf_dir):
     relative error and a bounded 1 MB state per source."""
     from qsketch.spark.queries import grouped_set_relations
 
-    d = _docs(spark, sf_dir)
-    toks = (d.select("source", F.explode(F.split("text", " ")).alias("token"))
-             .where(F.col("token") != ""))
+    toks = _word_rows(_docs(spark, sf_dir), "text", "source")
     toks = token_ids(toks).select("source", "token_id")
     merged = build_grouped(
         toks, (SketchSpec("kmv", "token_id", {"k": 1 << 17}),), "source")
@@ -362,14 +357,7 @@ def _source_bigrams(spark, sf_dir):
     driver-scale domain large enough (~650-760 distinct per source) to
     SATURATE a small-k KMV, which the 31-token unigram vocabulary
     cannot."""
-    d = _docs(spark, sf_dir)
-    w = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
-    bigrams = F.expr(
-        "transform(sequence(1, size(__w) - 1), "
-        "i -> concat(element_at(__w, i), ' ', element_at(__w, i + 1)))")
-    return (d.select("source", w.alias("__w"))
-            .where(F.size(F.col("__w")) >= 2)
-            .select("source", F.explode(bigrams).alias("bigram")))
+    return _bigram_rows(_docs(spark, sf_dir), "source")
 
 
 def q_kmv_saturated_overlap(spark, sf_dir):
@@ -981,7 +969,7 @@ def q_build_lineage_totals(spark, sf_dir):
     from qsketch.spark.agg import build_partials
 
     d = _docs(spark, sf_dir).select(
-        F.transform(F.filter(F.split("text", " "), lambda t: t != ""),
+        F.transform(_words(F.col("text")),
                     lambda t: F.xxhash64(t)).alias("tokens"))
     partials = build_partials(d, (SketchSpec("quotient", "tokens"),))
     return partials.agg(
@@ -1047,9 +1035,7 @@ def q_cms_heavy_hitters_by_source(spark, sf_dir):
     switch the probe to a state join instead."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
-    toks = (d.select("source", F.explode(F.split("text", " ")).alias("token"))
-             .where(F.col("token") != ""))
+    toks = _word_rows(_docs(spark, sf_dir), "text", "source")
     toks = token_ids(toks)
     merged = build_grouped(toks.select("source", "token_id"),
                            (SketchSpec("cms", "token_id"),), "source")
@@ -1167,19 +1153,14 @@ def q_stream_rolling_sketch(spark, sf_dir):
     stream = (spark.readStream.schema(schema)
               .option("pathGlobFilter", "documents.parquet")
               .parquet(sf_dir))
-    words = F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), " "),
-                     lambda t: t != "")
-    ev = stream.select(
-        "source", F.transform(words, lambda t: F.xxhash64(t)).alias("tokens"))
+    ev = stream.select("source", F.transform(
+        _words(F.col("text")), lambda t: F.xxhash64(t)).alias("tokens"))
     out = rolling_sketch_by_key(ev, key_col="source", tokens_col="tokens",
                                 ttl_ms=3_600_000)
     batch = spark.read.parquet(path)
     n_sources = batch.select("source").distinct().count()
     res = run_stream_until_rows(out, "rolling_sketch", min_rows=n_sources)
-    exact = (batch
-             .select("source", F.explode(F.filter(
-                 F.split(F.coalesce(F.col("text"), F.lit("")), " "),
-                 lambda t: t != "")).alias("token"))
+    exact = (_word_rows(batch, "text", "source")
              .groupBy("source")
              .agg(F.countDistinct("token").alias("__true")))
     return (res.where(~F.col("expired"))

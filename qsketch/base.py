@@ -39,12 +39,23 @@ _REGISTRY: dict[int, type] = {}
 
 
 def register(kind: int):
+    """Class decorator: file ``cls`` under ``kind`` for the polymorphic
+    :func:`from_bytes`, and give it the typed ``cls.from_bytes``, which
+    raises ValueError on another kind's blob."""
     def deco(cls):
         cls.KIND = kind
         _REGISTRY[kind] = cls
+        cls.from_bytes = classmethod(_typed_from_bytes)
         return cls
 
     return deco
+
+
+def _typed_from_bytes(cls, data: bytes):
+    kind, version, payload = unframe(data)
+    if kind != cls.KIND:
+        raise ValueError(f"not a {cls.__name__} blob (kind {kind})")
+    return cls._from_payload(payload, version)
 
 
 @runtime_checkable

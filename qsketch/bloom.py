@@ -20,7 +20,7 @@ import struct
 
 import numpy as np
 
-from .base import KIND_BLOOM, frame, register, unframe
+from .base import KIND_BLOOM, frame, register
 from .hash import fnv1a64, splitmix64
 
 U64 = np.uint64
@@ -98,10 +98,3 @@ class BloomFilter:
         bf.words = np.frombuffer(payload, dtype=np.uint64, offset=20).copy()
         bf.n_added = n_added
         return bf
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "BloomFilter":
-        kind, version, payload = unframe(data)
-        if kind != KIND_BLOOM:
-            raise ValueError("not a bloom filter blob")
-        return cls._from_payload(payload, version)

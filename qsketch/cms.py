@@ -20,7 +20,7 @@ import struct
 
 import numpy as np
 
-from .base import KIND_CMS, frame, register, unframe
+from .base import KIND_CMS, frame, register
 from .hash import fnv1a64, splitmix64
 
 U64 = np.uint64
@@ -105,10 +105,3 @@ class CountMinSketch:
                                   count=width * depth).reshape(depth, width).copy()
         cms.total = total
         return cms
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "CountMinSketch":
-        kind, version, payload = unframe(data)
-        if kind != KIND_CMS:
-            raise ValueError("not a count-min blob")
-        return cls._from_payload(payload, version)

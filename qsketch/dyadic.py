@@ -33,7 +33,7 @@ import struct
 
 import numpy as np
 
-from .base import KIND_DYADIC, frame, register, unframe
+from .base import KIND_DYADIC, frame, register
 from .hash import splitmix64
 
 U64 = np.uint64
@@ -205,10 +205,3 @@ class DyadicCMQuantiles:
             sk.levels[l] = arr.reshape(t.shape)
             off += 8 * cnt
         return sk
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "DyadicCMQuantiles":
-        kind, version, payload = unframe(data)
-        if kind != KIND_DYADIC:
-            raise ValueError("not a dyadic blob")
-        return cls._from_payload(payload, version)

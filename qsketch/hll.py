@@ -19,7 +19,7 @@ import struct
 
 import numpy as np
 
-from .base import KIND_HLL, frame, register, unframe
+from .base import KIND_HLL, frame, register
 from .hash import fnv1a64, splitmix64
 
 U64 = np.uint64
@@ -122,10 +122,3 @@ class HyperLogLog:
         hll.registers = np.frombuffer(payload, dtype=np.uint8, offset=1,
                                       count=1 << p).copy()
         return hll
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "HyperLogLog":
-        kind, version, payload = unframe(data)
-        if kind != KIND_HLL:
-            raise ValueError("not an hll blob")
-        return cls._from_payload(payload, version)

@@ -30,7 +30,7 @@ import struct
 
 import numpy as np
 
-from .base import KIND_KLL, frame, register, unframe
+from .base import KIND_KLL, frame, register
 from .hash import fnv1a64
 
 
@@ -188,10 +188,3 @@ class KLLSketch:
                               count=cnt) + 0.0))
             off += 8 * cnt
         return sk
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "KLLSketch":
-        kind, version, payload = unframe(data)
-        if kind != KIND_KLL:
-            raise ValueError("not a kll blob")
-        return cls._from_payload(payload, version)

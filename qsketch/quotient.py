@@ -38,7 +38,7 @@ import sys
 
 import numpy as np
 
-from .base import KIND_QUOTIENT, frame, register, unframe
+from .base import KIND_QUOTIENT, frame, register
 from .hash import fnv1a64
 
 OCC = np.uint64(1)  # is_occupied: this *home* slot's quotient has elements
@@ -377,13 +377,6 @@ class QuotientFilter:
         if len(qf._keys) != n:
             raise ValueError("corrupt quotient filter state")
         return qf
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "QuotientFilter":
-        kind, version, payload = unframe(data)
-        if kind != KIND_QUOTIENT:
-            raise ValueError("not a quotient filter blob")
-        return cls._from_payload(payload, version)
 
     @classmethod
     def build(cls, values, q_bits: int | None = None, max_load: float = 0.9,

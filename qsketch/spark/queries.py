@@ -30,6 +30,7 @@ from .. import base
 from .agg import (_KINDS, _STATE_PA_SCHEMA, SketchSpec, _ddl, _finalize,
                   _fold_rows, _PartitionAcc, _state_cardinality, build,
                   build_grouped, with_frequency, with_membership)
+from .textops import _word_rows
 
 
 def tokenize_text(df: DataFrame, text_col: str = "text",
@@ -39,8 +40,7 @@ def tokenize_text(df: DataFrame, text_col: str = "text",
     Kept deliberately SQL-parity-simple (single-space split, drop empty)
     so DuckDB oracles can reproduce it exactly.
     """
-    return (df.select(F.explode(F.split(F.col(text_col), " ")).alias(token_col))
-              .where(F.col(token_col) != ""))
+    return _word_rows(df, text_col, token_col=token_col)
 
 
 def token_ids(df: DataFrame, token_col: str = "token",

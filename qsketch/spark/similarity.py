@@ -115,16 +115,43 @@ def _topk(scored: DataFrame, k: int, query_id_col: str,
 
 
 def _probe_cells(qrows, centroids: np.ndarray, vec_col: str,
-                 query_id_col: str, n_probe: int) -> list[tuple[int, int]]:
+                 query_id_col: str, n_probe: int) -> list[tuple]:
     """(query_id, cell) pairs for each query's n_probe nearest centroids;
-    empty queries -> empty list (no numpy axis errors)."""
+    query ids keep their own type; empty queries -> empty list (no
+    numpy axis errors)."""
     if not qrows:
         return []
     qv = np.asarray([r[vec_col] for r in qrows], dtype=np.float64)
     qn = qv / np.maximum(np.linalg.norm(qv, axis=1, keepdims=True), 1e-12)
     cells = np.argsort(-(qn @ centroids.T), axis=1)[:, :n_probe]
-    return [(int(r[query_id_col]), int(c))
+    return [(r[query_id_col], int(c))
             for r, cc in zip(qrows, cells) for c in cc]
+
+
+def _ivf_topk(cells: DataFrame, corpus: DataFrame | None,
+              queries: DataFrame, centroids: np.ndarray, k: int,
+              n_probe: int, id_col: str, vec_col: str,
+              query_id_col: str) -> DataFrame:
+    """The IVF query: probe each query's ``n_probe`` nearest cells, join
+    them to the (cell, id) rows of ``cells``, re-rank the candidates by
+    exact cosine against ``corpus`` and keep the top k.
+
+    With ``corpus=None``, ``cells`` is a persisted index that also holds
+    the vectors: it is cut to the probed cells (the filter prunes cell
+    partitions at the scan) and re-ranks against itself."""
+    pairs = _probe_cells(queries.collect(), centroids, vec_col,
+                         query_id_col, n_probe)
+    if corpus is None:
+        wanted = sorted({c for _, c in pairs})
+        cells = cells.where(F.col("cell").isin(wanted or [-1]))
+        corpus = cells.drop("cell")
+    q_t = queries.schema[query_id_col].dataType.simpleString()
+    probes = cells.sparkSession.createDataFrame(
+        pairs, f"{query_id_col} {q_t}, cell int")
+    cand = (cells.join(F.broadcast(probes), "cell")
+                 .select(query_id_col, id_col).distinct())
+    scored = _rerank(cand, corpus, queries, id_col, vec_col, query_id_col)
+    return _topk(scored, k, query_id_col, id_col)
 
 
 def _rerank(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
@@ -338,7 +365,10 @@ def ivf_assign(df: DataFrame, centroids: np.ndarray,
             yield pa.RecordBatch.from_arrays(
                 [batch.column(id_col), pa.array(cells)], names=[id_col, "cell"])
 
-    return df.select(id_col, vec_col).mapInArrow(fn, f"{id_col} long, cell int")
+    # ids pass through with their own type, as in srp_bucket_keys
+    id_t = df.schema[id_col].dataType.simpleString()
+    return df.select(id_col, vec_col).mapInArrow(
+        fn, f"{id_col} {id_t}, cell int")
 
 
 def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, dim: int,
@@ -355,15 +385,9 @@ def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, dim: int,
     if centroids is None:
         centroids = train_ivf_centroids(corpus, dim, n_cells,
                                         id_col=id_col, vec_col=vec_col)
-    ck = ivf_assign(corpus, centroids, id_col, vec_col)
-    pairs = _probe_cells(queries.collect(), centroids, vec_col,
-                         query_id_col, n_probe)
-    spark = corpus.sparkSession
-    probes = spark.createDataFrame(pairs, f"{query_id_col} long, cell int")
-    cand = (ck.join(F.broadcast(probes), "cell")
-              .select(query_id_col, id_col).distinct())
-    scored = _rerank(cand, corpus, queries, id_col, vec_col, query_id_col)
-    return _topk(scored, k, query_id_col, id_col)
+    return _ivf_topk(ivf_assign(corpus, centroids, id_col, vec_col), corpus,
+                     queries, centroids, k, n_probe, id_col, vec_col,
+                     query_id_col)
 
 
 def embedding_near_duplicates(corpus: DataFrame, threshold: float = 0.95,
@@ -463,17 +487,9 @@ class IVFIndex:
         """Exact cosine over the n_probe nearest cells per query; the
 
         cell IN (...) filter prunes partitions at the scan."""
-        pairs = _probe_cells(queries.collect(), self.centroids,
-                             self.vec_col, query_id_col, n_probe)
-        wanted = sorted({c for _, c in pairs})
-        probes = spark.createDataFrame(pairs, f"{query_id_col} long, cell int")
-        corpus = (spark.read.parquet(f"{self.path}/cells")
-                  .where(F.col("cell").isin(wanted or [-1])))
-        cand = (corpus.join(F.broadcast(probes), "cell")
-                      .select(query_id_col, self.id_col).distinct())
-        scored = _rerank(cand, corpus.drop("cell"), queries,
-                         self.id_col, self.vec_col, query_id_col)
-        return _topk(scored, k, query_id_col, self.id_col)
+        return _ivf_topk(spark.read.parquet(f"{self.path}/cells"), None,
+                         queries, self.centroids, k, n_probe, self.id_col,
+                         self.vec_col, query_id_col)
 
 
 def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, dim: int,

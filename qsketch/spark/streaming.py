@@ -392,6 +392,8 @@ def windowed_token_rate_batch_equiv(spark, sf_dir: str,
     """
     from pyspark.sql import functions as F
 
+    from .textops import _words
+
     path = f"{sf_dir}/documents.parquet"
     schema = spark.read.parquet(path).schema
     # the streaming file source wants a directory: point it at the sf
@@ -401,10 +403,8 @@ def windowed_token_rate_batch_equiv(spark, sf_dir: str,
               .parquet(sf_dir))
     ev = stream.select(
         F.timestamp_seconds(F.col("doc_id") * 60).alias("ts"),
-        # coalesce: size(split(NULL)) is -1 under the legacy sizeOfNull
-        # default and would corrupt the token sum for null-text rows
-        F.size(F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), " "),
-                        lambda t: t != "")).alias("n_tok"))
+        # NULL text counts zero words, not a NULL token count
+        F.size(_words(F.coalesce(F.col("text"), F.lit("")))).alias("n_tok"))
     rate = windowed_token_rate(ev, window=window, watermark="2 hours")
     out = run_stream_to_memory(rate, "windowed_token_rate")
     return out.select(

@@ -21,6 +21,17 @@ Scale notes (100 TB):
   * banding parameters choose recall: P(pair at sim s survives) =
     1-(1-s^r)^b; defaults (b=32, r=4) give miss prob < 1e-7 at s=0.8,
     which is what lets the LSH path match an exact-Jaccard oracle.
+
+Two rules are the DuckDB oracles' contract and live in one place each.
+A WORD is a non-empty token of a single-space split (:func:`_words`,
+:func:`_word_rows`): double spaces and leading/trailing spaces add no
+word, and NULL text gives a NULL word array (no word rows), so a caller
+that must count zero words for NULL text coalesces it to '' itself.  A
+seeded DRAW is md5(id || '#' || salt...) over the id's string form
+(:func:`_seeded_md5`), and a fraction's share of that draw is an 8-hex
+md5-prefix bound (:func:`_hex_bound`).  The shingle passes keep their
+own rule (:func:`_shingle_toks_expr`), since interior empty tokens are
+shingle positions there.
 """
 
 from __future__ import annotations
@@ -31,7 +42,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..hash import fnv1a64, fnv1a64_buf, fnv1a64_str_array, splitmix64
@@ -77,6 +88,41 @@ def _shingle_toks_expr(text_col: str):
     t = F.coalesce(F.col(text_col), F.lit(""))
     return F.when(t == "", F.expr("CAST(array() AS array<string>)")) \
             .otherwise(F.split(t, " "))
+
+
+def _words(text: Column) -> Column:
+    """The word array of ``text``: its single-space split without the
+    empty tokens.  NULL text stays a NULL array."""
+    return F.filter(F.split(text, " "), lambda t: t != "")
+
+
+def _word_rows(df: DataFrame, text_col: str, *keep: str,
+               token_col: str = "token") -> DataFrame:
+    """(``keep``..., ``token_col``): one row per word of ``text_col`` —
+    the :func:`_words` rule as an explode + filter, so the plan is a
+    Generate and a Filter with no array kept per row."""
+    return (df.select(*keep, F.explode(F.split(F.col(text_col), " "))
+                      .alias(token_col))
+              .where(F.col(token_col) != ""))
+
+
+def _seeded_md5(id_col: str, *salt) -> Column:
+    """md5(id || '#' || salt...): the deterministic per-id draw behind
+    every shuffle, split and sample — uniform over ids and identical
+    across runs, partitionings and SQL engines."""
+    return F.md5(F.concat_ws("#", F.col(id_col).cast("string"),
+                             *[F.lit(s) for s in salt]))
+
+
+def _hex_bound(fraction: float) -> str:
+    """The EXCLUSIVE 8-hex md5-prefix bound below which a ``fraction``
+    share of :func:`_seeded_md5` draws falls.  ``fraction >= 1`` gives
+    the 'g' sentinel, which sorts above every hex digit: format(16**8,
+    "08x") would be NINE chars ('100000000') and undercut most md5
+    prefixes in the 8-char string compare."""
+    if fraction >= 1.0:
+        return "g"
+    return format(max(int(fraction * 16**8), 0), "08x")
 
 
 def _cap_buckets(df: DataFrame, keys: tuple[str, ...],
@@ -332,14 +378,16 @@ def contamination_check(corpus: DataFrame, benchmark: DataFrame,
     n-grams around 13; the short driver-scale docs use n=3).  Returns
     (id_col, n_shingles, n_matched, contamination) for corpus docs
     with at least one matched shingle, where contamination =
-    n_matched / n_shingles over the doc's DISTINCT shingles.
+    n_matched / n_shingles over the doc's DISTINCT shingles.  Rows
+    sharing an id count each matched shingle once, so contamination
+    stays <= 1 when an id repeats with the same text.
 
     100-TB shape: the benchmark side is tiny by definition, so its
     distinct shingle set BROADCASTS (8 bytes per shingle for any real
     eval suite) and the corpus side is ONE scan whose exploded
     shingles meet the broadcast in a hash join — the only corpus
-    shuffle is the per-doc count aggregation, which is map-side
-    combinable and carries matched docs only.  Both sides are the
+    shuffle is the per-doc distinct count, which is map-side
+    combinable and carries matched rows only.  Both sides are the
     :func:`shingle_hash_sets` reduction of the :func:`_gram_pass`
     kernel (per-doc dedup happens in-batch, never a shuffle); the
     benchmark side carries no id, so it needs only ``text_col``, and
@@ -356,7 +404,7 @@ def contamination_check(corpus: DataFrame, benchmark: DataFrame,
              .select(F.explode("shs").alias("__sh")).distinct())
     return (cor.join(F.broadcast(bench), "__sh")
                .groupBy(id_col, "n_shingles")
-               .agg(F.count("*").alias("n_matched"))
+               .agg(F.countDistinct("__sh").alias("n_matched"))
                .withColumn("contamination",
                            F.round(F.col("n_matched")
                                    / F.col("n_shingles"), 6)))
@@ -488,9 +536,8 @@ def epoch_shuffle(df: DataFrame, epoch: int = 0,
     exchange a shuffle intrinsically requires."""
     from pyspark.sql.types import LongType, StructField, StructType
 
-    key = F.md5(F.concat_ws("#", F.col(id_col).cast("string"),
-                            F.lit(str(int(epoch))), F.lit(seed)))
-    keyed = df.withColumn("__key", key)
+    keyed = df.withColumn("__key",
+                          _seeded_md5(id_col, str(int(epoch)), seed))
 
     def emit(batch, starts):
         return batch.append_column(pa.field(pos_col, pa.int64()),
@@ -888,7 +935,7 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "text",
                 .distinct())
     docs = (df.join(ids, id_col, "semi")
               # guard: docs shorter than one shingle have no shingle set
-              .where(F.size(F.split(F.col(text_col), " ")) >= shingle_n))
+              .where(F.size(_shingle_toks_expr(text_col)) >= shingle_n))
     sets = shingle_hash_sets(docs, text_col, id_col, shingle_n)
     sa = sets.select(F.col(id_col).alias("a"), F.col("shs").alias("__sha"),
                      F.col("n").alias("__na"))
@@ -1153,9 +1200,8 @@ def token_idf_weights(df: DataFrame, text_col: str = "text",
     shape is one token-level groupBy (the same shuffle as a word
     count) and a <1 MB driver collect."""
     n_docs = df.count()
-    toks = (df.select(F.explode(F.array_distinct(F.filter(
-                F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
-                lambda t: t != ""))).alias("token")))
+    toks = df.select(
+        F.explode(F.array_distinct(_words(F.col(text_col)))).alias("token"))
     top = (toks.groupBy("token").agg(F.count("*").alias("df"))
            .orderBy(F.desc("df"), F.asc("token")).limit(max_tokens)
            .collect())
@@ -1350,9 +1396,7 @@ def language_id(df: DataFrame, text_col: str = "text",
     JVM-side (arrays_overlap-style set intersection in Catalyst, no
     Python).  'und' ties break lexicographically; docs with zero hits in
     every profile get lang='und', confidence 0.0."""
-    toks = F.filter(F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                            " "),
-                    lambda t: t != "")
+    toks = _words(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     n_tok = F.greatest(F.size(toks), F.lit(1))
     scores = []
     for lang, words in sorted(_LANG_PROFILES.items()):
@@ -1372,7 +1416,7 @@ def text_quality(df: DataFrame, text_col: str = "text",
     """Deterministic quality features, all JVM-side (whole-stage codegen):
 
     char/token counts, mean word length, stopword ratio, alpha ratio."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = _words(F.col(text_col))
     stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
     n_tok = F.size(toks)
     return df.select(
@@ -1393,7 +1437,7 @@ def token_count_bpe_ish(df: DataFrame, text_col: str = "text",
     """Token counting two ways: whitespace words and a BPE-ish regex
 
     (word pieces + digits + punctuation runs), both JVM-side."""
-    words = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    words = _words(F.col(text_col))
     pieces = F.expr(
         f"regexp_count({text_col}, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]+')")
     return df.select(id_col,
@@ -1478,10 +1522,8 @@ def curate_corpus(df: DataFrame, text_col: str = "text",
     downstream consumers."""
     from pyspark import StorageLevel
 
-    toks = F.filter(F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
-                    lambda t: t != "")
-    base = df.select(id_col, group_col, text_col,
-                     F.size(toks).alias("__ntok"))
+    n_tok = F.size(_words(F.coalesce(F.col(text_col), F.lit(""))))
+    base = df.select(id_col, group_col, text_col, n_tok.alias("__ntok"))
     qual = base.where(F.col("__ntok") >= min_tokens)
     reps = (qual.groupBy(F.md5(F.col(text_col)).alias("__dig"))
                 .agg(F.min(id_col).alias(id_col)).drop("__dig"))
@@ -1533,13 +1575,9 @@ def split_boundaries(fractions: dict[str, float]) -> list[tuple[str, str]]:
     out, cum = [], 0.0
     for name in names[:-1]:
         cum += fractions[name]
-        bound = max(int(cum * 16**8), 0)
-        # clamp to the sentinel: format(16**8, "08x") is NINE hex chars
-        # ('100000000'), which breaks the 8-char lexicographic compare
-        # (every prefix not starting '0' would sort ABOVE it and fall
-        # through to later splits) — reachable when a leading fraction
-        # is 1.0 or float accumulation rounds cum up to 1.0
-        out.append((name, "g" if bound >= 16**8 else format(bound, "08x")))
+        # a leading fraction of 1.0, or float accumulation rounding cum
+        # up to 1.0, reaches the sentinel
+        out.append((name, _hex_bound(cum)))
     out.append((names[-1], "g"))
     return out
 
@@ -1561,9 +1599,7 @@ def stratified_split(df: DataFrame, fractions: dict[str, float],
     rand()-based splits cannot give).  Dict insertion order fixes the
     interval layout; changing ``seed`` redraws the whole assignment."""
     bounds = split_boundaries(fractions)
-    key = F.substring(
-        F.md5(F.concat_ws("#", F.col(id_col).cast("string"), F.lit(seed))),
-        1, 8)
+    key = F.substring(_seeded_md5(id_col, seed), 1, 8)
     expr = None
     for name, thr in bounds[:-1]:
         cond = key < F.lit(thr)
@@ -1624,11 +1660,8 @@ def token_frequency_histogram(df: DataFrame, text_col: str = "text",
     the same shuffle `repeated_ngrams` pays — then a ≤64-key second
     aggregation that collapses map-side to nothing."""
     if shingle_n == 1:
-        toks = (df.select(F.explode(
-                    F.split(F.coalesce(F.col(text_col), F.lit("")), " "))
-                    .alias("token"))
-                  .where(F.col("token") != ""))
-        counts = toks.groupBy("token").agg(F.count("*").alias("c"))
+        counts = (_word_rows(df, text_col)
+                  .groupBy("token").agg(F.count("*").alias("c")))
     else:
         # no string in the output: count by 8-byte gram fingerprint
         # (one vectorized Arrow pass — see _window_gram_hashes; an
@@ -1665,11 +1698,7 @@ def token_rarity_scores(df: DataFrame, text_col: str = "text",
     broadcasts the vocabulary when it fits, else this is one hash
     shuffle by token — then one per-doc aggregation.  No floats cross
     an engine boundary except the final ROUND(mean, 6)."""
-    toks = (df.select(F.col(id_col),
-                      F.explode(F.split(F.coalesce(F.col(text_col),
-                                                   F.lit("")), " "))
-                       .alias("token"))
-              .where(F.col("token") != ""))
+    toks = _word_rows(df, text_col, id_col)
     vocab = (toks.groupBy("token")
                  .agg(F.floor(F.log2(F.count("*")))
                        .cast("long").alias("bucket")))
@@ -1719,11 +1748,8 @@ def vocabulary_growth(df: DataFrame, n_buckets: int = 10,
     if n_docs == 0:
         raise ValueError("vocabulary_growth needs a non-empty corpus")
     if shingle_n == 1:
-        toks = (ordered.select("pos", F.explode(
-                    F.split(F.coalesce(F.col(text_col), F.lit("")), " "))
-                    .alias("token"))
-                       .where(F.col("token") != ""))
-        first = toks.groupBy("token").agg(F.min("pos").alias("first_pos"))
+        first = (_word_rows(ordered, text_col, "pos")
+                 .groupBy("token").agg(F.min("pos").alias("first_pos")))
     else:
         # no gram string in the output: min-pos by 8-byte fingerprint
         # (one vectorized Arrow pass — see _window_gram_hashes)
@@ -1770,12 +1796,8 @@ def source_token_divergence(df: DataFrame, text_col: str = "text",
     products — exact in int64 up to ~10^18; past that (≳10^9-token
     groups) switch the sum to decimal(38,0) or accept double rounding.
     """
-    toks = (df.select(group_col,
-                      F.explode(F.split(F.coalesce(F.col(text_col),
-                                                   F.lit("")),
-                                        " ")).alias("token"))
-              .where(F.col("token") != ""))
-    counts = toks.groupBy(group_col, "token").agg(F.count("*").alias("c"))
+    counts = (_word_rows(df, text_col, group_col)
+              .groupBy(group_col, "token").agg(F.count("*").alias("c")))
     totals = counts.groupBy(group_col).agg(F.sum("c").alias("n"))
     ca = counts.select(F.col(group_col).alias("a"), "token",
                        F.col("c").alias("ca"))
@@ -1822,9 +1844,8 @@ def deterministic_sample_per_group(df: DataFrame, group_col: str,
     """
     from pyspark.sql.window import Window
 
-    key = F.md5(F.concat_ws("#", F.col(id_col).cast("string"),
-                            F.lit(seed)))
-    w = Window.partitionBy(group_col).orderBy(key, F.col(id_col))
+    w = Window.partitionBy(group_col).orderBy(_seeded_md5(id_col, seed),
+                                              F.col(id_col))
     return (df.withColumn("sample_rank", F.row_number().over(w))
               .where(F.col("sample_rank") <= n))
 
@@ -1851,9 +1872,7 @@ def weighted_sample_per_group(df: DataFrame, weight_col: str,
     """
     from pyspark.sql.window import Window
 
-    u = ((F.conv(F.substring(
-            F.md5(F.concat_ws("#", F.col(id_col).cast("string"),
-                              F.lit(seed))), 1, 12), 16, 10)
+    u = ((F.conv(F.substring(_seeded_md5(id_col, seed), 1, 12), 16, 10)
           .cast("double") + F.lit(1.0)) / F.lit(float(1 << 48)))
     pr = F.round(F.pow(u, F.lit(1.0) / F.col(weight_col).cast("double")), 12)
     w = Window.partitionBy(group_col).orderBy(F.desc("__priority"),
@@ -1901,9 +1920,8 @@ def budget_sample_sources(df: DataFrame, budgets: dict[str, int],
     dim = spark.createDataFrame(
         [(s, int(b)) for s, b in budgets.items()],
         f"{source_col} string, __budget long")
-    key = F.md5(F.concat_ws("#", F.col(id_col).cast("string"),
-                            F.lit(seed)))
-    w = (Window.partitionBy(source_col).orderBy(key, F.col(id_col))
+    w = (Window.partitionBy(source_col)
+               .orderBy(_seeded_md5(id_col, seed), F.col(id_col))
                .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     how = "inner" if default_budget is None else "left"
     bud = (F.col("__budget") if default_budget is None
@@ -1935,21 +1953,11 @@ def subsample_sources(df: DataFrame, fractions: dict[str, float],
     per-source counts are not guaranteed (it is a per-row Bernoulli
     draw), but the draw is a pure function of (id, seed).
     """
-    def thr(f: float) -> str:
-        # 'g' sorts above every hex digit, so fraction >= 1 keeps all;
-        # a numeric 16^8 threshold would render as 9 chars starting '1'
-        # and lexicographically UNDERCUT most md5 prefixes
-        if f >= 1.0:
-            return "g"
-        return format(max(int(f * 16**8), 0), "08x")
-
-    spark = df.sparkSession
-    rows = [(s, thr(f)) for s, f in fractions.items()]
-    dim = spark.createDataFrame(rows, f"{source_col} string, __thr string")
-    default_thr = thr(default_fraction)
-    key = F.md5(F.concat_ws("#", F.col(id_col).cast("string"),
-                            F.lit(seed)))
+    rows = [(s, _hex_bound(f)) for s, f in fractions.items()]
+    dim = df.sparkSession.createDataFrame(
+        rows, f"{source_col} string, __thr string")
     return (df.join(F.broadcast(dim), source_col, "left")
-              .where(F.substring(key, 1, 8)
-                     < F.coalesce(F.col("__thr"), F.lit(default_thr)))
+              .where(F.substring(_seeded_md5(id_col, seed), 1, 8)
+                     < F.coalesce(F.col("__thr"),
+                                  F.lit(_hex_bound(default_fraction))))
               .drop("__thr"))

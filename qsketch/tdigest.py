@@ -18,7 +18,7 @@ import struct
 
 import numpy as np
 
-from .base import KIND_TDIGEST, frame, register, unframe
+from .base import KIND_TDIGEST, frame, register
 
 _TWO_PI = 2.0 * np.pi
 
@@ -138,10 +138,3 @@ class TDigest:
                                    count=cnt).copy()
         td.n, td.min, td.max = n, mn, mx
         return td
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "TDigest":
-        kind, version, payload = unframe(data)
-        if kind != KIND_TDIGEST:
-            raise ValueError("not a tdigest blob")
-        return cls._from_payload(payload, version)

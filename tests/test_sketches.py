@@ -299,3 +299,30 @@ def test_kmv_empty_and_disjoint():
     assert a.intersection_estimate(b) == 0.0
     assert a.jaccard_estimate(b) == 0.0
     assert a.difference_estimate(b) == 3.0
+
+
+def test_every_kind_has_one_typed_from_bytes():
+    """`base.register` gives every registered sketch class its typed
+    `from_bytes`: each state round-trips through it byte for byte, and
+    each class rejects the blob of every other kind (regression:
+    `KMVSketch.from_bytes` was an AttributeError)."""
+    from qsketch.dyadic import DyadicCMQuantiles
+    from qsketch.kmv import KMVSketch
+    from qsketch.quotient import QuotientFilter
+
+    vals = np.arange(1, 500, dtype=np.int64)
+    sks = [BloomFilter(1 << 12, 3), CountMinSketch(64, 3), HyperLogLog(10),
+           KMVSketch(64), KLLSketch(50), TDigest(50),
+           DyadicCMQuantiles(domain_bits=12, width=64, depth=2)]
+    for sk in sks:
+        sk.update(vals)
+    sks.append(QuotientFilter.build(vals, q_bits=10))
+    assert sorted(type(sk).KIND for sk in sks) == sorted(base._REGISTRY)
+    blobs = {type(sk): sk.to_bytes() for sk in sks}
+    for cls, blob in blobs.items():
+        assert cls.from_bytes(blob).to_bytes() == blob, cls
+        assert type(base.from_bytes(blob)) is cls
+        for other, other_blob in blobs.items():
+            if other is not cls:
+                with pytest.raises(ValueError, match="not a"):
+                    cls.from_bytes(other_blob)

@@ -195,6 +195,49 @@ def test_cosine_topk_ivf_recall(spark):
     assert ap == again
 
 
+def test_ivf_topk_ids_of_any_type(spark, tmp_path_factory):
+    """On the recall test's vectors and centroids, string vec_id and
+    query_id give the long-id ranks, and a persisted index over string
+    ids answers as the ad-hoc path with its centroids (regression:
+    ivf_assign declared `vec_id long` and the probes cast query ids with
+    int(), so string ids failed)."""
+    from qsketch.spark.similarity import (IVFIndex, cosine_topk_ivf,
+                                          train_ivf_centroids)
+
+    rng = np.random.default_rng(17)
+    vecs = rng.normal(size=(300, 32)).astype(np.float32)
+
+    def frames(t, f):
+        corpus = spark.createDataFrame(
+            [(f(i), vecs[i].tolist()) for i in range(300)],
+            f"vec_id {t}, embedding array<float>")
+        queries = spark.createDataFrame(
+            [(f(0), vecs[11].tolist()), (f(1), vecs[222].tolist())],
+            f"query_id {t}, embedding array<float>")
+        return corpus, queries
+
+    def ranks(out, corpus, queries):
+        assert out.schema["vec_id"] == corpus.schema["vec_id"]
+        assert out.schema["query_id"] == queries.schema["query_id"]
+        num = lambda v: int(str(v).removeprefix("id-"))  # noqa: E731
+        return sorted((num(r["query_id"]), num(r["vec_id"]), r["rank"])
+                      for r in out.collect())
+
+    lc, lq = frames("long", int)
+    sc, sq = frames("string", lambda i: f"id-{i}")
+    cent = train_ivf_centroids(lc, 32, 16)
+    want = ranks(cosine_topk_ivf(lc, lq, dim=32, k=5, n_probe=6,
+                                 centroids=cent), lc, lq)
+    assert len(want) == 10
+    assert ranks(cosine_topk_ivf(sc, sq, dim=32, k=5, n_probe=6,
+                                 centroids=cent), sc, sq) == want
+    idx = IVFIndex.build(sc, dim=32, n_cells=16,
+                         path=str(tmp_path_factory.mktemp("ivf-str")))
+    assert ranks(idx.query(spark, sq, k=5, n_probe=6), sc, sq) == ranks(
+        cosine_topk_ivf(sc, sq, dim=32, k=5, n_probe=6,
+                        centroids=idx.centroids), sc, sq)
+
+
 def test_lsh_bucket_cap_skew(spark):
     """1k identical docs would make every (band, key) bucket quadratic
     (half a million pairs per band); the cap drops those buckets so the
@@ -865,6 +908,31 @@ def test_contamination_check_counts_and_misses(spark):
     # doc 2: an exact benchmark copy — both its trigrams match
     assert (got[2]["n_shingles"], got[2]["n_matched"]) == (2, 2)
     assert got[2]["contamination"] == 1.0
+
+
+def test_contamination_check_duplicate_id_counts_once(spark):
+    """An id repeated with the same text is one doc: each matched
+    shingle counts once, so there is one row for it and contamination
+    stays <= 1 (regression: both rows' matches summed to n_matched=4
+    over n_shingles=2, contamination 2.0), in split_leakage too."""
+    from qsketch.spark.textops import contamination_check, split_leakage
+
+    bench = spark.createDataFrame([("alpha beta gamma delta",)],
+                                  "text string")
+    corpus = spark.createDataFrame(
+        [(1, "x alpha beta gamma y"), (2, "alpha beta gamma delta"),
+         (2, "alpha beta gamma delta")],
+        "doc_id long, text string").coalesce(1)
+    got = sorted(tuple(r) for r in
+                 contamination_check(corpus, bench).collect())
+    assert got == [(1, 3, 1, round(1 / 3, 6)), (2, 2, 2, 1.0)]
+    # md5 draws: id 5 lands in train, id 1 in test
+    split = spark.createDataFrame(
+        [(5, "alpha beta gamma delta"), (5, "alpha beta gamma delta"),
+         (1, "alpha beta gamma delta")],
+        "doc_id long, text string").coalesce(1)
+    leak = split_leakage(split, {"train": 0.5, "test": 0.5}).collect()
+    assert [tuple(r) for r in leak] == [(5, 2, 2, 1.0)]
 
 
 def test_contamination_check_per_doc_distinct(spark):
