@@ -8,11 +8,13 @@ projection LSH: each vector gets a compact bucket key from the sign
 pattern of d_r random projections; candidates share a bucket, then
 exact cosine re-ranks candidates only — the same
 candidates-then-verify shape as textops.near_duplicates.
+
+The per-vector batch kernels (SRP bucket keys, IVF cell assignment) run
+on :func:`~.batchmap.id_map`, the package's one per-row Arrow batch
+boundary, so ids of any type pass through them unchanged.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -21,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..hash import splitmix64
+from .batchmap import id_map
 from .pairs import group_pair_scores
 
 
@@ -194,38 +197,24 @@ def srp_bucket_keys(df: DataFrame, dim: int, n_bits: int = 16,
         return (2.0 * u - 1.0).reshape(n_bits, dim)
 
     mats = [planes(t) for t in range(n_tables)]
-    # id column passes through with its incoming type — the API is
-    # generic over id_col (string ids are common for document keys)
-    id_t = df.schema[id_col].dataType.simpleString()
-    vec_t = df.schema[vec_col].dataType.simpleString()
+    bit_w = (np.uint64(1) << np.arange(n_bits, dtype=np.uint64))
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bit_w = (np.uint64(1) << np.arange(n_bits, dtype=np.uint64))
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(id_col)
-            vcol = batch.column(vec_col)
-            vecs = _batch_matrix(vcol)
-            out_tab, out_key = [], []
-            for t, m in enumerate(mats):
-                signs = (vecs @ m.T) > 0
-                keys = (signs.astype(np.uint64) * bit_w).sum(axis=1)
-                out_tab.append(np.full(len(keys), t, dtype=np.int32))
-                out_key.append(keys.view(np.int64))
-            cols = [pa.concat_arrays([ids] * n_tables),
-                    pa.array(np.concatenate(out_tab)),
-                    pa.array(np.concatenate(out_key))]
-            names = [id_col, "table", "bucket"]
-            if include_vec:
-                cols.append(pa.concat_arrays([vcol] * n_tables))
-                names.append(vec_col)
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+    def keys(batch: pa.RecordBatch):
+        vcol = batch.column(vec_col)
+        vecs = _batch_matrix(vcol)
+        n = len(vecs)
+        key = np.concatenate([(((vecs @ m.T) > 0).astype(np.uint64)
+                               * bit_w).sum(axis=1) for m in mats])
+        out = [pa.array(np.repeat(np.arange(n_tables, dtype=np.int32), n)),
+               pa.array(key.view(np.int64))]
+        if include_vec:
+            out.append(pa.concat_arrays([vcol] * n_tables))
+        return np.tile(np.arange(n), n_tables), out
 
-    schema = f"{id_col} {id_t}, table int, bucket long"
+    fields = [("table", "int"), ("bucket", "long")]
     if include_vec:
-        schema += f", {vec_col} {vec_t}"
-    return df.select(id_col, vec_col).mapInArrow(fn, schema)
+        fields.append((vec_col, df.schema[vec_col].dataType))
+    return id_map(df, id_col, [vec_col], fields, keys)
 
 
 def _cosine_pairs(keyed: DataFrame, key_cols: tuple[str, str],
@@ -352,23 +341,16 @@ def ivf_assign(df: DataFrame, centroids: np.ndarray,
     """(id, cell) — vectorized nearest-centroid assignment per batch."""
     cent = np.ascontiguousarray(centroids)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            vecs = _batch_matrix(batch.column(vec_col))
-            # not in-place: _batch_matrix may be a read-only zero-copy
-            # view when the source column is already float64
-            vecs = vecs / np.maximum(
-                np.linalg.norm(vecs, axis=1, keepdims=True), 1e-12)
-            cells = (vecs @ cent.T).argmax(axis=1).astype(np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(id_col), pa.array(cells)], names=[id_col, "cell"])
+    def assign(batch: pa.RecordBatch):
+        vecs = _batch_matrix(batch.column(vec_col))
+        # not in-place: _batch_matrix may be a read-only zero-copy
+        # view when the source column is already float64
+        vecs = vecs / np.maximum(
+            np.linalg.norm(vecs, axis=1, keepdims=True), 1e-12)
+        return None, [pa.array((vecs @ cent.T).argmax(axis=1)
+                               .astype(np.int32))]
 
-    # ids pass through with their own type, as in srp_bucket_keys
-    id_t = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, vec_col).mapInArrow(
-        fn, f"{id_col} {id_t}, cell int")
+    return id_map(df, id_col, [vec_col], [("cell", "int")], assign)
 
 
 def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, dim: int,

@@ -7,10 +7,11 @@ partition with zero pre-shuffle, and only compact signatures shuffle).
 
 Every text fingerprint pass — window grams, distinct gram strings,
 shingle sets, winnowing, MinHash and SimHash — is one reduction over
-the same gram-stream kernel (:func:`_gram_pass`): one ``mapInArrow``
-per partition tokenizes JVM-side, hashes each batch's flat token
-stream once, and hands the reduction (doc, start, rolling key)
-windows; ids pass through with their own Spark type.
+the same gram-stream kernel (:func:`_gram_pass`), which runs on the
+package's one per-row batch map (:func:`~.batchmap.id_map`): tokens
+are split JVM-side, each batch's flat token stream is hashed once, and
+the reduction gets (doc, start, rolling key) windows; ids pass through
+with their own Spark type.
 
 Scale notes (100 TB):
   * exact dedup: one hash-aggregate shuffle on a 16-byte digest — the
@@ -36,8 +37,6 @@ shingle positions there.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -46,6 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..hash import fnv1a64, fnv1a64_buf, fnv1a64_str_array, splitmix64
+from .batchmap import id_map
 from .pairs import group_pair_scores
 
 U64 = np.uint64
@@ -257,36 +257,15 @@ class _GramBatch:
 
 def _gram_pass(df: DataFrame, text_col: str, id_col: str | None,
                out_fields: list[tuple[str, str]], reduce) -> DataFrame:
-    """The one ``mapInArrow`` behind every text fingerprint pass.
-
-    Projects (id, :func:`_shingle_toks_expr` tokens), so tokenization is
-    JVM-side and each doc's tokens cross the Arrow boundary once; per
-    non-empty batch ``reduce(_GramBatch)`` returns ``(docs, columns)``
-    for ``out_fields`` — ``docs`` the doc index of every output row, or
-    None for one row per doc in batch order.  The id column leads the
-    output with its own Spark type from ``df.schema``; with
-    ``id_col=None`` no id is projected or emitted.  Only the reduced
-    fingerprints leave Python."""
-    names = [name for name, _ in out_fields]
-    schema = ", ".join(f"{name} {t}" for name, t in out_fields)
-    cols = [_shingle_toks_expr(text_col).alias("__toks")]
-    if id_col is not None:
-        names.insert(0, id_col)
-        schema = (f"{id_col} {df.schema[id_col].dataType.simpleString()}, "
-                  + schema)
-        cols.insert(0, F.col(id_col))
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            docs, out = reduce(_GramBatch(batch.column("__toks")))
-            if id_col is not None:
-                ids = batch.column(id_col)
-                out = [ids if docs is None else ids.take(pa.array(docs))] + out
-            yield pa.RecordBatch.from_arrays(out, names=names)
-
-    return df.select(*cols).mapInArrow(fn, schema)
+    """Every text fingerprint pass: an :func:`~.batchmap.id_map` over
+    (id, :func:`_shingle_toks_expr` tokens), so tokenization is JVM-side
+    and each doc's tokens cross the Arrow boundary once.  Per batch
+    ``reduce(_GramBatch)`` returns ``(docs, columns)`` for ``out_fields``
+    — ``docs`` the doc index of every output row, or None for one row
+    per doc.  Only the reduced fingerprints leave Python."""
+    return id_map(df, id_col, [_shingle_toks_expr(text_col).alias("__toks")],
+                  out_fields,
+                  lambda batch: reduce(_GramBatch(batch.column("__toks"))))
 
 
 _SET_FIELDS = [("shs", "array<long>"), ("n", "int")]
@@ -831,43 +810,34 @@ def banded_signatures(sig_df: DataFrame, id_col: str = "doc_id",
     audit cap losses (``oversized_buckets(banded_signatures(sigs),
     ("band", "band_key"), cap)``) with the exact keys a capped run
     uses."""
-    def band_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        maxu = np.iinfo(np.uint64).max
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(id_col)
-            scol = batch.column("sig")
-            sig = (scol.flatten().to_numpy(zero_copy_only=False)
-                   .astype(np.int64, copy=False).view(np.uint64)
-                   .reshape(len(scol), -1))
-            # drop shingle-less docs (sentinel all-max signature): they
-            # are near-dups of nothing, and at web scale millions of
-            # empty docs would otherwise share ONE bucket in every band
-            # and drive the self-join quadratic with no max_bucket set
-            real = ~(sig == maxu).all(axis=1)
-            if not real.all():
-                ids, sig = ids.filter(pa.array(real)), sig[real]
-            if not len(ids):
-                continue
-            out_band, out_key = [], []
-            for b in range(bands):
-                chunk = sig[:, b * rows:(b + 1) * rows]
-                key = fnv1a64(chunk[:, 0])
-                with np.errstate(over="ignore"):
-                    for r in range(1, rows):
-                        key = (key ^ fnv1a64(chunk[:, r])) * _FNV_PRIME
-                out_band.append(np.full(len(ids), b, dtype=np.int32))
-                out_key.append(key.view(np.int64))
-            yield pa.RecordBatch.from_arrays(
-                [pa.concat_arrays([ids] * bands),
-                 pa.array(np.concatenate(out_band)),
-                 pa.array(np.concatenate(out_key))],
-                names=[id_col, "band", "band_key"])
+    maxu = np.iinfo(np.uint64).max
 
-    id_t = sig_df.schema[id_col].dataType.simpleString()
-    return sig_df.mapInArrow(band_fn,
-                             f"{id_col} {id_t}, band int, band_key long")
+    def band(batch: pa.RecordBatch):
+        scol = batch.column("sig")
+        sig = (scol.flatten().to_numpy(zero_copy_only=False)
+               .astype(np.int64, copy=False).view(np.uint64)
+               .reshape(len(scol), -1))
+        # drop shingle-less docs (sentinel all-max signature): they
+        # are near-dups of nothing, and at web scale millions of
+        # empty docs would otherwise share ONE bucket in every band
+        # and drive the self-join quadratic with no max_bucket set
+        real = np.flatnonzero(~(sig == maxu).all(axis=1))
+        if len(real) < len(sig):
+            sig = sig[real]
+        keys = []
+        for b in range(bands):
+            chunk = sig[:, b * rows:(b + 1) * rows]
+            key = fnv1a64(chunk[:, 0])
+            with np.errstate(over="ignore"):
+                for r in range(1, rows):
+                    key = (key ^ fnv1a64(chunk[:, r])) * _FNV_PRIME
+            keys.append(key.view(np.int64))
+        return np.tile(real, bands), [
+            pa.array(np.repeat(np.arange(bands, dtype=np.int32), len(real))),
+            pa.array(np.concatenate(keys))]
+
+    return id_map(sig_df, id_col, ["sig"],
+                  [("band", "int"), ("band_key", "long")], band)
 
 
 def lsh_candidate_pairs(sig_df: DataFrame, id_col: str = "doc_id",
@@ -1503,11 +1473,11 @@ def curate_corpus(df: DataFrame, text_col: str = "text",
 
     Stage semantics (each one a standard curation pass):
       1. quality: keep docs with >= ``min_tokens`` whitespace tokens;
-      2. exact dedup: keep the min-``id_col`` representative per
-         identical ``text_col`` (groupBy on md5(text) — partial
-         aggregation collapses a hot identical-text cluster map-side,
-         then a semi-join on the UNIQUE id key, so no skewed shuffle
-         ever moves whole rows);
+      2. exact dedup: keep the min-``id_col`` row per identical
+         ``text_col`` (one min-of-struct aggregate on md5(text) —
+         partial aggregation collapses a hot identical-text cluster
+         map-side, and a distinct text is ONE row even when its id
+         repeats, so n_kept <= n_exact);
       3. near-dup dedup: keep each doc whose id is the min of its
          near-duplicate connected component at ``threshold`` Jaccard
          (MinHash-LSH candidates, exact verify — see
@@ -1525,21 +1495,22 @@ def curate_corpus(df: DataFrame, text_col: str = "text",
     n_tok = F.size(_words(F.coalesce(F.col(text_col), F.lit(""))))
     base = df.select(id_col, group_col, text_col, n_tok.alias("__ntok"))
     qual = base.where(F.col("__ntok") >= min_tokens)
-    reps = (qual.groupBy(F.md5(F.col(text_col)).alias("__dig"))
-                .agg(F.min(id_col).alias(id_col)).drop("__dig"))
+    rep = F.min(F.struct(id_col, group_col, text_col, "__ntok"))
     # the exact-dedup survivors fan out to FOUR consumers (the LSH
     # signature build, the verify's shingle sets, the kept join, and
     # the s2/s3 funnel counts) — persist once so one collect of the
-    # funnel does not re-run the corpus scan + md5 groupBy + semi-join
-    # per consumer.  ContextCleaner unpersists with the plan.
-    exact = (qual.join(reps, id_col, "left_semi")
+    # funnel does not re-run the corpus scan + md5 groupBy per
+    # consumer.  ContextCleaner unpersists with the plan.
+    exact = (qual.groupBy(F.md5(F.col(text_col))).agg(rep.alias("__rep"))
+                 .select("__rep.*")
                  .persist(StorageLevel.MEMORY_AND_DISK))
     groups = near_duplicate_groups(exact, text_col, id_col, shingle_n,
                                    threshold, max_bucket=max_bucket,
                                    rescue_oversized=rescue_oversized,
                                    work_dir=work_dir)
-    kept = (exact.join(groups, id_col)
-                 .where(F.col("group_id") == F.col(id_col)))
+    # semi: an id on two distinct texts has two group rows
+    kept = exact.join(groups.where(F.col("group_id") == F.col(id_col)),
+                      id_col, "left_semi")
     # n_raw and n_quality in ONE pass over the raw scan (a conditional
     # count instead of a second filter+agg scan of the same input)
     s01 = base.groupBy(group_col).agg(

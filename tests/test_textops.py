@@ -1638,15 +1638,46 @@ def test_simhash_near_duplicates_string_ids(spark):
         assert got == {("doc-a", "doc-b")}, idf
 
 
+def _media_rows(ids, f=lambda i: i):
+    """(f(id), payload, media_type) rows: a PCM16 WAV for even ids, a
+    24-bit BMP for odd ones, each with id-dependent content."""
+    from qsketch.spark.codecs import encode_bmp24, encode_wav_pcm16
+
+    rows = []
+    for i in ids:
+        if i % 2 == 0:
+            rows.append((f(i), encode_wav_pcm16(
+                (np.arange(40 + i) % 31 - 15) * (1 + i % 5),
+                8000 * (1 + i % 3)), "audio"))
+        else:
+            px = np.arange((2 + i % 3) * (3 + i % 4) * 3, dtype=np.uint8)
+            rows.append((f(i), encode_bmp24(
+                (px + i).reshape(2 + i % 3, 3 + i % 4, 3)), "image"))
+    return rows
+
+
+_VECS = np.random.default_rng(23).normal(size=(12, 8)).astype(np.float32)
+_CENT = np.random.default_rng(29).normal(size=(3, 8))
+
+
 def test_gram_passes_invariant_to_arrow_batch_size(spark):
-    """All six gram-kernel passes give identical rows whether a
-    partition's docs arrive in one Arrow batch or in batches of 3 —
-    every reduction is doc-local, so a batch boundary between docs
-    changes nothing."""
+    """All six gram-kernel passes and the five other per-row batch
+    operators give identical rows whether a partition's rows arrive in
+    one Arrow batch or in batches of 3 — every kernel is row-local, so
+    a batch boundary changes nothing.  With 3-doc batches, docs 3-5
+    form a batch with no shingle, where banding emits no row."""
+    from qsketch.spark import multimodal as M
+    from qsketch.spark import similarity as S
     from qsketch.spark import textops as T
 
     df = spark.createDataFrame(list(GRAM_TEXTS.items()),
                                "doc_id long, text string").coalesce(1)
+    vecs = spark.createDataFrame(
+        list(enumerate(_VECS[:7].tolist())),
+        "vec_id long, embedding array<float>").coalesce(1)
+    media = spark.createDataFrame(
+        _media_rows(range(7)),
+        "media_id long, payload binary, media_type string").coalesce(1)
     passes = {
         "windows": lambda: T._window_gram_hashes(df, "text", "doc_id", 3),
         "gram_strings": lambda: T._doc_distinct_gram_strings(df, "text", 3),
@@ -1654,10 +1685,21 @@ def test_gram_passes_invariant_to_arrow_batch_size(spark):
         "shingle_sets": lambda: T.shingle_hash_sets(df),
         "winnow": lambda: T.winnow_fingerprints(df, shingle_n=2, window=2),
         "simhash": lambda: T.simhash(df),
+        "banded": lambda: T.banded_signatures(
+            T.minhash_signatures(df, num_perm=16), bands=4, rows=4),
+        "srp": lambda: S.srp_bucket_keys(vecs, 8),
+        "srp_vec": lambda: S.srp_bucket_keys(vecs, 8, include_vec=True),
+        "ivf": lambda: S.ivf_assign(vecs, _CENT),
+        "extract": lambda: M.extract_features(media),
+        "decode": lambda: M.decode_typed_features(media),
     }
 
+    # band- and table-major kernels order rows per batch, not per doc
+    by_batch = {"banded", "srp", "srp_vec"}
+
     def run():
-        return {k: [tuple(r) for r in f().collect()]
+        return {k: sorted((tuple(r) for r in f().collect()), key=repr)
+                if k in by_batch else [tuple(r) for r in f().collect()]
                 for k, f in passes.items()}
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -1672,6 +1714,7 @@ def test_gram_passes_invariant_to_arrow_batch_size(spark):
     assert small == big
     assert all(big.values())
     assert len(big["windows"]) == 3 + 3 + 2 + 3
+    assert sorted({r[0] for r in big["banded"]}) == [0, 1, 2, 6]
 
 
 @pytest.mark.parametrize("id_type", ["long", "string"])
@@ -1724,6 +1767,132 @@ def test_gram_operators_pass_ids_of_any_type(spark, id_type):
         expect = rows(op(ref), id_cols, idmap.get)
         assert rows(out, id_cols, lambda v: v) == expect, name
         assert expect, name
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_batch_operators_pass_ids_of_any_type(spark, id_type):
+    """The five per-row batch operators outside the gram kernel carry
+    the id column with its own type and name: on string ids each gives
+    its long-id rows with the ids mapped to strings (regression: the
+    multimodal operators declared `media_id long`, so string ids failed
+    in the JVM, and decode_typed_features renamed its id to media_id)."""
+    from pyspark.sql.types import LongType, StringType
+
+    from qsketch.spark import multimodal as M
+    from qsketch.spark import similarity as S
+    from qsketch.spark import textops as T
+
+    rng = np.random.default_rng(5)
+    vocab = [f"w{i}" for i in range(200)]
+    texts = [" ".join(vocab[j] for j in rng.choice(200, 20, replace=False))
+             for _ in range(11)] + [""]  # a shingle-less doc is dropped
+    ids = list(range(100, 112))
+
+    def frames(f, t):
+        return (spark.createDataFrame([(f(i), x) for i, x in zip(ids, texts)],
+                                      f"doc_id {t}, text string"),
+                spark.createDataFrame(
+                    [(f(i), v) for i, v in zip(ids, _VECS.tolist())],
+                    f"vec_id {t}, embedding array<float>"),
+                spark.createDataFrame(
+                    _media_rows(ids, f),
+                    f"item {t}, payload binary, media_type string"))
+
+    idmap = {i: (str(i) if id_type == "string" else i) for i in ids}
+    ref, got = frames(int, "long"), frames(idmap.get, id_type)
+    ops = {
+        "banded": lambda d, v, m: T.banded_signatures(
+            T.minhash_signatures(d, num_perm=16), bands=4, rows=4),
+        "srp": lambda d, v, m: S.srp_bucket_keys(v, 8),
+        "srp_vec": lambda d, v, m: S.srp_bucket_keys(v, 8, include_vec=True),
+        "ivf": lambda d, v, m: S.ivf_assign(v, _CENT),
+        "extract": lambda d, v, m: M.extract_features(m, id_col="item"),
+        "decode": lambda d, v, m: M.decode_typed_features(m, id_col="item"),
+    }
+    want_t = StringType() if id_type == "string" else LongType()
+    for name, op in ops.items():
+        out = op(*got)
+        id_col = out.columns[0]
+        assert id_col == {"banded": "doc_id", "srp": "vec_id",
+                          "srp_vec": "vec_id", "ivf": "vec_id"}.get(
+                              name, "item"), name
+        assert out.schema[id_col].dataType == want_t, name
+        expect = sorted((idmap[r[0]],) + tuple(r)[1:]
+                        for r in op(*ref).collect())
+        assert sorted(tuple(r) for r in out.collect()) == expect, name
+        assert expect, name
+
+
+def test_decode_typed_features_rows_and_errors(spark):
+    """Audio rows fill the WAV columns and image rows the BMP columns,
+    each with NULLs for the other modality; a NULL payload is named by
+    the caller's own id column, and an unknown media type raises."""
+    from qsketch.spark.codecs import encode_bmp24, encode_wav_pcm16
+    from qsketch.spark.multimodal import decode_typed_features
+
+    px = np.arange(4 * 5 * 3, dtype=np.uint8).reshape(4, 5, 3)
+    wav = encode_wav_pcm16(((np.arange(700) % 251) - 125) * 3, 16000)
+    schema = "item string, payload binary, media_type string"
+    df = spark.createDataFrame([("a", wav, "audio"),
+                                ("b", encode_bmp24(px), "image")], schema)
+    out = decode_typed_features(df, id_col="item")
+    assert out.columns == ["item", "media_type", "rate", "n_samples",
+                           "duration_ms", "peak", "width", "height",
+                           "sum_r", "sum_g", "sum_b"]
+    sums = tuple(int(px[..., c].sum()) for c in range(3))
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("a", "audio", 16000, 700, 43, 375) + (None,) * 5,
+        ("b", "image") + (None,) * 4 + (5, 4) + sums]
+    null = spark.createDataFrame([("n", None, "audio")], schema)
+    with pytest.raises(Exception, match="item='n': NULL payload"):
+        decode_typed_features(null, id_col="item").collect()
+    unknown = spark.createDataFrame([("v", b"RIFF", "video")], schema)
+    with pytest.raises(Exception,
+                       match="no built-in parser for media type 'video'"):
+        decode_typed_features(unknown, id_col="item").collect()
+
+
+def test_per_row_batch_operators_share_one_id_map():
+    """The six per-row Arrow operators run on ``batchmap.id_map``: none
+    calls ``mapInArrow`` or looks up a Spark type string itself, and
+    ``multimodal.py`` spells no id column as ``long``."""
+    import ast
+    import pathlib
+    import re
+
+    src = pathlib.Path(__file__).resolve().parents[1] / "qsketch" / "spark"
+    ops = {"textops.py": ("_gram_pass", "banded_signatures"),
+           "similarity.py": ("srp_bucket_keys", "ivf_assign"),
+           "multimodal.py": ("extract_features", "decode_typed_features")}
+    seen = {}
+    for fname, names in ops.items():
+        for fn in ast.parse((src / fname).read_text()).body:
+            if isinstance(fn, ast.FunctionDef) and fn.name in names:
+                nodes = list(ast.walk(fn))
+                calls = {n.func.id for n in nodes if isinstance(n, ast.Call)
+                         and isinstance(n.func, ast.Name)}
+                attrs = {n.attr for n in nodes if isinstance(n, ast.Attribute)}
+                seen[fn.name] = ("id_map" in calls,
+                                 sorted(attrs & {"mapInArrow", "simpleString"}))
+    assert seen == {n: (True, []) for names in ops.values() for n in names}
+
+    long_t = r"\s+(long|bigint)\b"
+
+    def id_long(n):
+        if isinstance(n, ast.Constant) and isinstance(n.value, str):
+            return re.search(r"id" + long_t, n.value)
+        if isinstance(n, ast.JoinedStr):  # f"{id_col} long"
+            return any(isinstance(a, ast.FormattedValue)
+                       and isinstance(b, ast.Constant)
+                       and re.match(long_t, str(b.value))
+                       for a, b in zip(n.values, n.values[1:]))
+        return (isinstance(n, ast.Tuple) and len(n.elts) == 2
+                and all(isinstance(e, ast.Constant) for e in n.elts)
+                and str(n.elts[0].value).endswith("id")
+                and n.elts[1].value in ("long", "bigint"))
+
+    tree = ast.parse((src / "multimodal.py").read_text())
+    assert [ast.unparse(n) for n in ast.walk(tree) if id_long(n)] == []
 
 
 def test_contamination_check_benchmark_needs_no_id(spark):
