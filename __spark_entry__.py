@@ -32,8 +32,6 @@ from qsketch.spark.agg import (
 from qsketch.spark.queries import (
     cardinality,
     fpr,
-    heavy_hitters,
-    membership,
     quantiles,
     token_ids,
     tokenize_text,

@@ -8,6 +8,8 @@ Usage (cluster):
 
 Writes the final state table (one row per sketch kind: state blob +
 lineage metrics) as parquet, prints a one-line JSON metrics summary.
+Each state is byte-identical to ``agg.build(read_tokenized(input))``'s;
+with --group-by, one row per (group, kind) from ``agg.build_grouped``.
 Re-running with the same --ckpt/--run-id resumes: completed partitions
 are skipped and the result is byte-identical (see
 tests/test_spark_agg.py::test_checkpoint_resume_byte_identical).
@@ -43,7 +45,6 @@ def main(argv=None) -> int:
                     help="optional group column (e.g. source) for per-group sketches")
     ap.add_argument("--ckpt", default=None, help="checkpoint dir for resumable builds")
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--fanin", type=int, default=16)
     args = ap.parse_args(argv)
     if args.ckpt and not args.run_id:
         # deterministic identity of THIS job config AND input content,
@@ -69,7 +70,8 @@ def main(argv=None) -> int:
 
     from pyspark.sql import SparkSession
 
-    from .spark.agg import build, build_grouped, build_partials, tree_merge
+    from .spark.agg import (STATE_SCHEMA, _finalize, build_grouped,
+                            build_partials)
     from .spark.io import read_tokenized
 
     # reuse an active session (tests, notebooks); only stop what we own
@@ -81,8 +83,8 @@ def main(argv=None) -> int:
     specs = tuple(parse_spec(s) for s in args.sketches)
     t0 = time.perf_counter()
     if args.group_by:
-        final = build_grouped(df, specs, args.group_by, args.fanin,
-                              args.ckpt, args.run_id)
+        final = build_grouped(df, specs, args.group_by, args.ckpt,
+                              args.run_id)
         final.write.mode("overwrite").parquet(args.output)
         # count from the WRITTEN table: counting `final` would re-run
         # the whole grouped build a second time
@@ -92,9 +94,9 @@ def main(argv=None) -> int:
     else:
         num_parts = df.rdd.getNumPartitions()
         partials = build_partials(df, specs, args.ckpt, args.run_id)
-        final = tree_merge(partials, num_parts, args.fanin)
-        final.write.mode("overwrite").parquet(args.output)
-        rows = spark.read.parquet(args.output).collect()
+        rows = _finalize(partials, num_parts)
+        spark.createDataFrame(rows, STATE_SCHEMA).write.mode(
+            "overwrite").parquet(args.output)
         metrics = {
             "n_rows": max((r["n_rows"] for r in rows), default=0),
             "n_tokens": max((r["n_tokens"] for r in rows), default=0),

@@ -14,13 +14,13 @@ wall clock.
 Canonical state: every compactor level is kept SORTED at all times, so
 the in-memory state (and its serialization) is a pure function of the
 per-level item multisets — merge(a, b) and merge(b, a) are
-byte-identical, and the engine's canonical merge tree (states sorted by
-partition_id, fixed fan-in; see spark.agg.tree_merge/_finalize) then
-yields byte-identical final states regardless of task scheduling or
-arrival order.  Merge ASSOCIATIVITY across different tree shapes still
-holds only within the rank-error bound (lossy intermediate compactions
-— not a KLL property; the quotient filter provides exact shape
-independence where required).
+byte-identical, and the engine's merge shapes (states in partition_id
+order; spark.agg._finalize for ungrouped builds and the CLI, fan-in-16
+spark.agg.tree_merge for grouped ones) yield byte-identical final states
+for a given partitioning regardless of task scheduling.  Merge
+ASSOCIATIVITY across the two shapes holds only within the rank-error
+bound (lossy intermediate compactions — not a KLL property; the
+quotient filter provides exact shape independence where required).
 """
 
 from __future__ import annotations

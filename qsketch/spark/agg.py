@@ -8,12 +8,14 @@ requirement).  Fingerprints are computed once per batch and shared by
 every hash-consuming sketch.
 
 Phase 2 (merge, shuffles only KILOBYTE/MEGABYTE states, never data):
-a fan-in-F tree of ``groupBy(kind, partition_id / F).applyInPandas``
+a fan-in-16 tree of ``groupBy(kind, partition_id / 16).applyInPandas``
 rounds — treeAggregate topology expressed in DataFrame ops so Catalyst
-/ AQE schedule it.  log_F(P) rounds for P partitions; at 1000
-executors and F=16 that is 3 rounds moving a few GB of states total,
-versus the reference's single-process lock-striped structure
+/ AQE schedule it.  log_16(P) rounds for P partitions; at 1000
+executors that is 3 rounds moving a few GB of states total, versus the
+reference's single-process lock-striped structure
 (/root/reference/filter.go:482-496) which cannot scale past one box.
+Every ungrouped build and the CLI finish through ``_finalize``: tree
+rounds down to 256 states, then a partition-order fold on the driver.
 
 Grouped builds (sketch per ``source``) use the same map-side-combine
 shape: partials are emitted per (partition, group) with NO shuffle of
@@ -28,11 +30,11 @@ must see all rows together.
 One skeleton (``_partials``) runs phase 1 for all six build entry
 points (``build``/``build_files``, ``build_partials``/
 ``build_partials_files``, ``build_grouped``/``build_grouped_files``).
-It takes a source — a DataFrame projection, or a sorted parquet file
-list sliced into N tasks that read their files with pyarrow — and an
-accumulator (``_PartitionAcc``, or ``_GroupedAcc`` per group), and owns
-the one task body: partition id, checkpoint skip, consume, commit or
-yield.
+It takes a source (``_Source``: the specs, the group column if any, and
+a DataFrame projection or a sorted parquet file list sliced into N
+tasks), feeds a ``_PartitionAcc`` (or a ``_GroupedAcc`` per group), and
+owns the one task body: partition id, checkpoint skip, consume, commit
+or yield.
 
 One kind table (``_KINDS``: constructor, accepted params with their
 defaults, input mode) defines every sketch kind; ``_Acc``,
@@ -300,10 +302,6 @@ def _dedup(values: np.ndarray,
     return np.unique(values, return_counts=True)
 
 
-def _ckpt_file(ckpt_dir: str, run_id: str, pid: int) -> str:
-    return os.path.join(ckpt_dir, run_id, f"state-{pid:08d}.parquet")
-
-
 def _pin_ckpt_slicing(ckpt_dir: str, run_id: str, meta: dict) -> None:
     """A resume MUST reuse the same input slicing: partition ids name
 
@@ -356,14 +354,6 @@ def _pin_ckpt_slicing(ckpt_dir: str, run_id: str, meta: dict) -> None:
     with open(tmp, "w") as fh:
         json.dump(meta, fh)
     os.replace(tmp, meta_path)
-
-
-def _materialize_ckpt(partials: DataFrame, spark: SparkSession,
-                      ckpt_dir: str, run_id: str) -> DataFrame:
-    """Force the tasks' side-effect state commits (noop sink), then read
-    the committed state table back."""
-    partials.write.format("noop").mode("overwrite").save()
-    return spark.read.parquet(os.path.join(ckpt_dir, run_id))
 
 
 class _PartitionAcc:
@@ -446,27 +436,33 @@ def _consume_file(acc, path: str, cols: list[str]) -> None:
 
 
 class _Source:
-    """Phase-1 input.  ``frame`` is what mapInArrow runs over: either
-    the DataFrame projection onto ``cols`` (``files is None``), or one
-    ``path`` row per parquet file, sliced into ``n_tasks`` contiguous
-    file slices that each task reads itself with pyarrow."""
+    """Phase-1 input: the ``specs`` to build (per ``group_col`` group when
+    set) over the ``cols`` they read.  ``frame`` is what mapInArrow runs
+    over: either the DataFrame projection onto ``cols`` (``files is
+    None``), or one ``path`` row per parquet file, sliced into
+    ``n_tasks`` contiguous file slices that each task reads itself with
+    pyarrow."""
 
-    def __init__(self, frame: DataFrame, cols: list[str],
+    def __init__(self, specs, group_col: str | None = None,
                  files: list[str] | None = None):
-        self.frame = frame
-        self.cols = cols
-        self.files = files
+        self.specs, self.group_col, self.files = tuple(specs), group_col, files
+        self.cols = sorted({s.input for s in self.specs}
+                           | ({group_col} - {None}))
 
     @cached_property
     def n_tasks(self) -> int:
         return self.frame.rdd.getNumPartitions()
 
     @classmethod
-    def of_frame(cls, df: DataFrame, cols: list[str]) -> _Source:
-        return cls(df.select(*cols), cols)
+    def of_frame(cls, df: DataFrame, specs,
+                 group_col: str | None = None) -> _Source:
+        src = cls(specs, group_col)
+        src.frame = df.select(*src.cols)
+        return src
 
     @classmethod
-    def of_files(cls, spark: SparkSession, path: str, cols: list[str],
+    def of_files(cls, spark: SparkSession, path: str, specs,
+                 group_col: str | None = None,
                  parallelism: int | None = None) -> _Source:
         """Exactly one file per task by default (repartition's
         round-robin can leave tasks empty while others carry two
@@ -482,18 +478,17 @@ class _Source:
             raise FileNotFoundError(f"no parquet files under {path}")
         n_tasks = len(files) if parallelism is None else min(parallelism,
                                                              len(files))
-        frame = spark.sparkContext.parallelize(
+        src = cls(specs, group_col, files)
+        src.frame = spark.sparkContext.parallelize(
             [(f,) for f in files], n_tasks).toDF(["path"])
-        src = cls(frame, cols, files)
         src.n_tasks = n_tasks
         return src
 
-    def identity(self, specs: tuple[SketchSpec, ...]) -> dict:
+    def identity(self) -> dict:
         """The input identity a checkpoint pin records: the file list,
         or the DataFrame's plan fingerprint."""
         if self.files is not None:
             return {"files": self.files}
-        import hashlib
         import re
 
         # Catches a resume against a DIFFERENT input (path/schema/plan)
@@ -512,16 +507,15 @@ class _Source:
         file_sig = f"{len(files)}|{files[:8]}|{files[-8:]}"
         fp = hashlib.md5(
             (plan + "|" + file_sig + "|" + proj.schema.simpleString() + "|"
-             + ",".join(sorted(s.name for s in specs))).encode()
+             + ",".join(sorted(s.name for s in self.specs))).encode()
         ).hexdigest()
         return {"plan_fingerprint": fp}
 
 
-def _partials(src: _Source, specs: tuple[SketchSpec, ...],
-              group_col: str | None = None, ckpt_dir: str | None = None,
+def _partials(src: _Source, ckpt_dir: str | None = None,
               run_id: str | None = None) -> DataFrame:
     """Phase 1 for every build: ONE mapInArrow task body over ``src``
-    feeding a _PartitionAcc (or a _GroupedAcc when ``group_col`` is
+    feeding a _PartitionAcc (or a _GroupedAcc when ``src.group_col`` is
     set), emitting one state row per (partition[, group], spec).
 
     With ``ckpt_dir``, the run's identity is pinned before any task
@@ -530,12 +524,13 @@ def _partials(src: _Source, specs: tuple[SketchSpec, ...],
     atomically commits its states — a zero-row batch for an empty
     partition, so the skip applies to it too — and a re-run skips
     completed partitions WITHOUT pulling their input iterator."""
+    specs, group_col = src.specs, src.group_col
     if ckpt_dir is not None:
         if run_id is None:
             # a shared implicit id would silently resume a DIFFERENT
             # build's states from the same dir — demand an identity
             raise ValueError("ckpt_dir requires an explicit run_id")
-        meta = {"n_tasks": src.n_tasks, **src.identity(specs),
+        meta = {"n_tasks": src.n_tasks, **src.identity(),
                 "specs": sorted(
                     f"{s.name}:{json.dumps(s.params, sort_keys=True, default=repr)}"
                     for s in specs)}
@@ -554,7 +549,7 @@ def _partials(src: _Source, specs: tuple[SketchSpec, ...],
 
         pid = TaskContext.get().partitionId()
         if ckpt_dir is not None:
-            done = _ckpt_file(ckpt_dir, run_id, pid)
+            done = os.path.join(ckpt_dir, run_id, f"state-{pid:08d}.parquet")
             if os.path.exists(done):
                 return  # resume: input iterator never consumed
         acc = new_acc()
@@ -571,17 +566,12 @@ def _partials(src: _Source, specs: tuple[SketchSpec, ...],
         yield out
 
     partials = src.frame.mapInArrow(task, schema)
-    if ckpt_dir is not None:
-        return _materialize_ckpt(partials, src.frame.sparkSession,
-                                 ckpt_dir, run_id)
-    return partials
-
-
-def _input_cols(specs, group_col: str | None = None) -> list[str]:
-    cols = {s.input for s in specs}
-    if group_col is not None:
-        cols.add(group_col)
-    return sorted(cols)
+    if ckpt_dir is None:
+        return partials
+    # force the tasks' side-effect state commits (noop sink), then read
+    # the committed state table back
+    partials.write.format("noop").mode("overwrite").save()
+    return src.frame.sparkSession.read.parquet(os.path.join(ckpt_dir, run_id))
 
 
 def build_partials(df: DataFrame, specs=DEFAULT_SPECS,
@@ -591,9 +581,7 @@ def build_partials(df: DataFrame, specs=DEFAULT_SPECS,
 
     plan keeps the parquet scan's partitioning; only needed columns are
     selected so scan pruning pushes down (ReadSchema shrinks)."""
-    specs = tuple(specs)
-    return _partials(_Source.of_frame(df, _input_cols(specs)), specs,
-                     ckpt_dir=ckpt_dir, run_id=run_id)
+    return _partials(_Source.of_frame(df, specs), ckpt_dir, run_id)
 
 
 def _bounded_cols(pf, cols: set[str]) -> frozenset[str]:
@@ -644,20 +632,16 @@ def build_partials_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
     operator that consumes whole files anyway.  Returns (states_df,
     num_leaves).
     """
-    specs = tuple(specs)
-    src = _Source.of_files(spark, path, _input_cols(specs), parallelism)
-    return (_partials(src, specs, ckpt_dir=ckpt_dir, run_id=run_id),
-            src.n_tasks)
+    src = _Source.of_files(spark, path, specs, parallelism=parallelism)
+    return _partials(src, ckpt_dir, run_id), src.n_tasks
 
 
 def build_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
-                fanin: int = 16, ckpt_dir: str | None = None,
-                run_id: str | None = None,
+                ckpt_dir: str | None = None, run_id: str | None = None,
                 parallelism: int | None = None) -> BuildResult:
     """End-to-end file-direct build (see build_partials_files)."""
-    partials, leaves = build_partials_files(spark, path, specs, ckpt_dir,
-                                            run_id, parallelism)
-    return _build_result(partials, leaves, fanin)
+    return _build_result(*build_partials_files(spark, path, specs, ckpt_dir,
+                                               run_id, parallelism))
 
 
 def _merge_states(blobs):
@@ -684,13 +668,18 @@ def _fold_rows(rows: list[dict]) -> dict:
     return out
 
 
-def tree_merge(states: DataFrame, num_leaves: int, fanin: int = 16,
+_FANIN = 16  # the merge tree's fan-in
+_DRIVER_LEAVES = 256  # at most this many partials fold on the driver
+
+
+def tree_merge(states: DataFrame, num_leaves: int,
                key_cols: tuple[str, ...] = ("kind",),
                target_leaves: int = 1) -> DataFrame:
-    """Phase 2: fan-in-F merge tree over state rows (treeAggregate
+    """Phase 2: fan-in-``_FANIN`` merge tree over state rows
 
-    topology in DataFrame ops).  Only sketch blobs shuffle."""
+    (treeAggregate topology in DataFrame ops).  Only sketch blobs shuffle."""
     out_cols = [f.name for f in states.schema.fields]
+    fanin = _FANIN  # read here, on the driver: the closure ships the value
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         row = _fold_rows(pdf.to_dict("records"))
@@ -720,16 +709,16 @@ class BuildResult:
         return self.sketches[name]
 
 
-def _finalize(partials: DataFrame, num_leaves: int, fanin: int,
-              driver_threshold: int = 256) -> list:
-    """treeAggregate semantics: tree-merge rounds while the state count
+def _finalize(partials: DataFrame, num_leaves: int) -> list:
+    """The one finish of every ungrouped build: one folded row per kind.
 
-    is large, then reduce the last <=driver_threshold states on the
-    driver (exactly where RDD.treeAggregate finishes too — collecting a
-    few hundred KB-MB blobs beats a shuffle round's fixed cost)."""
+    treeAggregate semantics: tree-merge rounds while the state count
+    is above ``_DRIVER_LEAVES``, then fold the rest on the driver (exactly
+    where RDD.treeAggregate finishes too — collecting a few hundred
+    KB-MB blobs beats a shuffle round's fixed cost)."""
     df = partials
-    if num_leaves > driver_threshold:
-        df = tree_merge(df, num_leaves, fanin, target_leaves=driver_threshold)
+    if num_leaves > _DRIVER_LEAVES:
+        df = tree_merge(df, num_leaves, target_leaves=_DRIVER_LEAVES)
     # Arrow collect: the states come back as one arrow stream instead of
     # pickled Rows — measured 0.2 s vs 1.6 s for the same 64 x ~3 MB
     # state rows (driver-side pickle of big binary cells dominates
@@ -740,9 +729,8 @@ def _finalize(partials: DataFrame, num_leaves: int, fanin: int,
     return [_fold_rows(rs) for rs in by_kind.values()]
 
 
-def _build_result(partials: DataFrame, leaves: int,
-                  fanin: int) -> BuildResult:
-    final = _finalize(partials, leaves, fanin)
+def _build_result(partials: DataFrame, leaves: int) -> BuildResult:
+    final = _finalize(partials, leaves)
     return BuildResult(
         sketches={row["kind"]: base.from_bytes(row["state"]) for row in final},
         n_rows=max((r["n_rows"] for r in final), default=0),
@@ -752,13 +740,11 @@ def _build_result(partials: DataFrame, leaves: int,
     )
 
 
-def build(df: DataFrame, specs=DEFAULT_SPECS, fanin: int = 16,
-          ckpt_dir: str | None = None, run_id: str | None = None) -> BuildResult:
+def build(df: DataFrame, specs=DEFAULT_SPECS, ckpt_dir: str | None = None,
+          run_id: str | None = None) -> BuildResult:
     """End-to-end two-phase build -> final sketches on the driver."""
-    specs = tuple(specs)
-    src = _Source.of_frame(df, _input_cols(specs))
-    partials = _partials(src, specs, ckpt_dir=ckpt_dir, run_id=run_id)
-    return _build_result(partials, src.n_tasks, fanin)
+    return _build_result(build_partials(df, specs, ckpt_dir, run_id),
+                         df.rdd.getNumPartitions())
 
 
 class _GroupedAcc:
@@ -834,30 +820,31 @@ class _GroupedAcc:
 
 
 def build_grouped(df: DataFrame, specs=DEFAULT_SPECS, group_col: str = "source",
-                  fanin: int = 16, ckpt_dir: str | None = None,
+                  ckpt_dir: str | None = None,
                   run_id: str | None = None) -> DataFrame:
     """Sketch per group with map-side combine: partials per (partition,
 
     group) — NO row-data shuffle, so source skew cannot create a hot
-    task — then a state-only merge keyed by group.  Null group keys
-    form one group whose ``group`` is NULL.  ``ckpt_dir``/``run_id``
-    give the same resumability contract as the ungrouped build."""
-    specs = tuple(specs)
-    src = _Source.of_frame(df, _input_cols(specs, group_col))
-    partials = _partials(src, specs, group_col, ckpt_dir, run_id)
-    return tree_merge(partials, src.n_tasks, fanin,
+    task — then a state-only merge keyed by group through
+    ``tree_merge``'s fan-in-16 tree.  Null group keys form one group
+    whose ``group`` is NULL.  ``ckpt_dir``/``run_id`` give the same
+    resumability contract as the ungrouped build.  A group's KLL or
+    t-digest state is deterministic for a given partitioning, but above
+    16 partitions it may differ from ``build()`` over the group's rows;
+    canonical kinds never differ."""
+    src = _Source.of_frame(df, specs, group_col)
+    return tree_merge(_partials(src, ckpt_dir, run_id), src.n_tasks,
                       key_cols=("group", "kind"))
 
 
 def build_grouped_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
-                        group_col: str = "source", fanin: int = 16) -> DataFrame:
+                        group_col: str = "source") -> DataFrame:
     """File-direct grouped build: same map-side combine, parquet read
 
     inside the workers (no JVM row->Arrow conversion — see
     build_partials_files)."""
-    specs = tuple(specs)
-    src = _Source.of_files(spark, path, _input_cols(specs, group_col))
-    return tree_merge(_partials(src, specs, group_col), src.n_tasks, fanin,
+    src = _Source.of_files(spark, path, specs, group_col)
+    return tree_merge(_partials(src), src.n_tasks,
                       key_cols=("group", "kind"))
 
 

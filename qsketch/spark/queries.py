@@ -27,9 +27,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import base
-from .agg import (_KINDS, _STATE_PA_SCHEMA, SketchSpec, _ddl, _finalize,
-                  _fold_rows, _PartitionAcc, _state_cardinality, build,
-                  build_grouped, with_frequency, with_membership)
+from .agg import (_DRIVER_LEAVES, _KINDS, _STATE_PA_SCHEMA, SketchSpec, _ddl,
+                  _finalize, _fold_rows, _PartitionAcc, _state_cardinality,
+                  build, with_frequency, with_membership)
 from .textops import _word_rows
 
 
@@ -104,10 +104,9 @@ def heavy_hitters(df: DataFrame, col: str, k: int = 20,
                           "est_count")
 
 
-def heavy_hitters_sketch(df: DataFrame, col: str, k: int = 20,
-                         params: dict | None = None,
-                         candidates_per_partition: int | None = None,
-                         fanin: int = 16) -> DataFrame:
+def heavy_hitters_sketch(
+        df: DataFrame, col: str, k: int = 20, params: dict | None = None,
+        candidates_per_partition: int | None = None) -> DataFrame:
     """Top-k frequency with NO global exact groupBy — the 100-TB path.
 
     ONE input scan: each partition emits its CMS partial state AND its
@@ -165,7 +164,7 @@ def heavy_hitters_sketch(df: DataFrame, col: str, k: int = 20,
     # fused path only when the worst-case collected candidate count
     # (n_leaves x m) is genuinely driver-sized — a large k would
     # otherwise turn the "bounded driver finish" into a driver OOM
-    if n_leaves <= 256 and n_leaves * m <= (1 << 22):
+    if n_leaves <= _DRIVER_LEAVES and n_leaves * m <= (1 << 22):
         # ONE job, zero persist: states and candidate rows come back in
         # the same collect; the <= n_leaves x m candidate aggregation and
         # the CMS probe are a vectorized driver-side epilogue (same
@@ -192,7 +191,7 @@ def heavy_hitters_sketch(df: DataFrame, col: str, k: int = 20,
     try:
         states = parts.where(F.col("state").isNotNull()).drop(
             "value", "part_cnt")
-        cms_bytes = _finalize(states, n_leaves, fanin)[0]["state"]
+        cms_bytes = _finalize(states, n_leaves)[0]["state"]
         cands = (parts.where(F.col("state").isNull())
                  .groupBy(F.col("value").alias(col))
                  .agg(F.sum("part_cnt").alias("lower_bound")))

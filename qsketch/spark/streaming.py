@@ -30,7 +30,9 @@ class SketchStateStore:
     """File-backed state with crash-safe epoch commits.
 
     Each commit writes a fresh ``epoch-N/`` directory with every blob,
-    then atomically replaces the ``CURRENT`` pointer file.  A crash at
+    then atomically replaces the ``CURRENT`` pointer file, which maps
+    each kind name to its blob's file (older dirs: ``kind`` with ":"
+    spelled "__").  A crash at
     ANY point leaves CURRENT at the previous epoch, so a replayed
     micro-batch regenerates epoch-N from the N-1 state instead of
     double-applying into already-merged blobs (CMS/KLL weights are not
@@ -57,26 +59,29 @@ class SketchStateStore:
         if cur is None:
             return {}
         d = os.path.join(self.state_dir, cur["dir"])
+        files = cur["files"] if "files" in cur else {
+            f[:-4].replace("__", ":"): f for f in os.listdir(d)
+            if f.endswith(".bin")}
         out = {}
-        for f in os.listdir(d):
-            if f.endswith(".bin"):
-                with open(os.path.join(d, f), "rb") as fh:
-                    out[f[:-4].replace("__", ":")] = base.from_bytes(fh.read())
+        for kind, f in files.items():
+            with open(os.path.join(d, f), "rb") as fh:
+                out[kind] = base.from_bytes(fh.read())
         return out
 
     def commit(self, sketches: dict[str, object], epoch: int) -> None:
         dirname = f"epoch-{epoch:012d}"
         d = os.path.join(self.state_dir, dirname)
         os.makedirs(d, exist_ok=True)
-        for kind, sk in sketches.items():
-            tmp = os.path.join(d, f".tmp-{kind.replace(':', '__')}")
+        files = {kind: f"state-{i:04d}.bin" for i, kind in enumerate(sketches)}
+        for kind, f in files.items():
+            tmp = os.path.join(d, f".tmp-{f}")
             with open(tmp, "wb") as fh:
-                fh.write(sk.to_bytes())
-            os.replace(tmp, os.path.join(d, kind.replace(":", "__") + ".bin"))
+                fh.write(sketches[kind].to_bytes())
+            os.replace(tmp, os.path.join(d, f))
         prev = self._read_current()
         tmp = os.path.join(self.state_dir, "CURRENT.tmp")
         with open(tmp, "w") as fh:
-            json.dump({"epoch": epoch, "dir": dirname}, fh)
+            json.dump({"epoch": epoch, "dir": dirname, "files": files}, fh)
         os.replace(tmp, os.path.join(self.state_dir, "CURRENT"))
         # prune superseded epoch dirs (best effort)
         if prev and prev["dir"] != dirname:
@@ -202,7 +207,10 @@ def rolling_sketch_by_key(stream_df: DataFrame, key_col: str = "source",
     NOTE: once a processing-time timeout is registered the engine always
     has pending state-cleanup work, so ``processAllAvailable()`` on the
     query never returns — poll ``lastProgress``/the sink instead.
+    NULL token elements are dropped JVM-side, as in every batch build
+    (pandas would turn their batch into float64, rounding ids > 2**53).
     """
+    from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from ..hll import HyperLogLog
@@ -236,6 +244,7 @@ def rolling_sketch_by_key(stream_df: DataFrame, key_col: str = "source",
         yield pd.DataFrame({"key": [k], "est_distinct": [hll.estimate()],
                             "batch_docs": [n_docs], "expired": [False]})
 
+    stream_df = stream_df.withColumn(tokens_col, F.array_compact(tokens_col))
     return (stream_df.groupBy(key_col).applyInPandasWithState(
         update,
         outputStructType=(f"key {key_type}, est_distinct double, "

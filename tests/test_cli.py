@@ -125,3 +125,35 @@ def test_spark_submit_py_files_end_to_end(input_path, tmp_path):
         f"SELECT COUNT(DISTINCT t) FROM (SELECT unnest(tokens) AS t "
         f"FROM '{input_path}/*.parquet')").fetchone()[0]
     assert qf.cardinality() == exact
+
+
+def test_cli_states_equal_build_above_16_partitions(spark, tmp_path, capsys):
+    """Above 16 scan partitions the CLI's ungrouped state bytes equal
+    ``build()``'s for every kind, KLL and t-digest included: both finish
+    through ``agg._finalize``."""
+    from qsketch.cli import parse_spec
+    from qsketch.spark.agg import build
+    from qsketch.spark.io import read_tokenized
+
+    src = str(tmp_path / "toks40")
+    generate_tokenized(spark, 2000, seed=9, num_partitions=40) \
+        .write.parquet(src)
+    kinds = ["quotient:tokens", "hll:tokens", "kll:n_tok", "tdigest:n_tok"]
+    # a split as large as one file's open cost holds exactly one file
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, spark.conf.get("spark.sql.files.openCostInBytes"))
+    try:
+        assert read_tokenized(spark, src).rdd.getNumPartitions() >= 40
+        out_dir = str(tmp_path / "states40")
+        m = _run(capsys, ["--input", src, "--output", out_dir,
+                          "--sketches", *kinds])
+        res = build(read_tokenized(spark, src),
+                    tuple(parse_spec(k) for k in kinds))
+    finally:
+        spark.conf.set(conf, old)
+    assert m["num_partitions"] >= 40 and m["kinds"] == sorted(kinds)
+    assert m["n_rows"] == res.n_rows == 2000
+    got = {r["kind"]: bytes(r["state"])
+           for r in spark.read.parquet(out_dir).collect()}
+    assert got == {k: sk.to_bytes() for k, sk in res.sketches.items()}

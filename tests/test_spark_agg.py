@@ -81,19 +81,24 @@ def test_partition_count_invariance(spark):
     blobs = []
     for parts in (2, 8):
         df = generate_tokenized(spark, 500, seed=7, num_partitions=parts)
-        res = build(df, specs, fanin=4)
+        res = build(df, specs)
         blobs.append({k: s.to_bytes() for k, s in res.sketches.items()})
     assert blobs[0] == blobs[1]
 
 
-def test_tree_merge_fanin_shapes(spark, tiny_df):
+def test_tree_merge_fanin_shapes(spark, tiny_df, monkeypatch):
     """Different fan-ins (different merge trees) -> same canonical states."""
+    from qsketch.spark import agg
+
     specs = (SketchSpec("quotient", "tokens"), SketchSpec("hll", "tokens"))
     partials = build_partials(tiny_df, specs)
     n = tiny_df.rdd.getNumPartitions()
-    by2 = {r["kind"]: r["state"] for r in tree_merge(partials, n, fanin=2).collect()}
-    by16 = {r["kind"]: r["state"] for r in tree_merge(partials, n, fanin=16).collect()}
-    assert by2 == by16
+    by = {}
+    for fanin in (2, 16):
+        monkeypatch.setattr(agg, "_FANIN", fanin)
+        by[fanin] = {r["kind"]: r["state"]
+                     for r in tree_merge(partials, n).collect()}
+    assert by[2] == by[16]
 
 
 def test_grouped_build_matches_per_group_exact(spark, tiny_df):
@@ -212,7 +217,7 @@ def test_finalize_large_fleet_tree_path(spark):
         "n_rows": 1, "n_tokens": 20, "build_ms": 0.0,
     })
     states = spark.createDataFrame(pdf, STATE_SCHEMA)
-    final = _finalize(states, 600, fanin=16)
+    final = _finalize(states, 600)
     assert len(final) == 1 and final[0]["n_tokens"] == 600 * 20
     expect = functools.reduce(lambda a, b: a.merge(b), parts)
     assert final[0]["state"] == expect.to_bytes()
@@ -360,7 +365,7 @@ def test_dyadic_state_is_partition_count_invariant(spark):
     spec = (SketchSpec("dyadic", "n_tok", {"domain_bits": 12, "width": 256}),)
     a = build(df, spec).sketches["dyadic:n_tok"].to_bytes()
     b = build(df.repartition(7), spec).sketches["dyadic:n_tok"].to_bytes()
-    c = build(df.repartition(3), spec, fanin=2).sketches["dyadic:n_tok"].to_bytes()
+    c = build(df.repartition(3), spec).sketches["dyadic:n_tok"].to_bytes()
     assert a == b == c
 
 
@@ -748,3 +753,34 @@ def test_heavy_hitters_sketch_many_leaf_branch_matches_fused(spark):
     truth = collections.Counter(vals.tolist())
     for r in many:
         assert r["lower_bound"] == truth[r["t"]] <= r["est_count"]
+
+
+def test_one_finish_and_fixed_fanin_in_sources():
+    """No function takes a ``fanin`` or ``driver_threshold`` parameter,
+    ``tree_merge(`` is called only in ``qsketch/spark/agg.py`` (the CLI
+    finishes through ``_finalize`` like ``build()``), and the CLI
+    defines no ``--fanin`` option."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    paths = sorted((repo / "qsketch").rglob("*.py")) + [
+        repo / "__spark_entry__.py"]
+    knobs, callers, options = [], set(), []
+    for p in paths:
+        rel = p.relative_to(repo).as_posix()
+        for n in ast.walk(ast.parse(p.read_text())):
+            if isinstance(n, (ast.FunctionDef, ast.Lambda)):
+                a = n.args
+                knobs += [(rel, x.arg) for x in a.posonlyargs + a.args
+                          + a.kwonlyargs
+                          if x.arg in ("fanin", "driver_threshold")]
+            if isinstance(n, ast.Call):
+                f = n.func
+                if getattr(f, "id", getattr(f, "attr", None)) == "tree_merge":
+                    callers.add(rel)
+            if isinstance(n, ast.Constant) and n.value == "--fanin":
+                options.append(rel)
+    assert knobs == []
+    assert callers == {"qsketch/spark/agg.py"}
+    assert options == []

@@ -3,6 +3,7 @@
 import os
 import time
 
+import numpy as np
 import pytest
 
 from qsketch.spark.agg import SketchSpec, build
@@ -44,6 +45,58 @@ def test_stream_build_matches_batch(spark, tmp_path):
     # canonical kinds: byte-identical to a from-scratch batch build
     for kind in ("quotient:tokens", "hll:tokens", "cms:tokens"):
         assert streamed[kind].to_bytes() == batch.sketches[kind].to_bytes(), kind
+
+
+def test_stream_build_kind_with_double_underscore(spark, tmp_path):
+    """A kind whose input column holds ``__`` ("hll:tok__ids") keeps its
+    name through the state store, so each micro-batch merges into the
+    stored state: two micro-batches equal one batch build over both."""
+    import pyspark.sql.functions as F
+
+    src, state = str(tmp_path / "in"), str(tmp_path / "state")
+    specs = (SketchSpec("hll", "tok__ids"),)
+    full = generate_tokenized(spark, 400, seed=11, num_partitions=2) \
+        .select(F.col("tokens").alias("tok__ids"))
+    full.cache().count()
+    chunks = full.randomSplit([1.0, 1.0], seed=2)
+    chunks[0].write.parquet(f"{src}/c0")
+    stream = spark.readStream.schema(full.schema).parquet(f"{src}/c*")
+    q = stream_build(stream, state, specs,
+                     checkpoint_dir=str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+        chunks[1].write.parquet(f"{src}/c1")
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    streamed = SketchStateStore(state).load()
+    batch = build(spark.read.parquet(f"{src}/c*"), specs)
+    assert list(streamed) == ["hll:tok__ids"]
+    assert (streamed["hll:tok__ids"].to_bytes()
+            == batch.sketches["hll:tok__ids"].to_bytes())
+
+
+def test_state_store_loads_dir_without_file_map(spark, tmp_path):
+    """A state dir whose CURRENT has no kind -> file map (each blob named
+    after its kind, ":" spelled "__") loads as before, and the next
+    commit carries its states forward."""
+    import json
+
+    res = build(generate_tokenized(spark, 100, seed=8, num_partitions=2),
+                SPECS)
+    d = tmp_path / "old" / "epoch-000000000003"
+    d.mkdir(parents=True)
+    for kind, sk in res.sketches.items():
+        (d / (kind.replace(":", "__") + ".bin")).write_bytes(sk.to_bytes())
+    (tmp_path / "old" / "CURRENT").write_text(
+        json.dumps({"epoch": 3, "dir": d.name}))
+    store = SketchStateStore(str(tmp_path / "old"))
+    want = {k: s.to_bytes() for k, s in res.sketches.items()}
+    assert store.last_epoch() == 3
+    assert {k: s.to_bytes() for k, s in store.load().items()} == want
+    store.commit(store.load(), epoch=4)
+    assert {k: s.to_bytes() for k, s in store.load().items()} == want
+    assert not d.exists()
 
 
 def test_stream_replay_idempotent(spark, tmp_path):
@@ -179,6 +232,32 @@ def test_rolling_sketch_by_key_stateful(spark, tmp_path):
     for k, est in latest.items():
         assert abs(est - exact[k]) / exact[k] <= 0.1, (k, est, exact[k])
     assert not any(r["expired"] for r in rows)
+
+
+def test_rolling_sketch_drops_null_token_elements(spark, tmp_path):
+    """A NULL inside a token list is dropped before the HLL, and ids
+    above 2**53 stay exact: the estimate equals an HLL over the non-null
+    ids (a NULL would turn the batch into float64, rounding the ids and
+    adding INT64_MIN)."""
+    from qsketch.hll import HyperLogLog
+    from qsketch.spark.streaming import (rolling_sketch_by_key,
+                                         run_stream_until_rows)
+
+    big = [2**62 + 2 * i + 1 for i in range(40)] + [2**53 + 1, 5]
+    src = str(tmp_path / "nul")
+    spark.createDataFrame(
+        [("a", big[:20] + [None]), ("a", big[20:]), ("a", None)],
+        "source string, tokens array<bigint>").coalesce(1) \
+        .write.parquet(f"{src}/c0")
+    stream = spark.readStream.schema(
+        "source string, tokens array<bigint>").parquet(f"{src}/c*")
+    rows = run_stream_until_rows(
+        rolling_sketch_by_key(stream, "source", ttl_ms=3_600_000, hll_p=10),
+        "roll_nulls", 1).collect()
+    hll = HyperLogLog(10)
+    hll.update(np.array(big, dtype=np.int64))
+    assert [(r["key"], r["est_distinct"], r["batch_docs"]) for r in rows] \
+        == [("a", hll.estimate(), 3)]
 
 
 def test_rolling_sketch_ttl_expiry(spark, tmp_path):
