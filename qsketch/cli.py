@@ -68,7 +68,8 @@ def main(argv=None) -> int:
         sig = "|".join(parts)
         args.run_id = "auto-" + hashlib.sha1(sig.encode()).hexdigest()[:12]
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import functions as F
 
     from .spark.agg import (STATE_SCHEMA, _finalize, build_grouped,
                             build_partials)
@@ -85,12 +86,12 @@ def main(argv=None) -> int:
     if args.group_by:
         final = build_grouped(df, specs, args.group_by, args.ckpt,
                               args.run_id)
-        final.write.mode("overwrite").parquet(args.output)
-        # count from the WRITTEN table: counting `final` would re-run
-        # the whole grouped build a second time
-        n_groups = (spark.read.parquet(args.output)
-                    .select("group").distinct().count())
-        metrics = {"groups": n_groups}
+        # count the rows the write itself passes (one per group and
+        # spec): counting `final` would re-run the whole grouped build
+        written = Observation("written")
+        final.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite").parquet(args.output)
+        metrics = {"groups": written.get["rows"] // len(specs)}
     else:
         num_parts = df.rdd.getNumPartitions()
         partials = build_partials(df, specs, args.ckpt, args.run_id)

@@ -23,9 +23,7 @@ row data, then only states shuffle on the group key — immune to the
 skewed source distribution by construction (the heavy group's rows
 never co-locate).  Rows with a NULL group key form one group whose
 ``group`` is NULL, as SQL ``GROUP BY`` does; null tokens, null lists
-and null scalar values are dropped in every build.  ``io.salted``
-remains available for the applyInPandas variant when per-group state
-must see all rows together.
+and null scalar values are dropped in every build.
 
 One skeleton (``_partials``) runs phase 1 for all six build entry
 points (``build``/``build_files``, ``build_partials``/
@@ -446,6 +444,10 @@ class _Source:
     def __init__(self, specs, group_col: str | None = None,
                  files: list[str] | None = None):
         self.specs, self.group_col, self.files = tuple(specs), group_col, files
+        names = [s.name for s in self.specs]
+        dup = sorted({n for n in names if names.count(n) > 1})
+        if dup:  # states are keyed by name: the specs would fold into one
+            raise ValueError(f"duplicate sketch spec name(s) {dup}")
         self.cols = sorted({s.input for s in self.specs}
                            | ({group_col} - {None}))
 

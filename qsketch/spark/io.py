@@ -1,4 +1,4 @@
-"""Input/output: deterministic synthetic data + table readers + salting.
+"""Input/output: deterministic synthetic data + table readers.
 
 The production input is an Iceberg table of pre-tokenized training
 sequences ``(doc_id string, tokens array<int32>, n_tok int32, source
@@ -23,7 +23,6 @@ import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 VOCAB_SIZE = 50257
 TOKENIZED_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
@@ -115,17 +114,3 @@ def read_tokenized(spark: SparkSession, source: str) -> DataFrame:
     except Exception:
         pass
     return spark.read.parquet(source)
-
-
-def salted(df: DataFrame, group_col: str, n_salts: int,
-           id_col: str = "doc_id") -> DataFrame:
-    """Add a deterministic salt column to defuse group skew.
-
-    ``xhash64(id) pmod n_salts`` rather than rand(): deterministic under
-    retries, which resumable builds require.  Use as the extra grouping
-    key for the partial phase; the final phase re-groups on ``group_col``
-    alone and merges the (cheap, tiny) states — the classic two-level
-    skew-agg, except our aggregation states are sketch blobs.
-    """
-    return df.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)).cast("int"))

@@ -30,11 +30,11 @@ _ALLOC_ENV = {
 
 
 def make_session(cpus: int, app: str = "qsketch", driver_mem: str = "16g",
-                 arrow_batch: int = 16384, fast_worker: bool = True,
                  master: str | None = None, **extra_conf):
     """Build the engine's SparkSession.
 
-    ``master`` defaults to ``local[cpus]``.  The fast-worker daemon
+    ``master`` defaults to ``local[cpus]``; ``extra_conf`` entries
+    override any setting below.  The fast-worker daemon
     module (and the PYTHONPATH plumbing it needs) is only wired for
     LOCAL masters: on a cluster the driver-local package root is not a
     valid executor path, and a daemon module that cannot import qsketch
@@ -46,10 +46,8 @@ def make_session(cpus: int, app: str = "qsketch", driver_mem: str = "16g",
     from pyspark.sql import SparkSession
 
     master = master or f"local[{cpus}]"
-    is_local = master.startswith("local")
     os.environ.update(_ALLOC_ENV)  # driver side + inherited by the JVM
-    if (fast_worker and is_local
-            and os.environ.get("QSKETCH_FAST_WORKER", "1") != "0"):
+    if master.startswith("local"):
         # daemon module with the per-task protocol fix pre-installed
         # (workerpatch.py: guarded importlib.invalidate_caches, ~210 ms
         # saved per python-runner task on this stack).  The daemon
@@ -74,7 +72,7 @@ def make_session(cpus: int, app: str = "qsketch", driver_mem: str = "16g",
          .config("spark.sql.adaptive.enabled", "true")
          .config("spark.driver.memory", driver_mem)
          .config("spark.ui.enabled", "false")
-         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
+         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
          .config("spark.sql.files.maxPartitionBytes", "128m"))
     for k, v in _ALLOC_ENV.items():
         b = b.config(f"spark.executorEnv.{k}", v)

@@ -584,86 +584,109 @@ def repeated_ngrams(df: DataFrame, text_col: str = "text",
               .limit(top))
 
 
-def _dup_grams(wins: DataFrame, min_count: int, *aggs) -> DataFrame:
-    """(__gh, aggs...) for every gram fingerprint occurring >=
-    ``min_count`` times among the window rows — the duplicate filter of
-    the span operators (``aggs`` ride the same groupBy shuffle)."""
-    return (wins.groupBy("__gh").agg(F.count("*").alias("__n"), *aggs)
-                .where(F.col("__n") >= min_count).drop("__n"))
+def _merge_spans(hits: DataFrame, id_col: str, window: int) -> DataFrame:
+    """(id_col, n_tokens, __spans) from hit rows (id_col, __nwin,
+    __start): ``__spans`` is the doc's maximal runs of token positions
+    covered by its hit windows, as ``array<struct<s, e>>`` (1-based,
+    inclusive, ascending); overlapping and adjacent windows merge.
+    n_tokens = __nwin + window - 1, so the rows carry one int, not the
+    token array.
+
+    Every window is exactly ``window`` tokens wide, so among the doc's
+    sorted starts one OPENS a span iff it lies more than ``window`` past
+    its predecessor, and CLOSES one iff its successor does: two
+    ``filter``s over the starts zipped with themselves shifted by one,
+    no fold.  Each lambda reads only its own element — a lambda that
+    indexed the start array would re-evaluate it per element."""
+    st = F.col("__st")
+    nxt = F.arrays_zip(st.alias("a"),
+                       F.slice(st, 2, F.size(st)).alias("b"))
+
+    def gap(p):
+        return p["b"] - p["a"] > window
+
+    opens = F.concat(F.slice(st, 1, 1),
+                     F.transform(F.filter(nxt, gap), lambda p: p["b"]))
+    closes = F.transform(F.filter(nxt, lambda p: p["b"].isNull() | gap(p)),
+                         lambda p: p["a"])
+    spans = F.transform(
+        F.arrays_zip(opens.alias("o"), closes.alias("c")),
+        lambda p: F.struct(p["o"].alias("s"),
+                           (p["c"] + (window - 1)).alias("e")))
+    return (hits.groupBy(id_col)
+            .agg((F.first("__nwin") + (window - 1)).cast("long")
+                 .alias("n_tokens"),
+                 F.sort_array(F.collect_list("__start")).alias("__st"))
+            .select(id_col, "n_tokens", spans.alias("__spans")))
+
+
+def _covered(spans: Column) -> Column:
+    """Token positions covered by a :func:`_merge_spans` span array."""
+    return F.aggregate(spans, F.lit(0).cast("long"),
+                       lambda a, r: a + r["e"] - r["s"] + 1)
+
+
+def _dup_spans(df: DataFrame, text_col: str, id_col: str, window: int,
+               min_count: int, keep_first: bool) -> DataFrame:
+    """The duplicated-span rule of Lee et al. 2022 ("Deduplicating
+    Training Data Makes Language Models Better", ExactSubstr): a token
+    WINDOW is *duplicated* when its exact word sequence occurs >=
+    ``min_count`` times anywhere in the corpus — across docs or repeated
+    within one.  Returns :func:`_merge_spans`' (id_col, n_tokens,
+    __spans) for every doc holding at least one duplicated window.  With
+    ``keep_first`` each duplicated gram's CANONICAL occurrence — the
+    smallest (doc id, position) — is not a hit of its own gram.
+
+    100-TB shape: two corpus scans and two shuffles, nothing quadratic.
+    Pass 1 counts window occurrences grouped by the gram — map-side
+    partial aggregation collapses the (Zipf-skewed) hot head before the
+    shuffle, only grams at/over ``min_count`` survive the filter, and
+    the canonical ``min(struct(id, start))`` rides the same groupBy.
+    Pass 2 re-derives the windows (recomputing a parquet scan + split is
+    cheaper than caching an exploded ~n_tokens-row frame) and
+    hash-joins them against the surviving gram set.  Coverage positions
+    never explode: per doc the hit window STARTS collect locally
+    (bounded by the doc's own length) and merge into spans row-locally.
+    Grams are FINGERPRINTED at generation (see
+    :func:`_window_gram_hashes`): the count shuffle, the surviving-gram
+    broadcast/join and the window rows all carry 8-byte longs, and the
+    gram string is never built."""
+    if window < 2:
+        raise ValueError(f"window must be >= 2, got {window}")
+    wins = _window_gram_hashes(df, text_col, id_col, window)
+    aggs = [F.count("*").alias("__n")]
+    if keep_first:
+        aggs.append(F.min(F.struct(F.col(id_col).alias("i"),
+                                   F.col("__start").alias("s")))
+                    .alias("__c"))
+    dup = (wins.groupBy("__gh").agg(*aggs)
+               .where(F.col("__n") >= min_count).drop("__n"))
+    hits = wins.join(dup, "__gh")
+    if keep_first:
+        hits = hits.where(~((F.col(id_col) == F.col("__c.i"))
+                            & (F.col("__start") == F.col("__c.s"))))
+    return _merge_spans(hits, id_col, window)
 
 
 def duplicated_span_stats(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", window: int = 5,
                           min_count: int = 2) -> DataFrame:
     """Exact-substring duplication profile, the Lee et al. 2022
-    ("Deduplicating Training Data Makes Language Models Better")
-    measurement: a token WINDOW (production pipelines use ~50; pass a
-    small ``window`` for short docs) is *duplicated* when its exact
-    word sequence occurs >= ``min_count`` times anywhere in the corpus
-    — across docs or repeated within one.  Returns, for every doc
-    containing at least one duplicated window,
+    measurement (:func:`_dup_spans`; production pipelines use a window
+    of ~50, pass a small ``window`` for short docs).  Returns, for every
+    doc containing at least one duplicated window,
 
         (id_col, n_tokens, dup_tokens, n_spans)
 
-    where ``dup_tokens`` counts token positions covered by any
-    duplicated window and ``n_spans`` counts the maximal runs of
-    covered positions (overlapping/adjacent windows merge — the spans
-    a scrubbing pass would actually cut).  ``dup_tokens / n_tokens``
-    is the doc's duplicated-text fraction; kept as two integers so the
-    driver oracle compares exactly.
-
-    100-TB shape: two corpus scans and two shuffles, nothing
-    quadratic.  Pass 1 counts window occurrences grouped by the gram —
-    map-side partial aggregation collapses the (Zipf-skewed) hot head
-    before the shuffle, and only grams at/over ``min_count`` survive
-    the filter.  Pass 2 re-derives the windows (recomputing a parquet
-    scan + split is cheaper than caching an exploded ~n_tokens-row
-    frame) and hash-joins them against the surviving gram set.  The
-    span merge never explodes coverage positions: per doc the matched
-    window STARTS collect locally (bounded by the doc's own length),
-    sort, and fold through one Catalyst ``aggregate`` lambda — a
-    linear interval merge inside whole-stage codegen, no UDF.  Grams
-    are FINGERPRINTED at generation (see :func:`_window_gram_hashes`):
-    the count shuffle, the surviving-gram broadcast/join, and the
-    window rows all carry 8-byte longs instead of ~window-token
-    strings, and the gram string is never built at all — the output is
-    key-encoding-independent, so the driver oracle proves the
-    refactor."""
-    if window < 2:
-        raise ValueError(f"window must be >= 2, got {window}")
-
-    def windows():
-        return _window_gram_hashes(df, text_col, id_col, window)
-
-    hits = (windows().join(_dup_grams(windows(), min_count), "__gh")
-            .select(id_col,
-                    # n_tokens = n_windows + window - 1 (re-derived from
-                    # the window count so the rows carry one int, not
-                    # the token array)
-                    (F.col("__nwin") + F.lit(window - 1)).alias("__ntok"),
-                    F.col("__start")))
-    acc0 = F.struct(F.lit(-1).cast("long").alias("end"),
-                    F.lit(0).cast("long").alias("cov"),
-                    F.lit(0).cast("long").alias("spans"))
-
-    def _merge(acc, s):
-        e = s + F.lit(window - 1)
-        return F.struct(
-            F.greatest(acc["end"], e).alias("end"),
-            (acc["cov"] + F.greatest(
-                e - F.greatest(acc["end"], s - 1),
-                F.lit(0).cast("long"))).alias("cov"),
-            (acc["spans"] + F.when(s > acc["end"] + 1, 1)
-                             .otherwise(0)).alias("spans"))
-
-    folded = F.aggregate(F.sort_array(F.collect_list("__start")),
-                         acc0, _merge)
-    return (hits.groupBy(id_col)
-            .agg(F.first("__ntok").cast("long").alias("n_tokens"),
-                 folded.alias("__f"))
+    where ``n_spans`` counts the maximal runs of covered positions —
+    exactly the spans :func:`scrub_duplicated_spans` cuts with
+    ``keep_first=False`` — and ``dup_tokens`` the positions they cover.
+    ``dup_tokens / n_tokens`` is the doc's duplicated-text fraction;
+    kept as two integers so the driver oracle compares exactly."""
+    return (_dup_spans(df, text_col, id_col, window, min_count, False)
             .select(id_col, "n_tokens",
-                    F.col("__f.cov").alias("dup_tokens"),
-                    F.col("__f.spans").alias("n_spans")))
+                    _covered(F.col("__spans")).alias("dup_tokens"),
+                    F.size("__spans").cast("long").alias("n_spans")))
 
 
 def scrub_duplicated_spans(df: DataFrame, text_col: str = "text",
@@ -672,10 +695,10 @@ def scrub_duplicated_spans(df: DataFrame, text_col: str = "text",
                            keep_first: bool = True) -> DataFrame:
     """The CUT that follows :func:`duplicated_span_stats`'s measurement
     (Lee et al. 2022 ExactSubstr removal): rebuild every doc's text
-    with the tokens inside duplicated windows removed.  With
-    ``keep_first=True`` (default) each duplicated gram's CANONICAL
-    occurrence — the lexicographically smallest (doc id, position) —
-    is exempt from its OWN gram's cut, deterministically and
+    with the tokens inside duplicated windows (:func:`_dup_spans`)
+    removed.  With ``keep_first=True`` (default) each duplicated gram's
+    CANONICAL occurrence — the lexicographically smallest (doc id,
+    position) — is exempt from its OWN gram's cut, deterministically and
     engine-independently (overlapping cuts from OTHER duplicated
     grams may still remove some of a canonical occurrence's tokens,
     matching ExactSubstr's actual behavior — there is no guarantee an
@@ -687,72 +710,23 @@ def scrub_duplicated_spans(df: DataFrame, text_col: str = "text",
 
     where ``text_scrubbed`` is the kept tokens re-joined with single
     spaces (split/join is lossless on the tokenizer's space-delimited
-    contract) — "" for a fully duplicated doc.
-
-    100-TB shape: the same two corpus passes as the stats op.  Grams
-    are FINGERPRINTED at generation (see :func:`_window_gram_hashes`),
-    so every exchange carries 8-byte keys, and for ``keep_first`` the
-    duplicate filter and the canonical occurrence come out of ONE
-    aggregation (count + min(struct(id, pos)) share the
-    groupBy(fingerprint) shuffle) instead of two aggregations + two
-    joins.  Cut positions
-    never explode: per doc the non-exempt window starts fold into a
-    merged SPAN ARRAY (one Catalyst ``aggregate``), and the rebuild is
-    a row-local ``filter`` over the token array testing each position
+    contract) — "" for a fully duplicated doc.  The rebuild is a
+    row-local ``filter`` over the token array testing each position
     against that doc's spans (O(n_tokens × n_spans), no UDF, no
     shuffle).  Docs with nothing to cut pass their original text
     through untouched."""
-    if window < 2:
-        raise ValueError(f"window must be >= 2, got {window}")
-    wins = _window_gram_hashes(df, text_col, id_col,
-                               window).drop("__nwin")
-    if keep_first:
-        # one shuffle yields BOTH the >= min_count filter and the
-        # canonical (min id, min pos) occurrence per surviving gram
-        canon = _dup_grams(wins, min_count,
-                           F.min(F.struct(F.col(id_col).alias("i"),
-                                          F.col("__start").alias("s")))
-                            .alias("__c"))
-        hits = (wins.join(canon, "__gh")
-                .where(~((F.col(id_col) == F.col("__c.i"))
-                         & (F.col("__start") == F.col("__c.s")))))
-    else:
-        hits = wins.join(_dup_grams(wins, min_count), "__gh")
-    empty_spans = F.expr(
-        "CAST(array() AS array<struct<s: bigint, e: bigint>>)")
-    acc0 = F.struct(F.lit(-1).cast("long").alias("end"),
-                    empty_spans.alias("arr"))
-
-    def _merge(acc, s):
-        e = s + F.lit(window - 1)
-        new_end = F.greatest(acc["end"], e)
-        grown_last = F.struct(
-            F.element_at(acc["arr"], -1)["s"].alias("s"),
-            new_end.alias("e"))
-        return F.struct(
-            new_end.alias("end"),
-            F.when(s > acc["end"] + 1,
-                   F.concat(acc["arr"],
-                            F.array(F.struct(s.alias("s"), e.alias("e")))))
-             .otherwise(F.concat(
-                 F.slice(acc["arr"], 1, F.size(acc["arr"]) - 1),
-                 F.array(grown_last))).alias("arr"))
-
-    spans = (hits.groupBy(id_col)
-             .agg(F.aggregate(F.sort_array(F.collect_list("__start")),
-                              acc0, _merge)["arr"].alias("__spans")))
+    spans = _dup_spans(df, text_col, id_col, window, min_count,
+                       keep_first).select(id_col, "__spans")
     toks = _shingle_toks_expr(text_col)
     sp = F.col("__spans")
     kept = F.concat_ws(" ", F.filter(
         toks, lambda t, i: ~F.exists(
             sp, lambda r: ((i + 1) >= r["s"]) & ((i + 1) <= r["e"]))))
-    n_cut = F.aggregate(sp, F.lit(0).cast("long"),
-                        lambda a, r: a + r["e"] - r["s"] + 1)
     return (df.join(spans, id_col, "left")
             .select(F.col(id_col),
                     F.size(toks).cast("long").alias("n_tokens"),
                     F.when(sp.isNull(), F.lit(0).cast("long"))
-                     .otherwise(n_cut).alias("n_cut"),
+                     .otherwise(_covered(sp)).alias("n_cut"),
                     F.when(sp.isNull(),
                            F.coalesce(F.col(text_col), F.lit("")))
                      .otherwise(kept).alias("text_scrubbed")))

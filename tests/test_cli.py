@@ -69,6 +69,31 @@ def test_cli_grouped_build_with_ckpt_resume(spark, input_path, tmp_path,
     assert s1 == s2
 
 
+def test_cli_grouped_counts_groups_without_reading_its_output(
+        spark, input_path, tmp_path, capsys, monkeypatch):
+    """``groups`` is one per source, counted from the write itself: the
+    output table is never read back."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    n_sources = spark.read.parquet(input_path).select("source").distinct().count()
+    out = str(tmp_path / "g")
+    read = []
+    parquet = DataFrameReader.parquet
+
+    def recording(self, *paths, **kw):
+        read.extend(paths)
+        return parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording)
+    m = _run(capsys, ["--input", input_path, "--output", out, "--group-by",
+                      "source", "--sketches", "quotient:tokens",
+                      "hll:tokens"])
+    monkeypatch.undo()
+    assert m["groups"] == n_sources
+    assert out not in read and read == [input_path]
+    assert spark.read.parquet(out).count() == 2 * n_sources
+
+
 def test_spark_submit_py_files_end_to_end(input_path, tmp_path):
     """The north rule's invocation shape, for real: a SEPARATE JVM via
     `spark-submit --py-files qsketch.zip`, executors importing qsketch

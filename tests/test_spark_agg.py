@@ -710,6 +710,24 @@ def test_unknown_kind_fails_before_checkpoint_pin(tiny_df, tmp_path):
     assert not os.path.exists(os.path.join(ck, "r"))
 
 
+def test_duplicate_spec_names_fail_before_any_job(spark, tiny_df):
+    """Two specs of one name used to fold into one state: ``build``'s CMS
+    counted every token twice, and ``build_grouped`` wrote two rows per
+    group or one depending on the partition count."""
+    sc = spark.sparkContext
+    cms = SketchSpec("cms", "tokens")
+    sc.setJobGroup("dup-specs", "duplicate spec names")
+    try:
+        for call in (lambda: build(tiny_df, (cms, cms)),
+                     lambda: build_grouped(tiny_df, (cms, SketchSpec("hll"),
+                                                     cms), "source")):
+            with pytest.raises(ValueError, match=r"\['cms:tokens'\]"):
+                call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("dup-specs")) == []
+
+
 def test_cardinality_gives_each_kind_its_own_params(spark):
     """``queries.cardinality`` passes hll only hll params and quotient
     only quotient params; a param neither accepts raises."""

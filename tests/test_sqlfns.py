@@ -1,11 +1,10 @@
-"""SQL-registered sketch functions + salting helper."""
+"""SQL-registered sketch functions."""
 
 import numpy as np
 
 import pyspark.sql.functions as F
 
 from qsketch.spark.agg import SketchSpec, build
-from qsketch.spark.io import salted
 from qsketch.spark.sqlfns import (
     register_fingerprint,
     register_frequency,
@@ -41,15 +40,6 @@ def test_sql_fingerprint_parity(spark):
     expect = fnv1a64(np.arange(100, dtype=np.int64)).view(np.int64)
     for r in rows:
         assert r["fp"] == int(expect[r["id"]])
-
-
-def test_salted_deterministic_and_spread(spark, tiny_df):
-    s1 = salted(tiny_df, "source", 16).select("doc_id", "__salt").collect()
-    s2 = salted(tiny_df, "source", 16).select("doc_id", "__salt").collect()
-    assert {r["doc_id"]: r["__salt"] for r in s1} == \
-           {r["doc_id"]: r["__salt"] for r in s2}
-    vals = {r["__salt"] for r in s1}
-    assert vals <= set(range(16)) and len(vals) >= 12  # spread across buckets
 
 
 def test_membership_timed_struct(spark, tiny_df):

@@ -1,9 +1,12 @@
-"""The word rule and the seeded draw on edge inputs, and where they live.
+"""The word rule, the seeded draw and the duplicated-span rule on edge
+inputs, and where they live.
 
 Every operator that splits text into words or draws md5(id#seed) runs
 on one one-partition frame holding NULL, empty, whitespace-only and
 double-space text plus a duplicate id; the expected rows are pinned
-literally.  A source guard keeps each rule in one helper of
+literally.  The two duplicated-span operators run on a frame of the same
+kinds plus duplicated windows exactly ``window`` and ``window + 1``
+apart.  Source guards keep each rule in one helper of
 ``qsketch.spark.textops``.
 """
 
@@ -273,6 +276,56 @@ def test_driver_word_queries_on_edge_text(spark, edge, tmp_path):
         assert sorted(got, key=repr) == sorted(want, key=repr), name
 
 
+BLOCKS = " ".join(f"d0 d1 d2 d3 d4 u{i}" for i in range(500))
+SPAN_ROWS = [
+    (1, None), (2, ""), (3, "   "), (4, "a  b c"),
+    (5, "r s t u v w"), (5, "r s t u v w"),
+    (6, "g1 g2 g3 g4 g5 g1 g2 g3 g4 g5"),  # dup windows 5 apart: one span
+    (7, "h1 h2 h3 h4 h5 x h1 h2 h3 h4 h5"),  # 6 apart: two spans
+    (8, BLOCKS), (9, "d0 d1 d2 d3 d4"),
+]
+_PASS = [(1, 0, 0, ""), (2, 0, 0, ""), (3, 4, 0, "   "), (4, 4, 0, "a  b c")]
+# (id, n_tokens, n_cut, text_scrubbed) per keep_first, window 5
+SCRUB = {
+    False: _PASS + [
+        (5, 6, 6, ""), (5, 6, 6, ""), (6, 10, 10, ""), (7, 11, 10, "x"),
+        (8, 3000, 2500, " ".join(f"u{i}" for i in range(500))),
+        (9, 5, 5, "")],
+    # the canonical (smallest id, position) occurrence of each gram stays:
+    # both id-5 rows hold it, so neither is cut
+    True: _PASS + [
+        (5, 6, 0, "r s t u v w"), (5, 6, 0, "r s t u v w"),
+        (6, 10, 5, "g1 g2 g3 g4 g5"), (7, 11, 5, "h1 h2 h3 h4 h5 x"),
+        (8, 3000, 2495,
+         "d0 d1 d2 d3 d4 " + " ".join(f"u{i}" for i in range(500))),
+        (9, 5, 5, "")],
+}
+
+
+@pytest.fixture(scope="module")
+def span_edge(spark):
+    return spark.createDataFrame(
+        SPAN_ROWS, "doc_id long, text string").coalesce(1)
+
+
+def test_duplicated_span_stats_on_edge_text(span_edge):
+    """The repeated id is one row; its windows count twice."""
+    from qsketch.spark.textops import duplicated_span_stats
+
+    got = sorted(tuple(r) for r in duplicated_span_stats(span_edge).collect())
+    assert got == [(5, 6, 6, 1), (6, 10, 10, 1), (7, 11, 10, 2),
+                   (8, 3000, 2500, 500), (9, 5, 5, 1)]
+
+
+@pytest.mark.parametrize("keep_first", [False, True])
+def test_scrub_duplicated_spans_on_edge_text(span_edge, keep_first):
+    from qsketch.spark.textops import scrub_duplicated_spans
+
+    got = [tuple(r) for r in scrub_duplicated_spans(
+        span_edge, keep_first=keep_first).collect()]
+    assert sorted(got) == sorted(SCRUB[keep_first])
+
+
 class _Calls(ast.NodeVisitor):
     """Innermost enclosing function of every call matching ``pred``."""
 
@@ -301,8 +354,9 @@ def _const(node, value):
     return isinstance(node, ast.Constant) and node.value == value
 
 
-def _sources():
-    paths = sorted((REPO / "qsketch").rglob("*.py")) + [
+def _sources(*dirs):
+    paths = sorted(p for d in ("qsketch",) + dirs
+                   for p in (REPO / d).rglob("*.py")) + [
         REPO / "__spark_entry__.py"]
     return [ast.parse(p.read_text()) for p in paths]
 
@@ -332,3 +386,30 @@ def test_one_word_rule_one_draw_one_from_bytes_in_sources():
            if isinstance(c, ast.ClassDef) for f in c.body
            if isinstance(f, ast.FunctionDef) and f.name == "from_bytes"]
     assert own == []
+
+
+def test_one_span_rule_in_sources():
+    """Both span operators read ``_dup_spans``; no ``_dup_grams`` and no
+    Catalyst fold (``F.aggregate`` over a ``collect_list``) remain in
+    ``qsketch/`` or ``tools/``."""
+    def dup_spans(n):
+        return isinstance(n.func, ast.Name) and n.func.id == "_dup_spans"
+
+    def fold(n):
+        return _is_f(n, "aggregate") and any(
+            _is_f(c, "collect_list") for c in ast.walk(n.args[0]))
+
+    trees = _sources("tools")
+    found = {}
+    for pred in (dup_spans, fold):
+        v = _Calls(pred)
+        for tree in trees:
+            v.visit(tree)
+        found[pred.__name__] = sorted(v.hits)
+    assert found == {
+        "dup_spans": ["duplicated_span_stats", "scrub_duplicated_spans"],
+        "fold": []}
+    assert not [n for tree in trees for n in ast.walk(tree)
+                if (isinstance(n, ast.FunctionDef) and n.name == "_dup_grams")
+                or (isinstance(n, ast.Name) and n.id == "_dup_grams")
+                or (isinstance(n, ast.Attribute) and n.attr == "_dup_grams")]

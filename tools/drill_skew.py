@@ -1,8 +1,9 @@
 """Adversarial skew drill (VERDICT r4 item 5): turn the "skew cannot
 create a hot task" design claims into measured numbers.
 
-Two scenarios, each measured with REAL Spark task durations (REST API
-task list for the job's stages, not wall-clock guesses):
+Two scenarios, each measured with REAL Spark task durations (the job
+group's stages, read from the event log after the session stops — not
+wall-clock guesses):
 
 A. **Grouped build under 99% source skew** — one source holds 99% of
    rows.  Claim: build_grouped is map-side combine over row-balanced
@@ -32,14 +33,18 @@ are recorded in SCALE.md)
 from __future__ import annotations
 
 import json
+import os
+import shutil
 import statistics
 import sys
+import tempfile
 import time
-import urllib.request
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from drill_log import event_log_conf, stages_by_group  # noqa: E402
 
 from qsketch.spark.agg import SketchSpec, build_grouped  # noqa: E402
 from qsketch.spark.io import generate_tokenized  # noqa: E402
@@ -52,34 +57,20 @@ from qsketch.spark.textops import (banded_signatures,  # noqa: E402
 CPUS = 8
 
 
-def _rest(sc, path: str):
-    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}{path}"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.load(r)
-
-
-def task_stats(sc, group: str) -> list[dict]:
+def task_stats(stages: dict[str, list[dict]], group: str) -> list[dict]:
     """max/median REAL task duration per stage for all jobs in a job
     group (stages with <4 tasks are scheduling noise, skipped)."""
-    jobs = [j for j in _rest(sc, "/jobs") if j.get("jobGroup") == group]
     out = []
-    for j in jobs:
-        for sid in j["stageIds"]:
-            try:
-                tasks = _rest(sc, f"/stages/{sid}/0/taskList?length=5000")
-            except Exception:
-                continue
-            dur = sorted(t["duration"] for t in tasks
-                         if t.get("duration") is not None)
-            if len(dur) < 4:
-                continue
-            out.append({
-                "stage": sid, "n_tasks": len(dur),
-                "max_ms": dur[-1],
-                "median_ms": statistics.median(dur),
-                "ratio": round(dur[-1] / max(statistics.median(dur), 1e-9),
-                               2),
-            })
+    for st in stages.get(group, ()):
+        dur = st["durations"]
+        if len(dur) < 4:
+            continue
+        out.append({
+            "stage": st["stage"], "n_tasks": len(dur),
+            "max_ms": dur[-1],
+            "median_ms": statistics.median(dur),
+            "ratio": round(dur[-1] / max(statistics.median(dur), 1e-9), 2),
+        })
     return out
 
 
@@ -104,12 +95,8 @@ def drill_grouped_build(spark) -> dict:
     n_states = merged.count()
     wall = time.perf_counter() - t0
     sc.setJobGroup(None, None)
-    stages = task_stats(sc, "skew_grouped")
-    # the partial stage is the one with 64 tasks
-    partial = max(stages, key=lambda s: s["n_tasks"])
     return {"frac_hot": round(frac_hot, 4), "n_states": n_states,
-            "wall_sec": round(wall, 2), "partial_stage": partial,
-            "all_stages": stages}
+            "wall_sec": round(wall, 2)}
 
 
 def _skewed_docs(spark):
@@ -157,8 +144,6 @@ def drill_neardup_cluster(spark) -> dict:
     n_docs = groups.count()
     wall = time.perf_counter() - t0
     sc.setJobGroup(None, None)
-    stages = task_stats(sc, "skew_neardup")
-    worst = max(stages, key=lambda s: s["ratio"]) if stages else None
     # rescue path: same cap, plus exact-verified star pairs through each
     # dropped bucket's representative — linear cost, cluster recovered
     t0 = time.perf_counter()
@@ -174,19 +159,26 @@ def drill_neardup_cluster(spark) -> dict:
             "cluster_sacrificed_by_cap": n_groups == n_docs,
             "n_groups_with_rescue": n_groups_rescued,
             "rescue_wall_sec": round(wall_rescue, 2),
-            "wall_sec": round(wall, 2),
-            "worst_stage_by_ratio": worst, "all_stages": stages}
+            "wall_sec": round(wall, 2)}
 
 
 def main() -> None:
-    spark = make_session(CPUS, app="qsketch-skew",
-                         **{"spark.ui.enabled": "true"})
+    log_dir = tempfile.mkdtemp(prefix="drill-skew-")
+    spark = make_session(CPUS, app="qsketch-skew", **event_log_conf(log_dir))
     spark.sparkContext.setLogLevel("ERROR")
     try:
         a = drill_grouped_build(spark)
         b = drill_neardup_cluster(spark)
     finally:
         spark.stop()
+    stages = stages_by_group(log_dir)
+    shutil.rmtree(log_dir)
+    a["all_stages"] = task_stats(stages, "skew_grouped")
+    # the partial stage is the one with 64 tasks
+    a["partial_stage"] = max(a["all_stages"], key=lambda s: s["n_tasks"])
+    b["all_stages"] = task_stats(stages, "skew_neardup")
+    b["worst_stage_by_ratio"] = max(b["all_stages"],
+                                    key=lambda s: s["ratio"], default=None)
     print(json.dumps({"grouped_build_99pct_skew": a,
                       "neardup_10pct_cluster": b}, indent=2))
 

@@ -1,10 +1,11 @@
-"""Round-6 drill: ExactSubstr duplicated-span shuffle volume at the
-production window size (VERDICT r5 item 7).
+"""Drill: ExactSubstr duplicated-span shuffle volume at the production
+window size.
 
 Runs duplicated_span_stats at window=5 and window=50 over sf0.1 with
 (a) the shipped fingerprint path and (b) a local reconstruction of the
-round-5 string-gram path, and reports wall time plus the total shuffle
-write bytes of each run read from the Spark status store.
+older string-gram path, and prints wall time plus the total shuffle
+write bytes of each run, read from the Spark event log after the
+session stops.
 
 Usage: python tools/drill_spans.py [sf_dir]
 """
@@ -12,18 +13,24 @@ Usage: python tools/drill_spans.py [sf_dir]
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from drill_log import event_log_conf, stages_by_group  # noqa: E402
+
 
 def _string_path_span_stats(df, window: int):
-    """Round-5 implementation: Catalyst string grams, string-keyed
-    groupBy/join (kept here only as the drill's baseline)."""
-    from qsketch.spark.textops import _shingle_toks_expr
+    """The string-gram path: Catalyst string grams, string-keyed
+    groupBy/join, then the shipped span merge (kept here only as the
+    drill's baseline)."""
+    from qsketch.spark.textops import (_covered, _merge_spans,
+                                       _shingle_toks_expr)
 
     w = _shingle_toks_expr("text")
     starts = F.sequence(F.lit(1), F.greatest(F.size(w) - window + 1,
@@ -42,62 +49,22 @@ def _string_path_span_stats(df, window: int):
     dup = (windows().groupBy("gram").agg(F.count("*").alias("__n"))
            .where(F.col("__n") >= 2).select("gram"))
     hits = (windows().join(dup, "gram")
-            .select("doc_id",
-                    (F.col("__nwin") + F.lit(window - 1)).alias("__ntok"),
+            .select("doc_id", "__nwin",
                     (F.col("__p0") + 1).cast("long").alias("__start")))
-    acc0 = F.struct(F.lit(-1).cast("long").alias("end"),
-                    F.lit(0).cast("long").alias("cov"),
-                    F.lit(0).cast("long").alias("spans"))
-
-    def _merge(acc, s):
-        e = s + F.lit(window - 1)
-        return F.struct(
-            F.greatest(acc["end"], e).alias("end"),
-            (acc["cov"] + F.greatest(
-                e - F.greatest(acc["end"], s - 1),
-                F.lit(0).cast("long"))).alias("cov"),
-            (acc["spans"] + F.when(s > acc["end"] + 1, 1)
-                             .otherwise(0)).alias("spans"))
-
-    folded = F.aggregate(F.sort_array(F.collect_list("__start")),
-                         acc0, _merge)
-    return (hits.groupBy("doc_id")
-            .agg(F.first("__ntok").cast("long").alias("n_tokens"),
-                 folded.alias("__f"))
+    return (_merge_spans(hits, "doc_id", window)
             .select("doc_id", "n_tokens",
-                    F.col("__f.cov").alias("dup_tokens"),
-                    F.col("__f.spans").alias("n_spans")))
-
-
-def _shuffle_bytes_since(spark, seen: set) -> tuple[int, set]:
-    """Sum shuffleWriteBytes over stages not in ``seen`` (UI REST API
-    on localhost — the drill session runs with the UI enabled)."""
-    import json
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/stages") as r:
-        stages = json.load(r)
-    total = 0
-    ids = set(seen)
-    for st in stages:
-        key = (st["stageId"], st["attemptId"])
-        if key in seen:
-            continue
-        ids.add(key)
-        total += st.get("shuffleWriteBytes", 0)
-    return total, ids
+                    _covered(F.col("__spans")).alias("dup_tokens"),
+                    F.size("__spans").cast("long").alias("n_spans")))
 
 
 def main(sf_dir: str = "/root/testdata/sf0.1") -> None:
     from qsketch.spark.session import make_session
     from qsketch.spark.textops import duplicated_span_stats
 
-    spark = make_session(8, **{"spark.ui.enabled": "true"})
+    log_dir = tempfile.mkdtemp(prefix="drill-spans-")
+    spark = make_session(8, **event_log_conf(log_dir))
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    seen: set = set()
-    _, seen = _shuffle_bytes_since(spark, seen)
+    walls = {}
     for window in (5, 50):
         for label, fn in (("fingerprint",
                            lambda w=window: duplicated_span_stats(
@@ -105,15 +72,18 @@ def main(sf_dir: str = "/root/testdata/sf0.1") -> None:
                           ("string-gram",
                            lambda w=window: _string_path_span_stats(
                                docs, w))):
-            spark.sparkContext.setJobDescription(
-                f"span drill {label} window={window}")
+            group = f"{label} window={window}"
+            spark.sparkContext.setJobGroup(group, group)
             t0 = time.perf_counter()
             fn().write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            sh, seen = _shuffle_bytes_since(spark, seen)
-            print(f"window={window:3d} {label:12s} "
-                  f"wall={dt:6.2f}s shuffle_write={sh / 1e6:8.2f} MB")
+            walls[group] = (window, label, time.perf_counter() - t0)
     spark.stop()
+    stages = stages_by_group(log_dir)
+    shutil.rmtree(log_dir)
+    for group, (window, label, dt) in walls.items():
+        sh = sum(s["shuffle_write"] for s in stages.get(group, ()))
+        print(f"window={window:3d} {label:12s} "
+              f"wall={dt:6.2f}s shuffle_write={sh / 1e6:8.2f} MB")
 
 
 if __name__ == "__main__":
