@@ -72,7 +72,6 @@ import os
 import threading
 import time
 import uuid
-import warnings
 from dataclasses import dataclass, field
 from functools import cached_property, partial
 from typing import Callable, Iterator, NamedTuple
@@ -311,32 +310,16 @@ def _pin_ckpt_slicing(ckpt_dir: str, run_id: str, meta: dict) -> None:
     The pin also records what the states were built FROM (input
     identity, spec params, group column — see _partials): a resume
     against other input or other specs would merge foreign states.
+    The pin must equal this run's meta key for key: a key the pin lacks
+    (an older or empty pin) is exactly the resume it cannot check.
     """
     meta_path = os.path.join(ckpt_dir, run_id, "_slicing.json")
     if os.path.exists(meta_path):
         with open(meta_path) as fh:
             prev = json.load(fh)
-        # The core key must ALWAYS be present: an empty or corrupt pin
-        # ({}) would otherwise "validate" any resume via the
-        # grandfathering path below — a silently unprotected resume.
-        if "n_tasks" not in prev:
-            raise ValueError(
-                f"checkpoint {run_id!r} has a corrupt slicing pin "
-                f"({meta_path}: missing 'n_tasks') — cannot verify the "
-                "resume is safe. Use a new run_id.")
-        # grandfather pins written before a new meta key existed: only
-        # the keys the old pin recorded participate in the comparison
-        # (a pin can gain stricter keys across versions without
-        # invalidating every in-flight checkpoint) — but say so, so a
-        # resume that silently skipped a newer check is visible
-        skipped = sorted(set(meta) - set(prev))
-        if skipped:
-            warnings.warn(
-                f"checkpoint {run_id!r}: slicing pin predates key(s) "
-                f"{skipped}; accepting resume on the pin's recorded "
-                "keys only", stacklevel=2)
-        meta_cmp = {k: v for k, v in meta.items() if k in prev}
-        differ = sorted(k for k in prev if prev[k] != meta_cmp.get(k))
+        differ = sorted(k for k in prev.keys() | meta.keys()
+                        if k not in prev or k not in meta
+                        or prev[k] != meta[k])
         if differ:
             raise ValueError(
                 f"checkpoint {run_id!r} was written with different "

@@ -513,6 +513,15 @@ def epoch_shuffle(df: DataFrame, epoch: int = 0,
     per row, so each row's position is its partition's row offset +
     its local index.  At 100 TB the only wide op is the one range
     exchange a shuffle intrinsically requires."""
+    return _epoch_order(df, epoch, id_col, seed, pos_col, n_partitions)[0]
+
+
+def _epoch_order(df: DataFrame, epoch: int, id_col: str, seed: str,
+                 pos_col: str = "pos", n_partitions: int | None = None
+                 ) -> tuple[DataFrame, int]:
+    """:func:`epoch_shuffle`'s frame and its row total, which the
+    prefix-sum pass counts anyway (composing callers need no extra
+    corpus scan for it)."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     keyed = df.withColumn("__key",
@@ -526,12 +535,7 @@ def epoch_shuffle(df: DataFrame, epoch: int = 0,
                             + [StructField(pos_col, LongType(), False)])
     out, total = _range_prefix_scan(keyed, ["__key", id_col], None,
                                     n_partitions, emit, out_schema)
-    out = out.drop("__key")
-    # the prefix-sum pass already counted every partition; expose the
-    # total so composing callers (vocabulary_growth) need no extra
-    # corpus scan just for n_rows
-    out._qsketch_total_rows = total  # type: ignore[attr-defined]
-    return out
+    return out.drop("__key"), total
 
 
 def _doc_distinct_gram_strings(df: DataFrame, text_col: str,
@@ -710,19 +714,25 @@ def scrub_duplicated_spans(df: DataFrame, text_col: str = "text",
 
     where ``text_scrubbed`` is the kept tokens re-joined with single
     spaces (split/join is lossless on the tokenizer's space-delimited
-    contract) — "" for a fully duplicated doc.  The rebuild is a
-    row-local ``filter`` over the token array testing each position
-    against that doc's spans (O(n_tokens × n_spans), no UDF, no
-    shuffle).  Docs with nothing to cut pass their original text
-    through untouched."""
+    contract) — "" for a fully duplicated doc.  The rebuild keeps the
+    runs BETWEEN the doc's spans — one ``slice`` of the token array per
+    gap, starts ``[1] + [e + 1]`` and ends ``[s - 1] + [n]`` — then
+    flattens them (O(n_tokens + n_spans), no UDF, no shuffle).  The
+    token array is projected below the join, so the slice lambda reads
+    a materialized column instead of redoing the split per gap.  Docs
+    with nothing to cut pass their original text through untouched."""
     spans = _dup_spans(df, text_col, id_col, window, min_count,
                        keep_first).select(id_col, "__spans")
-    toks = _shingle_toks_expr(text_col)
+    toks = F.col("__toks")
     sp = F.col("__spans")
-    kept = F.concat_ws(" ", F.filter(
-        toks, lambda t, i: ~F.exists(
-            sp, lambda r: ((i + 1) >= r["s"]) & ((i + 1) <= r["e"]))))
-    return (df.join(spans, id_col, "left")
+    starts = F.concat(F.array(F.lit(1)), F.transform(sp, lambda r: r["e"] + 1))
+    ends = F.concat(F.transform(sp, lambda r: r["s"] - 1), F.array(F.size(toks)))
+    kept = F.concat_ws(" ", F.flatten(F.transform(
+        F.arrays_zip(starts.alias("a"), ends.alias("b")),
+        lambda r: F.slice(toks, r["a"], r["b"] - r["a"] + 1))))
+    return (df.select(id_col, text_col,
+                      _shingle_toks_expr(text_col).alias("__toks"))
+            .join(spans, id_col, "left")
             .select(F.col(id_col),
                     F.size(toks).cast("long").alias("n_tokens"),
                     F.when(sp.isNull(), F.lit(0).cast("long"))
@@ -981,7 +991,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
     a 2,000-doc cluster under max_bucket=64 yields a graph plain
     propagation cannot finish in 25 rounds; path halving closes it in
     a handful.  Only (id, label) pairs shuffle; each round is two
-    joins + one groupBy over the edge set.
+    joins + one groupBy over the edge set, run by one job: the
+    checkpoint write, whose Observation counts the changed labels.
 
     Each round the label frame is CHECKPOINTED through parquet (the
     standard hardened checkpoint for iterative Spark algorithms), for
@@ -1011,6 +1022,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
     so nothing references the scratch files after return."""
     import tempfile
     import uuid as _uuid
+
+    from pyspark.sql import Observation
 
     spark = pairs.sparkSession
     if work_dir is None:
@@ -1059,26 +1072,31 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
                     .select("id", F.least(
                         F.col("comp"),
                         F.coalesce(F.col("__nbr"),
-                                   F.col("comp"))).alias("comp")))
+                                   F.col("comp"))).alias("comp"),
+                        F.col("comp").alias("__old")))
             # path halving: comp := min(comp, comp[comp]).  Labels are
             # node ids, so every label has a row; monotone
             # non-increasing and bounded below by the component min,
             # hence still correct — and a stable state is reachable
-            # only when every node carries the component min.
+            # only when every node carries the component min.  The
+            # round's changed count rides the checkpoint write as an
+            # Observation over the carried old label: no second job.
             hop = prop.select(F.col("id").alias("comp"),
                               F.col("comp").alias("__cc"))
-            new = _ckpt(prop.join(hop, "comp", "left")
-                        .select("id", F.least(
-                            F.col("comp"),
-                            F.coalesce(F.col("__cc"),
-                                       F.col("comp"))).alias("comp")),
-                        f"labels-{i + 1}")
-            changed = (new.alias("n").join(labels.alias("o"), "id")
-                       .where(F.col("n.comp") != F.col("o.comp")).count())
-            labels = new
-            # labels-{i}'s files are no longer referenced (the changed
-            # count above was their last reader) — prune so scratch
-            # stays at two label generations, not O(rounds)
+            step = (prop.join(hop, "comp", "left")
+                    .select("id", F.least(
+                        F.col("comp"),
+                        F.coalesce(F.col("__cc"),
+                                   F.col("comp"))).alias("comp"), "__old"))
+            obs = Observation()
+            labels = _ckpt(step.observe(obs, F.count(F.when(
+                               F.col("comp") != F.col("__old"), 1))
+                               .alias("changed"))
+                           .select("id", "comp"), f"labels-{i + 1}")
+            changed = obs.get["changed"]
+            # labels-{i}'s files are no longer referenced (the write
+            # above was their last reader) — prune so scratch stays at
+            # two label generations, not O(rounds)
             _rm(f"{run_dir}/labels-{i}")
             if changed == 0:
                 break
@@ -1681,15 +1699,8 @@ def vocabulary_growth(df: DataFrame, n_buckets: int = 10,
 
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    ordered = epoch_shuffle(df.select(id_col, text_col), epoch=epoch,
-                            id_col=id_col, seed=seed)
-    # epoch_shuffle's prefix-sum pass already counted every partition —
-    # reuse its total instead of a dedicated full corpus scan.  The
-    # attribute is an informal contract (any intervening transformation
-    # would drop it), so fall back to a count() when absent.
-    n_docs = getattr(ordered, "_qsketch_total_rows", None)
-    if n_docs is None:
-        n_docs = ordered.count()
+    ordered, n_docs = _epoch_order(df.select(id_col, text_col), epoch,
+                                   id_col, seed)
     if n_docs == 0:
         raise ValueError("vocabulary_growth needs a non-empty corpus")
     if shingle_n == 1:

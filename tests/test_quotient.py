@@ -2,8 +2,15 @@
 
 properties.  Maps 1:1 to /root/reference/filter_test.go per SURVEY.md §5,
 with the reference's loose false-negative thresholds tightened to ZERO
-(the north-star contract) and FP bounded by alpha * 2**-r.
+(the north-star contract) and FP bounded by alpha * 2**-r, where the
+filter always stores the full fingerprint, r = 64 - q.  The size rule
+(grow an auto-resizing filter to the smallest q under the load cap,
+else raise) is the same for build, insert and merge, so merges are
+byte-identical in either order.
 """
+
+import ast
+import pathlib
 
 import numpy as np
 import pytest
@@ -68,15 +75,17 @@ def test_zero_false_negatives_at_half_load():
 
 def test_false_positive_bound():
     """Parity: TestQuotientFilterFalsePositives (filter_test.go:197-229),
-    tightened from 1% to the published alpha * 2**-r bound (+slack)."""
-    q, r = 10, 8
-    qf = QuotientFilter(q_bits=q, r_bits=r, max_load=0.9)
+    tightened from 1% to the published alpha * 2**-r bound.  With the
+    full fingerprint (r = 64 - q = 54) a false positive needs a 64-bit
+    hash collision: none among 100k disjoint probes."""
+    qf = QuotientFilter(q_bits=10, max_load=0.9)
     present = np.arange(900, dtype=np.int64)
     qf.insert(present)
+    assert qf.r_bits == 54
     probes = np.arange(10_000, 110_000, dtype=np.int64)  # disjoint from inserts
-    fpr = qf.contains(probes).mean()
-    bound = qf.load_factor * 2.0 ** (-r)
-    assert fpr <= 3 * bound + 1e-4, (fpr, bound)
+    assert qf.contains(present).all()
+    assert qf.contains(probes).sum() == 0
+    assert qf.fpr_bound() == qf.load_factor * 2.0 ** -54
 
 
 def test_overflow_raises_before_correctness_loss():
@@ -263,6 +272,100 @@ def test_cross_size_merge():
     m = small.merge(big)
     assert m.cardinality() == 5000
     assert m.contains(np.arange(5000)).all()
+
+
+def test_merge_commutative_with_mixed_settings():
+    """The merge result takes the larger q, the smaller max_load and
+    auto_resize if either side has it — so either order gives the same
+    bytes, whichever side carries which setting."""
+    fixed = QuotientFilter(q_bits=8)
+    fixed.insert(np.arange(200))
+    auto = QuotientFilter.build(np.arange(150, 400), q_bits=8)
+    assert fixed.merge(auto).to_bytes() == auto.merge(fixed).to_bytes()
+    m = fixed.merge(auto)
+    assert (m.q_bits, m.cardinality(), m.auto_resize) == (9, 400, True)
+
+    half = QuotientFilter(q_bits=8, max_load=0.5, auto_resize=True)
+    half.insert(np.arange(100))
+    most = QuotientFilter(q_bits=8, max_load=0.9, auto_resize=True)
+    most.insert(np.arange(100, 200))
+    assert half.merge(most).to_bytes() == most.merge(half).to_bytes()
+    m = most.merge(half)
+    assert (m.q_bits, m.max_load, m.cardinality()) == (9, 0.5, 200)
+
+
+def test_fixed_size_merge_raises_for_any_sizes():
+    """Without auto_resize on either side a union past the load cap
+    raises, whether the two sizes are equal or not."""
+    def fixed(q, vals):
+        qf = QuotientFilter(q_bits=q)
+        qf.insert(vals)
+        return qf
+
+    same = (fixed(7, np.arange(100)), fixed(7, np.arange(60, 160)))
+    cross = (fixed(6, np.arange(50)), fixed(7, np.arange(50, 160)))
+    for a, b in (same, cross):
+        for x, y in ((a, b), (b, a)):
+            with pytest.raises(QuotientFilterFullError, match="filter is full"):
+                x.merge(y)
+    # a cross-size union that fits takes the larger size, either order
+    a, b = fixed(6, np.arange(50)), fixed(7, np.arange(50, 100))
+    assert a.merge(b).to_bytes() == b.merge(a).to_bytes()
+    assert a.merge(b).q_bits == 7
+
+
+def test_build_at_small_q_grows_under_the_load_cap():
+    """``build(q_bits=...)`` treats q_bits as the smallest size allowed:
+    1,000 keys asked into 32 slots grow until they fit and serialize."""
+    qf = QuotientFilter.build(np.arange(1000), q_bits=5)
+    assert qf.load_factor < qf.max_load and qf.q_bits == 11
+    rt = QuotientFilter.from_bytes(qf.to_bytes())
+    assert rt.cardinality() == 1000 and rt.contains(np.arange(1000)).all()
+    assert QuotientFilter.build(np.arange(30), q_bits=5).q_bits == 6
+
+
+@pytest.mark.parametrize("max_load,q", [(0.5, 5), (0.75, 4)])
+def test_size_rule_is_shape_independent_at_the_exact_cap(max_load, q):
+    """n = max_load * 2**q keys exactly: the one-shot build, a merge of
+    two halves and batched inserts all land at the same size and bytes
+    (the load must stay UNDER max_load, for every path)."""
+    n = int(max_load * (1 << q))
+    h = _rand_hashes(n, 7)
+    assert len(h) == n
+    whole = QuotientFilter.build(h, max_load=max_load, pre_hashed=True)
+    halves = [QuotientFilter.build(p, max_load=max_load, pre_hashed=True)
+              for p in (h[: n // 2], h[n // 2:])]
+    grown = QuotientFilter(q_bits=3, max_load=max_load, auto_resize=True)
+    for part in np.array_split(h, 3):
+        grown.insert_hashes(part)
+    assert whole.q_bits == q + 1
+    assert (whole.to_bytes() == halves[0].merge(halves[1]).to_bytes()
+            == halves[1].merge(halves[0]).to_bytes() == grown.to_bytes())
+
+
+def test_from_bytes_rejects_short_remainder():
+    """The header records r = 64 - q; any other r is a corrupt state."""
+    blob = bytearray(QuotientFilter.build(np.arange(100), q_bits=8).to_bytes())
+    assert blob[17] == 56  # header r, after the 16-byte frame and q
+    blob[17] = 40
+    with pytest.raises(ValueError, match="corrupt"):
+        QuotientFilter.from_bytes(bytes(blob))
+
+
+def test_full_fingerprint_only_in_source():
+    """No ``r_bits=`` parameter, ``full_r`` or ``_regrow`` in quotient.py:
+    the filter has one remainder width and one size rule."""
+    path = pathlib.Path(__file__).resolve().parents[1] / "qsketch" / "quotient.py"
+    tree = ast.parse(path.read_text())
+    cls = next(n for n in tree.body
+               if isinstance(n, ast.ClassDef) and n.name == "QuotientFilter")
+    params = {a.arg for f in ast.walk(cls) if isinstance(f, ast.FunctionDef)
+              for a in f.args.args + f.args.kwonlyargs}
+    assert "r_bits" not in params
+    names = {getattr(n, "name", None) or getattr(n, "attr", None)
+             or getattr(n, "id", None) for n in ast.walk(tree)}
+    assert not names & {"full_r", "_regrow"}
+    assert "r_bits=" not in path.read_text()
 
 
 def test_serialization_roundtrip_bytes_stable():

@@ -539,34 +539,26 @@ def test_grouped_kmv_saturated_estimates(spark, tiny_df):
 
 
 def test_ckpt_pin_corrupt_and_grandfathered(tmp_path):
-    """An empty/corrupt slicing pin must fail loudly (it would otherwise
-    'validate' any resume via grandfathering); a legitimate old pin that
-    predates a newer meta key is accepted but emits a visible warning."""
+    """The pin must equal this run's meta key for key: an empty pin and
+    an old pin that lacks a newer key both raise (neither can check the
+    resume), and only an equal pin resumes."""
     import json
     import os
-    import warnings as _w
 
     from qsketch.spark.agg import _pin_ckpt_slicing
 
     ck = str(tmp_path / "ck")
-    os.makedirs(os.path.join(ck, "r1"))
-    # corrupt pin: {} must not validate anything
-    with open(os.path.join(ck, "r1", "_slicing.json"), "w") as fh:
-        json.dump({}, fh)
-    with pytest.raises(ValueError, match="corrupt slicing pin"):
-        _pin_ckpt_slicing(ck, "r1", {"n_tasks": 8, "plan_fingerprint": "x"})
-
-    # grandfathered pin (pre-plan_fingerprint era): accepted with warning
-    os.makedirs(os.path.join(ck, "r2"))
-    with open(os.path.join(ck, "r2", "_slicing.json"), "w") as fh:
-        json.dump({"n_tasks": 8}, fh)
-    with _w.catch_warnings(record=True) as rec:
-        _w.simplefilter("always")
-        _pin_ckpt_slicing(ck, "r2", {"n_tasks": 8, "plan_fingerprint": "x"})
-    assert any("predates key" in str(r.message) for r in rec)
-    # and the pinned core key still protects: mismatch raises
-    with pytest.raises(ValueError, match="mis-map"):
-        _pin_ckpt_slicing(ck, "r2", {"n_tasks": 2, "plan_fingerprint": "x"})
+    meta = {"n_tasks": 8, "plan_fingerprint": "x"}
+    for run_id, pin in (("empty", {}), ("old", {"n_tasks": 8})):
+        os.makedirs(os.path.join(ck, run_id))
+        with open(os.path.join(ck, run_id, "_slicing.json"), "w") as fh:
+            json.dump(pin, fh)
+        with pytest.raises(ValueError, match="plan_fingerprint.*mis-map"):
+            _pin_ckpt_slicing(ck, run_id, meta)
+    _pin_ckpt_slicing(ck, "new", meta)  # first run writes the pin
+    _pin_ckpt_slicing(ck, "new", dict(meta))  # an equal pin resumes
+    with pytest.raises(ValueError, match="n_tasks.*mis-map"):
+        _pin_ckpt_slicing(ck, "new", {**meta, "n_tasks": 2})
 
 
 def test_grouped_consume_fast_path_matches_gathered(spark, tiny_df):

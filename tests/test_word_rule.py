@@ -413,3 +413,12 @@ def test_one_span_rule_in_sources():
                 if (isinstance(n, ast.FunctionDef) and n.name == "_dup_grams")
                 or (isinstance(n, ast.Name) and n.id == "_dup_grams")
                 or (isinstance(n, ast.Attribute) and n.attr == "_dup_grams")]
+
+
+def test_scrub_span_cut_is_linear_in_sources():
+    """``scrub_duplicated_spans`` keeps the runs between spans by slicing
+    the token array: no per-token ``F.exists`` scan over the spans."""
+    v = _Calls(lambda n: _is_f(n, "exists"))
+    for tree in _sources():
+        v.visit(tree)
+    assert "scrub_duplicated_spans" not in v.hits
