@@ -8,10 +8,10 @@ partition with zero pre-shuffle, and only compact signatures shuffle).
 Every text fingerprint pass — window grams, distinct gram strings,
 shingle sets, winnowing, MinHash and SimHash — is one reduction over
 the same gram-stream kernel (:func:`_gram_pass`), which runs on the
-package's one per-row batch map (:func:`~.batchmap.id_map`): tokens
-are split JVM-side, each batch's flat token stream is hashed once, and
-the reduction gets (doc, start, rolling key) windows; ids pass through
-with their own Spark type.
+package's one per-row batch map (:func:`~.batchmap.id_map`): raw text
+is split in the worker, each batch's flat token stream is hashed once,
+and the reduction gets (doc, start, rolling key) windows; ids pass
+through with their own Spark type.
 
 Scale notes (100 TB):
   * exact dedup: one hash-aggregate shuffle on a 16-byte digest — the
@@ -41,7 +41,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..hash import fnv1a64, fnv1a64_buf, fnv1a64_str_array, splitmix64
@@ -84,7 +84,7 @@ def _shingle_toks_expr(text_col: str):
     empty doc the same phantom shingle hash — two empty docs would
     collide at similarity 1.0.  Interior empty tokens (double spaces)
     are kept so n>1 shingle positions match the SQL oracle's
-    ``string_split`` semantics."""
+    ``string_split`` semantics.  :class:`_GramBatch` is its Arrow form."""
     t = F.coalesce(F.col(text_col), F.lit(""))
     return F.when(t == "", F.expr("CAST(array() AS array<string>)")) \
             .otherwise(F.split(t, " "))
@@ -218,16 +218,23 @@ def _rolling_shingle_hash(wh: np.ndarray, n: int) -> np.ndarray:
 class _GramBatch:
     """One Arrow batch of docs as every text fingerprint pass sees it.
 
-    ``lens`` are the per-doc token counts, ``flat`` the flat token
-    array, ``wh`` its FNV-1a64 word hashes (hashed ONCE per batch from
-    the packed buffers, see :func:`_hash_str_arrow`) and ``doc_of`` the
-    doc index of every flat token."""
+    The raw text splits as :func:`_shingle_toks_expr` does.  ``lens``
+    are the per-doc token counts, ``flat`` the flat token array, ``wh``
+    its FNV-1a64 word hashes (hashed ONCE per batch from the packed
+    buffers, see :func:`_hash_str_arrow`) and ``doc_of`` the doc index
+    of every flat token."""
 
-    def __init__(self, toks: pa.Array):
-        n_docs = self.n_docs = len(toks)
+    def __init__(self, text: pa.Array):
+        n_docs = self.n_docs = len(text)
+        text = pc.fill_null(text, "")
+        toks = pc.split_pattern(text, " ")
         self.lens = (pc.list_value_length(toks)
                      .to_numpy(zero_copy_only=False).astype(np.int64))
         self.flat = toks.flatten()
+        empty = pc.equal(text, "").to_numpy(zero_copy_only=False)
+        if empty.any():  # "" splits to [""]: drop that one token
+            keep = pa.array(np.repeat(~empty, self.lens))
+            self.flat, self.lens[empty] = self.flat.filter(keep), 0
         self.wh = _hash_str_arrow(self.flat)
         self.doc_of = np.repeat(np.arange(n_docs, dtype=np.int64), self.lens)
         self.doc_start = np.concatenate(([0], np.cumsum(self.lens)[:-1]))
@@ -258,14 +265,13 @@ class _GramBatch:
 def _gram_pass(df: DataFrame, text_col: str, id_col: str | None,
                out_fields: list[tuple[str, str]], reduce) -> DataFrame:
     """Every text fingerprint pass: an :func:`~.batchmap.id_map` over
-    (id, :func:`_shingle_toks_expr` tokens), so tokenization is JVM-side
-    and each doc's tokens cross the Arrow boundary once.  Per batch
+    (id, text), so each doc's text crosses the Arrow boundary once and
+    :class:`_GramBatch` tokenizes it in the worker.  Per batch
     ``reduce(_GramBatch)`` returns ``(docs, columns)`` for ``out_fields``
     — ``docs`` the doc index of every output row, or None for one row
     per doc.  Only the reduced fingerprints leave Python."""
-    return id_map(df, id_col, [_shingle_toks_expr(text_col).alias("__toks")],
-                  out_fields,
-                  lambda batch: reduce(_GramBatch(batch.column("__toks"))))
+    return id_map(df, id_col, [F.col(text_col).alias("__text")], out_fields,
+                  lambda batch: reduce(_GramBatch(batch.column("__text"))))
 
 
 _SET_FIELDS = [("shs", "array<long>"), ("n", "int")]
@@ -887,19 +893,17 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "text",
     """
     ids = (pairs.select(F.explode(F.array("a", "b")).alias(id_col))
                 .distinct())
-    docs = (df.join(ids, id_col, "semi")
-              # guard: docs shorter than one shingle have no shingle set
-              .where(F.size(_shingle_toks_expr(text_col)) >= shingle_n))
-    sets = shingle_hash_sets(docs, text_col, id_col, shingle_n)
+    # docs shorter than one shingle have an empty set and never match;
+    # n > 0 keeps each ratio's denominator positive (ANSI: 0/0 errors)
+    sets = (shingle_hash_sets(df.join(ids, id_col, "semi"), text_col,
+                              id_col, shingle_n)
+            .where(F.col("n") > 0))
     sa = sets.select(F.col(id_col).alias("a"), F.col("shs").alias("__sha"),
                      F.col("n").alias("__na"))
     sb = sets.select(F.col(id_col).alias("b"), F.col("shs").alias("__shb"),
                      F.col("n").alias("__nb"))
     return (pairs.join(sa, "a").join(sb, "b")
             .withColumn("__ni", F.size(F.array_intersect("__sha", "__shb")))
-            # empty-shingle-set docs (empty/null text) can never match:
-            # drop them before the ratio — under ANSI mode 0/0 errors out
-            .where(F.col("__na") + F.col("__nb") - F.col("__ni") > 0)
             .withColumn("jaccard", F.col("__ni")
                         / (F.col("__na") + F.col("__nb") - F.col("__ni")))
             .where(F.col("jaccard") >= threshold)
@@ -1022,8 +1026,6 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
     so nothing references the scratch files after return."""
     import tempfile
     import uuid as _uuid
-
-    from pyspark.sql import Observation
 
     spark = pairs.sparkSession
     if work_dir is None:
@@ -1160,13 +1162,15 @@ def token_idf_weights(df: DataFrame, text_col: str = "text",
     df_cut is the head's smallest document frequency.  This keeps the
     broadcast O(max_tokens), independent of corpus size: the 100-TB
     shape is one token-level groupBy (the same shuffle as a word
-    count) and a <1 MB driver collect."""
-    n_docs = df.count()
-    toks = df.select(
+    count) and a <1 MB driver collect; the doc count N rides that one
+    job as an Observation."""
+    docs = Observation()
+    toks = df.observe(docs, F.count(F.lit(1)).alias("n")).select(
         F.explode(F.array_distinct(_words(F.col(text_col)))).alias("token"))
     top = (toks.groupBy("token").agg(F.count("*").alias("df"))
            .orderBy(F.desc("df"), F.asc("token")).limit(max_tokens)
            .collect())
+    n_docs = docs.get["n"]
     if not top:
         return (np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.float64),
                 1.0)

@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -32,3 +33,24 @@ def tiny_df(spark):
     df = generate_tokenized(spark, 1000, seed=42, num_partitions=8)
     df.cache().count()
     return df
+
+
+_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(call)`` -> (``call()``, the number of Spark jobs it
+    ran), counted through a fresh job group."""
+    sc = spark.sparkContext
+
+    def run(call):
+        group = f"count-jobs-{next(_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -794,3 +794,122 @@ def test_one_finish_and_fixed_fanin_in_sources():
     assert knobs == []
     assert callers == {"qsketch/spark/agg.py"}
     assert options == []
+
+
+def test_file_builds_run_one_job(spark, tiny_df, tmp_path, count_jobs):
+    """A file-direct build starts from a JVM range leaf: ``build_files``
+    runs one Spark job, and the lazy ``build_grouped_files`` frame runs
+    none until it is read (a Python frame of paths inferred its schema
+    with a job of its own)."""
+    from qsketch.spark.agg import build_files, build_grouped_files
+
+    p = str(tmp_path / "tok")
+    tiny_df.repartition(4).write.parquet(p)
+    specs = (SketchSpec("quotient", "tokens"), SketchSpec("kll", "n_tok"))
+    for par in (None, 2):
+        _, n = count_jobs(
+            lambda: build_files(spark, p, specs, parallelism=par))
+        assert n == 1, (par, n)
+    merged, n = count_jobs(lambda: build_grouped_files(spark, p, specs))
+    assert n == 0
+    assert merged.count() > 0
+
+
+def _one_token_files(d, n_files: int) -> None:
+    """``n_files`` parquet files under ``d`` in sorted-name order; file
+    ``j`` holds rows whose one token is ``j``, ``j % 3 + 1`` of them."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(d)
+    for j in range(n_files):
+        rows = j % 3 + 1
+        pq.write_table(pa.table({
+            "tokens": pa.array([[j]] * rows, pa.list_(pa.int64())),
+            "n_tok": pa.array([j] * rows, pa.int64())}),
+            os.path.join(d, f"part-{j:03d}.parquet"))
+
+
+@pytest.mark.parametrize("n_files,n_tasks", [(8, 3), (10, 4), (64, 7), (5, 2)])
+def test_file_slices_are_contiguous_and_balanced(spark, tmp_path, n_files,
+                                                 n_tasks):
+    """Task ``i`` of an ``n``-task file-direct build reads exactly
+    ``files[i*F//n:(i+1)*F//n]``, and every canonical kind's final state
+    equals the one-file-per-task build's."""
+    from qsketch.spark.agg import build_files, build_partials_files
+
+    p = str(tmp_path / "files")
+    _one_token_files(p, n_files)
+    specs = (SketchSpec("quotient", "tokens"), SketchSpec("hll", "tokens"),
+             SketchSpec("cms", "tokens"), SketchSpec("bloom", "tokens"),
+             SketchSpec("kmv", "tokens"))
+    partials, n = build_partials_files(spark, p, specs[:1],
+                                       parallelism=n_tasks)
+    assert n == n_tasks
+    probe = np.arange(n_files, dtype=np.int64)
+    got = {r["partition_id"]: probe[base.from_bytes(r["state"])
+                                    .contains(probe)].tolist()
+           for r in partials.collect()}
+    assert got == {i: list(range(i * n_files // n_tasks,
+                                 (i + 1) * n_files // n_tasks))
+                   for i in range(n_tasks)}
+    one = build_files(spark, p, specs)
+    sliced = build_files(spark, p, specs, parallelism=n_tasks)
+    assert ({k: s.to_bytes() for k, s in sliced.sketches.items()}
+            == {k: s.to_bytes() for k, s in one.sketches.items()})
+    assert (sliced.n_rows, sliced.n_tokens) == (one.n_rows, one.n_tokens)
+
+
+def test_file_ckpt_pin_without_file_bounds_is_refused(spark, tiny_df,
+                                                      tmp_path):
+    """A file-source pin records each task's file bounds; a pin written
+    without them (before the bounds were pinned, when slices could be
+    uneven) cannot vouch for the slicing, so resuming it fails."""
+    import json
+    import os
+
+    from qsketch.spark.agg import build_files
+
+    p = str(tmp_path / "tok")
+    tiny_df.repartition(8).write.parquet(p)
+    ck = str(tmp_path / "ck")
+    specs = (SketchSpec("hll", "tokens"),)
+    build_files(spark, p, specs, ckpt_dir=ck, run_id="r", parallelism=3)
+    pin = os.path.join(ck, "r", "_slicing.json")
+    with open(pin) as fh:
+        meta = json.load(fh)
+    assert meta["file_bounds"] == [0, 2, 5, 8]
+    del meta["file_bounds"]
+    with open(pin, "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError, match="mis-map"):
+        build_files(spark, p, specs, ckpt_dir=ck, run_id="r", parallelism=3)
+
+
+def test_file_ckpt_resume_byte_identical(spark, tiny_df, tmp_path):
+    """A file-direct checkpoint that lost one task's state, and one that
+    lost none, resume to the uninterrupted build's bytes for every
+    kind."""
+    import os
+
+    from qsketch.spark.agg import build_files
+
+    p = str(tmp_path / "tok")
+    tiny_df.repartition(8).write.parquet(p)
+    ck = str(tmp_path / "ck")
+    want = build_files(spark, p, DEFAULT_SPECS, parallelism=4)
+    first = build_files(spark, p, DEFAULT_SPECS, ckpt_dir=ck, run_id="r",
+                        parallelism=4)
+    d = os.path.join(ck, "r")
+    os.remove(os.path.join(d, sorted(f for f in os.listdir(d)
+                                     if f.startswith("state-"))[2]))
+    lost = build_files(spark, p, DEFAULT_SPECS, ckpt_dir=ck, run_id="r",
+                       parallelism=4)
+    full = build_files(spark, p, DEFAULT_SPECS, ckpt_dir=ck, run_id="r",
+                       parallelism=4)
+    for res in (first, lost, full):
+        assert ({k: s.to_bytes() for k, s in res.sketches.items()}
+                == {k: s.to_bytes() for k, s in want.sketches.items()})
+        assert (res.n_rows, res.n_tokens) == (want.n_rows, want.n_tokens)

@@ -253,6 +253,76 @@ def test_token_idf_weights_on_edge_text(edge):
     assert default_w == float(np.log(9.0))
 
 
+def test_token_idf_weights_counts_docs_on_its_one_job(edge, count_jobs):
+    """N rides the top-k job as an Observation: the call runs exactly the
+    jobs of that one query, no eager ``count()`` ahead of it."""
+    from pyspark.sql import functions as F
+
+    from qsketch.spark.textops import _words, token_idf_weights
+
+    (hashes, weights, default_w), n_idf = count_jobs(
+        lambda: token_idf_weights(edge))
+    top = (edge.select(F.explode(F.array_distinct(_words(F.col("text"))))
+                       .alias("token"))
+           .groupBy("token").agg(F.count("*").alias("df"))
+           .orderBy(F.desc("df"), F.asc("token")).limit(1 << 16))
+    rows, n_top = count_jobs(top.collect)
+    assert n_idf == n_top
+    assert len(rows) == len(hashes) == 20
+    assert default_w == float(np.log(9.0))
+    assert sorted(weights.tolist()) == sorted(
+        float(np.log(9.0 / r["df"])) for r in rows)
+
+
+EDGE_TEXT = [None, "", " ", "  ", " lead", "trail ", "a  b c", "a b c ",
+             "tab\there new\nline", "é ü 日本 語", "a  b c", "x"]
+
+
+def test_gram_batch_tokens_equal_the_catalyst_shingle_rule(spark):
+    """The gram passes split raw text in the worker; their tokens equal
+    ``_shingle_toks_expr``'s JVM split on every edge: NULL and '' give
+    none, ' ' and '  ' give empty tokens, leading, trailing and double
+    spaces keep their empty tokens, tabs and newlines do not split,
+    and multi-byte UTF-8 survives."""
+    import pyarrow as pa
+
+    from qsketch.spark.textops import _GramBatch, _shingle_toks_expr
+
+    df = spark.createDataFrame(list(enumerate(EDGE_TEXT)),
+                               "doc_id long, text string")
+    jvm = {r["doc_id"]: list(r["t"]) for r in
+           df.select("doc_id", _shingle_toks_expr("text").alias("t"))
+             .collect()}
+    b = _GramBatch(pa.array(EDGE_TEXT, pa.string()))
+    flat = b.flat.to_pylist()
+    arrow = {i: flat[s:s + n] for i, (s, n) in
+             enumerate(zip(b.doc_start.tolist(), b.lens.tolist()))}
+    assert arrow == jvm
+    assert jvm[0] == jvm[1] == [] and jvm[3] == ["", "", ""]
+    assert b.doc_of.tolist() == np.repeat(np.arange(len(EDGE_TEXT)),
+                                          b.lens).tolist()
+
+
+@pytest.mark.parametrize("threshold", [0.0, 0.8])
+def test_jaccard_verify_keeps_docs_with_a_shingle(spark, threshold):
+    """A doc has a shingle exactly when it has ``shingle_n`` tokens:
+    docs of ``shingle_n - 1`` and 0 tokens never pair, at any
+    threshold."""
+    from qsketch.spark.textops import jaccard_verify
+
+    docs = spark.createDataFrame(
+        [(1, "a b"), (2, "a b c"), (3, ""), (4, None), (5, "a b c"),
+         (6, "x y z")], "doc_id long, text string")
+    ids = [r[0] for r in docs.select("doc_id").collect()]
+    pairs = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "a long, b long")
+    got = sorted(tuple(r) for r in
+                 jaccard_verify(docs, pairs, threshold=threshold).collect())
+    want = [(2, 5, 1.0)] + ([(2, 6, 0.0), (5, 6, 0.0)] if threshold == 0.0
+                            else [])
+    assert got == want
+
+
 def test_split_boundaries_share_the_hex_bound():
     from qsketch.spark.textops import split_boundaries
 
