@@ -881,7 +881,7 @@ def q_embedding_near_duplicates(spark, sf_dir):
 
 
 def q_embedding_near_duplicates_lsh(spark, sf_dir):
-    """The SRP-LSH candidate scale path (bucket self-join, no cartesian),
+    """The SRP-LSH candidate scale path (bucket-local scoring, no cartesian),
     checked against the same exact-cosine oracle: at threshold 0.45 with
     5-bit keys x 96 tables, P[miss] <= (1-(1-acos(0.45)/pi)^5)^96 ~ 8e-6
     per qualifying pair — and the deterministic seeded hyperplanes make

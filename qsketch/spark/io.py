@@ -106,11 +106,14 @@ def read_tokenized(spark: SparkSession, source: str) -> DataFrame:
     """Read the input table: Iceberg/catalog table name, else parquet path.
 
     Column pruning + predicate pushdown come free from Catalyst either
-    way; the build only ever selects the columns it consumes.
+    way; the build only ever selects the columns it consumes.  A path
+    is read with the known :data:`TOKENIZED_SCHEMA`, so no
+    schema-inference job runs before the caller's action (a
+    ``partitionBy("source")`` layout still prunes partitions).
     """
     try:
         if spark.catalog.tableExists(source):
             return spark.read.table(source)
     except Exception:
         pass
-    return spark.read.parquet(source)
+    return spark.read.schema(TOKENIZED_SCHEMA).parquet(source)

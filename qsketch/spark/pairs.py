@@ -1,5 +1,7 @@
-"""Streamed-group pair scoring: the bucket-local verify behind simhash
-and embedding near-duplicates.
+"""Streamed-group pair scoring: the one bucket-local pair primitive
+behind all three near-duplicate paths — the MinHash LSH candidates
+(a kernel that passes every pair of a (band, band_key) bucket), the
+simhash Hamming verify and the embedding cosine verify.
 
 Keyed rows (id, group keys, payload) go through ONE hash exchange on the
 group keys and a sort within partitions; one mapInArrow pass then walks
@@ -14,7 +16,8 @@ each partition's groups in order:
 
 A group may span Arrow batches, so the batch's last group is carried
 into the next batch of the same partition.  Rows sharing an id never
-pair with each other (duplicate ids in the input are not a pair).
+pair with each other (duplicate ids in the input are not a pair), and
+a row whose id is NULL pairs with nothing.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 # kernel(key, payload) -> block(r0, r1) -> (ri, j, value): the hits of
 # group rows r0:r1 (ri relative to r0) against all of the group's rows
@@ -72,7 +76,10 @@ def group_pair_scores(keyed: DataFrame, key_cols: tuple[str, ...],
     several groups or via duplicate-id rows."""
     name = score.split()[0]
     id_t = keyed.schema[id_col].dataType.simpleString()
-    part = (keyed.repartition(*key_cols)
+    # a NULL id is no document: it pairs with nothing (and would reach
+    # the kernel as NaN or None)
+    part = (keyed.where(F.col(id_col).isNotNull())
+                 .repartition(*key_cols)
                  .sortWithinPartitions(*key_cols))
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -131,9 +131,10 @@ def _cap_buckets(df: DataFrame, keys: tuple[str, ...],
     """The one rule for buckets over ``max_bucket`` rows: (kept, stars).
 
     One window count over ``keys`` — the SAME hash-partitioning the
-    bucket self-join or group scorer needs, so one shuffle total and
-    both join sides reuse the exchange.  ``kept`` is the rows whose
-    bucket has at most ``max_bucket`` rows.  With ``rep_col`` set,
+    bucket pair scorer (:func:`~qsketch.spark.pairs.group_pair_scores`)
+    needs, so its exchange and sort serve the scorer too: one shuffle
+    total.  ``kept`` is the rows whose bucket has at most
+    ``max_bucket`` rows.  With ``rep_col`` set,
     ``stars`` is the linear-cost rescue of each over-cap bucket:
     (a, b) = (the bucket's min ``rep_col``, every other member), so a
     flooded cluster stays connected through its representative (star
@@ -795,8 +796,8 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
 
 def banded_signatures(sig_df: DataFrame, id_col: str = "doc_id",
                       bands: int = 32, rows: int = 4) -> DataFrame:
-    """The keyed LSH frame (id, band, band_key) that
-    :func:`lsh_candidate_pairs` self-joins on — public so callers can
+    """The keyed LSH frame (id, band, band_key) whose buckets
+    :func:`lsh_candidate_pairs` pairs — public so callers can
     audit cap losses (``oversized_buckets(banded_signatures(sigs),
     ("band", "band_key"), cap)``) with the exact keys a capped run
     uses."""
@@ -810,7 +811,7 @@ def banded_signatures(sig_df: DataFrame, id_col: str = "doc_id",
         # drop shingle-less docs (sentinel all-max signature): they
         # are near-dups of nothing, and at web scale millions of
         # empty docs would otherwise share ONE bucket in every band
-        # and drive the self-join quadratic with no max_bucket set
+        # and drive the bucket pairing quadratic with no max_bucket set
         real = np.flatnonzero(~(sig == maxu).all(axis=1))
         if len(real) < len(sig):
             sig = sig[real]
@@ -833,12 +834,17 @@ def banded_signatures(sig_df: DataFrame, id_col: str = "doc_id",
 def lsh_candidate_pairs(sig_df: DataFrame, id_col: str = "doc_id",
                         bands: int = 32, rows: int = 4,
                         max_bucket: int | None = None) -> DataFrame:
-    """Band the signatures and self-join on (band, band-signature).
+    """Band the signatures; every pair sharing a (band, band-signature)
+    bucket is a candidate.
 
-    Only (band_id, 8-byte band hash, id) rows shuffle.  Output: distinct
-    (a, b) candidate id pairs with a < b.
+    Only (band_id, 8-byte band hash, id) rows shuffle: each bucket's
+    pairs are listed bucket-locally by
+    :func:`~qsketch.spark.pairs.group_pair_scores`, the scorer behind
+    the simhash and embedding paths too, so the signatures are computed
+    once.  Output: distinct (a, b) candidate id pairs with a < b; rows
+    with a NULL id pair with nothing.
 
-    ``max_bucket`` guards the self-join against quadratic hot buckets
+    ``max_bucket`` guards the pairing against quadratic hot buckets
     (boilerplate-heavy corpora put thousands of near-identical docs in
     one (band, key) bucket): buckets larger than the cap are dropped by
     :func:`_cap_buckets`, the one over-cap rule.  Pairs inside a dropped
@@ -855,15 +861,31 @@ def lsh_candidate_pairs(sig_df: DataFrame, id_col: str = "doc_id",
 
 def _lsh_pairs(banded: DataFrame, id_col: str, max_bucket: int | None,
                rescue: bool) -> DataFrame:
-    """Distinct (a < b) pairs of the (band, band_key) self-join over the
-    rows :func:`_cap_buckets` keeps, plus its star pairs if ``rescue``."""
+    """Distinct (a < b) pairs sharing a (band, band_key) bucket among the
+    rows :func:`_cap_buckets` keeps, plus its star pairs if ``rescue``.
+
+    Every pair of a bucket is a candidate, so the pair scorer's kernel
+    passes them all; its score is the band (the first band a pair met
+    in), which the (a, b) projection drops."""
     kept, stars = _cap_buckets(banded, ("band", "band_key"), max_bucket,
                                id_col if rescue else None)
-    pairs = (kept.alias("l").join(kept.alias("r"), ["band", "band_key"])
-             .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-             .select(F.col(f"l.{id_col}").alias("a"),
-                     F.col(f"r.{id_col}").alias("b")))
-    return (pairs if stars is None else pairs.union(stars)).distinct()
+
+    def load(batch):
+        return [batch.column("band").to_numpy(zero_copy_only=False)]
+
+    def kernel(key, payload):
+        band = payload[0]
+
+        def block(r0, r1):
+            ri, j = np.divmod(np.arange((r1 - r0) * len(band)), len(band))
+            return ri, j, band[j]
+        return block
+
+    # ~8 MB of int64 pair indices per row block
+    pairs = group_pair_scores(kept, ("band", "band_key"), id_col, load,
+                              kernel, 1 << 20, "band int",
+                              F.min).select("a", "b")
+    return pairs if stars is None else pairs.union(stars).distinct()
 
 
 def shingle_hash_sets(df: DataFrame, text_col: str = "text",
@@ -1127,7 +1149,7 @@ def near_duplicate_groups(df: DataFrame, text_col: str = "text",
     near-duplicate pair graph); docs with no near-dup map to
     themselves.  Downstream keep-one dedup is then
     ``.where(doc_id == group_id)``.  At web scale set ``max_bucket``
-    AND ``rescue_oversized=True`` (the cap bounds the bucket self-join,
+    AND ``rescue_oversized=True`` (the cap bounds the bucket pairing,
     the rescue recovers capped clusters through their bucket
     representative at linear cost, still exact-verified) AND
     ``work_dir`` to a cluster-visible scratch path — it is forwarded to
@@ -1254,7 +1276,9 @@ def simhash_pairs(sh_df: DataFrame, id_col: str = "doc_id",
     ``max_bucket`` drops degenerate buckets by :func:`_cap_buckets`,
     the one over-cap rule lsh_candidate_pairs also uses (run exact dedup
     first); it defaults to None = unbounded recall (changed from a lossy
-    default of 500 in round 3).
+    default of 500 in round 3).  The MinHash LSH candidates
+    (:func:`lsh_candidate_pairs`) go through the same scorer and cap,
+    with a kernel that passes every pair of a bucket.
     """
     if n_slices < max_hamming + 1:
         raise ValueError("need n_slices >= max_hamming + 1 for full recall")

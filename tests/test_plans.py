@@ -80,6 +80,25 @@ def test_partition_pruning_on_source_partitioned_table(spark, tmp_path_factory):
     assert len(glob.glob(f"{p}/source=*")) > 1
 
 
+def test_read_tokenized_path_runs_no_job(spark, tmp_path_factory,
+                                         count_jobs):
+    """A parquet path is read with the known tokenized schema: the read
+    runs no schema-inference job, and the schema is the inferred one,
+    flat or source-partitioned (which still reads every row)."""
+    from qsketch.spark.io import generate_tokenized, read_tokenized
+
+    root = tmp_path_factory.mktemp("plans")
+    src = generate_tokenized(spark, 300, seed=4, num_partitions=2)
+    flat, parted = str(root / "flat"), str(root / "parted")
+    src.write.mode("overwrite").parquet(flat)
+    src.write.partitionBy("source").mode("overwrite").parquet(parted)
+    for p in (flat, parted):
+        df, n = count_jobs(lambda: read_tokenized(spark, p))
+        assert n == 0, p
+        assert df.schema == spark.read.parquet(p).schema, p
+        assert df.count() == 300, p
+
+
 def test_multilevel_partition_pruning_and_file_skipping(
         spark, tmp_path_factory):
     """Two-level partitioned layout (source/day — the Iceberg
@@ -136,7 +155,7 @@ def test_catalog_table_partition_pruning(spark, tmp_path_factory):
 
 
 def test_lsh_paths_have_no_cartesian_product(spark):
-    """The candidate-generation scale paths must be bucket JOINS, never
+    """The candidate-generation scale paths must be bucket-local, never
     cartesian products — the difference between O(n^2) and O(collisions)
     at 100 TB.  (Since r6 the exact embedding path is included too: it
     is O(n^2) COMPUTE by definition, but distributes it over block-pair
@@ -174,13 +193,18 @@ def test_lsh_paths_have_no_cartesian_product(spark):
     # the streamed-group pair scorer: one REPARTITION_BY_COL exchange on
     # the group keys below its MapInArrow (the first one printed), one
     # hashpartitioning(a, b) exchange above it for the pair collapse
-    for name in ("simhash", "embedding_lsh", "embedding_exact"):
+    for name in ("minhash_lsh", "simhash", "embedding_lsh",
+                 "embedding_exact"):
         above, below = plans[name].split("MapInArrow", 1)
         assert below.count("REPARTITION_BY_COL") == 1, (name, plans[name])
         assert below.count("Exchange") == 1, (name, plans[name])
         assert above.count("Exchange") == 1, (name, plans[name])
         assert re.search(r"Exchange hashpartitioning\(a#\d+L?, b#\d+L?, ",
                          above), (name, plans[name])
+    # MinHash LSH pairs its buckets in the scorer, so the corpus is
+    # MinHashed once: no join, and one minhash, band and scorer pass each
+    assert "Join" not in plans["minhash_lsh"], plans["minhash_lsh"]
+    assert plans["minhash_lsh"].count("MapInArrow") == 3, plans["minhash_lsh"]
     # (the rescue path's one-window-pass property is structural — the
     # cap split and star pairs both read the same PERSISTED counted
     # frame — and is not visible in the textual plan, which inlines the

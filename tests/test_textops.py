@@ -1508,9 +1508,12 @@ def test_window_gram_hashes_match_string_gram_equality(spark):
 def test_grouped_pair_scorer_carry_across_arrow_batches(spark):
     """The r6 streamed-group pair scorer accumulates a group across
     Arrow batch boundaries; with a tiny maxRecordsPerBatch every group
-    is split over several batches, and both the LSH and the blocked
-    exact path must still find every pair a large-batch run finds."""
+    is split over several batches, and the LSH and the blocked exact
+    cosine paths, and near_duplicates (whose MinHash LSH buckets go
+    through the same scorer), uncapped and capped with the rescue, must
+    still find every pair a large-batch run finds."""
     from qsketch.spark.similarity import embedding_near_duplicates
+    from qsketch.spark.textops import near_duplicates
 
     rng = np.random.default_rng(23)
     base = rng.normal(size=(40, 16))
@@ -1519,22 +1522,42 @@ def test_grouped_pair_scorer_carry_across_arrow_batches(spark):
         rows.append((100 + j, (base[j]
                                + rng.normal(scale=0.03, size=16)).tolist()))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    # 4 clusters of 7 near-identical docs (odd members add one word)
+    texts = [" ".join(f"c{k}w{j}" for j in range(30)) for k in range(4)]
+    docs = spark.createDataFrame(
+        [(10 * k + i, texts[k] + (f" tail{i}" if i % 2 else ""))
+         for k in range(4) for i in range(7)]
+        + [(100 + i, f"lone doc {i} with words of its own {i}")
+           for i in range(10)], "doc_id long, text string")
 
-    def run(method):
+    def cosine(method):
         return {(r["a"], r["b"], round(r["cosine"], 6))
                 for r in embedding_near_duplicates(
                     emb, threshold=0.9, method=method).collect()}
 
-    big = {m: run(m) for m in ("exact", "lsh")}
+    def near(**kw):
+        return {tuple(r) for r in near_duplicates(docs, **kw).collect()}
+
+    runs = {"exact": lambda: cosine("exact"), "lsh": lambda: cosine("lsh"),
+            "near": near,
+            "near_capped": lambda: near(max_bucket=3, rescue_oversized=True)}
+    big = {k: run() for k, run in runs.items()}
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
     try:
-        small = {m: run(m) for m in ("exact", "lsh")}
+        small = {k: run() for k, run in runs.items()}
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert small == big
     assert len(big["exact"]) >= 8
     assert big["lsh"] == big["exact"]
+    # uncapped, every cluster pair; capped, the cluster buckets (7 rows)
+    # drop and only the star pairs through each cluster's min id remain
+    assert {(a, b) for a, b, _ in big["near"]} == {
+        (10 * k + i, 10 * k + j) for k in range(4)
+        for i in range(7) for j in range(i + 1, 7)}
+    assert {(a, b) for a, b, _ in big["near_capped"]} == {
+        (10 * k, 10 * k + i) for k in range(4) for i in range(1, 7)}
 
 
 def test_simhash_pair_scorer_carry_across_arrow_batches(spark):
@@ -1565,15 +1588,20 @@ def test_simhash_pair_scorer_carry_across_arrow_batches(spark):
 
 def test_pair_scorers_skip_duplicate_id_rows(spark):
     """Two rows sharing an id are not a pair, and a pair reached through
-    duplicate-id rows is reported once — in the simhash, exact cosine
-    and LSH cosine scorers alike (regression: (1, 1) self-pairs, and
-    the exact path emitted (1, 2) twice)."""
+    duplicate-id rows is reported once — in the MinHash LSH candidates,
+    the simhash, exact cosine and LSH cosine scorers alike (regression:
+    (1, 1) self-pairs, and the exact path emitted (1, 2) twice)."""
     from qsketch.spark.similarity import embedding_near_duplicates
-    from qsketch.spark.textops import simhash_near_duplicates
+    from qsketch.spark.textops import (lsh_candidate_pairs,
+                                       minhash_signatures,
+                                       simhash_near_duplicates)
 
     text = "shared tokens of one duplicated document body"
     docs = spark.createDataFrame([(1, text), (1, text), (2, text)],
                                  "doc_id long, text string")
+    got = [tuple(r) for r in
+           lsh_candidate_pairs(minhash_signatures(docs)).collect()]
+    assert got == [(1, 2)]
     got = [tuple(r) for r in simhash_near_duplicates(docs).collect()]
     assert got == [(1, 2, 0)]
     vec = [0.5, -1.0, 2.0, 0.25]
@@ -1584,6 +1612,35 @@ def test_pair_scorers_skip_duplicate_id_rows(spark):
                for r in embedding_near_duplicates(
                    emb, threshold=0.9, method=method).collect()]
         assert got == [(1, 2, 1.0)], method
+
+
+@pytest.mark.parametrize("id_type,pair", [("long", (1, 2)),
+                                          ("string", ("d1", "d2"))],
+                         ids=["long", "string"])
+def test_pair_scorers_drop_null_id_rows(spark, id_type, pair):
+    """A row whose id is NULL is no document and pairs with nothing — in
+    near_duplicates, simhash and both cosine modes alike (regression:
+    the shared pair scorer read NULL long ids as NaN, and the JVM
+    failed with getLong)."""
+    from qsketch.spark.similarity import embedding_near_duplicates
+    from qsketch.spark.textops import near_duplicates, simhash_near_duplicates
+
+    a, b = pair
+    text = "shared tokens of one duplicated document body"
+    docs = spark.createDataFrame([(None, text), (a, text), (b, text)],
+                                 f"doc_id {id_type}, text string")
+    got = [tuple(r) for r in near_duplicates(docs).collect()]
+    assert got == [(a, b, 1.0)]
+    got = [tuple(r) for r in simhash_near_duplicates(docs).collect()]
+    assert got == [(a, b, 0)]
+    vec = [0.5, -1.0, 2.0, 0.25]
+    emb = spark.createDataFrame([(None, vec), (a, vec), (b, vec)],
+                                f"vec_id {id_type}, embedding array<double>")
+    for method in ("exact", "lsh"):
+        got = [(r["a"], r["b"], round(r["cosine"], 6))
+               for r in embedding_near_duplicates(
+                   emb, threshold=0.9, method=method).collect()]
+        assert got == [(a, b, 1.0)], method
 
 
 def test_near_duplicates_duplicate_ids_emit_pair_once(spark):

@@ -16,9 +16,10 @@ B. **Near-dup grouping where one near-dup cluster holds 10% of docs** —
    2,000 of 20,000 docs pairwise-similar (J ≈ 0.93, NOT exact dups, so
    exact dedup cannot remove them); the other 18,000 use doc-namespaced
    tokens (zero cross-doc overlap).  Uncapped, the cluster floods one
-   (band, key) bucket per band and the self-join goes quadratic
-   (tens of millions of candidate pairs).  With max_bucket set, the
-   bucket join stays bounded — at the cost of the documented
+   (band, key) bucket per band and its pairing in the bucket-local
+   scorer (pairs.group_pair_scores) goes quadratic (tens of millions
+   of candidate pairs).  With max_bucket set, the bucket pairing
+   stays bounded — at the cost of the documented
    capped-recall semantics: a cluster this tight shares its band
    minima, so the cap drops essentially ALL its buckets and the
    cluster is sacrificed (n_groups == n_docs).  That loss is exactly
