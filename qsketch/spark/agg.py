@@ -248,55 +248,27 @@ def _flat_values(col: pa.Array) -> tuple[np.ndarray, np.ndarray | None]:
     return col.to_numpy(zero_copy_only=False), off
 
 
-_DEDUP_SCRATCH = np.empty(0, dtype=np.int64)
-
-
 _DOMAIN_CAP = 1 << 22
 
 
-def _dedup(values: np.ndarray,
-           bounded: bool = False) -> tuple[np.ndarray, np.ndarray]:
+def _dedup(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(unique values, counts) — THE scale lever of the partial phase.
 
-    Token batches are heavily repetitive (Zipf over a bounded vocab), so
+    Token batches are heavily repetitive (Zipf over a finite vocab), so
     hashing/sketching unique values with multiplicities shrinks the
     scatter-update working set by orders of magnitude and turns a
-    memory-bandwidth-bound build into a compute-bound one.  Small-domain
-    ints take the O(n) bincount path (no sort), staged through a reused
-    per-worker int64 scratch buffer: np.bincount would otherwise
-    allocate a fresh 8B*n cast every batch, and on fault-constrained
-    hosts (see session.py) fresh pages are ~100x dearer than warm ones.
-
-    ``bounded=True`` asserts the caller has already PROVEN the values
-    lie in [0, _DOMAIN_CAP) — e.g. from parquet row-group statistics —
-    so the per-batch min/max scans (2 full passes = 8B/token of read
-    traffic on int32 tokens, ~1/3 of the Python side's total) are
-    skipped entirely.
+    memory-bandwidth-bound build into a compute-bound one.  One rule:
+    integers that one min/max check finds in [0, _DOMAIN_CAP) take the
+    O(n) bincount path (no sort); everything else sorts through
+    np.unique.  The intp cast is explicit because np.bincount refuses a
+    safe cast from uint64, which a pyarrow-written file can hold.  The
+    uniques keep the input dtype either way.
     """
-    global _DEDUP_SCRATCH
-    if values.dtype.kind in "iu" and values.size:
-        if bounded:
-            lo, hi = 0, 0
-        else:
-            lo = int(values.min())
-            hi = int(values.max())
-        if bounded or (0 <= lo and hi < _DOMAIN_CAP):
-            n = values.size
-            if values.dtype == np.intp:
-                counts = np.bincount(values)  # already intp: no cast at all
-            else:
-                cap = 1 << 24  # retain at most 128MB of scratch per worker
-                if _DEDUP_SCRATCH.size < n:
-                    _DEDUP_SCRATCH = np.empty(min(max(n, 1 << 20), cap),
-                                              dtype=np.int64)
-                if n <= _DEDUP_SCRATCH.size:
-                    buf = _DEDUP_SCRATCH[:n]
-                    np.copyto(buf, values, casting="unsafe")
-                else:  # oversized batch: transient cast, don't pin it
-                    buf = values.astype(np.int64)
-                counts = np.bincount(buf)
-            uniq = np.flatnonzero(counts)
-            return uniq.astype(values.dtype), counts[uniq]
+    if (values.dtype.kind in "iu" and values.size
+            and 0 <= int(values.min()) and int(values.max()) < _DOMAIN_CAP):
+        counts = np.bincount(values.astype(np.intp, copy=False))
+        uniq = np.flatnonzero(counts)
+        return uniq.astype(values.dtype), counts[uniq]
     return np.unique(values, return_counts=True)
 
 
@@ -339,16 +311,17 @@ def _pin_ckpt_slicing(ckpt_dir: str, run_id: str, meta: dict) -> None:
 
 
 class _PartitionAcc:
-    """Per-partition accumulation of every spec: one state row per spec."""
+    """Per-partition accumulation of every spec: one state row per spec.
+
+    Each batch's hash inputs are deduplicated once by ``_dedup`` and
+    every hash kind over that input shares the fingerprints and counts;
+    quantile kinds take the raw values."""
 
     def __init__(self, specs: tuple[SketchSpec, ...]):
         self.specs = specs
         self.accs = [_Acc(s) for s in specs]
         self.inputs = sorted({s.input for s in specs})
         self.hash_inputs = {s.input for s in specs if s.kind in _HASH_KINDS}
-        # columns PROVEN in [0, _DOMAIN_CAP) by file metadata (see
-        # _bounded_cols); lets _dedup skip its per-batch min/max scans
-        self.bounded: frozenset[str] = frozenset()
         self.n_rows = 0
         self.n_tokens = 0
         self.t0 = time.perf_counter()
@@ -364,8 +337,7 @@ class _PartitionAcc:
         per-group value SLICES without re-gathering Arrow rows.  Returns
         the batch's ``{hash input: (uniques, counts)}``."""
         self.n_rows += n_rows
-        dedup = {name: _dedup(vals[name], name in self.bounded)
-                 for name in self.hash_inputs}
+        dedup = {name: _dedup(vals[name]) for name in self.hash_inputs}
         hashes = {name: fnv1a64(u) for name, (u, _) in dedup.items()}
         if "tokens" in vals:
             self.n_tokens += len(vals["tokens"])
@@ -406,14 +378,14 @@ def _commit_state(out: pa.RecordBatch, done: str) -> None:
 
 
 def _consume_file(acc, path: str, cols: list[str]) -> None:
-    """Feed one parquet file's ``cols`` into an accumulator — the
-    file-direct read loop.  use_threads=False: each task owns ONE core
-    (cluster task-slot semantics); Arrow's default pool would
-    oversubscribe the executor and corrupt N-vs-4N scaling evidence."""
-    pf = pq.ParquetFile(path)
-    acc.bounded = _bounded_cols(pf, acc.hash_inputs)
-    for batch in pf.iter_batches(batch_size=16384, columns=cols,
-                                 use_threads=False):
+    """Feed one parquet file's ``cols`` into an accumulator
+    (``_PartitionAcc`` or ``_GroupedAcc``) — the file-direct read loop.
+    Batches go through ``acc.consume`` exactly as a DataFrame batch
+    does.  use_threads=False: each task owns ONE core (cluster task-slot
+    semantics); Arrow's default pool would oversubscribe the executor
+    and corrupt N-vs-4N scaling evidence."""
+    for batch in pq.ParquetFile(path).iter_batches(
+            batch_size=16384, columns=cols, use_threads=False):
         acc.consume(batch)
 
 
@@ -579,34 +551,6 @@ def build_partials(df: DataFrame, specs=DEFAULT_SPECS,
     return _partials(_Source.of_frame(df, specs), ckpt_dir, run_id)
 
 
-def _bounded_cols(pf, cols: set[str]) -> frozenset[str]:
-    """Columns of ``pf`` PROVEN to lie in [0, _DOMAIN_CAP) by the file's
-
-    own row-group statistics (min/max in every column chunk's footer
-    metadata) — no data scanned, no trust in the caller.  Nested list
-    columns match by path prefix ("tokens.list.element").  A single
-    chunk without stats disqualifies the column."""
-    md = pf.metadata
-    ok: dict[str, bool] = {}
-    seen: set[str] = set()
-    for rg in range(md.num_row_groups):
-        row = md.row_group(rg)
-        for ci in range(row.num_columns):
-            col = row.column(ci)
-            root = col.path_in_schema.split(".", 1)[0]
-            if root not in cols:
-                continue
-            seen.add(root)
-            st = col.statistics
-            if (st is None or not st.has_min_max
-                    or not isinstance(st.min, int)
-                    or st.min < 0 or st.max >= _DOMAIN_CAP):
-                ok[root] = False
-            else:
-                ok.setdefault(root, True)
-    return frozenset(c for c in seen if ok.get(c, False))
-
-
 def build_partials_files(spark: SparkSession, path: str, specs=DEFAULT_SPECS,
                          ckpt_dir: str | None = None,
                          run_id: str | None = None,
@@ -744,7 +688,9 @@ def build(df: DataFrame, specs=DEFAULT_SPECS, ckpt_dir: str | None = None,
 
 
 class _GroupedAcc:
-    """Per-(partition, group) accumulation: one _PartitionAcc per group.
+    """Per-(partition, group) accumulation: one _PartitionAcc per group,
+    so each group's value slice takes the same ``_dedup`` rule as an
+    ungrouped batch.
 
     Rows whose group is null form ONE group with a null key, as SQL
     ``GROUP BY`` does; null list elements and null values are dropped
@@ -754,10 +700,8 @@ class _GroupedAcc:
         self.specs = specs
         self.group_col = group_col
         self.inputs = sorted({s.input for s in specs})
-        self.hash_inputs = {s.input for s in specs if s.kind in _HASH_KINDS}
         self.accs: dict[str | None, _PartitionAcc] = {}
         self.ms: dict[str | None, float] = {}
-        self.bounded: frozenset[str] = frozenset()  # see _bounded_cols
 
     def consume(self, batch: pa.RecordBatch) -> None:
         """Regroup ONCE per batch, then feed each group zero-copy value
@@ -801,7 +745,6 @@ class _GroupedAcc:
                 self.accs[key] = _PartitionAcc(self.specs)
                 self.ms[key] = 0.0
             acc = self.accs[key]
-            acc.bounded = self.bounded
             t0 = time.perf_counter()
             acc.consume_arrays(vals, e - s)
             # the shared sort/take is apportioned by row share

@@ -104,15 +104,15 @@ def _topk(scored: DataFrame, k: int, query_id_col: str,
     """row_number window top-k per query, deterministic tie-break on id.
 
     NULL-cosine rows (zero-norm corpus row against a zero-norm query —
-    see _safe_cosine_expr) still receive ranks: desc ordering puts
-    NULLs last, so they surface in the output only when k exceeds the
-    number of defined scores.  Callers that must never return an
-    unscored neighbor should filter cosine IS NOT NULL before calling."""
+    see _safe_cosine_expr) are dropped before ranking: such a pair has
+    no angle, as every ``cosine >= t`` path already treats it, so a
+    query returns fewer than k rows rather than an unscored neighbor."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"),
                                                  F.asc(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
+    return (scored.where(F.col("cosine").isNotNull())
+                  .withColumn("rank", F.row_number().over(w))
                   .where(F.col("rank") <= k)
                   .select(query_id_col, id_col, "cosine", "rank"))
 

@@ -1681,6 +1681,8 @@ def token_rarity_scores(df: DataFrame, text_col: str = "text",
     float hop cannot misbucket).  Output per doc with ≥ 1 token:
     (id_col, n_tokens, sum_bucket, mean_bucket) — HIGH mean_bucket =
     common-token boilerplate, LOW = rare-token / junk tail; trim both.
+    Rows that share an id pool their tokens into ONE score (the output
+    is keyed by id, and every row's tokens count in the vocabulary).
 
     100-TB shape — the standard two-pass LM filter: pass 1 is a
     word-count-shaped map-side-combinable aggregation producing the

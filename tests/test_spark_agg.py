@@ -390,44 +390,28 @@ def test_build_files_parallelism_levels_byte_identical(spark, tiny_df,
         assert n_toks[par] == n_toks[None], f"parallelism={par} n_tokens"
 
 
-def test_stats_bounded_dedup_matches_scan_path(spark, tiny_df, tmp_path):
-    """The parquet-stats fast path (skip min/max scans when the footer
-    proves the domain) must not change any state: compare a file whose
-    stats qualify against the same data routed through the scan path."""
-    import numpy as np
-
+@pytest.mark.parametrize("dtype", [np.int16, np.int32, np.int64,
+                                   np.uint32, np.uint64])
+def test_dedup_equals_unique_and_keeps_dtype(dtype):
+    """_dedup's one rule (bincount inside [0, 2^22), np.unique elsewhere)
+    must equal np.unique's (values, counts) for every integer dtype a
+    parquet column can yield, keep the input dtype, and take uint64
+    (np.bincount refuses a safe uint64 -> int64 cast)."""
     from qsketch.spark.agg import _dedup
 
-    rng = np.random.default_rng(3)
-    vals = rng.integers(0, 50000, size=100_000).astype(np.int32)
-    u1, c1 = _dedup(vals, bounded=False)
-    u2, c2 = _dedup(vals, bounded=True)
-    assert (u1 == u2).all() and (c1 == c2).all()
-
-
-def test_bounded_cols_rejects_out_of_range_and_strings(tmp_path):
-    """_bounded_cols must only certify integer columns whose EVERY chunk
-    has stats inside [0, 2^22); negatives, huge values, and strings are
-    all rejected."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from qsketch.spark.agg import _DOMAIN_CAP, _bounded_cols
-
-    t = pa.table({
-        "ok": pa.array(np.array([0, 5, 100], dtype=np.int64)),
-        "neg": pa.array(np.array([-1, 5, 100], dtype=np.int64)),
-        "huge": pa.array(np.array([0, 5, _DOMAIN_CAP], dtype=np.int64)),
-        "s": pa.array(["a", "b", "c"]),
-        "lst": pa.array([[1, 2], [3], [4]],
-                        type=pa.list_(pa.int32())),
-    })
-    f = str(tmp_path / "b.parquet")
-    pq.write_table(t, f)
-    got = _bounded_cols(pq.ParquetFile(f),
-                        {"ok", "neg", "huge", "s", "lst"})
-    assert got == {"ok", "lst"}, got
+    info = np.iinfo(dtype)
+    rng = np.random.default_rng(5)
+    small = rng.integers(0, min(info.max, 3000), size=20_000).astype(dtype)
+    cases = [small, np.empty(0, dtype), np.array([7, 0, 7], dtype)]
+    if info.max >= 1 << 22:  # past the bincount domain
+        cases.append(np.concatenate([small, np.array([1 << 22], dtype)]))
+    if info.min < 0:
+        cases.append(np.concatenate([small, np.array([-3, -3], dtype)]))
+    for v in cases:
+        u, c = _dedup(v)
+        eu, ec = np.unique(v, return_counts=True)
+        assert u.dtype == v.dtype
+        assert np.array_equal(u, eu) and np.array_equal(c, ec)
 
 
 def test_heavy_hitters_sketch_rejects_string_column(spark):

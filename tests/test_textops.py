@@ -462,6 +462,7 @@ def test_embedding_near_duplicates_zero_norm_pair(spark):
     default, and the Arrow verify emitted 0/0 = NaN, which PASSES
     `cosine >= t` because NaN sorts above all doubles (regression)."""
     from qsketch.spark.similarity import (cosine_topk_bruteforce,
+                                          cosine_topk_lsh,
                                           embedding_near_duplicates)
 
     rng = np.random.default_rng(11)
@@ -478,12 +479,17 @@ def test_embedding_near_duplicates_zero_norm_pair(spark):
         pairs = {(r["a"], r["b"]) for r in got}
         assert pairs == {(0, 1)}, (method, pairs)
         assert all(r["cosine"] == r["cosine"] for r in got)  # no NaN
-    # brute-force top-k from a zero-vector query: every score is 0.0 or
-    # NULL, never NaN, and the call does not raise
+    # top-k from a zero-vector query: the two zero rows have no angle to
+    # it and are dropped (NULL cosine), every other score is 0.0, never
+    # NaN, and neither call raises
     qs = emb.where(F.col("vec_id") == 99).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    top = cosine_topk_bruteforce(emb, qs, k=14).collect()
-    assert all(r["cosine"] is None or r["cosine"] == 0.0 for r in top)
+    for top in (cosine_topk_bruteforce(emb, qs, k=14),
+                cosine_topk_lsh(emb, qs, dim=16, k=14, n_bits=4,
+                                n_tables=32)):
+        top = top.collect()
+        assert sorted(r["vec_id"] for r in top) == list(range(12)), top
+        assert all(r["cosine"] == 0.0 for r in top)
 
 
 def test_winnow_fingerprints_guarantee(spark):
